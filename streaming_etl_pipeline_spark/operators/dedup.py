@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import md5_long
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
+from streaming_etl_pipeline_spark.sources.io import read_parquet_if_exists
 
 TOKEN_SQL = (
     "list_filter(string_split_regex({norm}, '\\s+'), t -> t <> '')"
@@ -460,19 +461,12 @@ def incremental_near_dups(
     bootstraps the store. This is the 100 TB dedup loop: per-ingest cost
     scales with the new batch, not the corpus.
     """
-    from pyspark.errors import AnalysisException
-
     new_sigs = build_signatures(new_docs, id_col=id_col, text_col=text_col)
     # Only "store doesn't exist yet" means first run. Any other failure
-    # (schema drift, OOM in the band join) must propagate — swallowing it
-    # would return zero pairs (false-negative dedup) while still
-    # advancing the store.
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        store = None
+    # (an unreadable store, schema drift, OOM in the band join) must
+    # propagate — swallowing it would return zero pairs (false-negative
+    # dedup) while still advancing the store.
+    store = read_parquet_if_exists(spark, store_path)
     if store is None:
         id_type = new_docs.schema[id_col].dataType.simpleString()
         pairs = spark.createDataFrame(
@@ -880,15 +874,10 @@ def incremental_substring_dups(
     md5-uniform hash; old text is never rescanned. Same loop shape as
     :func:`incremental_near_dups` — the 100 TB ingestion pattern.
     """
-    from pyspark.errors import AnalysisException
-
     new_chunks = chunk_fingerprints(new_docs, id_col, text_col, width, stride)
-    try:
-        store = spark.read.parquet(store_path).select(id_col, "chunk_hash")
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and "Path does not exist" not in str(exc):
-            raise
-        store = None
+    store = read_parquet_if_exists(spark, store_path)
+    if store is not None:
+        store = store.select(id_col, "chunk_hash")
 
     probe_src = new_chunks.select(id_col, "chunk_hash")
     universe = (

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
+from streaming_etl_pipeline_spark.sources.io import hadoop_fs
 
 #: Fixed absolute discount (Chen & Goodman 1999's D≈0.75 for trigrams).
 KN_DISCOUNT = 0.75
@@ -456,9 +457,7 @@ def _hadoop_write_text(spark, path: str, content: str) -> None:
     model artifact works on any FS the parquet side supports (local,
     HDFS, S3A) — a plain ``open()`` would silently break for non-POSIX
     paths while the tables still wrote fine."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(bytearray(content.encode("utf-8")))
@@ -467,13 +466,11 @@ def _hadoop_write_text(spark, path: str, content: str) -> None:
 
 
 def _hadoop_read_text(spark, path: str) -> str:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, path)
     stream = fs.open(jpath)
     try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        reader = spark._jvm.java.io.BufferedReader(
+            spark._jvm.java.io.InputStreamReader(stream, "UTF-8")
         )
         lines = []
         line = reader.readLine()

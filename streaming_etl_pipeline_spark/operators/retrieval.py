@@ -36,6 +36,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from streaming_etl_pipeline_spark.sources.io import path_exists
+
 __all__ = [
     "Bm25Index",
     "bm25_build_index",
@@ -647,14 +649,11 @@ def write_bm25_postings(
     # as a per-term max over ALL postings would hold invalid bounds.
     # (The in-package maxscore read computes its bound live and never
     # trusts the stored table — this guard keeps the ARTIFACT honest.)
-    def _dir_exists(sub: str) -> bool:
-        jvm = docs.sparkSession._jvm
-        conf = docs.sparkSession._jsc.hadoopConfiguration()
-        jp = jvm.org.apache.hadoop.fs.Path(os.path.join(path, sub))
-        return jp.getFileSystem(conf).exists(jp)
-
-    if mode == "append" and _dir_exists("postings") and not _dir_exists(
-        "term_stats"
+    spark = docs.sparkSession
+    if (
+        mode == "append"
+        and path_exists(spark, os.path.join(path, "postings"))
+        and not path_exists(spark, os.path.join(path, "term_stats"))
     ):
         raise ValueError(
             "write_bm25_postings(mode='append'): store at "

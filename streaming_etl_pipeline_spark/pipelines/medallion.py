@@ -33,7 +33,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.operators import aggregates, cleaning
-from streaming_etl_pipeline_spark.sources.io import write_partitioned
+from streaming_etl_pipeline_spark.sources.io import (
+    read_parquet_if_exists,
+    write_partitioned,
+)
 
 REQUIRED_COLUMNS = ("sensor_id", "sensor_type", "value", "event_time")
 EXPECTED_PER_5MIN = 300  # silver_to_gold.py:41
@@ -62,9 +65,10 @@ def bronze_to_silver(
     late-merge → overwrite) but counts via observed metrics instead of
     five separate actions, and keeps the late-data merge as a union +
     keep-latest dedup so a corrected late row wins
-    (``bronze_to_silver.py:145-159``). With ``validate=True`` the written
-    Silver is checked against the silver expectation suite (fail-fast,
-    like the reference's quality gate in the DAG).
+    (``bronze_to_silver.py:145-159``); only a Silver that does not exist
+    yet skips the merge. With ``validate=True`` the written Silver is
+    checked against the silver expectation suite (fail-fast, like the
+    reference's quality gate in the DAG).
     """
     df = spark.read.parquet(bronze_path)
     if run_date is not None:
@@ -96,17 +100,19 @@ def bronze_to_silver(
     )
     df = cleaning.add_lineage(df, source_file=bronze_path)
 
-    if merge_with_existing:
-        try:
-            existing = spark.read.parquet(silver_path)
-            df = cleaning.merge_late_data(
-                existing,
-                df,
-                keys=("sensor_id", "event_time"),
-                order_col="ingestion_time",
-            )
-        except Exception:
-            pass  # first run: no existing Silver (reference does the same)
+    # Only a missing Silver (the first run) skips the merge: a Silver that
+    # cannot be read or unioned (schema drift) raises before the write, so
+    # the dynamic overwrite can never replace Silver with the new rows alone.
+    existing = (
+        read_parquet_if_exists(spark, silver_path) if merge_with_existing else None
+    )
+    if existing is not None:
+        df = cleaning.merge_late_data(
+            existing,
+            df,
+            keys=("sensor_id", "event_time"),
+            order_col="ingestion_time",
+        )
 
     obs_out = Observation("silver_out")
     df = df.observe(

@@ -150,8 +150,8 @@ def make_parser() -> argparse.ArgumentParser:
     rs = sub.add_parser(
         "repair-store",
         help="recover an ingest store from a crash inside a "
-        "compaction/migration directory swap (stale .__compact__/"
-        ".__old__ directories rolled forward or back)",
+        "compaction/migration directory swap (the leftover staging or "
+        "backup directory is rolled forward or back)",
     )
     rs.add_argument("--path", required=True, help="store directory")
 
@@ -618,9 +618,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         metrics["compact.rows"] = float(res["rows"])
     if args.cmd == "repair-store":
-        from streaming_etl_pipeline_spark.streaming.ingest import (
-            repair_store,
-        )
+        from streaming_etl_pipeline_spark.sources.io import repair_store
 
         action = repair_store(spark, args.path)
         metrics["repair.action"] = action  # type: ignore[assignment]

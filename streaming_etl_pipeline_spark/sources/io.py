@@ -7,6 +7,13 @@ Covers the reference's batch I/O surface (SURVEY.md §2.1):
 - S10 single-engine rule: everything reads through ``spark.read`` —
   ``.toPandas()`` only at the presentation edge.
 
+It is also the one storage seam of the engine's stores (streaming
+ingest stores, dedup stores, Silver): :func:`read_parquet_if_exists`
+answers "is this store there yet?", :func:`write_epoch` writes one
+micro-batch idempotently, and :func:`replace_dir` / :func:`repair_store`
+replace a directory crash-safely. Every Hadoop ``FileSystem`` handle
+comes from :func:`hadoop_fs`.
+
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; partitioned writes use dynamic partition overwrite so a
 backfill of one partition never truncates its siblings (the reference gets
@@ -137,6 +144,145 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# ---------------------------------------------------------------------------
+# Store seam: optional reads, epoch-idempotent writes, crash-safe swaps
+# ---------------------------------------------------------------------------
+
+
+def hadoop_fs(spark: SparkSession, path: str) -> tuple:
+    """``(FileSystem, Path)`` JVM handles for ``path`` through the
+    session's Hadoop configuration, so store bookkeeping works on every
+    scheme the parquet side does (local, ``file://``, HDFS, S3A)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, jpath = hadoop_fs(spark, path)
+    return bool(fs.exists(jpath))
+
+
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read an optional store: ``None`` when ``path`` does not exist yet
+    (a first run), the dataset otherwise. Absence is decided by one
+    ``FileSystem.exists`` probe, not by matching Spark's
+    ``PATH_NOT_FOUND`` error text, so a store that exists but cannot be
+    read (a stray non-parquet file, schema drift, permissions) raises
+    instead of passing for a first run."""
+    return spark.read.parquet(path) if path_exists(spark, path) else None
+
+
+def epoch_value(batch_id: int, run_token: str | None = None) -> str:
+    """Partition value of one micro-batch: ``<token>-<epoch>``, the token
+    living as long as the stream's checkpoint, so a checkpoint reset
+    (epoch ids restart at 0) appends beside earlier runs instead of
+    replacing them. ``run_token=None`` keeps the bare epoch id."""
+    return f"{run_token}-{batch_id}" if run_token else str(batch_id)
+
+
+def write_epoch(
+    df: DataFrame, path: str, value: str, *partition_cols: str
+) -> None:
+    """Epoch-idempotent write: tag every row ``ingest_batch_id=value``
+    and replace only that partition (dynamic partition overwrite), with
+    ``partition_cols`` as sub-partitions. A replayed epoch rewrites its
+    own partition, all levels below it included, instead of appending a
+    second copy; every other epoch is left alone. This is the
+    Spark-native form of the reference's delete-then-COPY load
+    (``src/loaders/redshift_loader.py:33-55``)."""
+    (
+        df.withColumn("ingest_batch_id", F.lit(value))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("ingest_batch_id", *partition_cols)
+        .parquet(path)
+    )
+
+
+def _swap_paths(path: str) -> tuple[str, str]:
+    base = path.rstrip("/")
+    return base + ".__compact__", base + ".__old__"
+
+
+def replace_dir(spark: SparkSession, path: str, writer) -> None:
+    """Replace the dataset at ``path`` crash-safely. ``writer`` (a
+    configured ``DataFrameWriter`` of the full replacement) writes beside
+    the live path, to ``<path>.__compact__``; two CHECKED renames then
+    swap it in (Hadoop ``FileSystem.rename`` reports failure by returning
+    false, and renames src INSIDE an existing dst directory, so both
+    results are checked and a stale ``.__old__`` is cleared first by
+    :func:`repair_store`). A failed second rename rolls the original
+    back, so the live path is never left empty; a crash at any point
+    leaves one of the states :func:`repair_store` resolves. The swap is
+    not atomic for concurrent readers: run it between pipeline stages
+    (the versioned tables below are the live-reader-safe form)."""
+    repair_store(spark, path)
+    tmp, old = _swap_paths(path)
+    writer.mode("overwrite").parquet(tmp)
+    fs, jpath = hadoop_fs(spark, path)
+    jvm = spark._jvm
+    jold = jvm.org.apache.hadoop.fs.Path(old)
+    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    if not fs.rename(jpath, jold):
+        raise RuntimeError(
+            f"store swap: rename {path} -> {old} failed "
+            "(Hadoop rename returned false); store left untouched"
+        )
+    if not fs.rename(jtmp, jpath):
+        fs.rename(jold, jpath)
+        raise RuntimeError(
+            f"store swap: rename {tmp} -> {path} failed "
+            "(Hadoop rename returned false); original store restored"
+        )
+    fs.delete(jold, True)
+
+
+def repair_store(spark: SparkSession, path: str) -> str:
+    """Recover a dataset from a crash inside :func:`replace_dir`'s
+    directory swap. The swap has three crash windows, each leaving a
+    distinct directory signature beside the live path, and each with
+    exactly one safe resolution:
+
+    - ``.__compact__`` present, live path present (crash after the
+      rewrite, before any rename): the original is intact — roll BACK
+      by deleting the stale rewrite (it may itself be a partial write,
+      so it is never trusted).
+    - ``.__compact__`` present, live path MISSING, ``.__old__`` present
+      (crash between the two renames): the rewrite completed before the
+      renames began — roll FORWARD by renaming it into place, then drop
+      ``.__old__``.
+    - ``.__old__`` present, live path present (crash before the final
+      cleanup delete): the swap finished — drop ``.__old__``.
+
+    Returns which action was taken (``"clean"``, ``"rolled_back"``,
+    ``"rolled_forward"``, ``"dropped_old"``). Every swap calls it first;
+    it is also safe to call at startup before reading a store."""
+    fs, jpath = hadoop_fs(spark, path)
+    tmp, old = _swap_paths(path)
+    jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
+    jold = spark._jvm.org.apache.hadoop.fs.Path(old)
+    live, tmp_e, old_e = fs.exists(jpath), fs.exists(jtmp), fs.exists(jold)
+    if tmp_e and live:
+        fs.delete(jtmp, True)
+        if old_e:  # can only co-exist with a live path via manual copies
+            fs.delete(jold, True)
+        return "rolled_back"
+    if tmp_e and not live and old_e:
+        if not fs.rename(jtmp, jpath):
+            raise RuntimeError(f"repair_store: rename to {path} failed")
+        fs.delete(jold, True)
+        return "rolled_forward"
+    if old_e and not live:
+        # Rewrite lost before the swap completed: restore the original.
+        if not fs.rename(jold, jpath):
+            raise RuntimeError(f"repair_store: restore of {path} failed")
+        return "rolled_forward"
+    if old_e:
+        fs.delete(jold, True)
+        return "dropped_old"
+    return "clean"
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -149,36 +295,21 @@ def compact(
     small batch appends accumulate small files until scan planning and
     footer reads dominate query time — the classic operational problem of
     an append-only lake. This maintenance job rewrites the dataset with
-    one task per Hive partition (bounded by ``maxRecordsPerFile``) into a
-    staging directory, then swaps it in. The swap is not atomic for
-    concurrent readers — run it like the reference runs its batch layers,
-    from the orchestrator between pipeline stages (a table format with a
-    transaction log is the upgrade path for live-reader safety).
+    one task per Hive partition (bounded by ``maxRecordsPerFile``) and
+    swaps it in with :func:`replace_dir`, so a crash mid-compaction is
+    recovered by :func:`repair_store`. Run it like the reference runs its
+    batch layers, from the orchestrator between pipeline stages.
     """
-    import shutil
-
+    repair_store(spark, path)
     df = spark.read.parquet(path)
     n = df.count()
-    staging = path.rstrip("/") + "._compacting"
-    shutil.rmtree(staging, ignore_errors=True)
     out = df.repartition(*partition_by) if partition_by else df.coalesce(
         max(1, spark.sparkContext.defaultParallelism // 4)
     )
-    writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
-    )
+    writer = out.write.option("maxRecordsPerFile", max_records_per_file)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    backup = path.rstrip("/") + "._precompact"
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(path, backup)
-    try:
-        os.rename(staging, path)
-    except OSError:
-        os.rename(backup, path)  # roll back; leave source intact
-        raise
-    shutil.rmtree(backup)
+    replace_dir(spark, path, writer)
     return n
 
 

@@ -19,16 +19,34 @@ Scale: the only state in this topology is the file-sink commit log; the
 parse/split is stateless and scales linearly with partitions. Downstream
 windowed aggregation belongs in the batch Gold layer (T7 hybrid design,
 ``docs/INTERVIEW_PREP.md:29-31``) or a separate watermarked streaming agg.
+
+The incremental stores below (dedup signatures, cluster labels, ANN
+index, BM25 postings, n-gram counts) share one exactly-once contract:
+a ``foreachBatch`` sink (:func:`_start_epoch_sink`) whose micro-batch
+writes one ``<token>-<epoch>`` partition per store with
+``sources.io.write_epoch``. Optional store reads go through
+``sources.io.read_parquet_if_exists`` and directory rewrites through
+``sources.io.replace_dir``, so none of that is repeated here.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
+    epoch_value,
+    hadoop_fs,
+    read_parquet_if_exists,
+    repair_store,
+    replace_dir,
+    write_epoch,
+)
 
 #: Event schema — reference ``spark_streaming.py:26-33``.
 EVENT_SCHEMA = T.StructType(
@@ -191,16 +209,14 @@ def start_bronze_sink(
     """S3 — append-mode partitioned parquet sink with checkpoint
     (``spark_streaming.py:144-153``). ``trigger`` e.g.
     ``{"processingTime": "30 seconds"}`` or ``{"availableNow": True}``."""
-    writer = (
+    return _start(
         bronze.writeStream.format("parquet")
         .outputMode("append")
         .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(partition_by)
+        .partitionBy(partition_by),
+        checkpoint,
+        trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def start_dead_letter_sink(
@@ -211,15 +227,40 @@ def start_dead_letter_sink(
 ) -> StreamingQuery:
     """S4 — dead-letter JSON sink; checkpoint suffixed ``_dead_letter``
     like the reference (``spark_streaming.py:112-121``)."""
-    writer = (
+    return _start(
         dead_letter.writeStream.format("json")
         .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint + "_dead_letter")
+        .option("path", path),
+        checkpoint + "_dead_letter",
+        trigger,
     )
+
+
+def _start(writer, checkpoint: str, trigger: dict | None) -> StreamingQuery:
+    """Bind a sink's checkpoint and optional trigger, then start it."""
+    writer = writer.option("checkpointLocation", checkpoint)
     if trigger:
         writer = writer.trigger(**trigger)
     return writer.start()
+
+
+def _start_epoch_sink(
+    stream: DataFrame,
+    checkpoint: str,
+    trigger: dict | None,
+    batch_fn,
+    *args,
+    **kwargs,
+) -> StreamingQuery:
+    """Start a ``foreachBatch`` sink whose micro-batches run
+    ``batch_fn(batch_df, batch_id, *args, run_token=<token>, **kwargs)``
+    with the checkpoint-lifetime token of :func:`_ingest_run_token`."""
+    token = _ingest_run_token(stream.sparkSession, checkpoint)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        batch_fn(batch_df, batch_id, *args, run_token=token, **kwargs)
+
+    return _start(stream.writeStream.foreachBatch(process), checkpoint, trigger)
 
 
 def enrich_stream(
@@ -313,28 +354,11 @@ def start_dedup_ingest_sink(
     vs-store) append via :func:`cluster_pairs_batch`, so
     :func:`cluster_labels_from_store` serves the current component
     labels without re-running star contraction over history."""
-    token = _ingest_run_token(docs.sparkSession, checkpoint)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df,
-            batch_id,
-            path,
-            store_path,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            run_token=token,
-            cluster_store=cluster_store,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
+    return _start_epoch_sink(
+        docs, checkpoint, trigger, dedup_ingest_batch, path, store_path,
+        id_col=id_col, text_col=text_col, threshold=threshold,
+        cluster_store=cluster_store,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def _ingest_run_token(spark, checkpoint: str) -> str:
@@ -347,10 +371,7 @@ def _ingest_run_token(spark, checkpoint: str) -> str:
     checkpoint may live on any supported scheme (local/HDFS/S3)."""
     import uuid
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(checkpoint)
-    fs = root.getFileSystem(conf)
+    fs, root = hadoop_fs(spark, checkpoint)
     prefix = "INGEST_RUN_TOKEN-"
     if fs.exists(root):
         for status in fs.listStatus(root):
@@ -361,7 +382,7 @@ def _ingest_run_token(spark, checkpoint: str) -> str:
         fs.mkdirs(root)
     token = uuid.uuid4().hex[:12]
     fs.create(
-        jvm.org.apache.hadoop.fs.Path(root, prefix + token), False
+        spark._jvm.org.apache.hadoop.fs.Path(root, prefix + token), False
     ).close()
     return token
 
@@ -383,8 +404,6 @@ def dedup_ingest_batch(
     the replay contract. ``run_token`` namespaces the partition value
     (``<token>-<epoch>``) so a checkpoint reset cannot replay over a
     previous run's partitions; ``None`` keeps the bare epoch id."""
-    from pyspark.errors import AnalysisException
-
     from streaming_etl_pipeline_spark.operators.dedup import (
         build_signatures,
         near_dup_pairs_from_signatures,
@@ -393,13 +412,13 @@ def dedup_ingest_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    part_val = f"{run_token}-{batch_id}" if run_token else str(batch_id)
+    part_val = epoch_value(batch_id, run_token)
     batch_df = batch_df.localCheckpoint(eager=True)
     sigs = build_signatures(
         batch_df, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=True)
-    try:
-        store = spark.read.parquet(store_path)
+    store = read_parquet_if_exists(spark, store_path)
+    if store is not None:
         if "ingest_batch_id" in store.columns:
             # exclude our own partition: on a replay the store may
             # already hold this batch's signatures from a partial
@@ -417,13 +436,6 @@ def dedup_ingest_batch(
         # tombstoned (taken-down) docs stop suppressing near-dups of
         # their content the moment they are deleted
         store = _apply_tombstones(spark, store_path, store)
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-        store = None
     # within-trigger near-dups: greedy keep-min of each pair
     self_pairs = near_dup_pairs_from_signatures(sigs, threshold=threshold)
     drops = self_pairs.select(
@@ -450,14 +462,8 @@ def dedup_ingest_batch(
     novel = batch_df.join(
         drops.distinct().localCheckpoint(eager=True), id_col, "left_anti"
     )
-    for frame, dest in ((novel, path), (sigs, store_path)):
-        (
-            frame.withColumn("ingest_batch_id", F.lit(part_val))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch_id")
-            .parquet(dest)
-        )
+    write_epoch(novel, path, part_val)
+    write_epoch(sigs, store_path, part_val)
 
 
 # ---------------------------------------------------------------------------
@@ -495,11 +501,9 @@ def cluster_pairs_batch(
     to the global min), so the result is bit-identical to a full batch
     ``connected_components_star`` over the entire pair history — pinned
     in ``tests/test_streaming.py``."""
-    import os as _os
-
     if pairs.isEmpty():
         return
-    part_val = f"{run_token}-{batch_id}" if run_token else str(batch_id)
+    part_val = epoch_value(batch_id, run_token)
     p = (
         pairs.select(F.col(src).alias("ca"), F.col(dst).alias("cb"))
         .filter(F.col("ca") != F.col("cb"))
@@ -512,14 +516,8 @@ def cluster_pairs_batch(
         .distinct()
         .select("node", F.col("node").alias("comp"))
     )
-    for frame, sub in ((members, "members"), (p, "merge_pairs")):
-        (
-            frame.withColumn("ingest_batch_id", F.lit(part_val))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch_id")
-            .parquet(_os.path.join(store_path, sub))
-        )
+    write_epoch(members, os.path.join(store_path, "members"), part_val)
+    write_epoch(p, os.path.join(store_path, "merge_pairs"), part_val)
 
 
 #: Sidecar of post-split label overrides: ``min(comp)`` resolution can
@@ -535,16 +533,8 @@ def _load_split_overrides(
     """Latest-generation ``(node, comp)`` override per node from the
     ``_splits/`` sidecar, or None when no split happened since the last
     compaction."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = spark.read.parquet(os.path.join(store_path, SPLIT_DIR))
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
+    raw = read_parquet_if_exists(spark, os.path.join(store_path, SPLIT_DIR))
+    if raw is None:
         return None
     return raw.groupBy("node").agg(
         F.max_by("comp", "gen").alias("_split_comp")
@@ -578,10 +568,6 @@ def cluster_labels_from_store(
     recomputes the affected component over its surviving pairs
     (component-scoped, r10 — the batch-recompute caveat this docstring
     used to carry is now the scoped operation)."""
-    import os as _os
-
-    from pyspark.errors import AnalysisException
-
     from streaming_etl_pipeline_spark.operators.components import (
         connected_components_star,
     )
@@ -589,19 +575,11 @@ def cluster_labels_from_store(
     m = _apply_split_overrides(
         spark,
         store_path,
-        spark.read.parquet(_os.path.join(store_path, "members"))
+        spark.read.parquet(os.path.join(store_path, "members"))
         .groupBy("node")
         .agg(F.min("comp").alias("comp")),
     )
-    try:
-        mp = spark.read.parquet(_os.path.join(store_path, "merge_pairs"))
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-        mp = None
+    mp = read_parquet_if_exists(spark, os.path.join(store_path, "merge_pairs"))
     if mp is not None:
         e = (
             mp.join(
@@ -645,7 +623,7 @@ def compact_cluster_store(
     resolution's star contraction sees ONLY pairs appended since — the
     property that keeps per-trigger cost ∝ trigger pairs on a
     long-running stream. Crash-safe by idempotence: the members swap is
-    the same checked-rename dance as :func:`compact_ingest_store`, and
+    ``sources.io.replace_dir``, as in :func:`compact_ingest_store`, and
     leftover merge_pairs/tombstones from a crash after the swap are
     no-ops on re-read (already-folded pairs map both endpoints to the
     same comp and drop; already-dropped nodes anti-join against
@@ -663,67 +641,34 @@ def compact_cluster_store(
     untouched); once a store has a ``pair_history/`` dir, later
     compactions keep maintaining it regardless of the flag."""
     import hashlib
-    import os as _os
-
-    from pyspark.errors import AnalysisException
 
     labels = cluster_labels_from_store(spark, store_path).persist()
     n = labels.count()
-    hist_path = _os.path.join(store_path, "pair_history")
-    try:
-        old_hist = spark.read.parquet(hist_path).select("ca", "cb")
-        have_hist = True
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-        old_hist = None
-        have_hist = False
-    if pair_history or have_hist:
-        try:
-            mp_new = spark.read.parquet(
-                _os.path.join(store_path, "merge_pairs")
-            ).select("ca", "cb")
-        except AnalysisException as exc:
-            if (
-                "PATH_NOT_FOUND" not in str(exc)
-                and "Path does not exist" not in str(exc)
-            ):
-                raise
-            mp_new = None
-        frames = [f for f in (old_hist, mp_new) if f is not None]
-        if frames:
-            allp = frames[0]
-            for f in frames[1:]:
-                allp = allp.unionByName(f)
-            # inner joins against the SURVIVING labels drop tombstoned
-            # endpoints' pairs; both endpoints resolve to the same comp,
-            # which becomes the partition key split_component prunes on
-            folded = (
-                allp.join(
-                    labels.select(
-                        F.col("node").alias("ca"), F.col("comp").alias("comp")
-                    ),
-                    "ca",
-                )
-                .join(
-                    labels.select(F.col("node").alias("cb")), "cb", "semi"
-                )
-                .select("ca", "cb", "comp")
-                .distinct()
+    hist_path = os.path.join(store_path, "pair_history")
+    frames = _pair_frames(spark, store_path)
+    have_hist = "pair_history" in frames
+    if (pair_history or have_hist) and frames:
+        # inner joins against the SURVIVING labels drop tombstoned
+        # endpoints' pairs; both endpoints resolve to the same comp,
+        # which becomes the partition key split_component prunes on
+        folded = (
+            reduce(DataFrame.unionByName, frames.values())
+            .join(
+                labels.select(
+                    F.col("node").alias("ca"), F.col("comp").alias("comp")
+                ),
+                "ca",
             )
-            if have_hist:
-                folded.write.mode("overwrite").partitionBy("comp").parquet(
-                    hist_path.rstrip("/") + ".__compact__"
-                )
-                _atomic_swap_dir(spark, hist_path)
-            else:  # first history materialization — nothing to swap out
-                folded.write.mode("overwrite").partitionBy("comp").parquet(
-                    hist_path
-                )
-    members_path = _os.path.join(store_path, "members")
+            .join(labels.select(F.col("node").alias("cb")), "cb", "semi")
+            .select("ca", "cb", "comp")
+            .distinct()
+        )
+        writer = folded.write.partitionBy("comp")
+        if have_hist:
+            replace_dir(spark, hist_path, writer)
+        else:  # first history materialization — nothing to swap out
+            writer.mode("overwrite").parquet(hist_path)
+    members_path = os.path.join(store_path, "members")
     parts = sorted(
         str(r.ingest_batch_id)
         for r in spark.read.parquet(members_path)
@@ -732,22 +677,34 @@ def compact_cluster_store(
         .collect()
     )
     digest = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    (
+    replace_dir(
+        spark,
+        members_path,
         labels.withColumn("ingest_batch_id", F.lit(f"compacted-{digest}"))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch_id")
-        .parquet(members_path.rstrip("/") + ".__compact__")
+        .write.partitionBy("ingest_batch_id"),
     )
-    _atomic_swap_dir(spark, members_path)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     for sub in ("merge_pairs", TOMBSTONE_DIR, SPLIT_DIR):
-        jp = jvm.org.apache.hadoop.fs.Path(_os.path.join(store_path, sub))
-        fs = jp.getFileSystem(conf)
+        fs, jp = hadoop_fs(spark, os.path.join(store_path, sub))
         if fs.exists(jp):
             fs.delete(jp, True)
     labels.unpersist()
     return {"partitions_before": len(parts), "rows": int(n)}
+
+
+def _pair_frames(
+    spark: SparkSession, store_path: str, hist_filter=None
+) -> dict[str, DataFrame]:
+    """The cluster store's ``(ca, cb)`` pair sources that exist: the
+    folded ``pair_history`` (optionally filtered) and the live
+    ``merge_pairs``, keyed by directory name."""
+    frames = {}
+    for sub, cond in (("pair_history", hist_filter), ("merge_pairs", None)):
+        df = read_parquet_if_exists(spark, os.path.join(store_path, sub))
+        if df is not None:
+            frames[sub] = (df if cond is None else df.where(cond)).select(
+                "ca", "cb"
+            )
+    return frames
 
 
 def split_component(
@@ -777,10 +734,6 @@ def split_component(
     (tombstoned nodes have no component — split by a surviving member).
     Returns ``{"labels", "n_components", "history_partitions",
     "n_pairs"}`` — labels is the component's new (node, comp) frame."""
-    import os as _os
-
-    from pyspark.errors import AnalysisException
-
     from streaming_etl_pipeline_spark.operators.components import (
         connected_components_star,
     )
@@ -813,7 +766,7 @@ def split_component(
     # merged since the last compaction) so a key is never missed even if
     # the partitioning convention ever shifts to post-override comps.
     raw_min = (
-        spark.read.parquet(_os.path.join(store_path, "members"))
+        spark.read.parquet(os.path.join(store_path, "members"))
         .groupBy("node")
         .agg(F.min("comp").alias("comp"))
     )
@@ -828,41 +781,13 @@ def split_component(
             .collect()
         }
     )  # bounded: ≤ components merged since the last compaction
-    pair_frames = []
-    hist_path = _os.path.join(store_path, "pair_history")
-    n_hist_partitions = 0
-    try:
-        hist = spark.read.parquet(hist_path)
-        pair_frames.append(
-            hist.where(F.col("comp").isin(keys)).select("ca", "cb")
-        )
-        n_hist_partitions = len(keys)
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-    try:
-        pair_frames.append(
-            spark.read.parquet(
-                _os.path.join(store_path, "merge_pairs")
-            ).select("ca", "cb")
-        )
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
+    pair_frames = _pair_frames(spark, store_path, F.col("comp").isin(keys))
     new_labels = members_c.select(
         "node", F.col("node").alias("comp")
     )
     n_pairs = 0
     if pair_frames:
-        allp = pair_frames[0]
-        for f in pair_frames[1:]:
-            allp = allp.unionByName(f)
+        allp = reduce(DataFrame.unionByName, pair_frames.values())
         # surviving pairs of THIS component only: both endpoints must be
         # current members (drops tombstoned endpoints' pairs and any
         # other component's live merge_pairs rows)
@@ -897,25 +822,13 @@ def split_component(
             )
     new_labels = new_labels.localCheckpoint(eager=True)
     # next generation wins on re-split of an overlapping component
-    try:
-        gen = (
-            spark.read.parquet(_os.path.join(store_path, SPLIT_DIR))
-            .agg(F.max("gen"))
-            .first()[0]
-            or 0
-        ) + 1
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-        gen = 1
+    splits = read_parquet_if_exists(spark, os.path.join(store_path, SPLIT_DIR))
+    gen = 1 if splits is None else (splits.agg(F.max("gen")).first()[0] or 0) + 1
     (
         new_labels.withColumn("gen", F.lit(int(gen)))
         .coalesce(1)
         .write.mode("append")
-        .parquet(_os.path.join(store_path, SPLIT_DIR))
+        .parquet(os.path.join(store_path, SPLIT_DIR))
     )
     n_components = new_labels.select("comp").distinct().count()
     return {
@@ -965,30 +878,11 @@ def start_ann_index_sink(
     for metadata-filtered search on the compressed index without a
     query-time attribute join.
     """
-    token = _ingest_run_token(vectors.sparkSession, checkpoint)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ann_index_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            centroids,
-            codebooks=codebooks,
-            id_col=id_col,
-            vec_col=vec_col,
-            run_token=token,
-            use_arrow=use_arrow,
-            partition_by_cell=partition_by_cell,
-            carry=carry,
-        )
-
-    writer = (
-        vectors.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
+    return _start_epoch_sink(
+        vectors, checkpoint, trigger, ann_index_batch, index_path, centroids,
+        codebooks=codebooks, id_col=id_col, vec_col=vec_col,
+        use_arrow=use_arrow, partition_by_cell=partition_by_cell, carry=carry,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def ann_index_batch(
@@ -1016,7 +910,6 @@ def ann_index_batch(
     if batch_df.isEmpty():
         return
     books = codebooks if codebooks is not None else SIM.PQ_CODEBOOKS
-    part_val = f"{run_token}-{batch_id}" if run_token else str(batch_id)
     if use_arrow:
         assigned = SIM.ivf_assign_arrow(
             batch_df, centroids, id_col=id_col, vec_col=vec_col
@@ -1046,17 +939,11 @@ def ann_index_batch(
     # 8 s -> 23 s per 1M-vector trigger at 256 cells). Write-heavy
     # deployments keep the flat layout and re-shape at compaction time
     # (compact_ingest_store folds the small files either way).
-    part_cols = (
-        ["ingest_batch_id", "centroid_id"]
-        if partition_by_cell
-        else ["ingest_batch_id"]
-    )
-    (
-        index.withColumn("ingest_batch_id", F.lit(part_val))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(index_path)
+    write_epoch(
+        index,
+        index_path,
+        epoch_value(batch_id, run_token),
+        *(["centroid_id"] if partition_by_cell else []),
     )
 
 
@@ -1120,18 +1007,8 @@ def load_tombstones(
 ) -> "DataFrame | None":
     """The distinct tombstoned ids of a store, or None when the store
     has no ``_tombstones/`` sidecar."""
-    from pyspark.errors import AnalysisException
-
-    t = os.path.join(store_path, TOMBSTONE_DIR)
-    try:
-        return spark.read.parquet(t).distinct()
-    except AnalysisException as exc:
-        if (
-            "PATH_NOT_FOUND" not in str(exc)
-            and "Path does not exist" not in str(exc)
-        ):
-            raise
-        return None
+    t = read_parquet_if_exists(spark, os.path.join(store_path, TOMBSTONE_DIR))
+    return None if t is None else t.distinct()
 
 
 def _apply_tombstones(
@@ -1213,14 +1090,10 @@ def compact_ingest_store(
     Contract: run with the stream STOPPED and its checkpoint retired —
     a later replay of a compacted epoch would re-append that epoch's
     partition beside the compacted rows (the idempotence key is gone).
-    Atomicity via directory swap: the rewritten store lands beside the
-    original (``<path>.__compact__``) and is swapped in with two
-    CHECKED renames (Hadoop ``FileSystem.rename`` reports failure by
-    returning false — and renames src INSIDE an existing dst dir — so
-    both results are raised on); a crash at any point leaves a state
-    :func:`repair_store` (called first, here and standalone) rolls
-    forward or back to a readable store. Returns
-    ``{"partitions_before", "rows", "label"}``.
+    The rewritten store is swapped in by ``sources.io.replace_dir``; a
+    crash at any point leaves a state :func:`repair_store` (called
+    first, here and standalone) rolls forward or back to a readable
+    store. Returns ``{"partitions_before", "rows", "label"}``.
     """
     import hashlib
 
@@ -1255,99 +1128,18 @@ def compact_ingest_store(
         label = f"compacted-{digest}"
     if parts == [label] and tomb is None:
         return {"partitions_before": 1, "rows": df.count(), "label": label}
-    tmp = path.rstrip("/") + ".__compact__"
-    old = path.rstrip("/") + ".__old__"
     n_rows = df.count()
-    (
+    replace_dir(
+        spark,
+        path,
         df.withColumn("ingest_batch_id", F.lit(label))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch_id", *secondary_partition_cols)
-        .parquet(tmp)
+        .write.partitionBy("ingest_batch_id", *secondary_partition_cols),
     )
-    _atomic_swap_dir(spark, path)
     return {
         "partitions_before": len(parts),
         "rows": int(n_rows),
         "label": label,
     }
-
-
-def _atomic_swap_dir(spark: SparkSession, path: str) -> None:
-    """Swap ``<path>.__compact__`` (a fully-written replacement store)
-    into place with two CHECKED renames (Hadoop ``FileSystem.rename``
-    reports failure by returning false); a failed second rename rolls
-    the original back so the live path is never left empty. Crash
-    states are the ones :func:`repair_store` resolves."""
-    tmp = path.rstrip("/") + ".__compact__"
-    old = path.rstrip("/") + ".__old__"
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    jold = jvm.org.apache.hadoop.fs.Path(old)
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    if not fs.rename(jpath, jold):
-        raise RuntimeError(
-            f"store swap: rename {path} -> {old} failed "
-            "(Hadoop rename returned false); store left untouched"
-        )
-    if not fs.rename(jtmp, jpath):
-        # Roll back so the live path is never left empty.
-        fs.rename(jold, jpath)
-        raise RuntimeError(
-            f"store swap: rename {tmp} -> {path} failed "
-            "(Hadoop rename returned false); original store restored"
-        )
-    fs.delete(jold, True)
-
-
-def repair_store(spark: SparkSession, path: str) -> str:
-    """Recover an ingest store from a crash inside
-    :func:`compact_ingest_store`'s directory swap. The swap has three
-    crash windows, each leaving a distinct directory signature beside
-    the live path, and each with exactly one safe resolution:
-
-    - ``.__compact__`` present, live path present (crash after the
-      rewrite, before any rename): the original store is intact —
-      roll BACK by deleting the stale rewrite (it may itself be a
-      partial write, so it is never trusted).
-    - ``.__compact__`` present, live path MISSING, ``.__old__``
-      present (crash between the two renames): the rewrite completed
-      before the renames began — roll FORWARD by renaming it into
-      place, then drop ``.__old__``.
-    - ``.__old__`` present, live path present (crash before the final
-      cleanup delete): the swap finished — drop ``.__old__``.
-
-    Returns which action was taken (``"clean"``, ``"rolled_back"``,
-    ``"rolled_forward"``, ``"dropped_old"``). Called automatically at
-    the top of :func:`compact_ingest_store`; also safe to call at
-    startup before reading a store."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    jtmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__compact__")
-    jold = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".__old__")
-    live, tmp_e, old_e = fs.exists(jpath), fs.exists(jtmp), fs.exists(jold)
-    if tmp_e and live:
-        fs.delete(jtmp, True)
-        if old_e:  # can only co-exist with a live path via manual copies
-            fs.delete(jold, True)
-        return "rolled_back"
-    if tmp_e and not live and old_e:
-        if not fs.rename(jtmp, jpath):
-            raise RuntimeError(f"repair_store: rename to {path} failed")
-        fs.delete(jold, True)
-        return "rolled_forward"
-    if old_e and not live:
-        # Rewrite lost before the swap completed: restore the original.
-        if not fs.rename(jold, jpath):
-            raise RuntimeError(f"repair_store: restore of {path} failed")
-        return "rolled_forward"
-    if old_e:
-        fs.delete(jold, True)
-        return "dropped_old"
-    return "clean"
 
 
 def store_health(
@@ -1367,10 +1159,7 @@ def store_health(
         if partition_col in df.columns
         else 1
     )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
+    fs, jpath = hadoop_fs(spark, path)
     n_files = 0
     base = jpath.toUri().getPath()
     it = fs.listFiles(jpath, True)
@@ -1411,9 +1200,8 @@ def reencode_index(
     vectors, assigned + PQ-encoded against the NEW centroids/codebooks
     (the same pure 0-shuffle map as :func:`ann_index_batch` — one
     distributed pass over the index's ids, cost ∝ index size), and the
-    rewritten store is swapped in atomically with the
-    :func:`compact_ingest_store` rename pattern (crash states recover
-    via :func:`repair_store`, called first).
+    rewritten store is swapped in by ``sources.io.replace_dir`` (crash
+    states recover via :func:`repair_store`, called first).
 
     This is the *react* half of the drift loop —
     :func:`similarity.ivf_occupancy_drift` detects,
@@ -1459,19 +1247,13 @@ def reencode_index(
             *carry,
             SIM.pq_encode(vec_col, codebooks).alias("codes"),
         )
-    part_cols = (
-        ["ingest_batch_id", "centroid_id"]
-        if partition_by_cell
-        else ["ingest_batch_id"]
-    )
-    tmp = index_path.rstrip("/") + ".__compact__"
-    (
+    part_cols = ["centroid_id"] if partition_by_cell else []
+    replace_dir(
+        spark,
+        index_path,
         index.withColumn("ingest_batch_id", F.lit(label))
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(tmp)
+        .write.partitionBy("ingest_batch_id", *part_cols),
     )
-    _atomic_swap_dir(spark, index_path)
     return {
         "rows": int(n_live),
         "missing_vectors": int(n_ids - n_live),
@@ -1589,26 +1371,10 @@ def start_bm25_index_sink(
     off): doc ids unique across batches — a re-sent doc id would
     double-count in df/tf. Route the stream through the dedup ingest
     first when the source replays content."""
-    token = _ingest_run_token(docs.sparkSession, checkpoint)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        bm25_postings_batch(
-            batch_df,
-            batch_id,
-            index_path,
-            buckets=buckets,
-            id_col=id_col,
-            text_col=text_col,
-            run_token=token,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
+    return _start_epoch_sink(
+        docs, checkpoint, trigger, bm25_postings_batch, index_path,
+        buckets=buckets, id_col=id_col, text_col=text_col,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def bm25_postings_batch(
@@ -1625,8 +1391,6 @@ def bm25_postings_batch(
     by (ingest_batch_id, term_bucket) — dynamic overwrite of the
     epoch's partitions replaces BOTH levels under that epoch, so a
     replay cannot leave orphan buckets behind."""
-    import os as _os
-
     from streaming_etl_pipeline_spark.functions.core import tokenize
     from streaming_etl_pipeline_spark.operators import retrieval as RT
     from streaming_etl_pipeline_spark.operators.text import norm_text
@@ -1634,7 +1398,7 @@ def bm25_postings_batch(
     if batch_df.isEmpty():
         return
     b = buckets if buckets is not None else RT.BM25_STORE_BUCKETS
-    part_val = f"{run_token}-{batch_id}" if run_token else str(batch_id)
+    part_val = epoch_value(batch_id, run_token)
     batch_df = batch_df.localCheckpoint(eager=True)
     toks = tokenize(norm_text(text_col))
     postings = (
@@ -1645,27 +1409,15 @@ def bm25_postings_batch(
         .groupBy(id_col, "term", "doc_len")
         .agg(F.count(F.lit(1)).alias("tf"))
         .withColumn("term_bucket", RT._term_bucket(F.col("term"), b))
-        .withColumn("ingest_batch_id", F.lit(part_val))
     )
-    (
-        postings.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id", "term_bucket")
-        .parquet(_os.path.join(index_path, "postings"))
+    write_epoch(
+        postings, os.path.join(index_path, "postings"), part_val, "term_bucket"
     )
-    (
-        batch_df.select(F.size(toks).alias("dl"))
-        .filter("dl > 0")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("long").alias("sum_len"),
-        )
-        .withColumn("ingest_batch_id", F.lit(part_val))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(_os.path.join(index_path, "stats"))
+    stats = batch_df.select(F.size(toks).alias("dl")).filter("dl > 0").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("dl").cast("long").alias("sum_len"),
     )
+    write_epoch(stats, os.path.join(index_path, "stats"), part_val)
 
 
 def start_ngram_count_sink(
@@ -1697,26 +1449,10 @@ def start_ngram_count_sink(
     tokens; replays rewrite their own partition byte-for-byte.
     Precondition (as for the BM25 sink): doc ids unique across batches
     — route replayed sources through the dedup ingest first."""
-    token = _ingest_run_token(docs.sparkSession, checkpoint)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ngram_counts_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            id_col=id_col,
-            text_col=text_col,
-            run_token=token,
-            order=order,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
+    return _start_epoch_sink(
+        docs, checkpoint, trigger, ngram_counts_batch, store_path,
+        id_col=id_col, text_col=text_col, order=order,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def _ngram_type_counts(
@@ -1752,20 +1488,13 @@ def ngram_counts_batch(
     """One idempotent micro-batch of :func:`start_ngram_count_sink`
     (module-level for deterministic replay tests): batch-local n-gram
     type counts, dynamic-overwritten under the epoch's partition."""
-    import os as _os
-
     if batch_df.isEmpty():
         return
-    part_val = f"{run_token}-{batch_id}" if run_token else str(batch_id)
     batch_df = batch_df.localCheckpoint(eager=True)
-    counts = _ngram_type_counts(batch_df, id_col, text_col, order).withColumn(
-        "ingest_batch_id", F.lit(part_val)
-    )
-    (
-        counts.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(_os.path.join(store_path, "counts"))
+    write_epoch(
+        _ngram_type_counts(batch_df, id_col, text_col, order),
+        os.path.join(store_path, "counts"),
+        epoch_value(batch_id, run_token),
     )
 
 
@@ -1788,7 +1517,6 @@ def ngram_delete_docs(
     that was never ingested) raises there rather than silently
     corrupting the model."""
     import hashlib
-    import os as _os
 
     ids = sorted(
         str(r[0]) for r in docs.select(id_col).distinct().collect()
@@ -1797,17 +1525,10 @@ def ngram_delete_docs(
         return
     digest = hashlib.md5(",".join(ids).encode()).hexdigest()[:16]
     cnt_col = "c3" if order == 3 else "c"
-    neg = (
-        _ngram_type_counts(docs, id_col, text_col, order)
-        .withColumn(cnt_col, -F.col(cnt_col))
-        .withColumn("ingest_batch_id", F.lit(f"delete-{digest}"))
+    neg = _ngram_type_counts(docs, id_col, text_col, order).withColumn(
+        cnt_col, -F.col(cnt_col)
     )
-    (
-        neg.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(_os.path.join(store_path, "counts"))
-    )
+    write_epoch(neg, os.path.join(store_path, "counts"), f"delete-{digest}")
 
 
 def kn_lm_fit_from_store(
@@ -1828,8 +1549,6 @@ def kn_lm_fit_from_store(
     .KNModel`; other orders return the pruned order-n
     :class:`~..operators.ngram_lm.KNModelN` (``min_count=`` forwards
     the KenLM-style prune thresholds)."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from streaming_etl_pipeline_spark.operators import ngram_lm as NL
@@ -1838,7 +1557,7 @@ def kn_lm_fit_from_store(
     keys = ["u", "v", "w"] if order == 3 else [
         f"w{i}" for i in range(1, order + 1)
     ]
-    raw = spark.read.parquet(_os.path.join(store_path, "counts"))
+    raw = spark.read.parquet(os.path.join(store_path, "counts"))
     missing = [k for k in keys if k not in raw.columns]
     if missing or cnt_col not in raw.columns:
         raise ValueError(
@@ -1925,18 +1644,6 @@ def start_gold_upsert_sink(
     key makes the dynamic overwrite granularity match the update-mode
     emission granularity exactly.
     """
-    from streaming_etl_pipeline_spark.functions.core import time_bucket
-
-    agg = (
-        bronze.withColumn("window_start", time_bucket(ts_col, bucket_seconds))
-        .groupBy("window_start", *keys)
-        .agg(
-            F.avg(value_col).alias("avg_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            F.count(value_col).alias("reading_count"),
-        )
-    )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -1946,14 +1653,35 @@ def start_gold_upsert_sink(
             .parquet(path)
         )
 
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
+    agg = _gold_windows(bronze, bucket_seconds, keys, value_col, ts_col)
+    return _start(
+        agg.writeStream.outputMode("update").foreachBatch(upsert),
+        checkpoint,
+        trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+
+
+def _gold_windows(
+    bronze: DataFrame,
+    bucket_seconds: int,
+    keys: tuple[str, ...],
+    value_col: str,
+    ts_col: str,
+) -> DataFrame:
+    """The streaming Gold aggregate both Gold sinks emit in update mode:
+    per ``(window_start, *keys)`` avg/min/max/count of ``value_col``."""
+    from streaming_etl_pipeline_spark.functions.core import time_bucket
+
+    return (
+        bronze.withColumn("window_start", time_bucket(ts_col, bucket_seconds))
+        .groupBy("window_start", *keys)
+        .agg(
+            F.avg(value_col).alias("avg_value"),
+            F.min(value_col).alias("min_value"),
+            F.max(value_col).alias("max_value"),
+            F.count(value_col).alias("reading_count"),
+        )
+    )
 
 
 def start_gold_jdbc_sink(
@@ -1986,18 +1714,6 @@ def start_gold_jdbc_sink(
     how a giant catch-up batch (availableNow replay of days of history)
     degrades to a ranged delete instead of a pathological WHERE clause.
     """
-    from streaming_etl_pipeline_spark.functions.core import time_bucket
-
-    agg = (
-        bronze.withColumn("window_start", time_bucket(ts_col, bucket_seconds))
-        .groupBy("window_start", *keys)
-        .agg(
-            F.avg(value_col).alias("avg_value"),
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-            F.count(value_col).alias("reading_count"),
-        )
-    )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         gold_jdbc_upsert_batch(
@@ -2009,14 +1725,12 @@ def start_gold_jdbc_sink(
             max_delete_predicates=max_delete_predicates,
         )
 
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
+    agg = _gold_windows(bronze, bucket_seconds, keys, value_col, ts_col)
+    return _start(
+        agg.writeStream.outputMode("update").foreachBatch(upsert),
+        checkpoint,
+        trigger,
     )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 # OR-groups per DELETE statement on the fine path: several short

@@ -43,6 +43,20 @@ def _slow_ids() -> frozenset[str]:
 
 def pytest_collection_modifyitems(config, items):
     slow_ids = _slow_ids()
+    # A manifest line whose test file is gone would silently deselect
+    # nothing; fail the session so deleted tests take their lines along.
+    stale = sorted(
+        {
+            i.split("::")[0]
+            for i in slow_ids
+            if not os.path.exists(os.path.join(REPO, i.split("::")[0]))
+        }
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"{_SLOW_MANIFEST} names missing test files {stale}; "
+            "remove their lines"
+        )
     for item in items:
         if item.nodeid in slow_ids:
             item.add_marker(pytest.mark.slow)

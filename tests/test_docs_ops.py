@@ -267,6 +267,14 @@ def test_incremental_near_dups_bootstrap_string_ids_and_error_propagation(
     spark.createDataFrame([(1,)], "not_a_sig int").write.parquet(bad)
     with pytest.raises(Exception, match="hsd|mh0|doc_id|UNRESOLVED"):
         DD.incremental_near_dups(spark, docs, bad, append=False).count()
+    # nor is a store path that exists but holds a non-parquet file: the
+    # probe raises and appends nothing
+    junk = tmp_path / "junk_store"
+    junk.mkdir()
+    (junk / "notes.txt").write_text("not a parquet file\n")
+    with pytest.raises(Exception):
+        DD.incremental_near_dups(spark, docs, str(junk)).count()
+    assert [f.name for f in junk.iterdir()] == ["notes.txt"]
 
 
 def test_minhash_signature_sql_matches_spark(spark, docs):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row, functions as F
 
 from streaming_etl_pipeline_spark.operators import sessions as SN
@@ -124,6 +125,33 @@ def test_late_data_merge_corrected_value_wins(spark, bronze_dir, tmp_path):
         & (F.col("event_time") == target.event_time)
     ).collect()
     assert len(got) == 1 and got[0].value == 99.9
+
+
+def test_late_merge_schema_drift_raises_and_keeps_silver(
+    spark, bronze_dir, tmp_path
+):
+    """A late batch that cannot union with Silver (``location`` arrives
+    as a struct) must raise before the write: skipping the merge instead
+    would let the dynamic overwrite replace every touched partition with
+    the late rows alone."""
+    silver = str(tmp_path / "silver")
+    bronze_to_silver(spark, bronze_dir, silver, merge_with_existing=False)
+    want = spark.read.parquet(silver).count()
+    late_dir = str(tmp_path / "late")
+    (
+        spark.read.parquet(bronze_dir)
+        .limit(100)
+        .withColumn("location", F.struct(F.col("location").alias("zone")))
+        .withColumn(
+            "ingestion_time", F.col("ingestion_time") + F.expr("INTERVAL 1 HOUR")
+        )
+        .write.parquet(late_dir)
+    )
+    with pytest.raises(AnalysisException, match="INCOMPATIBLE_COLUMN_TYPE"):
+        bronze_to_silver(spark, late_dir, silver, merge_with_existing=True)
+    after = spark.read.parquet(silver)
+    assert dict(after.dtypes)["location"] == "string"
+    assert after.count() == want == 721
 
 
 def test_silver_to_gold_invariants(spark, bronze_dir, tmp_path):

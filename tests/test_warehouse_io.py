@@ -148,6 +148,50 @@ def test_compact_consolidates_small_files(spark, tmp_path):
     assert not _glob.glob(path + "._*")
 
 
+def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
+    """compact() swaps through the Hadoop FileSystem, so a ``file://`` URI
+    works, and its crash states are the ones repair_store resolves."""
+    import shutil
+    from collections import Counter
+
+    from streaming_etl_pipeline_spark.sources import compact
+    from streaming_etl_pipeline_spark.sources.generator import generate_events
+    from streaming_etl_pipeline_spark.sources.io import repair_store
+
+    def rows(p):
+        return Counter(tuple(r) for r in spark.read.parquet(p).collect())
+
+    path = str(tmp_path / "lake")
+    uri = "file://" + path
+    generate_events(spark, 2_000).repartition(8).write.partitionBy(
+        "sensor_type"
+    ).parquet(path)
+    want = rows(path)
+
+    assert compact(spark, uri, partition_by=("sensor_type",)) == 2_000
+    assert rows(uri) == want
+    assert not os.path.exists(path + ".__compact__")
+    assert not os.path.exists(path + ".__old__")
+
+    # crash after the rewrite, before any rename: a stale (here partial)
+    # staging directory sits beside the live dataset and is rolled back
+    shutil.copytree(path, path + ".__compact__")
+    for f in os.listdir(path + ".__compact__"):
+        if f.startswith("sensor_type="):
+            shutil.rmtree(os.path.join(path + ".__compact__", f))
+            break
+    assert repair_store(spark, uri) == "rolled_back"
+    assert not os.path.exists(path + ".__compact__")
+    assert rows(uri) == want
+
+    # crash between the renames: the complete staging copy rolls forward
+    shutil.copytree(path, path + ".__compact__")
+    os.rename(path, path + ".__old__")
+    assert repair_store(spark, uri) == "rolled_forward"
+    assert not os.path.exists(path + ".__old__")
+    assert rows(uri) == want
+
+
 def test_jdbc_delete_window_sql_matches_reference():
     # parity with redshift_loader.build_delete_sql (src/loaders/
     # redshift_loader.py:33-55)
