@@ -25,7 +25,8 @@ Phases (all timed; shuffle/spill from the event log at exit):
                  corpus-scan cost;
 - ``halfsize`` — the q-query run again on n/2 docs: the wall ratio vs
                  the full run shows the corpus-proportional index cost;
-- ``store``    — the build-once layout: write_bm25_postings (the one
+- ``store``    — the build-once layout: one bm25_postings_batch epoch
+                 (what the CLI build-bm25-index runs; the one
                  corpus-sized job, timed) then bm25_topk_from_store at
                  q queries — the store path skips the per-query-batch
                  corpus tokenize, so repeated query batches cost a
@@ -171,12 +172,14 @@ def main() -> int:
         # stored layout: build once, score many query batches cheaply
         from streaming_etl_pipeline_spark.operators.retrieval import (
             bm25_topk_from_store,
-            write_bm25_postings,
+        )
+        from streaming_etl_pipeline_spark.streaming.ingest import (
+            bm25_postings_batch,
         )
 
         store = os.path.join(work, "bm25_store")
         t0 = time.time()
-        write_bm25_postings(docs, store, buckets=64)
+        bm25_postings_batch(docs, 0, store, buckets=64, run_token="batch")
         wall = time.time() - t0
         report["phases"]["store_build"] = round(wall, 1)
         report["store_build_rows_per_sec"] = round(n / wall)
@@ -273,12 +276,8 @@ def main() -> int:
                 "avg_len",
             )
         )
-        max_tf = (
-            spark.read.parquet(os.path.join(store, "term_stats"))
-            .filter(F.col("term_bucket").isin(blist))
-            .join(F.broadcast(vocab.select("term")), "term")
-            .groupBy("term").agg(F.max("max_tf").alias("max_tf"))
-        )
+        # the live per-term bound bm25_topk_from_store uses
+        max_tf = doc_term.groupBy("term").agg(F.max("tf").alias("max_tf"))
         n_cand = bm25_maxscore_candidates(
             doc_term, idf_tbl, q_terms, 10, max_tf
         ).count()

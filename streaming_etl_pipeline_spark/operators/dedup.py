@@ -29,12 +29,19 @@ Scale notes (100 TB, the whole point of LSH here):
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import md5_long
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
-from streaming_etl_pipeline_spark.sources.io import read_parquet_if_exists
+from streaming_etl_pipeline_spark.sources.io import (
+    _apply_tombstones,
+    fold_epochs,
+    read_parquet_if_exists,
+    write_epoch,
+)
 
 TOKEN_SQL = (
     "list_filter(string_split_regex({norm}, '\\s+'), t -> t <> '')"
@@ -443,6 +450,81 @@ def near_dup_pairs_from_signatures(
     )
 
 
+def _batch_label(
+    docs: DataFrame, id_col: str, text_col: str
+) -> str | None:
+    """``batch-<digest>`` partition value of a CLI batch, named by every
+    row's id AND text (row count plus the exact sum of each row's
+    ``md5_long``, one distributed aggregate): re-running the batch
+    replaces its own partition, a re-crawl of the same ids with changed
+    text lands beside the earlier rows. None if empty."""
+    row = md5_long(F.to_json(F.struct(id_col, text_col)))
+    n, total = docs.agg(
+        F.count(F.lit(1)), F.sum(row.cast("decimal(38,0)"))
+    ).first()
+    if not n:
+        return None
+    return f"batch-{hashlib.md5(f'{n}:{total}'.encode()).hexdigest()[:16]}"
+
+
+def _batch_store(
+    spark, store_path: str, label: str, fold: bool
+) -> DataFrame | None:
+    """A batch-partitioned dedup store without the batch's own
+    ``ingest_batch_id=label`` partition, or None when there is no store
+    yet. Skipping its own partition makes a retried batch, which may
+    already have persisted its rows, probe the store its first attempt
+    saw. Labels compare as STRINGS: an integer-typed partition column
+    would cast a namespaced label to NULL and silently exclude the whole
+    store. A store in the flat layout of older builds (no
+    ``ingest_batch_id``) holds nothing of the batch: with ``fold`` it is
+    first folded into one partition, so the batch's epoch write cannot
+    hide its rows; without, it is read whole."""
+    store = read_parquet_if_exists(spark, store_path)
+    if store is not None and "ingest_batch_id" not in store.columns:
+        if not fold:
+            return store
+        fold_epochs(spark, store_path, store)
+        store = spark.read.parquet(store_path)
+    if store is None:
+        return None
+    return store.where(
+        F.col("ingest_batch_id").cast("string") != F.lit(label)
+    ).drop("ingest_batch_id")
+
+
+def _probe_signature_store(
+    spark,
+    sigs: DataFrame,
+    store_path: str,
+    label: str,
+    id_col: str = "doc_id",
+    threshold: float = 0.6,
+    write: bool = True,
+) -> DataFrame | None:
+    """The one probe-and-write of the MinHash signature store, shared by
+    the CLI (:func:`incremental_near_dups`) and the streaming sink
+    (``streaming.ingest.dedup_ingest_batch``): the verified
+    ``(id_a, id_b, jaccard)`` pairs between ``sigs`` and the store
+    (:func:`_batch_store`, tombstoned ids dropped), or None when there
+    is no store yet. With ``write``, the pairs are materialized and
+    ``sigs`` then replace the ``ingest_batch_id=label`` partition."""
+    store = _batch_store(spark, store_path, label, fold=write)
+    pairs = None
+    if store is not None:
+        pairs = near_dup_pairs_from_signatures(
+            sigs,
+            _apply_tombstones(spark, store_path, store),
+            id_col=id_col,
+            threshold=threshold,
+        )
+        if write:
+            pairs = pairs.localCheckpoint(eager=True)
+    if write:
+        write_epoch(sigs, store_path, label)
+    return pairs
+
+
 def incremental_near_dups(
     spark,
     new_docs: DataFrame,
@@ -457,31 +539,28 @@ def incremental_near_dups(
     Computes signatures for ``new_docs`` only, joins their LSH bands
     against the store (old TEXT is never rescanned), returns
     (new_id=id_a side or id_b side, store_id, jaccard) pairs above the
-    threshold, and appends the new signatures to the store. First call
-    bootstraps the store. This is the 100 TB dedup loop: per-ingest cost
-    scales with the new batch, not the corpus.
+    threshold, and (``append=True``) stores the new signatures. First
+    call bootstraps the store. This is the 100 TB dedup loop: per-ingest
+    cost scales with the new batch, not the corpus.
+
+    The store layout is the streaming sink's: the batch's signatures
+    land in one ``ingest_batch_id`` partition named by its content
+    (:func:`_batch_label`) through :func:`_probe_signature_store`, so
+    re-running the same batch replaces its partition (and probes as it
+    did the first time) instead of doubling the store, and the CLI and
+    the sink can share one store.
     """
     new_sigs = build_signatures(new_docs, id_col=id_col, text_col=text_col)
-    # Only "store doesn't exist yet" means first run. Any other failure
-    # (an unreadable store, schema drift, OOM in the band join) must
-    # propagate — swallowing it would return zero pairs (false-negative
-    # dedup) while still advancing the store.
-    store = read_parquet_if_exists(spark, store_path)
-    if store is None:
+    label = _batch_label(new_docs, id_col, text_col)
+    pairs = None if label is None else _probe_signature_store(
+        spark, new_sigs, store_path, label, id_col=id_col,
+        threshold=threshold, write=append,
+    )
+    if pairs is None:
         id_type = new_docs.schema[id_col].dataType.simpleString()
         pairs = spark.createDataFrame(
             [], f"id_a {id_type}, id_b {id_type}, jaccard double"
         )
-    else:
-        pairs = near_dup_pairs_from_signatures(
-            new_sigs, store, id_col=id_col, threshold=threshold
-        )
-        if append:
-            # materialize before appending so the append doesn't feed
-            # back into the store scan (executor-side, not a collect)
-            pairs = pairs.localCheckpoint(eager=True)
-    if append:
-        new_sigs.write.mode("append").parquet(store_path)
     return pairs
 
 
@@ -863,19 +942,23 @@ def incremental_substring_dups(
 ) -> DataFrame:
     """Incremental substring-level dedup against a persisted chunk-
     fingerprint store: chunk only the NEW batch, probe its fingerprints
-    against the store plus the batch itself, and append the batch's
-    fingerprints.
+    against the store plus the batch itself, and (``append=True``) store
+    the batch's fingerprints.
 
     Returns the same per-doc profile as :func:`substring_dup_stats`
     (``id, n_chunks, shared_chunks, dup_frac``) for the new docs, where
     "shared" means the chunk hash occurs under any OTHER document —
     previously-stored or elsewhere in this batch. Per-ingest cost is the
     batch's chunk volume plus one semi-probe of the store on the
-    md5-uniform hash; old text is never rescanned. Same loop shape as
-    :func:`incremental_near_dups` — the 100 TB ingestion pattern.
+    md5-uniform hash; old text is never rescanned. The store layout is
+    :func:`incremental_near_dups`': the batch's chunks land in one
+    content-named ``ingest_batch_id`` partition that the probe skips, so re-running a batch replaces its own chunks instead
+    of matching and doubling them — the 100 TB ingestion pattern.
     """
     new_chunks = chunk_fingerprints(new_docs, id_col, text_col, width, stride)
-    store = read_parquet_if_exists(spark, store_path)
+    label = _batch_label(new_docs, id_col, text_col)
+    append = append and label is not None
+    store = _batch_store(spark, store_path, label, fold=append)
     if store is not None:
         store = store.select(id_col, "chunk_hash")
 
@@ -913,9 +996,9 @@ def incremental_substring_dups(
     )
     if append:
         out = out.localCheckpoint(eager=True)
-        new_chunks.select(id_col, "pos", "chunk_hash").write.mode(
-            "append"
-        ).parquet(store_path)
+        write_epoch(
+            new_chunks.select(id_col, "pos", "chunk_hash"), store_path, label
+        )
     return out
 
 

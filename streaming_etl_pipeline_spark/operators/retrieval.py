@@ -36,7 +36,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from streaming_etl_pipeline_spark.sources.io import path_exists
+from streaming_etl_pipeline_spark.sources.io import _apply_tombstones
 
 __all__ = [
     "Bm25Index",
@@ -44,7 +44,6 @@ __all__ = [
     "bm25_topk",
     "bm25_topk_sql",
     "bm25_topk_from_store",
-    "write_bm25_postings",
     "rrf_fuse",
     "rrf_fuse_sql",
     "BM25_K1",
@@ -601,6 +600,15 @@ def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5, c: int = RRF_C) -> str:
 
 # ---------------------------------------------------------------------------
 # Stored full-vocabulary posting index: build → prune-scan scoring
+#
+# The index is written by ``streaming.ingest.bm25_postings_batch`` (the
+# CLI ``build-bm25-index`` as one batch, the streaming sink per trigger):
+# ``(doc_id, term, doc_len, tf)`` postings partitioned by epoch and
+# ``term_bucket``, plus per-epoch ``(n_docs, sum_len)`` stats, because
+# BM25's idf/avg_len are CORPUS state that must accumulate. The corpus-
+# sized tokenize runs once per document; every later query batch reads
+# only its query terms' buckets. The ad-hoc :func:`bm25_build_index`
+# stays the tool for one-shot query sets.
 # ---------------------------------------------------------------------------
 
 #: Term-hash bucket count for the stored posting layout. Query-time
@@ -611,96 +619,6 @@ BM25_STORE_BUCKETS = 64
 
 def _term_bucket(term, buckets: int):
     return F.pmod(F.xxhash64(term), F.lit(buckets)).cast("int")
-
-
-def write_bm25_postings(
-    docs: DataFrame,
-    path: str,
-    buckets: int = BM25_STORE_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the FULL-vocabulary inverted index as a stored
-    artifact: ``(term, doc_id, doc_len, tf)`` parquet partitioned by
-    ``term_bucket = pmod(xxhash64(term), buckets)``, plus a 1-row
-    ``stats`` subdirectory (n_docs, sum_len). This is the 100 TB
-    lexical-index shape: the corpus-sized tokenize+aggregate runs ONCE
-    at build time; every later query batch reads only its query terms'
-    buckets (partition pruning — see
-    :func:`bm25_topk_from_store`), so query cost is ∝ query-term
-    postings, independent of vocabulary and corpus size. The ad-hoc
-    :func:`bm25_build_index` remains the right tool for one-shot query
-    sets (it never materializes non-query postings at all).
-
-    Contrast with the ANN side: centroids/codebooks are frozen model
-    state, but BM25's idf/avg_len are CORPUS state — so they are stored
-    (and, in the streaming sink, accumulated per batch) rather than
-    baked into scores; scoring folds them in at query time.
-    """
-    from streaming_etl_pipeline_spark.functions.core import tokenize
-    from streaming_etl_pipeline_spark.operators.text import norm_text
-
-    from pyspark import StorageLevel
-
-    # Refuse to append beside a postings/ epoch that has no term_stats/
-    # (judge r10 advice, medium): the append would create a term_stats/
-    # covering only the new epoch, and any external consumer trusting it
-    # as a per-term max over ALL postings would hold invalid bounds.
-    # (The in-package maxscore read computes its bound live and never
-    # trusts the stored table — this guard keeps the ARTIFACT honest.)
-    spark = docs.sparkSession
-    if (
-        mode == "append"
-        and path_exists(spark, os.path.join(path, "postings"))
-        and not path_exists(spark, os.path.join(path, "term_stats"))
-    ):
-        raise ValueError(
-            "write_bm25_postings(mode='append'): store at "
-            f"{path!r} has postings/ but no term_stats/ (pre-r10 "
-            "build); appending would leave term_stats/ covering only "
-            "the new epoch, silently understating per-term max tf. "
-            "Rebuild with mode='overwrite' first."
-        )
-
-    toks = tokenize(norm_text(text_col))
-    postings = (
-        docs.select(
-            F.col(id_col), F.explode(toks).alias("term"),
-            F.size(toks).alias("doc_len"),
-        )
-        .groupBy(id_col, "term", "doc_len")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("term_bucket", _term_bucket(F.col("term"), buckets))
-        .persist(StorageLevel.MEMORY_AND_DISK)  # feeds both writes once
-    )
-    (
-        postings.write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    # per-term max tf (r10, judge r9 task #5): the stored ingredient of
-    # the MAXSCORE upper bound. Safe under deletes — removing docs can
-    # only LOWER the true max, so a stale stored bound stays a bound —
-    # and under appends the read-side max-per-term covers new epochs.
-    (
-        postings.groupBy("term", "term_bucket")
-        .agg(F.max("tf").alias("max_tf"))
-        .write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "term_stats"))
-    )
-    postings.unpersist()
-    (
-        docs.select(F.size(toks).alias("dl"))
-        .filter("dl > 0")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("long").alias("sum_len"),
-        )
-        .write.mode(mode)
-        .parquet(os.path.join(path, "stats"))
-    )
 
 
 #: Per-term rounding slack for MAXSCORE upper bounds: each per-(q,d,t)
@@ -900,9 +818,10 @@ def bm25_topk_from_store(
     exclude_self: bool = False,
     algo: str = "auto",
 ) -> DataFrame:
-    """BM25 top-``k`` against a stored posting index
-    (:func:`write_bm25_postings` / the streaming sink) — identical
-    scores to :func:`bm25_topk` over the same corpus (pinned by
+    """BM25 top-``k`` against a stored posting index (the CLI
+    ``build-bm25-index`` or the streaming sink, both written by
+    ``streaming.ingest.bm25_postings_batch``) — identical scores to
+    :func:`bm25_topk` over the same corpus (pinned by
     ``test_bm25_store_matches_direct``).
 
     The posting scan filters on ``term_bucket IN (query buckets)`` —
@@ -942,10 +861,6 @@ def bm25_topk_from_store(
     # tombstoned docs (streaming.ingest.bm25_delete_ids) drop out of the
     # pruned read — df then counts only live docs, and the stored stats
     # already net out via the negative tombstone partition
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        _apply_tombstones,
-    )
-
     postings = _apply_tombstones(
         spark, os.path.join(path, "postings"), postings
     )
@@ -960,15 +875,13 @@ def bm25_topk_from_store(
     )
     # one term-grain pass over the persisted pruned read feeds df (idf,
     # the auto-switch estimate) AND the live per-term max tf: the
-    # MAXSCORE bound uses the LIVE max, never the stored term_stats/
-    # (judge r10 advice, medium) — a pre-r10 store appended to by an
-    # r10 writer carries a term_stats/ covering only the appended
-    # epoch, so the stored per-term max can sit below the true max over
-    # all postings epochs (or miss a term entirely, silently making it
+    # MAXSCORE bound is the LIVE max, never a stored per-term table — a
+    # table written with one epoch can sit below the true max over all
+    # postings epochs (or miss a term entirely, silently making it
     # non-essential) and the "upper bounds" stop bounding. The live max
-    # is exact over the current (post-tombstone) postings — a strictly
-    # tighter valid bound — and costs zero extra shuffles because the
-    # df aggregation runs over the same cached frame regardless.
+    # is exact over the current (post-tombstone) postings and costs
+    # zero extra shuffles because the df aggregation runs over the same
+    # cached frame regardless.
     term_agg = doc_term.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf")
     )
@@ -1005,8 +918,8 @@ def bm25_topk_from_store(
     candidates = None
     if algo in ("maxscore", "blockmax"):
         # live per-term max tf from the shared term-grain aggregation —
-        # see the term_agg comment above for why the stored term_stats/
-        # is never trusted here (mixed-epoch appends can understate it)
+        # see the term_agg comment above for why no stored bound is
+        # trusted here (mixed-epoch appends can understate it)
         n_blocks = None
         if algo == "blockmax":
             # corpus-size-independent block count: bounds tighten with

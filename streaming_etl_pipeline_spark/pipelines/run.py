@@ -519,17 +519,21 @@ def main(argv: list[str] | None = None) -> int:
         metrics["quantizer.k"] = args.k
         metrics["quantizer.centroids"] = spark.read.parquet(args.output).count()
     if args.cmd == "build-bm25-index":
-        from streaming_etl_pipeline_spark.operators.retrieval import (
-            write_bm25_postings,
+        from streaming_etl_pipeline_spark.sources.io import replace_dir
+        from streaming_etl_pipeline_spark.streaming.ingest import (
+            bm25_postings_batch,
         )
 
         docs = spark.read.parquet(args.input)
-        write_bm25_postings(
-            docs,
-            args.output,
-            buckets=args.buckets,
-            id_col=args.id_col,
-            text_col=args.text_col,
+        # a build replaces the WHOLE index: the epoch write alone would
+        # keep earlier epochs, compacted partitions and tombstones
+        replace_dir(
+            spark, args.output,
+            lambda path: bm25_postings_batch(
+                docs, 0, path,
+                buckets=args.buckets, id_col=args.id_col,
+                text_col=args.text_col, run_token="batch",
+            ),
         )
         metrics["bm25_index.docs"] = docs.count()
         metrics["bm25_index.buckets"] = float(args.buckets)

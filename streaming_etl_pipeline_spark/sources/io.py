@@ -10,9 +10,11 @@ Covers the reference's batch I/O surface (SURVEY.md §2.1):
 It is also the one storage seam of the engine's stores (streaming
 ingest stores, dedup stores, Silver): :func:`read_parquet_if_exists`
 answers "is this store there yet?", :func:`write_epoch` writes one
-micro-batch idempotently, and :func:`replace_dir` / :func:`repair_store`
-replace a directory crash-safely. Every Hadoop ``FileSystem`` handle
-comes from :func:`hadoop_fs`.
+micro-batch idempotently, :func:`fold_epochs` folds a store's epochs
+into one partition, :func:`replace_dir` / :func:`repair_store` replace
+a directory crash-safely, and :func:`_apply_tombstones` hides deleted
+ids on read. Every Hadoop ``FileSystem`` handle comes from
+:func:`hadoop_fs`.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
 Catalyst for free; partitioned writes use dynamic partition overwrite so a
@@ -24,6 +26,7 @@ this via ``spark.sql.sources.partitionOverwriteMode=dynamic``,
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 from functools import lru_cache
 
@@ -199,6 +202,81 @@ def write_epoch(
     )
 
 
+def fold_epochs(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    *partition_cols: str,
+    label: str | None = None,
+    keep_folded: bool = False,
+) -> tuple[list[str], str]:
+    """Replace the store at ``path`` with ``df`` (its rewritten
+    contents) as ONE ``ingest_batch_id=label`` partition, with
+    ``partition_cols`` as sub-partitions, swapped in by
+    :func:`replace_dir`. ``label`` defaults to ``compacted-<md5 of the
+    store's sorted partition values>``; a store in the flat layout (no
+    ``ingest_batch_id`` yet) folds as an empty value list. With
+    ``keep_folded`` a store that already is that single partition (or,
+    without ``label``, any single ``compacted-*`` partition) is left
+    untouched, so re-folding is a no-op. Returns the store's partition
+    values before the fold and the label."""
+    store = spark.read.parquet(path)
+    parts = (
+        sorted(
+            str(r[0])
+            for r in store.select("ingest_batch_id").distinct().collect()
+        )  # bounded: one value per trigger
+        if "ingest_batch_id" in store.columns
+        else []
+    )
+    if keep_folded and len(parts) == 1 and (
+        parts[0] == label
+        or (label is None and parts[0].startswith("compacted-"))
+    ):
+        return parts, parts[0]
+    if label is None:
+        digest = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
+        label = f"compacted-{digest}"
+    replace_dir(
+        spark,
+        path,
+        df.withColumn("ingest_batch_id", F.lit(label)).write.partitionBy(
+            "ingest_batch_id", *partition_cols
+        ),
+    )
+    return parts, label
+
+
+#: Sidecar directory for deletions. The underscore prefix makes it
+#: invisible to Spark's parquet file index (like ``_SUCCESS`` /
+#: ``_manifest.json``), so plain ``spark.read.parquet(store)`` — and
+#: every epoch-partition replay — never sees it; only the delete-aware
+#: readers join against it.
+TOMBSTONE_DIR = "_tombstones"
+
+
+def load_tombstones(
+    spark: SparkSession, store_path: str
+) -> "DataFrame | None":
+    """The distinct tombstoned ids of a store, or None when the store
+    has no ``_tombstones/`` sidecar."""
+    t = read_parquet_if_exists(spark, os.path.join(store_path, TOMBSTONE_DIR))
+    return None if t is None else t.distinct()
+
+
+def _apply_tombstones(
+    spark: SparkSession, store_path: str, df: DataFrame
+) -> DataFrame:
+    """Anti-join a store read against its tombstone sidecar (no-op when
+    none exists). The tombstone side is broadcast: deletes are
+    id-list-sized, never corpus-sized."""
+    tomb = load_tombstones(spark, store_path)
+    if tomb is None:
+        return df
+    (join_col,) = tomb.columns
+    return df.join(F.broadcast(tomb), join_col, "left_anti")
+
+
 def _swap_paths(path: str) -> tuple[str, str]:
     base = path.rstrip("/")
     return base + ".__compact__", base + ".__old__"
@@ -206,24 +284,29 @@ def _swap_paths(path: str) -> tuple[str, str]:
 
 def replace_dir(spark: SparkSession, path: str, writer) -> None:
     """Replace the dataset at ``path`` crash-safely. ``writer`` (a
-    configured ``DataFrameWriter`` of the full replacement) writes beside
-    the live path, to ``<path>.__compact__``; two CHECKED renames then
-    swap it in (Hadoop ``FileSystem.rename`` reports failure by returning
-    false, and renames src INSIDE an existing dst directory, so both
-    results are checked and a stale ``.__old__`` is cleared first by
-    :func:`repair_store`). A failed second rename rolls the original
-    back, so the live path is never left empty; a crash at any point
-    leaves one of the states :func:`repair_store` resolves. The swap is
-    not atomic for concurrent readers: run it between pipeline stages
-    (the versioned tables below are the live-reader-safe form)."""
+    configured ``DataFrameWriter`` of the full replacement, or a function
+    that writes the replacement into the directory it is given) writes
+    beside the live path, to ``<path>.__compact__``; two CHECKED renames
+    then swap it in (Hadoop ``FileSystem.rename`` reports failure by
+    returning false, and renames src INSIDE an existing dst directory,
+    so both results are checked and a stale ``.__old__`` is cleared
+    first by :func:`repair_store`). A failed second rename rolls the
+    original back, so the live path is never left empty; a crash at any
+    point leaves one of the states :func:`repair_store` resolves. A
+    missing ``path`` is simply written. The swap is not atomic for
+    concurrent readers: run it between pipeline stages (the versioned
+    tables below are the live-reader-safe form)."""
     repair_store(spark, path)
     tmp, old = _swap_paths(path)
-    writer.mode("overwrite").parquet(tmp)
+    if callable(writer):
+        writer(tmp)
+    else:
+        writer.mode("overwrite").parquet(tmp)
     fs, jpath = hadoop_fs(spark, path)
     jvm = spark._jvm
     jold = jvm.org.apache.hadoop.fs.Path(old)
     jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    if not fs.rename(jpath, jold):
+    if fs.exists(jpath) and not fs.rename(jpath, jold):
         raise RuntimeError(
             f"store swap: rename {path} -> {old} failed "
             "(Hadoop rename returned false); store left untouched"
@@ -243,10 +326,10 @@ def repair_store(spark: SparkSession, path: str) -> str:
     distinct directory signature beside the live path, and each with
     exactly one safe resolution:
 
-    - ``.__compact__`` present, live path present (crash after the
-      rewrite, before any rename): the original is intact — roll BACK
-      by deleting the stale rewrite (it may itself be a partial write,
-      so it is never trusted).
+    - ``.__compact__`` present, live path present or never written
+      (crash after the rewrite, before any rename): the original is
+      intact — roll BACK by deleting the stale rewrite (it may itself
+      be a partial write, so it is never trusted).
     - ``.__compact__`` present, live path MISSING, ``.__old__`` present
       (crash between the two renames): the rewrite completed before the
       renames began — roll FORWARD by renaming it into place, then drop
@@ -262,7 +345,7 @@ def repair_store(spark: SparkSession, path: str) -> str:
     jtmp = spark._jvm.org.apache.hadoop.fs.Path(tmp)
     jold = spark._jvm.org.apache.hadoop.fs.Path(old)
     live, tmp_e, old_e = fs.exists(jpath), fs.exists(jtmp), fs.exists(jold)
-    if tmp_e and live:
+    if tmp_e and (live or not old_e):
         fs.delete(jtmp, True)
         if old_e:  # can only co-exist with a live path via manual copies
             fs.delete(jold, True)

@@ -24,9 +24,13 @@ The incremental stores below (dedup signatures, cluster labels, ANN
 index, BM25 postings, n-gram counts) share one exactly-once contract:
 a ``foreachBatch`` sink (:func:`_start_epoch_sink`) whose micro-batch
 writes one ``<token>-<epoch>`` partition per store with
-``sources.io.write_epoch``. Optional store reads go through
-``sources.io.read_parquet_if_exists`` and directory rewrites through
-``sources.io.replace_dir``, so none of that is repeated here.
+``sources.io.write_epoch``. Each store has that one writer: the CLI's
+batch entry points (``build-bm25-index``, ``build-ngram-store``,
+``dedup``) write through the same per-batch functions. Optional store
+reads go through ``sources.io.read_parquet_if_exists``, tombstones
+through ``sources.io._apply_tombstones``, and folding a store's epochs
+into one partition through ``sources.io.fold_epochs``, so none of that
+is repeated here.
 """
 
 from __future__ import annotations
@@ -40,8 +44,13 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
+    TOMBSTONE_DIR,
+    _apply_tombstones,
     epoch_value,
+    fold_epochs,
     hadoop_fs,
+    load_tombstones,
+    path_exists,
     read_parquet_if_exists,
     repair_store,
     replace_dir,
@@ -283,28 +292,6 @@ def enrich_stream(
     return stream.join(F.broadcast(dim), on=on, how=how)
 
 
-def dedup_stream(
-    stream: DataFrame,
-    keys: list[str],
-    event_time_col: str = "event_time",
-    delay: str = WATERMARK,
-) -> DataFrame:
-    """Exact streaming deduplication with BOUNDED state:
-    ``dropDuplicatesWithinWatermark`` keeps a key only until the
-    watermark passes its event time, so state size is (keys arriving in
-    one watermark window), not (all keys ever) — the difference between
-    a stream that runs for years and one that OOMs in a week. Duplicates
-    separated by more than ``delay`` are not caught here by design;
-    cross-window exactness belongs to the batch layer
-    (``operators/dedup.exact_dups``) or the incremental store
-    (:func:`start_dedup_ingest_sink`). Retried producer sends and
-    replayed source batches — the common duplicate sources — land well
-    inside the window."""
-    return stream.withWatermark(
-        event_time_col, delay
-    ).dropDuplicatesWithinWatermark(keys)
-
-
 def start_dedup_ingest_sink(
     docs: DataFrame,
     path: str,
@@ -332,9 +319,11 @@ def start_dedup_ingest_sink(
     instead of appending a second copy. The replay is also
     *deterministic*: the store probe excludes the batch's own partition,
     so signatures a half-finished first attempt already persisted can't
-    change which documents count as novel the second time. Downstream
-    readers of ``path`` see one extra ``ingest_batch_id`` partition
-    column (drop it if unwanted).
+    change which documents count as novel the second time. The CLI
+    ``dedup`` command writes the same store layout through the same
+    probe (``operators/dedup._probe_signature_store``), so both can feed
+    one store. Downstream readers of ``path`` see one extra
+    ``ingest_batch_id`` partition column (drop it if unwanted).
 
     Batch-internal near-dups are resolved keep-min within the trigger;
     cross-batch dups are whatever matches the store. All of the batch's
@@ -405,47 +394,37 @@ def dedup_ingest_batch(
     (``<token>-<epoch>``) so a checkpoint reset cannot replay over a
     previous run's partitions; ``None`` keeps the bare epoch id."""
     from streaming_etl_pipeline_spark.operators.dedup import (
+        _probe_signature_store,
         build_signatures,
         near_dup_pairs_from_signatures,
     )
 
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
     part_val = epoch_value(batch_id, run_token)
     batch_df = batch_df.localCheckpoint(eager=True)
     sigs = build_signatures(
         batch_df, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=True)
-    store = read_parquet_if_exists(spark, store_path)
-    if store is not None:
-        if "ingest_batch_id" in store.columns:
-            # exclude our own partition: on a replay the store may
-            # already hold this batch's signatures from a partial
-            # first attempt, and probing them would flip the
-            # keep-min choice (both ids of a within-batch pair
-            # appear "in the store" → both dropped). Compare as
-            # STRING: a legacy store has integer partition values and
-            # an int-typed column would cast a namespaced value to
-            # NULL, silently excluding the whole store.
-            store = store.where(
-                F.col("ingest_batch_id").cast("string") != F.lit(part_val)
-            ).drop("ingest_batch_id")
-        # else: store written by a pre-partitioning version — nothing
-        # of ours can be in it, probe it whole.
-        # tombstoned (taken-down) docs stop suppressing near-dups of
-        # their content the moment they are deleted
-        store = _apply_tombstones(spark, store_path, store)
+    # the probe skips this epoch's own partition: on a replay the store
+    # may already hold this batch's signatures from a partial first
+    # attempt, and probing them would flip the keep-min choice (both
+    # ids of a within-batch pair "in the store" → both dropped);
+    # tombstoned (taken-down) docs stop suppressing near-dups of their
+    # content the moment they are deleted
+    cross = _probe_signature_store(
+        batch_df.sparkSession, sigs, store_path, part_val,
+        id_col=id_col, threshold=threshold,
+    )
     # within-trigger near-dups: greedy keep-min of each pair
-    self_pairs = near_dup_pairs_from_signatures(sigs, threshold=threshold)
+    self_pairs = near_dup_pairs_from_signatures(
+        sigs, id_col=id_col, threshold=threshold
+    )
     drops = self_pairs.select(
         F.greatest("id_a", "id_b").alias(id_col)
     )
     all_pairs = self_pairs.select("id_a", "id_b")
-    if store is not None:
-        cross = near_dup_pairs_from_signatures(
-            sigs, store, threshold=threshold
-        )
+    if cross is not None:
         # the batch-side id may land on either column; store-side ids
         # simply won't match the anti-join below
         drops = drops.unionByName(
@@ -463,7 +442,6 @@ def dedup_ingest_batch(
         drops.distinct().localCheckpoint(eager=True), id_col, "left_anti"
     )
     write_epoch(novel, path, part_val)
-    write_epoch(sigs, store_path, part_val)
 
 
 # ---------------------------------------------------------------------------
@@ -622,8 +600,8 @@ def compact_cluster_store(
     and the tombstone/split sidecars. After compaction, the next
     resolution's star contraction sees ONLY pairs appended since — the
     property that keeps per-trigger cost ∝ trigger pairs on a
-    long-running stream. Crash-safe by idempotence: the members swap is
-    ``sources.io.replace_dir``, as in :func:`compact_ingest_store`, and
+    long-running stream. Crash-safe by idempotence: the members fold is
+    ``sources.io.fold_epochs``, as in :func:`compact_ingest_store`, and
     leftover merge_pairs/tombstones from a crash after the swap are
     no-ops on re-read (already-folded pairs map both endpoints to the
     same comp and drop; already-dropped nodes anti-join against
@@ -640,8 +618,6 @@ def compact_cluster_store(
     cost proportional to the retained pair history (per-trigger cost is
     untouched); once a store has a ``pair_history/`` dir, later
     compactions keep maintaining it regardless of the flag."""
-    import hashlib
-
     labels = cluster_labels_from_store(spark, store_path).persist()
     n = labels.count()
     hist_path = os.path.join(store_path, "pair_history")
@@ -663,25 +639,9 @@ def compact_cluster_store(
             .select("ca", "cb", "comp")
             .distinct()
         )
-        writer = folded.write.partitionBy("comp")
-        if have_hist:
-            replace_dir(spark, hist_path, writer)
-        else:  # first history materialization — nothing to swap out
-            writer.mode("overwrite").parquet(hist_path)
-    members_path = os.path.join(store_path, "members")
-    parts = sorted(
-        str(r.ingest_batch_id)
-        for r in spark.read.parquet(members_path)
-        .select("ingest_batch_id")
-        .distinct()
-        .collect()
-    )
-    digest = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-    replace_dir(
-        spark,
-        members_path,
-        labels.withColumn("ingest_batch_id", F.lit(f"compacted-{digest}"))
-        .write.partitionBy("ingest_batch_id"),
+        replace_dir(spark, hist_path, folded.write.partitionBy("comp"))
+    parts, _ = fold_epochs(
+        spark, os.path.join(store_path, "members"), labels
     )
     for sub in ("merge_pairs", TOMBSTONE_DIR, SPLIT_DIR):
         fs, jp = hadoop_fs(spark, os.path.join(store_path, sub))
@@ -910,28 +870,9 @@ def ann_index_batch(
     if batch_df.isEmpty():
         return
     books = codebooks if codebooks is not None else SIM.PQ_CODEBOOKS
-    if use_arrow:
-        assigned = SIM.ivf_assign_arrow(
-            batch_df, centroids, id_col=id_col, vec_col=vec_col
-        ).select(id_col, "centroid_id")
-        codes = SIM.pq_encode_arrow(
-            batch_df, books, id_col=id_col, vec_col=vec_col
-        )
-        index = assigned.join(codes, id_col)
-        if carry:
-            index = index.join(
-                batch_df.select(id_col, *carry), id_col
-            )
-    else:
-        index = SIM.ivf_assign(
-            batch_df, centroids, id_col=id_col, vec_col=vec_col,
-            carry=carry,
-        ).select(
-            id_col,
-            "centroid_id",
-            *carry,
-            SIM.pq_encode(vec_col, books).alias("codes"),
-        )
+    index = _encode_index(
+        batch_df, centroids, books, id_col, vec_col, use_arrow, carry
+    )
     # centroid_id as an OPT-IN second partition level: probe-heavy
     # deployments get static cell pruning (ivf_pq_topk's
     # prune_stored_cells reads only nprobe cells' directories), at the
@@ -947,6 +888,42 @@ def ann_index_batch(
     )
 
 
+def _encode_index(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    codebooks: "list[list[list[float]]]",
+    id_col: str,
+    vec_col: str,
+    use_arrow: bool,
+    carry: "tuple[str, ...]",
+) -> DataFrame:
+    """Index rows ``(id, centroid_id, codes, *carry)`` of ``vectors``:
+    IVF assignment against ``centroids`` plus PQ encoding against
+    ``codebooks``, a pure 0-shuffle per-row map (``use_arrow``: Arrow
+    GEMM per batch, with the ``carry`` columns joined back by id)."""
+    from streaming_etl_pipeline_spark.operators import similarity as SIM
+
+    if use_arrow:
+        assigned = SIM.ivf_assign_arrow(
+            vectors, centroids, id_col=id_col, vec_col=vec_col
+        ).select(id_col, "centroid_id")
+        codes = SIM.pq_encode_arrow(
+            vectors, codebooks, id_col=id_col, vec_col=vec_col
+        )
+        index = assigned.join(codes, id_col)
+        if carry:
+            index = index.join(vectors.select(id_col, *carry), id_col)
+        return index
+    return SIM.ivf_assign(
+        vectors, centroids, id_col=id_col, vec_col=vec_col, carry=carry
+    ).select(
+        id_col,
+        "centroid_id",
+        *carry,
+        SIM.pq_encode(vec_col, codebooks).alias("codes"),
+    )
+
+
 def load_ann_index(spark: SparkSession, index_path: str) -> DataFrame:
     """Read the streaming-maintained IVF-PQ index back in the
     ``(vec_id, centroid_id, codes)`` shape ``ivf_pq_topk`` expects as
@@ -957,12 +934,16 @@ def load_ann_index(spark: SparkSession, index_path: str) -> DataFrame:
     return _apply_tombstones(spark, index_path, idx)
 
 
-#: Sidecar directory for deletions. The underscore prefix makes it
-#: invisible to Spark's parquet file index (like ``_SUCCESS`` /
-#: ``_manifest.json``), so plain ``spark.read.parquet(store)`` — and
-#: every epoch-partition replay — never sees it; only the delete-aware
-#: readers join against it.
-TOMBSTONE_DIR = "_tombstones"
+def _id_frame(
+    spark: SparkSession, ids: "DataFrame | list", id_col: str
+) -> DataFrame:
+    """An id list as a one-column ``id_col`` frame (a DataFrame passes
+    through): typed string when the first id is a string, long
+    otherwise, matching the store's id column."""
+    if isinstance(ids, DataFrame):
+        return ids
+    kind = "string" if ids and isinstance(ids[0], str) else "long"
+    return spark.createDataFrame([(i,) for i in ids], f"{id_col} {kind}")
 
 
 def delete_ids(
@@ -990,38 +971,12 @@ def delete_ids(
     therefore delete → compact → re-ingest (or re-ingest under a new
     id); the common takedown path never re-adds. Returns the number of
     ids appended."""
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} string") \
-            if ids and isinstance(ids[0], str) \
-            else spark.createDataFrame([(i,) for i in ids], f"{id_col} long")
-    frame = ids.select(id_col).distinct()
+    frame = _id_frame(spark, ids, id_col).select(id_col).distinct()
     n = frame.count()
     frame.coalesce(1).write.mode("append").parquet(
         os.path.join(store_path, TOMBSTONE_DIR)
     )
     return int(n)
-
-
-def load_tombstones(
-    spark: SparkSession, store_path: str
-) -> "DataFrame | None":
-    """The distinct tombstoned ids of a store, or None when the store
-    has no ``_tombstones/`` sidecar."""
-    t = read_parquet_if_exists(spark, os.path.join(store_path, TOMBSTONE_DIR))
-    return None if t is None else t.distinct()
-
-
-def _apply_tombstones(
-    spark: SparkSession, store_path: str, df: DataFrame
-) -> DataFrame:
-    """Anti-join a store read against its tombstone sidecar (no-op when
-    none exists). The tombstone side is broadcast: deletes are
-    id-list-sized, never corpus-sized."""
-    tomb = load_tombstones(spark, store_path)
-    if tomb is None:
-        return df
-    (join_col,) = tomb.columns
-    return df.join(F.broadcast(tomb), join_col, "left_anti")
 
 
 def bm25_delete_ids(
@@ -1031,7 +986,7 @@ def bm25_delete_ids(
     id_col: str = "doc_id",
 ) -> dict:
     """Delete documents from a stored BM25 index
-    (:func:`start_bm25_index_sink` / ``retrieval.write_bm25_postings``):
+    (:func:`start_bm25_index_sink` / the CLI ``build-bm25-index``):
     tombstones the posting rows AND appends a NEGATIVE stats partition
     (−n_docs, −sum_len for the deleted docs), so the summed corpus
     statistics — idf's N and avg_len — net out at query time without
@@ -1041,9 +996,7 @@ def bm25_delete_ids(
     (one id-list-broadcast-joined scan, at delete time — deletion is
     the rare path). Returns ``{"deleted", "len_sum"}``."""
     post_dir = os.path.join(index_path, "postings")
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], f"{id_col} long")
-    id_list = ids.select(id_col).distinct()
+    id_list = _id_frame(spark, ids, id_col).select(id_col).distinct()
     # per-doc length: constant across a doc's posting rows
     doc_lens = (
         spark.read.parquet(post_dir)
@@ -1090,50 +1043,23 @@ def compact_ingest_store(
     Contract: run with the stream STOPPED and its checkpoint retired —
     a later replay of a compacted epoch would re-append that epoch's
     partition beside the compacted rows (the idempotence key is gone).
-    The rewritten store is swapped in by ``sources.io.replace_dir``; a
-    crash at any point leaves a state :func:`repair_store` (called
-    first, here and standalone) rolls forward or back to a readable
-    store. Returns ``{"partitions_before", "rows", "label"}``.
+    The rewritten store is swapped in by ``sources.io.fold_epochs`` (a
+    ``replace_dir`` swap); a crash at any point leaves a state
+    :func:`repair_store` (called first, here and standalone) rolls
+    forward or back to a readable store. Returns
+    ``{"partitions_before", "rows", "label"}``.
     """
-    import hashlib
-
     repair_store(spark, path)
-    df = spark.read.parquet(path)
-    tomb = load_tombstones(spark, path)
-    if tomb is not None:
-        # fold deletions away physically: the rewrite drops tombstoned
-        # rows and the sidecar is swapped out with the old directory
-        (join_col,) = tomb.columns
-        df = df.join(F.broadcast(tomb), join_col, "left_anti")
-    parts = sorted(
-        str(r.ingest_batch_id)
-        for r in df.select("ingest_batch_id").distinct().collect()
-    )  # bounded: one value per trigger
-    if label is None:
-        if (
-            len(parts) == 1
-            and parts[0].startswith("compacted-")
-            and tomb is None  # pending deletions force a rewrite
-        ):
-            # Already compacted: the digest of the CURRENT partition
-            # value would differ from the digest that named it, so
-            # without this short-circuit every invocation would fully
-            # rewrite (and relabel) the store.
-            return {
-                "partitions_before": 1,
-                "rows": df.count(),
-                "label": parts[0],
-            }
-        digest = hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-        label = f"compacted-{digest}"
-    if parts == [label] and tomb is None:
-        return {"partitions_before": 1, "rows": df.count(), "label": label}
+    # fold deletions away physically: the rewrite drops tombstoned
+    # rows and the sidecar is swapped out with the old directory
+    df = _apply_tombstones(spark, path, spark.read.parquet(path))
     n_rows = df.count()
-    replace_dir(
-        spark,
-        path,
-        df.withColumn("ingest_batch_id", F.lit(label))
-        .write.partitionBy("ingest_batch_id", *secondary_partition_cols),
+    # an already-folded store is left untouched unless deletions are
+    # pending: re-compacting is a true no-op and keeps its label
+    pending = path_exists(spark, os.path.join(path, TOMBSTONE_DIR))
+    parts, label = fold_epochs(
+        spark, path, df, *secondary_partition_cols,
+        label=label, keep_folded=not pending,
     )
     return {
         "partitions_before": len(parts),
@@ -1200,7 +1126,7 @@ def reencode_index(
     vectors, assigned + PQ-encoded against the NEW centroids/codebooks
     (the same pure 0-shuffle map as :func:`ann_index_batch` — one
     distributed pass over the index's ids, cost ∝ index size), and the
-    rewritten store is swapped in by ``sources.io.replace_dir`` (crash
+    rewritten store is swapped in by ``sources.io.fold_epochs`` (crash
     states recover via :func:`repair_store`, called first).
 
     This is the *react* half of the drift loop —
@@ -1219,8 +1145,6 @@ def reencode_index(
     takedowns through this path deliberately).
 
     Returns ``{"rows", "missing_vectors", "label"}``."""
-    from streaming_etl_pipeline_spark.operators import similarity as SIM
-
     repair_store(spark, index_path)
     ids = _apply_tombstones(
         spark, index_path, spark.read.parquet(index_path).select(id_col)
@@ -1228,31 +1152,15 @@ def reencode_index(
     n_ids = ids.count()
     live = vectors.join(ids, id_col).localCheckpoint(eager=True)
     n_live = live.count()
-    if use_arrow:
-        assigned = SIM.ivf_assign_arrow(
-            live, centroids, id_col=id_col, vec_col=vec_col
-        ).select(id_col, "centroid_id")
-        codes = SIM.pq_encode_arrow(
-            live, codebooks, id_col=id_col, vec_col=vec_col
-        )
-        index = assigned.join(codes, id_col)
-        if carry:  # stored filter attributes ride through the migration
-            index = index.join(live.select(id_col, *carry), id_col)
-    else:
-        index = SIM.ivf_assign(
-            live, centroids, id_col=id_col, vec_col=vec_col, carry=carry
-        ).select(
-            id_col,
-            "centroid_id",
-            *carry,
-            SIM.pq_encode(vec_col, codebooks).alias("codes"),
-        )
-    part_cols = ["centroid_id"] if partition_by_cell else []
-    replace_dir(
+    # stored filter attributes (carry) ride through the migration
+    fold_epochs(
         spark,
         index_path,
-        index.withColumn("ingest_batch_id", F.lit(label))
-        .write.partitionBy("ingest_batch_id", *part_cols),
+        _encode_index(
+            live, centroids, codebooks, id_col, vec_col, use_arrow, carry
+        ),
+        *(["centroid_id"] if partition_by_cell else []),
+        label=label,
     )
     return {
         "rows": int(n_live),
@@ -1367,10 +1275,12 @@ def start_bm25_index_sink(
 
     Per-trigger cost ∝ batch postings (one batch-local aggregation, no
     store read at all); replays rewrite their own partitions
-    byte-for-byte. Precondition (same as :func:`dedup_stream` hands
-    off): doc ids unique across batches — a re-sent doc id would
-    double-count in df/tf. Route the stream through the dedup ingest
-    first when the source replays content."""
+    byte-for-byte. Precondition: doc ids unique across batches — a
+    re-sent doc id would double-count in df/tf. Route the stream through
+    the dedup ingest first when the source replays content. The CLI
+    ``build-bm25-index`` writes its index as one
+    :func:`bm25_postings_batch` epoch, so a sink can keep appending to
+    a CLI-built index."""
     return _start_epoch_sink(
         docs, checkpoint, trigger, bm25_postings_batch, index_path,
         buckets=buckets, id_col=id_col, text_col=text_col,
@@ -1399,12 +1309,15 @@ def bm25_postings_batch(
         return
     b = buckets if buckets is not None else RT.BM25_STORE_BUCKETS
     part_val = epoch_value(batch_id, run_token)
-    batch_df = batch_df.localCheckpoint(eager=True)
-    toks = tokenize(norm_text(text_col))
+    # tokenize once: the materialized token arrays feed both writes, so
+    # a replayed source cannot hand the postings and stats different docs
+    toks = batch_df.select(
+        F.col(id_col), tokenize(norm_text(text_col)).alias("toks")
+    ).localCheckpoint(eager=True)
     postings = (
-        batch_df.select(
-            F.col(id_col), F.explode(toks).alias("term"),
-            F.size(toks).alias("doc_len"),
+        toks.select(
+            id_col, F.explode("toks").alias("term"),
+            F.size("toks").alias("doc_len"),
         )
         .groupBy(id_col, "term", "doc_len")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1413,7 +1326,7 @@ def bm25_postings_batch(
     write_epoch(
         postings, os.path.join(index_path, "postings"), part_val, "term_bucket"
     )
-    stats = batch_df.select(F.size(toks).alias("dl")).filter("dl > 0").agg(
+    stats = toks.select(F.size("toks").alias("dl")).filter("dl > 0").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_len"),
     )

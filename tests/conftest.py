@@ -41,6 +41,8 @@ def _slow_ids() -> frozenset[str]:
         return frozenset()
 
 
+# tryfirst: see every collected item, before -k/--deselect narrow them
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
     slow_ids = _slow_ids()
     # A manifest line whose test file is gone would silently deselect
@@ -56,6 +58,28 @@ def pytest_collection_modifyitems(config, items):
         raise pytest.UsageError(
             f"{_SLOW_MANIFEST} names missing test files {stale}; "
             "remove their lines"
+        )
+    # Nor may a line name a test its file no longer has (renamed or
+    # deleted): it would run in the default suite unnoticed. Checked only
+    # for files collected whole — an argument like file.py::test_x
+    # collects part of its file.
+    narrowed = {
+        os.path.relpath(
+            os.path.abspath(a.split("::")[0]), str(config.rootpath)
+        )
+        for a in config.args
+        if "::" in a
+    }
+    collected = {i.nodeid for i in items}
+    files = {n.split("::")[0] for n in collected} - narrowed
+    unknown = sorted(
+        i for i in slow_ids
+        if i.split("::")[0] in files and i not in collected
+    )
+    if unknown:
+        raise pytest.UsageError(
+            f"{_SLOW_MANIFEST} names tests that do not exist {unknown}; "
+            "rename or remove their lines"
         )
     for item in items:
         if item.nodeid in slow_ids:

@@ -13,6 +13,7 @@ from streaming_etl_pipeline_spark.operators import dedup as DD
 from streaming_etl_pipeline_spark.operators import multimodal as MM
 from streaming_etl_pipeline_spark.operators import similarity as SIM
 from streaming_etl_pipeline_spark.operators import text as TX
+from streaming_etl_pipeline_spark.streaming.ingest import bm25_postings_batch
 
 
 @pytest.fixture(scope="module")
@@ -275,6 +276,29 @@ def test_incremental_near_dups_bootstrap_string_ids_and_error_propagation(
     with pytest.raises(Exception):
         DD.incremental_near_dups(spark, docs, str(junk)).count()
     assert [f.name for f in junk.iterdir()] == ["notes.txt"]
+
+
+def test_incremental_near_dups_recrawl_keeps_earlier_text(spark, tmp_path):
+    """A batch is named by its ids AND text: a re-crawl that sends the
+    same ids with changed text lands beside the earlier signatures
+    instead of replacing them, so a later near-dup of the earlier text
+    is still found; an exact retry still replaces its own partition."""
+    store = str(tmp_path / "sig_store")
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    novel = "a wholly novel document about parquet files"
+    schema = "doc_id long, text string"
+    first = spark.createDataFrame([(1, base), (2, novel)], schema)
+    assert DD.incremental_near_dups(spark, first, store).count() == 0
+    recrawl = spark.createDataFrame(
+        [(1, "fresh words nobody has stored yet at all"), (2, novel)],
+        schema,
+    )
+    for _ in range(2):  # the second run is a retry
+        DD.incremental_near_dups(spark, recrawl, store).count()
+        assert spark.read.parquet(store).count() == 4
+    later = spark.createDataFrame([(5, base + " kilo")], schema)
+    pairs = DD.incremental_near_dups(spark, later, store, append=False)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 5)}
 
 
 def test_minhash_signature_sql_matches_spark(spark, docs):
@@ -1639,6 +1663,39 @@ def test_incremental_substring_dups_store(spark, tmp_path):
     assert spark.read.parquet(store).select("doc_id").distinct().count() == 4
 
 
+def test_incremental_substring_dups_folds_flat_store(spark, tmp_path):
+    """A chunk store in the flat layout of older builds (no
+    ``ingest_batch_id``) is folded into one partition on the first
+    write, and its chunks keep matching on every later call, not only
+    the first."""
+    span = "a long shared boilerplate passage that recurs across batches " * 3
+    store = str(tmp_path / "chunkstore")
+    legacy = spark.createDataFrame(
+        [Row(doc_id=1, text=span + "first document unique tail content")]
+    )
+    DD.chunk_fingerprints(legacy).select(
+        "doc_id", "pos", "chunk_hash"
+    ).write.parquet(store)
+    n_legacy = spark.read.parquet(store).count()
+    # the first call shares nothing, and folds the flat store
+    b2 = spark.createDataFrame(
+        [Row(doc_id=10, text="fresh material appearing for the first "
+                             "time in any batch of this corpus with "
+                             "plenty of length to produce chunks")]
+    )
+    out2 = DD.incremental_substring_dups(spark, b2, store).collect()
+    assert out2[0]["shared_chunks"] == 0
+    # the second call still matches the legacy doc's chunks
+    b3 = spark.createDataFrame(
+        [Row(doc_id=20, text=span + "third batch ends its own way too")]
+    )
+    out3 = DD.incremental_substring_dups(spark, b3, store).collect()
+    assert out3[0]["shared_chunks"] > 0 and out3[0]["dup_frac"] > 0.5
+    st = spark.read.parquet(store)
+    assert st.filter("doc_id = 1").count() == n_legacy
+    assert st.select("ingest_batch_id").distinct().count() == 3
+
+
 def test_image_dhash_neardup_pairs(spark):
     import numpy as np
 
@@ -2346,7 +2403,7 @@ def test_bm25_store_matches_direct_and_prunes(spark, tmp_path, docs):
 
     store = str(tmp_path / "bm25_store")
     corpus = docs.select("doc_id", "text")
-    RT.write_bm25_postings(corpus, store, buckets=16)
+    bm25_postings_batch(corpus, 0, store, buckets=16, run_token="batch")
     queries = spark.createDataFrame(
         [(100, "the"), (100, "quick"), (200, "numbers"), (200, "with")],
         "query_id long, qterm string",
@@ -2395,10 +2452,8 @@ def test_bm25_maxscore_prunes_common_term_postings(spark, tmp_path):
     """r10 (judge r9 task #5): on a Zipf corpus where every doc carries
     a common term and queries mix it with rare terms, the MAXSCORE
     candidate set is a strict subset of the unpruned (query, doc)
-    matrix, results stay bit-identical to the join scorer, and a store
-    WITHOUT term_stats (pre-r10 build) falls back to the live bound."""
-    import shutil
-
+    matrix, and results stay bit-identical to the join scorer with the
+    live per-term bound (the store holds no stored bound table)."""
     from streaming_etl_pipeline_spark.operators import retrieval as RT
 
     rows = [
@@ -2406,7 +2461,7 @@ def test_bm25_maxscore_prunes_common_term_postings(spark, tmp_path):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     store = str(tmp_path / "bm25_zipf")
-    RT.write_bm25_postings(corpus, store, buckets=8)
+    bm25_postings_batch(corpus, 0, store, buckets=8, run_token="batch")
     queries = spark.createDataFrame(
         [(1, "common"), (1, "rare3"), (2, "common"), (2, "rare17")],
         "query_id long, qterm string",
@@ -2465,15 +2520,7 @@ def test_bm25_maxscore_prunes_common_term_postings(spark, tmp_path):
     )
     assert n_cand < n_unpruned, (n_cand, n_unpruned)
     assert n_cand <= 2 * 10 + 6  # rare-term postings only, per query
-    # pre-r10 store: no term_stats dir → live-bound fallback, same bits
-    shutil.rmtree(_os.path.join(store, "term_stats"))
-    got2 = sorted(
-        tuple(r)
-        for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="maxscore"
-        ).collect()
-    )
-    assert got2 == want
+    assert sorted(_os.listdir(store)) == ["postings", "stats"]
 
 
 def test_bm25_blockmax_bit_identical_and_prunes_deeper(spark, tmp_path):
@@ -2502,7 +2549,7 @@ def test_bm25_blockmax_bit_identical_and_prunes_deeper(spark, tmp_path):
         rows.append((i, (term + " ") * tf + f"tok{i % 7}"))
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     store = str(tmp_path / "bm25_blockmax")
-    RT.write_bm25_postings(corpus, store, buckets=8)
+    bm25_postings_batch(corpus, 0, store, buckets=8, run_token="batch")
     queries = spark.createDataFrame(
         [(1, "alpha"), (1, "beta"), (2, "beta"), (2, "tok3")],
         "query_id long, qterm string",
@@ -2566,18 +2613,14 @@ def test_bm25_blockmax_bit_identical_and_prunes_deeper(spark, tmp_path):
 
 def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
     """r11 (judge r10 advice, medium): the maxscore read must not trust
-    the stored term_stats/ — a pre-r10 store appended to by an r10
-    writer leaves term_stats/ covering only the appended epoch, so the
-    stored per-term max can understate the true max and genuine top-k
-    docs would be pruned. Simulated directly: clobber term_stats/ with
-    max_tf=1 for every term (a strict understatement) and assert the
-    maxscore results still equal the join scorer bit-for-bit (proving
-    the live bound is used). Also: append-mode writes to a store
-    lacking term_stats/ are refused outright."""
+    a stored term_stats/ table — older builds wrote one, and a store
+    appended to later carries term_stats/ covering only one epoch, so
+    the stored per-term max can understate the true max and genuine
+    top-k docs would be pruned. Simulated directly: plant a
+    term_stats/ with max_tf=1 for every term (a strict understatement)
+    and assert the maxscore results still equal the join scorer
+    bit-for-bit (proving the live bound is used)."""
     import os as _os
-    import shutil
-
-    import pytest as _pytest
 
     from streaming_etl_pipeline_spark.operators import retrieval as RT
 
@@ -2586,7 +2629,7 @@ def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     store = str(tmp_path / "bm25_stale")
-    RT.write_bm25_postings(corpus, store, buckets=8)
+    bm25_postings_batch(corpus, 0, store, buckets=8, run_token="batch")
     queries = spark.createDataFrame(
         [(1, "common"), (1, "rare3"), (2, "common"), (2, "rare17")],
         "query_id long, qterm string",
@@ -2597,17 +2640,15 @@ def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
             spark, store, queries, k=3, buckets=8, algo="join"
         ).collect()
     )
-    # clobber the stored stats with understated bounds (mixed-epoch
-    # shape: stats cover only a later, lower-tf epoch)
-    ts_path = _os.path.join(store, "term_stats")
-    stale = (
-        spark.read.parquet(ts_path)
+    # plant understated stored bounds (mixed-epoch shape: stats cover
+    # only a later, lower-tf epoch)
+    (
+        spark.read.parquet(_os.path.join(store, "postings"))
         .select("term", F.lit(1).cast("long").alias("max_tf"), "term_bucket")
-    ).collect()
-    shutil.rmtree(ts_path)
-    spark.createDataFrame(
-        stale, "term string, max_tf long, term_bucket int"
-    ).write.partitionBy("term_bucket").parquet(ts_path)
+        .distinct()
+        .write.partitionBy("term_bucket")
+        .parquet(_os.path.join(store, "term_stats"))
+    )
     got = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
@@ -2615,10 +2656,6 @@ def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
         ).collect()
     )
     assert got == want  # live bound in use — stale store is ignored
-    # write-side guard: append beside postings/ without term_stats/
-    shutil.rmtree(ts_path)
-    with _pytest.raises(ValueError, match="term_stats"):
-        RT.write_bm25_postings(corpus, store, buckets=8, mode="append")
 
 
 def test_bm25_gemm_scorer_matches_join(spark, tmp_path):
@@ -2650,7 +2687,7 @@ def test_bm25_gemm_scorer_matches_join(spark, tmp_path):
         "query_id long, qterm string",
     )
     store = str(tmp_path / "bm25_dense")
-    RT.write_bm25_postings(docs, store, buckets=8)
+    bm25_postings_batch(docs, 0, store, buckets=8, run_token="batch")
     results = {}
     for excl in (False, True):
         results[excl] = {}

@@ -593,3 +593,70 @@ def test_cli_store_lifecycle_commands(spark, tmp_path, capsys):
     assert spark.read.parquet(
         os.path.join(state_out, "centroids")
     ).count() == 4
+
+
+def test_cli_dedup_retry_leaves_store_unchanged(spark, tmp_path, capsys):
+    """Re-running the CLI ``dedup`` on the same batch (a retried job)
+    replaces the batch's own signature partition: the store keeps one
+    row per document and the retry reports what the first run did."""
+    import json
+
+    from streaming_etl_pipeline_spark.pipelines.run import main
+
+    docs = str(tmp_path / "docs")
+    store = str(tmp_path / "sig_store")
+    spark.createDataFrame(
+        [(i, f"document {i} about topic {i % 3} with some words")
+         for i in range(6)],
+        "doc_id long, text string",
+    ).write.parquet(docs)
+    runs = []
+    for _ in range(2):
+        assert main(["dedup", "--docs", docs, "--store", store]) == 0
+        m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        runs.append(
+            (m["dedup.near_dup_pairs"], spark.read.parquet(store).count())
+        )
+    assert runs[0] == runs[1] and runs[0][1] == 6
+
+
+def test_cli_dedup_against_sink_written_store(spark, tmp_path, capsys):
+    """The CLI ``dedup`` and the streaming sink share one signature
+    store: the CLI reads a store the sink wrote (the partition column
+    is not a signature column), finds the planted near-dup, and honours
+    the store's tombstones."""
+    import json
+
+    from streaming_etl_pipeline_spark.operators.dedup import (
+        incremental_near_dups,
+    )
+    from streaming_etl_pipeline_spark.pipelines.run import main
+    from streaming_etl_pipeline_spark.streaming.ingest import (
+        dedup_ingest_batch,
+        delete_ids,
+    )
+
+    store = str(tmp_path / "sig_store")
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id long, text string"
+    dedup_ingest_batch(
+        spark.createDataFrame(
+            [(1, base), (2, "a wholly novel document about parquet files")],
+            schema,
+        ),
+        0, str(tmp_path / "clean"), store, run_token="run",
+    )
+    docs = str(tmp_path / "docs")
+    batch = spark.createDataFrame(
+        [(10, base + " kilo"), (11, "fresh words nobody has stored yet")],
+        schema,
+    )
+    batch.write.parquet(docs)
+    assert main(["dedup", "--docs", docs, "--store", store]) == 0
+    m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m["dedup.near_dup_pairs"] == 1.0
+    probe = incremental_near_dups(spark, batch, store, append=False)
+    assert {(r.id_a, r.id_b) for r in probe.collect()} == {(1, 10)}
+    delete_ids(spark, store, [1], "doc_id")
+    probe = incremental_near_dups(spark, batch, store, append=False)
+    assert probe.count() == 0

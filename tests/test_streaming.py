@@ -1120,16 +1120,18 @@ def test_kafka_broker_end_to_end():
 # ---------------------------------------------------------------------------
 
 
-def test_dedup_stream_drops_duplicates_within_watermark(spark, tmp_path):
+def test_dedup_within_watermark_drops_duplicates_across_triggers(
+    spark, tmp_path
+):
     """dropDuplicatesWithinWatermark: duplicate event_ids inside one
     watermark window collapse to one row — including across triggers
     (state carries via the checkpoint) — with state bounded by the
     watermark, not the key universe."""
     from pyspark.sql import types as T
 
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        dedup_stream,
-        read_jsonl_stream,
+    from streaming_etl_pipeline_spark.streaming.ingest import read_jsonl_stream
+    from streaming_etl_pipeline_spark.streaming.stateful import (
+        dedup_within_watermark,
     )
 
     in_dir, out, ck = (
@@ -1147,7 +1149,9 @@ def test_dedup_stream_drops_duplicates_within_watermark(spark, tmp_path):
     def run_once():
         stream = read_jsonl_stream(spark, in_dir, schema)
         q = (
-            dedup_stream(stream, ["event_id"], "event_time", "10 minutes")
+            dedup_within_watermark(
+                stream, ["event_id"], "event_time", watermark="10 minutes"
+            )
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ck)
@@ -1175,6 +1179,47 @@ def test_dedup_stream_drops_duplicates_within_watermark(spark, tmp_path):
 
     rows = spark.read.parquet(out).collect()
     assert sorted(r.event_id for r in rows) == [1, 2, 3]
+
+
+def test_parsed_events_dedup_within_watermark_to_sink(spark, tmp_path):
+    """Dedup composes with parse: ``parse_events`` output already
+    carries the Bronze watermark, so ``dedup_within_watermark`` runs on
+    it without redefining one, end to end from the file source to a
+    parquet sink."""
+    from streaming_etl_pipeline_spark.streaming.stateful import (
+        dedup_within_watermark,
+    )
+
+    in_dir, out, ck = (
+        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    )
+    os.makedirs(in_dir)
+
+    def ev(sensor, ts, v):
+        return json.dumps({
+            "sensor_id": sensor, "sensor_type": "temperature",
+            "timestamp": ts, "value": v, "unit": "C", "location": "lab",
+        }) + "\n"
+
+    with open(os.path.join(in_dir, "b1.json"), "w") as f:
+        f.write(ev("s1", "2024-06-15T10:00:00", 20.0))
+        f.write(ev("s1", "2024-06-15T10:00:00", 20.0))  # producer retry
+        f.write(ev("s2", "2024-06-15T10:00:00", 21.0))
+        f.write("{not json\n")
+    bronze, _ = parse_events(read_json_stream(spark, in_dir))
+    q = (
+        dedup_within_watermark(bronze, ["sensor_id", "event_time"])
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    rows = spark.read.parquet(out).collect()
+    assert sorted((r.sensor_id, r.value) for r in rows) == [
+        ("s1", 20.0), ("s2", 21.0),
+    ]
 
 
 def test_streaming_dedup_ingest_sink_incremental_store(spark, tmp_path):
@@ -1335,6 +1380,41 @@ def test_dedup_ingest_tolerates_legacy_store(spark, tmp_path):
     dedup_ingest_batch(b0, 0, out, store, run_token="run-c")
     # 4 near-dups the legacy store entry → dropped; 5 is novel
     assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [5]
+
+
+def test_dedup_ingest_keeps_legacy_signatures_after_first_trigger(
+    spark, tmp_path
+):
+    """A store in the flat layout (no ``ingest_batch_id``) is folded into
+    one partition before the first epoch write, so its signatures stay
+    visible to every LATER trigger too: Spark's partition discovery does
+    not read flat files that sit beside epoch partition directories."""
+    from streaming_etl_pipeline_spark.operators.dedup import build_signatures
+    from streaming_etl_pipeline_spark.streaming.ingest import dedup_ingest_batch
+
+    out = str(tmp_path / "clean")
+    store = str(tmp_path / "sig_store")
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id long, text string"
+    build_signatures(
+        spark.createDataFrame([(1, base)], schema)
+    ).write.parquet(store)  # no partition column
+
+    dedup_ingest_batch(
+        spark.createDataFrame(
+            [(5, "a wholly novel document about parquet files")], schema
+        ),
+        0, out, store, run_token="run-c",
+    )
+    dedup_ingest_batch(
+        spark.createDataFrame([(4, base)], schema),
+        1, out, store, run_token="run-c",
+    )
+    # 4 near-dups the legacy signature of 1 in the SECOND trigger
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [5]
+    assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == [
+        1, 4, 5,
+    ]
 
 
 def test_streaming_bm25_index_sink_two_triggers(spark, tmp_path):
@@ -2595,6 +2675,34 @@ def test_delete_ids_bm25_store(spark, tmp_path):
     # idempotent double-delete: harmless
     bm25_delete_ids(spark, store, [12])
     assert scores(store) == got
+
+
+def test_bm25_delete_ids_string_ids(spark, tmp_path):
+    """A string-id BM25 index deletes by a list of string ids, as
+    ``delete_ids`` does: the id list becomes a string frame, not long."""
+    from streaming_etl_pipeline_spark.operators import retrieval as RT
+    from streaming_etl_pipeline_spark.streaming.ingest import (
+        bm25_delete_ids,
+        bm25_postings_batch,
+    )
+
+    store = str(tmp_path / "bm25")
+    bm25_postings_batch(
+        spark.createDataFrame(
+            [("d1", "alpha beta"), ("d2", "alpha gamma delta"),
+             ("d3", "beta")],
+            "doc_id string, text string",
+        ),
+        0, store, buckets=4, run_token="t",
+    )
+    assert bm25_delete_ids(spark, store, ["d1"]) == {
+        "deleted": 1, "len_sum": 2,
+    }
+    queries = spark.createDataFrame(
+        [(1, "alpha")], "query_id long, qterm string"
+    )
+    got = RT.bm25_topk_from_store(spark, store, queries, k=5, buckets=4)
+    assert [r.neighbor_id for r in got.collect()] == ["d2"]
 
 
 def test_delete_ids_dedup_signature_store(spark, tmp_path):

@@ -497,6 +497,118 @@ def test_cli_bm25_index_and_compact_store(spark, tmp_path, capsys):
     assert metrics["compact.partitions_before"] == 2.0
 
 
+def test_cli_bm25_index_accepts_sink_epochs(spark, tmp_path, capsys):
+    """``build-bm25-index`` writes the streaming sink's layout, so a sink
+    epoch appended to a CLI-built index is scored together with it —
+    the same top-k as the direct path over both batches."""
+    from streaming_etl_pipeline_spark.operators import retrieval as RT
+    from streaming_etl_pipeline_spark.pipelines.run import main
+    from streaming_etl_pipeline_spark.streaming.ingest import (
+        bm25_postings_batch,
+    )
+
+    schema = "doc_id long, text string"
+    cli_docs = spark.createDataFrame(
+        [(i, f"alpha w{i} " + "beta " * (i % 3)) for i in range(6)], schema
+    )
+    sink_docs = spark.createDataFrame(
+        [(100 + i, f"alpha zeta{i} " + "alpha " * i) for i in range(4)],
+        schema,
+    )
+    src = str(tmp_path / "docs")
+    cli_docs.write.parquet(src)
+    idx = str(tmp_path / "bm25_index")
+    assert main(
+        ["build-bm25-index", "--input", src, "--output", idx, "--buckets", "8"]
+    ) == 0
+    capsys.readouterr()
+    bm25_postings_batch(sink_docs, 0, idx, buckets=8, run_token="run")
+    queries = spark.createDataFrame(
+        [(1, "alpha"), (2, "beta")], "query_id long, qterm string"
+    )
+    got = sorted(
+        tuple(r)
+        for r in RT.bm25_topk_from_store(
+            spark, idx, queries, k=8, buckets=8
+        ).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in RT.bm25_topk(
+            cli_docs.unionByName(sink_docs), queries, k=8
+        ).collect()
+    )
+    assert got == want
+    hits = {r[2] for r in got if r[0] == 1}
+    assert hits & set(range(6)) and hits & set(range(100, 104))
+
+
+def test_cli_bm25_rebuild_replaces_the_whole_index(spark, tmp_path, capsys):
+    """``build-bm25-index`` into an existing index replaces all of it:
+    after a compaction, after a ``delete-ids --bm25`` and over an index
+    in the flat layout of older builds, the rebuilt index scores exactly
+    like a single build of the new corpus (no doubled postings, no
+    second decrement of the corpus stats, no mixed layouts)."""
+    import os
+
+    from streaming_etl_pipeline_spark.operators import retrieval as RT
+    from streaming_etl_pipeline_spark.pipelines.run import main
+
+    schema = "doc_id long, text string"
+    rows = [(i, f"alpha w{i} " + "beta " * (i % 3)) for i in range(8)]
+    full, rest = str(tmp_path / "full"), str(tmp_path / "rest")
+    spark.createDataFrame(rows, schema).write.parquet(full)
+    spark.createDataFrame(
+        [r for r in rows if r[0] != 3], schema
+    ).write.parquet(rest)
+    queries = spark.createDataFrame(
+        [(1, "alpha"), (2, "beta"), (3, "w3")], "query_id long, qterm string"
+    )
+
+    def cli(*argv):
+        assert main(list(argv)) == 0
+        capsys.readouterr()
+
+    def build(src, idx):
+        cli("build-bm25-index", "--input", src, "--output", idx,
+            "--buckets", "8")
+
+    def scores(idx):
+        return sorted(
+            tuple(r)
+            for r in RT.bm25_topk_from_store(
+                spark, idx, queries, k=8, buckets=8
+            ).collect()
+        )
+
+    want_full = str(tmp_path / "want_full")
+    want_rest = str(tmp_path / "want_rest")
+    build(full, want_full)
+    build(rest, want_rest)
+    # build, compact, build again
+    idx = str(tmp_path / "compacted")
+    build(full, idx)
+    cli("compact-store", "--path", os.path.join(idx, "postings"),
+        "--secondary-partition-cols", "term_bucket")
+    build(full, idx)
+    assert scores(idx) == scores(want_full)
+    # build, delete a doc, rebuild from the corpus without it
+    idx = str(tmp_path / "deleted")
+    build(full, idx)
+    cli("delete-ids", "--path", idx, "--ids", "3", "--bm25")
+    build(rest, idx)
+    assert scores(idx) == scores(want_rest)
+    assert not os.path.exists(os.path.join(idx, "postings", "_tombstones"))
+    # an index in the old flat layout (postings by term_bucket only)
+    idx = str(tmp_path / "flat")
+    for sub, parts in (("postings", ["term_bucket"]), ("stats", [])):
+        spark.read.parquet(os.path.join(want_full, sub)).drop(
+            "ingest_batch_id"
+        ).write.partitionBy(*parts).parquet(os.path.join(idx, sub))
+    build(full, idx)
+    assert scores(idx) == scores(want_full)
+
+
 def test_cli_score_lm_self_and_store(spark, tmp_path, capsys):
     """score-lm end-to-end: self-trained scores match the library call
     bit-for-bit, and --model-store scores against the model rebuilt

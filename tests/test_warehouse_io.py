@@ -156,7 +156,10 @@ def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
 
     from streaming_etl_pipeline_spark.sources import compact
     from streaming_etl_pipeline_spark.sources.generator import generate_events
-    from streaming_etl_pipeline_spark.sources.io import repair_store
+    from streaming_etl_pipeline_spark.sources.io import (
+        repair_store,
+        replace_dir,
+    )
 
     def rows(p):
         return Counter(tuple(r) for r in spark.read.parquet(p).collect())
@@ -190,6 +193,19 @@ def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
     assert repair_store(spark, uri) == "rolled_forward"
     assert not os.path.exists(path + ".__old__")
     assert rows(uri) == want
+
+    # a first write that crashed before its rename leaves only the
+    # staging directory: it is rolled back, and replace_dir writes the
+    # missing path directly (here through a writer function)
+    fresh = "file://" + str(tmp_path / "fresh")
+    shutil.copytree(path, str(tmp_path / "fresh.__compact__"))
+    assert repair_store(spark, fresh) == "rolled_back"
+    assert not os.path.exists(str(tmp_path / "fresh.__compact__"))
+    replace_dir(
+        spark, fresh, lambda p: spark.read.parquet(uri).write.parquet(p)
+    )
+    assert rows(fresh) == want
+    assert not os.path.exists(str(tmp_path / "fresh.__compact__"))
 
 
 def test_jdbc_delete_window_sql_matches_reference():
