@@ -7,32 +7,45 @@ composed from the operator library.
   anomaly flags → lineage → late-data merge → partitioned overwrite.
 - :func:`silver_to_gold` re-expresses
   ``src/transformations/silver_to_gold.py:164-215``: three independent
-  aggregation plans (5-min per sensor, hourly per location, daily
-  summary) off one Silver scan.
+  aggregations (5-min per sensor, hourly per location, daily summary),
+  each its own Silver scan and write, the three submitted side by side.
 
 The key structural improvement over the reference (SURVEY.md §3.2): the
 reference runs ``count()`` five times, re-deriving the whole plan from
 the Parquet scan per action. Here every audit number rides along as an
 **observed metric** (``df.observe``) on the single write action — one
 pass, zero extra jobs, and the numbers are exact for exactly the rows
-written. At 100 TB that's the difference between 1 scan and 5.
+written. ``validate=True`` rides the same way: the silver expectation
+suite is extra aggregates of the Silver write's observation, not a
+re-scan of what was just written. At 100 TB that's the difference
+between 1 scan and 5.
 
-Scale notes: writes are partitioned (``sensor_type``; add a date column
-for time-pruned layouts) with dynamic partition overwrite, so a backfill
-of one day/type replaces only those partitions. The dedup/z-score
-shuffle on the entity key is the pipeline's only wide stage; AQE handles
-its skew.
+Scale notes: writes are partitioned (``sensor_type``) with dynamic
+partition overwrite, so a call replaces every partition its rows touch,
+whole. A date-scoped call (``run_date``) therefore writes the other
+dates' rows of those partitions back beside its own, so it replaces only
+its own date's rows (a date partition column would let it skip that
+rewrite). The cleaning chain hash-partitions once on the entity key
+(``sensor_id``); dedup and z-score both run inside that one exchange and
+one sort.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from streaming_etl_pipeline_spark.operators import aggregates, cleaning
+from streaming_etl_pipeline_spark.quality.expectations import (
+    raise_on_failure,
+    silver_suite,
+    suite_aggregates,
+)
 from streaming_etl_pipeline_spark.sources.io import (
     read_parquet_if_exists,
     write_partitioned,
@@ -48,6 +61,51 @@ class PipelineResult:
 
     output_paths: dict[str, str]
     metrics: dict[str, float] = field(default_factory=dict)
+
+
+def _on_date(day: Column, run_date: _dt.date | str) -> Column:
+    return day.eqNullSafe(F.lit(str(run_date)).cast("date"))
+
+
+def _with_other_dates(
+    spark: SparkSession,
+    rows: DataFrame,
+    path: str,
+    day: Column,
+    run_date: _dt.date | str | None,
+) -> DataFrame:
+    """``rows`` (one date's) plus every other date's rows stored at
+    ``path``: the dynamic overwrite replaces whole ``sensor_type``
+    partitions, so a date-scoped write must carry the rest of them."""
+    existing = None if run_date is None else read_parquet_if_exists(spark, path)
+    if existing is None:
+        return rows
+    others = existing.filter(~_on_date(day, run_date))
+    return rows.unionByName(others, allowMissingColumns=True)
+
+
+def silver_chain(df: DataFrame, source_file: str) -> DataFrame:
+    """Bronze rows → Silver rows: required-null drop → keep-latest dedup
+    → range and rolling z-score flags → lineage.
+
+    One hash exchange on ``sensor_id`` serves both windows: it satisfies
+    the dedup's ``(sensor_id, event_time)`` clustering as well as the
+    z-score's ``sensor_id`` one, and the dedup's sort on ``(sensor_id,
+    event_time, ingestion_time DESC)`` already orders every z-score
+    frame. Left to plan itself, the chain hashes twice and sorts three
+    times."""
+    df = cleaning.drop_null_required(df, REQUIRED_COLUMNS).repartition("sensor_id")
+    df = cleaning.deduplicate_latest(
+        df, keys=("sensor_id", "event_time"), order_col="ingestion_time"
+    )
+    df = cleaning.flag_out_of_range(df, "sensor_type", "value")
+    df = cleaning.flag_zscore(
+        df,
+        partition_cols=("sensor_id",),
+        order_cols=("event_time",),
+        value_col="value",
+    )
+    return cleaning.add_lineage(df, source_file=source_file)
 
 
 def bronze_to_silver(
@@ -66,13 +124,21 @@ def bronze_to_silver(
     five separate actions, and keeps the late-data merge as a union +
     keep-latest dedup so a corrected late row wins
     (``bronze_to_silver.py:145-159``); only a Silver that does not exist
-    yet skips the merge. With ``validate=True`` the written Silver is
-    checked against the silver expectation suite (fail-fast, like the
-    reference's quality gate in the DAG).
+    yet skips the merge. A ``run_date`` call without the merge replaces
+    only that date's Silver rows.
+
+    With ``validate=True`` the silver expectation suite is evaluated on
+    the write itself (fail-fast, like the reference's quality gate in the
+    DAG): its scope is the rows this call writes, which under the dynamic
+    overwrite are the whole content of every partition it replaces.
+    Every check's observed value lands in ``metrics`` as
+    ``quality.<check>``, and a failed check raises
+    :class:`~streaming_etl_pipeline_spark.quality.expectations.QualityError`
+    after the write, as a check of the written table would.
     """
     df = spark.read.parquet(bronze_path)
     if run_date is not None:
-        df = df.filter(F.to_date("event_time") == F.lit(str(run_date)))
+        df = df.filter(_on_date(F.to_date("event_time"), run_date))
 
     obs_in = Observation("bronze_in")
     df = df.observe(
@@ -86,19 +152,7 @@ def bronze_to_silver(
             ).otherwise(0)
         ).alias("invalid_rows"),
     )
-
-    df = cleaning.drop_null_required(df, REQUIRED_COLUMNS)
-    df = cleaning.deduplicate_latest(
-        df, keys=("sensor_id", "event_time"), order_col="ingestion_time"
-    )
-    df = cleaning.flag_out_of_range(df, "sensor_type", "value")
-    df = cleaning.flag_zscore(
-        df,
-        partition_cols=("sensor_id",),
-        order_cols=("event_time",),
-        value_col="value",
-    )
-    df = cleaning.add_lineage(df, source_file=bronze_path)
+    df = silver_chain(df, source_file=bronze_path)
 
     # Only a missing Silver (the first run) skips the merge: a Silver that
     # cannot be read or unioned (schema drift) raises before the write, so
@@ -113,24 +167,34 @@ def bronze_to_silver(
             keys=("sensor_id", "event_time"),
             order_col="ingestion_time",
         )
+    elif not merge_with_existing:
+        df = _with_other_dates(
+            spark, df, silver_path, F.to_date("event_time"), run_date
+        )
 
+    columns, suite = df.columns, silver_suite()
+    quality, report = [], None
+    if validate:
+        df, quality, report = suite_aggregates(df, suite)
     obs_out = Observation("silver_out")
     df = df.observe(
         obs_out,
         F.count(F.lit(1)).alias("output_rows"),
         F.sum(F.col("is_anomaly").cast("int")).alias("anomaly_rows"),
-    )
+        *quality,
+    ).select(*columns)
 
     write_partitioned(df, silver_path, partition_by=list(partition_by))
-    metrics = {**obs_in.get, **obs_out.get}
+    seen = obs_out.get
+    metrics = {
+        **obs_in.get,
+        "output_rows": seen["output_rows"],
+        "anomaly_rows": seen["anomaly_rows"],
+    }
     if validate:
-        from streaming_etl_pipeline_spark.quality.expectations import (
-            silver_suite,
-            validate_or_raise,
-        )
-
-        report = validate_or_raise(spark.read.parquet(silver_path), silver_suite())
-        metrics["quality_checks_passed"] = float(len(report))
+        checks = raise_on_failure(report(seen), suite)
+        metrics["quality_checks_passed"] = float(len(checks))
+        metrics.update({f"quality.{r['check']}": r["observed"] for r in checks})
     return PipelineResult(output_paths={"silver": silver_path}, metrics=metrics)
 
 
@@ -144,19 +208,22 @@ def silver_to_gold(
 ) -> PipelineResult:
     """Aggregate Silver into the three Gold tables.
 
-    Three independent plans off one scan (scan → partial agg → shuffle →
-    final agg → write each); ``oracle_safe=False`` uses the plain double
-    aggregation path — the exact-decimal variant exists for differential
-    testing and costs ~20% more. ``skew=True`` passes the hot-key knob
-    through to the windowed aggregations (mergeable percentile sketches
-    instead of exact percentile buffers — see
+    Three independent plans (scan → partial agg → shuffle → final agg →
+    write each), submitted concurrently so one table's single-task
+    stages overlap the others' work; once all three finish, the first
+    failure (in table order) is re-raised. A ``run_date`` call replaces
+    only that date's Gold rows. ``oracle_safe=False`` uses the plain
+    double aggregation path — the exact-decimal variant exists for
+    differential testing and costs ~20% more. ``skew=True`` passes the
+    hot-key knob through to the windowed aggregations (mergeable
+    percentile sketches instead of exact percentile buffers — see
     ``operators/aggregates.windowed_stats`` and tests/test_skew.py for
     the measured rationale); flip it when one sensor/location dominates
     the feed.
     """
     df = spark.read.parquet(silver_path)
     if run_date is not None:
-        df = df.filter(F.to_date("event_time") == F.lit(str(run_date)))
+        df = df.filter(_on_date(F.to_date("event_time"), run_date))
 
     sensor_5min = aggregates.windowed_stats(
         df,
@@ -193,13 +260,32 @@ def silver_to_gold(
         "location_hourly": f"{gold_path}/location_hourly",
         "daily_summary": f"{gold_path}/daily_summary",
     }
+    window_day = F.to_date("window_start")
+    tables = {
+        "sensor_5min": _with_other_dates(
+            spark, sensor_5min, paths["sensor_5min"], window_day, run_date
+        ),
+        "location_hourly": _with_other_dates(
+            spark, location_hourly, paths["location_hourly"], window_day, run_date
+        ),
+        "daily_summary": _with_other_dates(
+            spark, daily, paths["daily_summary"], F.col("date"), run_date
+        ),
+    }
     obs = Observation("gold_5min")
-    observed = sensor_5min.observe(
+    tables["sensor_5min"] = tables["sensor_5min"].observe(
         obs, F.count(F.lit(1)).alias("sensor_5min_groups")
     )
-    write_partitioned(observed, paths["sensor_5min"], partition_by=["sensor_type"])
-    write_partitioned(location_hourly, paths["location_hourly"], partition_by=["sensor_type"])
-    write_partitioned(daily, paths["daily_summary"], partition_by=["sensor_type"])
+    # each write's thread carries the caller's job group, description and tags
+    write = inheritable_thread_target(spark)(write_partitioned)
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        futures = [
+            pool.submit(write, frame, paths[name], partition_by=["sensor_type"])
+            for name, frame in tables.items()
+        ]
+    # leaving the pool waited for all three writes
+    for future in futures:
+        future.result()
     return PipelineResult(output_paths=paths, metrics={**obs.get})
 
 
@@ -220,9 +306,9 @@ def backfill(
     bronze→silver→gold with date-partition pruning, stage validation
     fail-fast (``validate=True`` runs the silver expectation suite per
     date, the DAG's quality gate), and idempotent convergence — every
-    write is a dynamic partition overwrite, so re-running any date (the
-    DAG's ``retries: 2``) replaces that date's partitions instead of
-    duplicating.
+    write is a date-scoped dynamic partition overwrite, so re-running any
+    date (the DAG's ``retries: 2``) replaces that date's rows instead of
+    duplicating them, and keeps every other date's.
 
     ``on_error``: 'continue' records the failed date and proceeds (the
     DAG's ``ActionOnFailure: CONTINUE``); 'fail' re-raises immediately.

@@ -4,9 +4,9 @@ Re-expresses the reference's Great-Expectations-style suites
 (``great_expectations/expectations/sensor_bronze.json``,
 ``sensor_silver.json``) and manual checks (``src/quality/expectations.py``)
 as an expectation compiler: each expectation becomes ONE aggregate
-expression, the whole suite runs as a SINGLE Spark job (one pass over the
-data, map-side partials — no per-check actions), and the report itself is
-a DataFrame, so it can be persisted/joined like any other table.
+expression, and the whole suite runs as a SINGLE Spark job (one pass over
+the data, map-side partials — no per-check actions) or rides along as
+observed metrics on a write that already scans the data.
 
 Scale: a suite of 20 checks over 100 TB is one scan; the reference's
 pandas runner (``expectations.py:189-210``) is single-process and its
@@ -19,14 +19,15 @@ Expectation kinds (SURVEY.md §2.11):
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 class QualityError(ValueError):
-    """Raised by validate_or_raise when any expectation fails."""
+    """Raised when any expectation of a suite fails."""
 
 
 @dataclass(frozen=True)
@@ -160,10 +161,23 @@ def _passed(e: Expectation, observed: float) -> bool:
     raise ValueError(e.kind)
 
 
-def validate(df: DataFrame, suite: Suite) -> list[dict]:
-    """Run a suite in ONE aggregation pass; per-expectation report rows
-    ``{check, passed, observed}``. ``compound_unique`` needs a grouped
-    pass and runs as a second job only when present."""
+def suite_aggregates(
+    df: DataFrame, suite: Suite
+) -> tuple[DataFrame, list[Column], Callable[[Mapping], list[dict]]]:
+    """Compile ``suite`` into aggregates over ``df``.
+
+    Returns ``df`` plus any witness columns the checks need, one aliased
+    aggregate per evaluable check, and a function that turns the row those
+    aggregates produce into the ``{check, passed, observed}`` report. The
+    aggregates run wherever the caller puts them: :func:`validate`
+    collects them in one job, and ``bronze_to_silver`` observes them on
+    its Silver write, so the checks see exactly the written rows.
+
+    ``compound_unique`` is a window count over its key columns (the
+    witness); a group of ``k > 1`` rows adds ``1/k`` to its sum, so the
+    rounded sum is the number of duplicated keys. A frame already
+    partitioned and sorted on those keys (the Silver chain) plans it
+    without another exchange or sort."""
     present = set(df.columns)
 
     def missing(e: Expectation) -> bool:
@@ -176,53 +190,60 @@ def validate(df: DataFrame, suite: Suite) -> list[dict]:
         cols = (e.column,) if e.column else e.columns
         return any(c not in present for c in cols if c)
 
-    report: list[dict] = [
-        {"check": e.name, "passed": False, "observed": float("nan")}
-        for e in suite.expectations
-        if missing(e)
-    ]
-    simple = [
-        e
-        for e in suite.expectations
-        if e.kind != "compound_unique" and not missing(e)
-    ]
-    compound = [
-        e
-        for e in suite.expectations
-        if e.kind == "compound_unique" and not missing(e)
-    ]
-    if simple:
-        aggs = [
-            _observed_expr(e, df).alias(f"m{i}") for i, e in enumerate(simple)
-        ]
-        row = df.agg(*aggs).collect()[0]
-        for i, e in enumerate(simple):
-            obs = float(row[f"m{i}"]) if row[f"m{i}"] is not None else 0.0
-            report.append(
-                {"check": e.name, "passed": _passed(e, obs), "observed": obs}
+    absent = [e for e in suite.expectations if missing(e)]
+    checks = [e for e in suite.expectations if not missing(e)]
+    aggs: list[Column] = []
+    for i, e in enumerate(checks):
+        if e.kind == "compound_unique":
+            witness = f"__dq_dup{i}"
+            df = df.withColumn(
+                witness, F.count(F.lit(1)).over(Window.partitionBy(*e.columns))
             )
-    for e in compound:
-        dup = (
-            df.groupBy(*[F.col(c) for c in e.columns])
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-        report.append(
-            {"check": e.name, "passed": dup == 0, "observed": float(dup)}
-        )
+            metric = F.sum(F.when(F.col(witness) > 1, 1.0 / F.col(witness)))
+        else:
+            metric = _observed_expr(e, df)
+        aggs.append(metric.alias(f"__dq_check{i}"))
+
+    def report(row: Mapping) -> list[dict]:
+        out = [
+            {"check": e.name, "passed": False, "observed": float("nan")}
+            for e in absent
+        ]
+        for i, e in enumerate(checks):
+            value = row[f"__dq_check{i}"]
+            obs = float(value) if value is not None else 0.0
+            if e.kind == "compound_unique":
+                obs = float(round(obs))
+                passed = obs == 0.0
+            else:
+                passed = _passed(e, obs)
+            out.append({"check": e.name, "passed": passed, "observed": obs})
+        return out
+
+    return df, aggs, report
+
+
+def validate(df: DataFrame, suite: Suite) -> list[dict]:
+    """Run a suite in ONE aggregation job; per-expectation report rows
+    ``{check, passed, observed}``."""
+    frame, aggs, report = suite_aggregates(df, suite)
+    return report(frame.agg(*aggs).collect()[0].asDict() if aggs else {})
+
+
+def raise_on_failure(report: list[dict], suite: Suite) -> list[dict]:
+    """Raise QualityError listing every failed check of ``report``;
+    return the report when all passed."""
+    failed = [r for r in report if not r["passed"]]
+    if failed:
+        lines = ", ".join(f"{r['check']} (observed={r['observed']})" for r in failed)
+        raise QualityError(f"suite '{suite.name}' failed: {lines}")
     return report
 
 
 def validate_or_raise(df: DataFrame, suite: Suite) -> list[dict]:
     """Fail-fast runner (reference expectations.py:171-210): raises
     QualityError listing every failed check."""
-    report = validate(df, suite)
-    failed = [r for r in report if not r["passed"]]
-    if failed:
-        lines = ", ".join(f"{r['check']} (observed={r['observed']})" for r in failed)
-        raise QualityError(f"suite '{suite.name}' failed: {lines}")
-    return report
+    return raise_on_failure(validate(df, suite), suite)
 
 
 def fk_check(

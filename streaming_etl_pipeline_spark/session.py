@@ -44,6 +44,16 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+#: Generated classes the session keeps compiled (the static
+#: ``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). One
+#: batch ETL iteration generates about 150 distinct classes and the 18
+#: bench queries about 250 more (counted with ``CodegenMetrics``, 4
+#: cores), so at 100 every warm ETL iteration evicted and recompiled
+#: about 140 of its own, 1.1-1.6 s of Janino time; at this size it
+#: compiles about 6.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -112,6 +122,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.executorEnv.NUMPY_MADVISE_HUGEPAGE",
             os.environ.get("NUMPY_MADVISE_HUGEPAGE", "0"),

@@ -13,6 +13,11 @@ from pyspark.sql import Row, functions as F
 
 from streaming_etl_pipeline_spark.operators import sessions as SN
 from streaming_etl_pipeline_spark.pipelines import bronze_to_silver, silver_to_gold
+from streaming_etl_pipeline_spark.quality.expectations import (
+    QualityError,
+    silver_suite,
+    validate,
+)
 from streaming_etl_pipeline_spark.sources.generator import generate_events
 from streaming_etl_pipeline_spark.streaming.stateful import (
     dedup_within_watermark,
@@ -152,6 +157,102 @@ def test_late_merge_schema_drift_raises_and_keeps_silver(
     after = spark.read.parquet(silver)
     assert dict(after.dtypes)["location"] == "string"
     assert after.count() == want == 721
+
+
+def test_validated_silver_report_equals_validate_of_written_silver(
+    spark, bronze_dir, tmp_path
+):
+    """The suite observed on the Silver write reports what a separate
+    ``validate`` of the written table reports, check by check."""
+    silver = str(tmp_path / "silver")
+    res = bronze_to_silver(
+        spark, bronze_dir, silver, merge_with_existing=False, validate=True
+    )
+    want = validate(spark.read.parquet(silver), silver_suite())
+    assert all(r["passed"] for r in want)
+    got = {
+        k[len("quality."):]: v
+        for k, v in res.metrics.items()
+        if k.startswith("quality.")
+    }
+    assert got == {r["check"]: r["observed"] for r in want}
+    assert res.metrics["quality_checks_passed"] == len(want)
+
+
+def test_validated_silver_raises_after_the_write(spark, bronze_dir, tmp_path):
+    """A sensor type outside the allowed set fails ``in_set(sensor_type)``
+    once Silver is written, as a check of the written table would."""
+    bad = str(tmp_path / "bad_bronze")
+    (
+        spark.read.parquet(bronze_dir)
+        .withColumn(
+            "sensor_type",
+            F.when(F.col("sensor_id") == "sensor-999", "radiation").otherwise(
+                F.col("sensor_type")
+            ),
+        )
+        .write.parquet(bad)
+    )
+    silver = str(tmp_path / "silver")
+    with pytest.raises(QualityError, match=r"in_set\(sensor_type\)"):
+        bronze_to_silver(spark, bad, silver, merge_with_existing=False, validate=True)
+    written = spark.read.parquet(silver)
+    assert written.count() == 721
+    assert written.filter("sensor_type = 'radiation'").count() == 1
+
+
+def test_silver_to_gold_raises_when_one_table_cannot_be_written(
+    spark, bronze_dir, tmp_path
+):
+    """The three Gold writes run side by side; one that fails must raise
+    from ``silver_to_gold`` once the other two have finished."""
+    silver = str(tmp_path / "silver")
+    gold = tmp_path / "gold"
+    bronze_to_silver(spark, bronze_dir, silver, merge_with_existing=False)
+    gold.mkdir()
+    (gold / "daily_summary").write_text("a file where a table directory goes")
+    with pytest.raises(Exception):
+        silver_to_gold(spark, silver, str(gold))
+    assert (gold / "daily_summary").read_text().startswith("a file")
+    for table in ("sensor_5min", "location_hourly"):
+        assert spark.read.parquet(str(gold / table)).count() > 0
+
+
+def _compilations(spark) -> int:
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_etl_iteration_reuses_compiled_code(spark, bronze_dir, tmp_path):
+    """One ETL iteration generates more whole-stage-codegen classes than
+    Spark's default 100-entry cache holds, so at that size a second,
+    identical iteration evicted and recompiled most of them.
+    ``build_session``'s cache keeps them: the second iteration compiles
+    only a few."""
+    late = str(tmp_path / "late")
+    (
+        spark.read.parquet(bronze_dir)
+        .limit(50)
+        .withColumn("value", F.col("value") + 1.0)
+        .withColumn(
+            "ingestion_time", F.col("ingestion_time") + F.expr("INTERVAL 1 HOUR")
+        )
+        .write.parquet(late)
+    )
+
+    def iteration(base):
+        silver, gold = str(base / "silver"), str(base / "gold")
+        bronze_to_silver(
+            spark, bronze_dir, silver, merge_with_existing=False, validate=True
+        )
+        silver_to_gold(spark, silver, gold)
+        bronze_to_silver(spark, late, silver, merge_with_existing=True)
+
+    iteration(tmp_path / "first")
+    before = _compilations(spark)
+    iteration(tmp_path / "second")
+    compiled = _compilations(spark) - before
+    assert compiled <= 10, f"a warm iteration compiled {compiled} classes"
 
 
 def test_silver_to_gold_invariants(spark, bronze_dir, tmp_path):
@@ -372,14 +473,9 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert {r.sensor_id: r.n for r in out} == {"s1": 1, "s2": 1}
 
 
-def test_backfill_date_range_idempotent(spark, bronze_dir, tmp_path):
-    """Backfill two dates (one of them empty) through b2s+s2g: per-date
-    metrics come back flattened, the empty date doesn't sink the run
-    (ActionOnFailure: CONTINUE semantics), and re-running the range
-    converges instead of duplicating gold rows."""
-    from streaming_etl_pipeline_spark.pipelines.medallion import backfill
-
-    # add a second day of data by shifting the fixture forward
+def _add_next_day(spark, bronze_dir):
+    """Append the fixture shifted one day forward: Bronze then holds
+    2024-06-15 and 2024-06-16."""
     extra = spark.read.parquet(bronze_dir).withColumn(
         "event_time", F.col("event_time") + F.expr("INTERVAL 1 DAY")
     ).withColumn(
@@ -387,6 +483,54 @@ def test_backfill_date_range_idempotent(spark, bronze_dir, tmp_path):
     )
     extra.write.mode("append").parquet(bronze_dir)
 
+
+def _rounded(df):
+    """Doubles to 6 dp: aggregates merged in another order may differ in
+    the last bits."""
+    return df.select(
+        *[
+            F.round(c, 6).alias(c) if t == "double" else F.col(c)
+            for c, t in df.dtypes
+        ]
+    )
+
+
+def test_date_scoped_silver_rewrite_keeps_other_dates(spark, bronze_dir, tmp_path):
+    """``bronze-to-silver --date D --no-merge`` replaces day D's Silver
+    rows only; the dynamic overwrite of whole ``sensor_type`` partitions
+    used to drop every other day."""
+    _add_next_day(spark, bronze_dir)
+    silver = str(tmp_path / "silver")
+    bronze_to_silver(spark, bronze_dir, silver, merge_with_existing=False)
+    before = (
+        spark.read.parquet(silver)
+        .drop("ingestion_timestamp", "processing_timestamp")
+        .localCheckpoint()
+    )
+    res = bronze_to_silver(
+        spark, bronze_dir, silver, run_date="2024-06-16",
+        merge_with_existing=False, validate=True,
+    )
+    after = spark.read.parquet(silver).drop(
+        "ingestion_timestamp", "processing_timestamp"
+    )
+    assert res.metrics["output_rows"] == after.count() == 2 * 721
+    on_16th = F.to_date("event_time") == F.lit("2024-06-16").cast("date")
+    assert after.filter(on_16th).count() == 721
+    # the other day's rows are the undated run's, untouched
+    kept, had = after.filter(~on_16th), before.filter(~on_16th)
+    assert kept.exceptAll(had).count() == 0 and had.exceptAll(kept).count() == 0
+
+
+def test_backfill_date_range_idempotent(spark, bronze_dir, tmp_path):
+    """Backfill two dates (one of them empty) through b2s+s2g: per-date
+    metrics come back flattened, the empty date doesn't sink the run
+    (ActionOnFailure: CONTINUE semantics), every Gold table keeps both
+    days, and re-running the range converges instead of duplicating gold
+    rows."""
+    from streaming_etl_pipeline_spark.pipelines.medallion import backfill
+
+    _add_next_day(spark, bronze_dir)
     silver = str(tmp_path / "silver_bf")
     gold = str(tmp_path / "gold_bf")
     res = backfill(
@@ -399,6 +543,23 @@ def test_backfill_date_range_idempotent(spark, bronze_dir, tmp_path):
     assert res.metrics["2024-06-16.b2s.output_rows"] > 0
     first = spark.read.parquet(gold + "/sensor_5min").count()
     assert first > 0
+
+    # each date-scoped s2g replaced its own day only: Gold equals one
+    # undated run over the same Silver
+    whole = str(tmp_path / "gold_whole")
+    silver_to_gold(spark, silver, whole)
+    days = {"2024-06-15", "2024-06-16"}
+    for table, day in (
+        ("sensor_5min", F.to_date("window_start")),
+        ("location_hourly", F.to_date("window_start")),
+        ("daily_summary", F.col("date")),
+    ):
+        got = _rounded(spark.read.parquet(f"{gold}/{table}"))
+        want = _rounded(spark.read.parquet(f"{whole}/{table}"))
+        held = {str(r[0]) for r in got.select(day).distinct().collect()}
+        assert held == days, f"{table} holds {held}"
+        assert got.exceptAll(want).count() == 0, table
+        assert want.exceptAll(got).count() == 0, table
 
     # rerun the same range: dynamic partition overwrite converges
     res2 = backfill(

@@ -180,3 +180,27 @@ def test_structural_audit_counts_cached_subtree_once(spark):
     finally:
         if sys_path_added:
             _sys.path.remove(scripts)
+
+
+def test_silver_chain_shuffles_once(spark):
+    """Null drop → keep-latest dedup → range flags → rolling z-score
+    plans one hash exchange on ``sensor_id`` and one sort: the dedup's
+    ``(sensor_id, event_time, ingestion_time DESC)`` order serves the
+    z-score window too (left to itself the chain plans 2 and 3)."""
+    from pyspark.sql import functions as F
+
+    from streaming_etl_pipeline_spark.pipelines.medallion import silver_chain
+    from streaming_etl_pipeline_spark.sources.generator import generate_events
+
+    bronze = generate_events(spark, 2000, n_sensors=8, seed=5).withColumn(
+        "ingestion_time", F.col("event_time")
+    )
+    plan = (
+        silver_chain(bronze, source_file="generated")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
+    sorts = plan.count("Sort [")
+    assert (exchanges, sorts) == (1, 1), plan

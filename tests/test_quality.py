@@ -108,6 +108,20 @@ def test_duplicate_key_fails_silver(spark, good_bronze):
     ]
 
 
+def test_compound_unique_counts_duplicated_keys(spark, good_bronze):
+    """``observed`` is the number of duplicated keys, not of extra rows:
+    one key held three times and one twice are 2.0."""
+    silver = good_bronze.withColumn("is_anomaly", F.lit(False))
+    first = silver.orderBy("sensor_id").limit(1)
+    last = silver.orderBy(F.desc("sensor_id")).limit(1)
+    dup = silver.union(first).union(first).union(last)
+    report = {
+        r["check"]: r for r in quality.validate(dup, quality.silver_suite())
+    }
+    got = report["compound_unique(sensor_id,event_time)"]
+    assert got["observed"] == 2.0 and got["passed"] is False
+
+
 def test_missing_is_anomaly_fails_not_crashes(good_bronze):
     report = quality.validate(good_bronze, quality.silver_suite())
     d = _report_dict(report)
