@@ -101,8 +101,7 @@ def flag_out_of_range(
     """P7 — per-type range anomaly flag (``bronze_to_silver.py:55-69``).
 
     The per-type bounds are folded into one boolean expression at plan
-    build time — Catalyst constant-folds and codegens it; for hundreds of
-    types prefer ``flag_out_of_range_join`` (broadcast bounds table)."""
+    build time — Catalyst constant-folds and codegens it."""
     ranges = ranges if ranges is not None else ANOMALY_RANGES
     cond: Column = F.lit(False)
     for stype, (lo, hi) in ranges.items():
@@ -111,27 +110,6 @@ def flag_out_of_range(
             & ((F.col(value_col) < lo) | (F.col(value_col) > hi))
         )
     return df.withColumn(flag_col, F.when(cond, True).otherwise(False))
-
-
-def flag_out_of_range_join(
-    df: DataFrame,
-    bounds: DataFrame,
-    type_col: str,
-    value_col: str,
-    flag_col: str = "is_anomaly",
-) -> DataFrame:
-    """P7 at scale — bounds as a broadcast dimension ``(type, lo, hi)``:
-    no plan blow-up when the rule table is large or data-driven."""
-    b = F.broadcast(bounds)
-    joined = df.join(b, df[type_col] == bounds["type"], "left")
-    flagged = joined.withColumn(
-        flag_col,
-        F.when(
-            (F.col(value_col) < F.col("lo")) | (F.col(value_col) > F.col("hi")),
-            True,
-        ).otherwise(False),
-    )
-    return flagged.drop("type", "lo", "hi")
 
 
 def flag_zscore(

@@ -4,7 +4,7 @@ composed from the operator library.
 - :func:`bronze_to_silver` re-expresses
   ``src/transformations/bronze_to_silver.py:162-221``: date filter →
   required-null drop → keep-latest dedup → range + rolling-z-score
-  anomaly flags → lineage → late-data merge → partitioned overwrite.
+  anomaly flags → lineage → late-data merge → whole-table commit.
 - :func:`silver_to_gold` re-expresses
   ``src/transformations/silver_to_gold.py:164-215``: three independent
   aggregations (5-min per sensor, hourly per location, daily summary),
@@ -20,14 +20,18 @@ suite is extra aggregates of the Silver write's observation, not a
 re-scan of what was just written. At 100 TB that's the difference
 between 1 scan and 5.
 
-Scale notes: writes are partitioned (``sensor_type``) with dynamic
-partition overwrite, so a call replaces every partition its rows touch,
-whole. A date-scoped call (``run_date``) therefore writes the other
-dates' rows of those partitions back beside its own, so it replaces only
-its own date's rows (a date partition column would let it skip that
-rewrite). The cleaning chain hash-partitions once on the entity key
-(``sensor_id``); dedup and z-score both run inside that one exchange and
-one sort.
+Scale notes: every table (partitioned by ``sensor_type``) is written as
+a whole beside the live one and committed by
+:func:`~streaming_etl_pipeline_spark.sources.io.replace_dir`'s checked
+directory swap, so a crash leaves the previous table or the new one,
+never a table missing partitions; every call first lets
+:func:`~streaming_etl_pipeline_spark.sources.io.repair_store` finish or
+undo a swap a crash interrupted. As the commit replaces the whole table,
+a date-scoped call (``run_date``) writes the other dates' rows back
+beside its own, so it replaces only its own date's rows (a date
+partition column would let it skip that rewrite). The cleaning chain
+hash-partitions once on the entity key (``sensor_id``); dedup and
+z-score both run inside that one exchange and one sort.
 """
 
 from __future__ import annotations
@@ -48,10 +52,13 @@ from streaming_etl_pipeline_spark.quality.expectations import (
 )
 from streaming_etl_pipeline_spark.sources.io import (
     read_parquet_if_exists,
-    write_partitioned,
+    repair_store,
+    replace_dir,
 )
 
 REQUIRED_COLUMNS = ("sensor_id", "sensor_type", "value", "event_time")
+#: Partition column of Silver and of every Gold table.
+PARTITION_COL = "sensor_type"
 EXPECTED_PER_5MIN = 300  # silver_to_gold.py:41
 
 
@@ -75,8 +82,8 @@ def _with_other_dates(
     run_date: _dt.date | str | None,
 ) -> DataFrame:
     """``rows`` (one date's) plus every other date's rows stored at
-    ``path``: the dynamic overwrite replaces whole ``sensor_type``
-    partitions, so a date-scoped write must carry the rest of them."""
+    ``path``: the commit replaces the whole table, so a date-scoped write
+    must carry the rest of it."""
     existing = None if run_date is None else read_parquet_if_exists(spark, path)
     if existing is None:
         return rows
@@ -114,7 +121,6 @@ def bronze_to_silver(
     silver_path: str,
     run_date: _dt.date | str | None = None,
     merge_with_existing: bool = True,
-    partition_by: tuple[str, ...] = ("sensor_type",),
     validate: bool = False,
 ) -> PipelineResult:
     """Clean Bronze into Silver with one scan and one write.
@@ -124,13 +130,20 @@ def bronze_to_silver(
     five separate actions, and keeps the late-data merge as a union +
     keep-latest dedup so a corrected late row wins
     (``bronze_to_silver.py:145-159``); only a Silver that does not exist
-    yet skips the merge. A ``run_date`` call without the merge replaces
-    only that date's Silver rows.
+    yet skips the merge. Without the merge (``merge_with_existing=False``,
+    the CLI's ``--no-merge``) the call rebuilds Silver from this Bronze
+    alone: an undated call leaves exactly this run's rows, and a
+    ``run_date`` call replaces only that date's Silver rows.
+
+    Silver is written beside the live table and committed as a whole by
+    :func:`~streaming_etl_pipeline_spark.sources.io.replace_dir`; a swap
+    an earlier crash interrupted is finished or undone first
+    (:func:`~streaming_etl_pipeline_spark.sources.io.repair_store`), so
+    it is never taken for a first run.
 
     With ``validate=True`` the silver expectation suite is evaluated on
     the write itself (fail-fast, like the reference's quality gate in the
-    DAG): its scope is the rows this call writes, which under the dynamic
-    overwrite are the whole content of every partition it replaces.
+    DAG): its scope is the whole Silver table the call commits.
     Every check's observed value lands in ``metrics`` as
     ``quality.<check>``, and a failed check raises
     :class:`~streaming_etl_pipeline_spark.quality.expectations.QualityError`
@@ -156,7 +169,8 @@ def bronze_to_silver(
 
     # Only a missing Silver (the first run) skips the merge: a Silver that
     # cannot be read or unioned (schema drift) raises before the write, so
-    # the dynamic overwrite can never replace Silver with the new rows alone.
+    # the commit can never replace Silver with the new rows alone.
+    repair_store(spark, silver_path)
     existing = (
         read_parquet_if_exists(spark, silver_path) if merge_with_existing else None
     )
@@ -184,7 +198,7 @@ def bronze_to_silver(
         *quality,
     ).select(*columns)
 
-    write_partitioned(df, silver_path, partition_by=list(partition_by))
+    replace_dir(spark, silver_path, df.write.partitionBy(PARTITION_COL))
     seen = obs_out.get
     metrics = {
         **obs_in.get,
@@ -210,17 +224,28 @@ def silver_to_gold(
 
     Three independent plans (scan → partial agg → shuffle → final agg →
     write each), submitted concurrently so one table's single-task
-    stages overlap the others' work; once all three finish, the first
-    failure (in table order) is re-raised. A ``run_date`` call replaces
-    only that date's Gold rows. ``oracle_safe=False`` uses the plain
-    double aggregation path — the exact-decimal variant exists for
-    differential testing and costs ~20% more. ``skew=True`` passes the
+    stages overlap the others' work; each table is committed as a whole
+    by :func:`~streaming_etl_pipeline_spark.sources.io.replace_dir`, so a
+    table whose plan fails keeps its previous content. Once all three
+    finish, the first failure (in table order) is re-raised. A
+    ``run_date`` call replaces only that date's Gold rows.
+    ``oracle_safe=False`` uses the plain double aggregation path — the
+    exact-decimal variant exists for differential testing and costs ~20%
+    more. ``skew=True`` passes the
     hot-key knob through to the windowed aggregations (mergeable
     percentile sketches instead of exact percentile buffers — see
     ``operators/aggregates.windowed_stats`` and tests/test_skew.py for
     the measured rationale); flip it when one sensor/location dominates
     the feed.
     """
+    paths = {
+        "sensor_5min": f"{gold_path}/sensor_5min",
+        "location_hourly": f"{gold_path}/location_hourly",
+        "daily_summary": f"{gold_path}/daily_summary",
+    }
+    # finish or undo any swap a crash interrupted before reading a table
+    for path in (silver_path, *paths.values()):
+        repair_store(spark, path)
     df = spark.read.parquet(silver_path)
     if run_date is not None:
         df = df.filter(_on_date(F.to_date("event_time"), run_date))
@@ -255,11 +280,6 @@ def silver_to_gold(
         oracle_safe=oracle_safe,
     )
 
-    paths = {
-        "sensor_5min": f"{gold_path}/sensor_5min",
-        "location_hourly": f"{gold_path}/location_hourly",
-        "daily_summary": f"{gold_path}/daily_summary",
-    }
     window_day = F.to_date("window_start")
     tables = {
         "sensor_5min": _with_other_dates(
@@ -277,10 +297,12 @@ def silver_to_gold(
         obs, F.count(F.lit(1)).alias("sensor_5min_groups")
     )
     # each write's thread carries the caller's job group, description and tags
-    write = inheritable_thread_target(spark)(write_partitioned)
+    commit = inheritable_thread_target(spark)(replace_dir)
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:
         futures = [
-            pool.submit(write, frame, paths[name], partition_by=["sensor_type"])
+            pool.submit(
+                commit, spark, paths[name], frame.write.partitionBy(PARTITION_COL)
+            )
             for name, frame in tables.items()
         ]
     # leaving the pool waited for all three writes
@@ -306,8 +328,9 @@ def backfill(
     bronze→silver→gold with date-partition pruning, stage validation
     fail-fast (``validate=True`` runs the silver expectation suite per
     date, the DAG's quality gate), and idempotent convergence — every
-    write is a date-scoped dynamic partition overwrite, so re-running any
-    date (the DAG's ``retries: 2``) replaces that date's rows instead of
+    write is date-scoped (the date's rows replaced, every other date's
+    written back, the table committed whole), so re-running any date
+    (the DAG's ``retries: 2``) replaces that date's rows instead of
     duplicating them, and keeps every other date's.
 
     ``on_error``: 'continue' records the failed date and proceeds (the

@@ -22,8 +22,9 @@ silver→gold → quality):
         [--benchmark /data/eval_docs] [--max-tokens 2048] [--overlap 128]
 
 Orchestration stays external (cron/Airflow/dbt invoke these commands);
-idempotency comes from dynamic partition overwrite, so re-running a task
-for a date converges instead of duplicating.
+idempotency comes from each writer replacing what it owns (a table, a
+date's rows, an epoch), so re-running a task for a date converges
+instead of duplicating.
 """
 
 from __future__ import annotations
@@ -49,7 +50,12 @@ def make_parser() -> argparse.ArgumentParser:
     b2s.add_argument("--bronze", required=True)
     b2s.add_argument("--silver", required=True)
     b2s.add_argument("--date", default=None)
-    b2s.add_argument("--no-merge", action="store_true")
+    b2s.add_argument(
+        "--no-merge", action="store_true",
+        help="rebuild Silver from this Bronze alone instead of merging into "
+        "it: without --date Silver holds exactly this run's rows; with "
+        "--date only that date's rows are replaced",
+    )
     b2s.add_argument("--validate", action="store_true")
 
     s2g = sub.add_parser("s2g", help="silver → gold")
@@ -437,7 +443,8 @@ def make_parser() -> argparse.ArgumentParser:
     bf = sub.add_parser(
         "backfill",
         help="historical date-range backfill: per-date b2s + s2g with "
-        "stage validation; idempotent via dynamic partition overwrite",
+        "stage validation; idempotent: each date replaces its own rows, "
+        "keeps every other date's and commits each table whole",
     )
     bf.add_argument("--bronze", required=True)
     bf.add_argument("--silver", required=True)

@@ -245,13 +245,3 @@ def _driver_parity_guard(name, out, d_cols, d_types, d_tuples) -> DiffResult | N
             )
     return None
 
-
-def run_all(spark: SparkSession, sf_dir: str, names=None) -> list[DiffResult]:
-    con = duck_connect(sf_dir)
-    results = []
-    for name in names or QUERIES:
-        try:
-            results.append(run_one(spark, con, sf_dir, name))
-        except Exception as e:  # surface, don't abort the sweep
-            results.append(DiffResult(name, False, f"EXCEPTION: {e}"))
-    return results

@@ -34,11 +34,6 @@ def pseudonym(col: str, secret: str) -> "F.Column":
     return F.sha2(F.concat(F.lit(secret), F.col(col).cast("string")), 256)
 
 
-def pseudonym_sql(col_sql: str, secret: str) -> str:
-    """DuckDB twin of :func:`pseudonym`."""
-    return f"sha256('{secret}' || CAST({col_sql} AS VARCHAR))"
-
-
 def pseudonymize(
     df: DataFrame, cols: Sequence[str], secret: str
 ) -> DataFrame:

@@ -1,11 +1,13 @@
 """SparkSession factory and runtime tuning.
 
 Mirrors the reference's session posture (AQE on, snappy parquet, schema
-inference off, dynamic partition overwrite — reference
-``src/consumers/spark_streaming.py:36-45`` and
+inference off — reference ``src/consumers/spark_streaming.py:36-45`` and
 ``src/transformations/bronze_to_silver.py:236-243``) while adding the
 settings a DuckDB-differential harness needs (UTC session timezone,
-Arrow-accelerated collection).
+Arrow-accelerated collection). The reference's session-wide dynamic
+partition overwrite is left out: an overwrite here replaces its whole
+target, and the one writer that replaces single partitions says so on its
+own writer (``sources.io.write_partitioned``).
 
 Scale note: in local mode ``spark.driver.memory`` is the only memory knob;
 on a real cluster the same configs apply per-executor and AQE coalesces
@@ -29,7 +31,6 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.compression.codec": "snappy",
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.streaming.schemaInference": "false",
     # The test corpus stores TIMESTAMP(NANOS) which Spark has no native
     # type for; read as long and convert in sources.io.read_table.

@@ -1,9 +1,7 @@
 from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
     TABLES,
     compact,
-    load_tables,
     read_table,
     spread,
-    register_views,
     write_partitioned,
 )

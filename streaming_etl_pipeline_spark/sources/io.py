@@ -17,10 +17,13 @@ ids on read. Every Hadoop ``FileSystem`` handle comes from
 :func:`hadoop_fs`.
 
 Scale notes: parquet scans get predicate pushdown + column pruning from
-Catalyst for free; partitioned writes use dynamic partition overwrite so a
-backfill of one partition never truncates its siblings (the reference gets
-this via ``spark.sql.sources.partitionOverwriteMode=dynamic``,
-``dags/batch_pipeline_dag.py:48``).
+Catalyst for free. Each writer says what it replaces: an overwrite
+replaces its whole target, except :func:`write_partitioned`, the one
+partition-level replace (only the partitions its rows hold), which the
+incremental writers go through. The reference instead sets dynamic
+partition overwrite for the whole session
+(``dags/batch_pipeline_dag.py:48``), under which every partitioned
+overwrite keeps the partitions a re-export no longer has.
 """
 
 from __future__ import annotations
@@ -187,18 +190,16 @@ def write_epoch(
     df: DataFrame, path: str, value: str, *partition_cols: str
 ) -> None:
     """Epoch-idempotent write: tag every row ``ingest_batch_id=value``
-    and replace only that partition (dynamic partition overwrite), with
+    and replace only that partition (:func:`write_partitioned`), with
     ``partition_cols`` as sub-partitions. A replayed epoch rewrites its
     own partition, all levels below it included, instead of appending a
     second copy; every other epoch is left alone. This is the
     Spark-native form of the reference's delete-then-COPY load
     (``src/loaders/redshift_loader.py:33-55``)."""
-    (
-        df.withColumn("ingest_batch_id", F.lit(value))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id", *partition_cols)
-        .parquet(path)
+    write_partitioned(
+        df.withColumn("ingest_batch_id", F.lit(value)),
+        path,
+        ["ingest_batch_id", *partition_cols],
     )
 
 
@@ -511,31 +512,22 @@ def spread(
     return df.repartition(target)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register each corpus table as a temp view for the SQL API."""
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Partitioned parquet sink (S5). With partitionOverwriteMode=dynamic,
-    ``mode="overwrite"`` replaces only the partitions present in ``df`` —
-    the Spark-native equivalent of the reference's delete-then-COPY
-    idempotent load (``src/loaders/redshift_loader.py:33-55``)."""
-    writer = df.write.mode(mode)
+    """Partitioned parquet sink (S5) and the engine's one partition-level
+    replace: dynamic partition overwrite, set on this writer only,
+    replaces exactly the partitions present in ``df`` and keeps every
+    other — the Spark-native equivalent of the reference's
+    delete-then-COPY idempotent load
+    (``src/loaders/redshift_loader.py:33-55``). Without ``partition_by``
+    it replaces the whole ``path``. Spark's commit deletes each replaced
+    partition before renaming the new one in, so use it for
+    replayable increments (epochs, windows), never to rewrite a table
+    in place (:func:`replace_dir` does that crash-safely)."""
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -553,7 +545,6 @@ def write_clustered(
     partition_by: list[str] | None = None,
     num_files: int | None = None,
     max_records_per_file: int = 5_000_000,
-    mode: str = "overwrite",
 ) -> None:
     """Data-clustered parquet sink: range-repartition on ``cluster_by``
     then sort within partitions, so each output file covers a narrow,
@@ -571,7 +562,7 @@ def write_clustered(
     """
     n = num_files or df.sparkSession.sparkContext.defaultParallelism
     out = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-    writer = out.write.mode(mode).option(
+    writer = out.write.mode("overwrite").option(
         "maxRecordsPerFile", max_records_per_file
     )
     if partition_by:
@@ -622,7 +613,6 @@ def write_zordered(
     bits: int = 4,
     partition_by: list[str] | None = None,
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Multi-dimension data clustering: like :func:`write_clustered` but
     each file covers a narrow range of EVERY ``zorder_by`` column, not
@@ -646,7 +636,7 @@ def write_zordered(
         .sortWithinPartitions("_z", *zorder_by)
         .drop("_z")
     )
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -658,7 +648,6 @@ def write_bloom_indexed(
     bloom_cols: list[str],
     expected_ndv: int = 1_000_000,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Parquet write with bloom filters on ``bloom_cols``.
 
@@ -672,7 +661,7 @@ def write_bloom_indexed(
     Complements, not replaces, clustering: sort the lead column, bloom
     the rest.
     """
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     for c in bloom_cols:
         writer = writer.option(
             f"parquet.bloom.filter.enabled#{c}", "true"
@@ -710,7 +699,6 @@ def write_jsonl(
     path: str,
     partition_by: list[str] | None = None,
     compression: str = "gzip",
-    mode: str = "overwrite",
 ) -> None:
     """JSON-lines sink — the interchange format most tokenizer/training
     stacks consume. Gzip by default: JSONL is 3-10× more verbose than
@@ -718,7 +706,7 @@ def write_jsonl(
     scale prefer zstd/gzip per-file compression and many files (one per
     task) over fewer huge ones so the *consumer* parallelizes by file.
     """
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode("overwrite").option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.json(path)
@@ -956,7 +944,6 @@ def write_training_shards(
     n_shards: int = 64,
     id_col: str = "doc_id",
     fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> dict:
     """Export a training corpus as ``n_shards`` deterministic shards plus
     a ``_manifest.json`` integrity record (underscore: invisible to Spark's file index, like ``_SUCCESS``) — the handoff artifact a
@@ -974,6 +961,10 @@ def write_training_shards(
     see :func:`_shard_row_sig`), computed in the SAME job that writes,
     one extra ``n_shards``-row aggregate.
 
+    A re-export to the same ``path`` replaces it whole, so the directory
+    holds exactly the rows the manifest counts, whatever the previous
+    export's shard count or corpus.
+
     Returns the manifest dict. Verify after a copy/transfer with
     :func:`verify_training_shards`.
     """
@@ -983,7 +974,7 @@ def write_training_shards(
 
     shard = F.pmod(md5_long(F.col(id_col)), F.lit(n_shards)).cast("int")
     with_shard = df.withColumn("shard", shard)
-    writer = with_shard.write.mode(mode).partitionBy("shard")
+    writer = with_shard.write.mode("overwrite").partitionBy("shard")
     getattr(writer, fmt)(path)
 
     row_sig = _shard_row_sig(df.columns)

@@ -55,6 +55,7 @@ from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
     repair_store,
     replace_dir,
     write_epoch,
+    write_partitioned,
 )
 
 #: Event schema — reference ``spark_streaming.py:26-33``.
@@ -1544,7 +1545,7 @@ def start_gold_upsert_sink(
     The reference batch-recomputes Gold (T7 hybrid); this is the additive
     streaming variant: an UPDATE-mode windowed agg emits each window's
     refreshed totals as late rows arrive, and ``foreachBatch`` replaces
-    exactly the touched partitions via dynamic partition overwrite — the
+    exactly the touched partitions (``write_partitioned``) — the
     same delete-by-window idempotency as the warehouse loader (S8,
     ``redshift_loader.py:33-55``), so replays after a restart rewrite
     partitions instead of duplicating rows. State is bounded by the
@@ -1554,17 +1555,12 @@ def start_gold_upsert_sink(
     alone: update mode delivers only the *groups* refreshed in a trigger,
     so overwriting whole ``window_start`` partitions would silently drop
     the window's untouched sibling groups. Partitioning down to the group
-    key makes the dynamic overwrite granularity match the update-mode
+    key makes the partition-replace granularity match the update-mode
     emission granularity exactly.
     """
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_start", *keys)
-            .parquet(path)
-        )
+        write_partitioned(batch_df, path, ["window_start", *keys])
 
     agg = _gold_windows(bronze, bucket_seconds, keys, value_col, ts_col)
     return _start(
@@ -1837,18 +1833,3 @@ try:  # StreamingQueryListener requires Spark ≥ 3.4 python support
 
 except ImportError:  # pragma: no cover
     MetricsListener = None  # type: ignore[assignment,misc]
-
-
-def streaming_progress(query: StreamingQuery) -> dict:
-    """T6 — rows/sec + batch duration from the last progress event
-    (``spark_streaming.py:167-184``)."""
-    p = query.lastProgress
-    if not p:
-        return {}
-    return {
-        "batchId": p.get("batchId"),
-        "numInputRows": p.get("numInputRows"),
-        "inputRowsPerSecond": p.get("inputRowsPerSecond"),
-        "processedRowsPerSecond": p.get("processedRowsPerSecond"),
-        "durationMs": p.get("durationMs", {}).get("triggerExecution"),
-    }

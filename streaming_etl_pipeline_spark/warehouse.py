@@ -8,8 +8,9 @@ Replaces the reference's Redshift layer (``src/loaders/redshift_schema.sql``,
   stl_scan hack (``redshift_schema.sql:59-67``);
 - ``build_fact_from_gold`` — fact table shaping + warehouse-style layout:
   DISTKEY → ``repartition(key)``, SORTKEY → ``sortWithinPartitions``;
-- idempotent window loads via dynamic partition overwrite (the Spark
-  equivalent of delete-then-COPY, ``redshift_loader.py:33-55``);
+- idempotent window loads through ``sources.io.write_partitioned``, the
+  one writer that replaces single partitions (the Spark equivalent of
+  delete-then-COPY, ``redshift_loader.py:33-55``);
 - dimension upsert delegates to
   :func:`streaming_etl_pipeline_spark.operators.joins.upsert_dimension`.
 """
@@ -88,9 +89,11 @@ def load_fact_window(
     bucket_seconds: int = 3600,
 ) -> None:
     """S8 — idempotent window load. The reference DELETEs the half-open
-    window then COPYs (``redshift_loader.py:84-133``); with a time-bucket
-    partition column + dynamic partition overwrite, rewriting the same
-    window twice converges to the same table state with no delete pass."""
+    window then COPYs (``redshift_loader.py:84-133``); here each window is
+    a time-bucket partition and :func:`write_partitioned` replaces only
+    the windows ``fact`` holds, so rewriting the same window twice
+    converges to the same table state with no delete pass, and every
+    other window is kept."""
     bucketed = fact.withColumn("load_window", time_bucket(window_col, bucket_seconds))
     write_partitioned(bucketed, path, partition_by=["load_window"])
 
@@ -176,7 +179,7 @@ def write_jdbc(
 
     This is the thin parity path for warehouses a user reaches over JDBC
     (Redshift/Postgres/Derby/...); the Spark-native equivalent —
-    :func:`load_fact_window` with dynamic partition overwrite — remains
+    :func:`load_fact_window`'s window-partition replace — remains
     the preferred engine design (no delete pass, no driver round-trip).
 
     Scale note: Spark's JDBC writer opens one connection per partition

@@ -202,20 +202,154 @@ def test_validated_silver_raises_after_the_write(spark, bronze_dir, tmp_path):
 
 
 def test_silver_to_gold_raises_when_one_table_cannot_be_written(
-    spark, bronze_dir, tmp_path
+    spark, bronze_dir, tmp_path, monkeypatch
 ):
     """The three Gold writes run side by side; one that fails must raise
     from ``silver_to_gold`` once the other two have finished."""
+    import shutil
+
+    from streaming_etl_pipeline_spark.operators import aggregates
+
     silver = str(tmp_path / "silver")
     gold = tmp_path / "gold"
     bronze_to_silver(spark, bronze_dir, silver, merge_with_existing=False)
-    gold.mkdir()
-    (gold / "daily_summary").write_text("a file where a table directory goes")
+    silver_to_gold(spark, silver, str(gold))
+    daily = spark.read.parquet(str(gold / "daily_summary")).localCheckpoint()
+    for table in ("sensor_5min", "location_hourly"):
+        shutil.rmtree(gold / table)
+    plan = aggregates.daily_summary
+    monkeypatch.setattr(
+        aggregates,
+        "daily_summary",
+        lambda *a, **k: plan(*a, **k).withColumn(
+            "boom", F.raise_error(F.lit("daily_summary cannot be written"))
+        ),
+    )
     with pytest.raises(Exception):
         silver_to_gold(spark, silver, str(gold))
-    assert (gold / "daily_summary").read_text().startswith("a file")
+    kept = spark.read.parquet(str(gold / "daily_summary"))
+    assert kept.count() == daily.count() > 0
+    assert kept.exceptAll(daily).count() == 0 and daily.exceptAll(kept).count() == 0
     for table in ("sensor_5min", "location_hourly"):
         assert spark.read.parquet(str(gold / table)).count() > 0
+
+
+def test_no_merge_silver_run_leaves_exactly_its_rows(spark, bronze_dir, tmp_path):
+    """``b2s --no-merge`` without a date rebuilds Silver from its own
+    Bronze: a temperature-only run over a four-type Silver leaves only
+    that run's rows, not the other types' stale partitions."""
+    silver = str(tmp_path / "silver")
+    bronze_to_silver(spark, bronze_dir, silver, merge_with_existing=False)
+    temp = str(tmp_path / "temperature_bronze")
+    bronze = spark.read.parquet(bronze_dir)
+    bronze.filter("sensor_type = 'temperature'").write.parquet(temp)
+    res = bronze_to_silver(spark, temp, silver, merge_with_existing=False)
+    out = spark.read.parquet(silver)
+    assert 0 < res.metrics["output_rows"] == out.count() < 721
+    assert {r[0] for r in out.select("sensor_type").distinct().collect()} == {
+        "temperature"
+    }
+
+
+class _CrashingFs:
+    """A Hadoop ``FileSystem`` whose ``rename`` raises on its k-th call,
+    as a process killed at that point of a directory swap would stop."""
+
+    def __init__(self, fs, renames, k: int):
+        self._fs, self._renames, self._k = fs, renames, k
+
+    def rename(self, src, dst):
+        if next(self._renames) == self._k:
+            raise RuntimeError(f"injected crash at rename {self._k}")
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _without_lineage_times(df):
+    return df.drop("ingestion_timestamp", "processing_timestamp")
+
+
+def _same_rows(got, want) -> bool:
+    return (
+        got.count() == want.count()
+        and got.exceptAll(want).count() == 0
+        and want.exceptAll(got).count() == 0
+    )
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_late_merge_crash_leaves_a_whole_silver(
+    spark, bronze_dir, tmp_path, monkeypatch, k
+):
+    """A crash at either rename of the late merge's Silver commit leaves
+    a Silver that the next ``silver_to_gold`` reads whole: the pre-merge
+    table (crash before the old table moved aside) or the post-merge one
+    (crash between the two renames, rolled forward). Re-running the
+    merge then equals a merge that never crashed, and no swap directory
+    is left behind."""
+    import glob
+    import itertools
+    import shutil
+
+    from streaming_etl_pipeline_spark.sources import io
+
+    late = str(tmp_path / "late")
+    (
+        spark.read.parquet(bronze_dir)
+        .limit(50)
+        .withColumn("value", F.col("value") + 1.0)
+        .withColumn(
+            "ingestion_time", F.col("ingestion_time") + F.expr("INTERVAL 1 HOUR")
+        )
+        .unionByName(
+            spark.read.parquet(bronze_dir)
+            .limit(20)
+            .withColumn("event_time", F.col("event_time") + F.expr("INTERVAL 1 HOUR"))
+        )
+        .write.parquet(late)
+    )
+    pre, clean, crashed = (str(tmp_path / n) for n in ("pre", "clean", "crashed"))
+    bronze_to_silver(spark, bronze_dir, pre, merge_with_existing=False)
+    shutil.copytree(pre, clean)
+    shutil.copytree(pre, crashed)
+    bronze_to_silver(spark, late, clean, merge_with_existing=True)
+
+    renames = itertools.count(1)
+    real = io.hadoop_fs
+
+    def crashing_fs(spark, path):
+        fs, jpath = real(spark, path)
+        return _CrashingFs(fs, renames, k), jpath
+
+    with monkeypatch.context() as m:
+        m.setattr(io, "hadoop_fs", crashing_fs)
+        with pytest.raises(RuntimeError, match=f"injected crash at rename {k}"):
+            bronze_to_silver(spark, late, crashed, merge_with_existing=True)
+
+    expected = pre if k == 1 else clean
+    gold, want_gold = str(tmp_path / "gold"), str(tmp_path / "want_gold")
+    silver_to_gold(spark, crashed, gold)
+    silver_to_gold(spark, expected, want_gold)
+    for table in ("sensor_5min", "location_hourly", "daily_summary"):
+        assert _same_rows(
+            _rounded(spark.read.parquet(f"{gold}/{table}")),
+            _rounded(spark.read.parquet(f"{want_gold}/{table}")),
+        ), table
+    assert _same_rows(
+        _without_lineage_times(spark.read.parquet(crashed)),
+        _without_lineage_times(spark.read.parquet(expected)),
+    )
+
+    bronze_to_silver(spark, late, crashed, merge_with_existing=True)
+    assert _same_rows(
+        _without_lineage_times(spark.read.parquet(crashed)),
+        _without_lineage_times(spark.read.parquet(clean)),
+    )
+    left = glob.glob(str(tmp_path / "**" / "*.__compact__"), recursive=True)
+    left += glob.glob(str(tmp_path / "**" / "*.__old__"), recursive=True)
+    assert left == []
 
 
 def _compilations(spark) -> int:

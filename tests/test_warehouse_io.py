@@ -814,6 +814,38 @@ def test_training_shards_roundtrip_and_tamper_detection(spark, tmp_path):
     assert res["mismatched_shards"] == [shard_id]
 
 
+@pytest.mark.parametrize(
+    "first_shards, second_shards, second_docs",
+    [(8, 4, 500), (8, 8, 3)],
+    ids=["fewer-shards", "fewer-docs"],
+)
+def test_training_shards_reexport_replaces_the_directory(
+    spark, tmp_path, first_shards, second_shards, second_docs
+):
+    """A second export to the same path holds exactly its own rows: the
+    first export's shards that the second does not write are gone, so
+    the manifest's count is what a reader of the directory gets."""
+    from streaming_etl_pipeline_spark.sources.io import (
+        verify_training_shards,
+        write_training_shards,
+    )
+
+    def docs(n):
+        return spark.range(n).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("text-"), F.col("id")).alias("text"),
+        )
+
+    out = str(tmp_path / "shards")
+    write_training_shards(docs(500), out, n_shards=first_shards)
+    manifest = write_training_shards(docs(second_docs), out, n_shards=second_shards)
+    got = spark.read.parquet(out).drop("shard")
+    want = docs(second_docs)
+    assert got.count() == manifest["total_rows"] == second_docs
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert verify_training_shards(spark, out)["ok"]
+
+
 def test_table_sig_in_place_part_rewrite_invalidates(tmp_path):
     # r12 (judge r11 item #3): an in-place same-name rewrite of one part
     # file preserves the dir mtime and entry count — the signature must
