@@ -763,12 +763,6 @@ def simhash_from_hashes(hashes: Column | str, bits: int = 32) -> Column:
     )
 
 
-def simhash(col: Column | str, bits: int = 32) -> Column:
-    """Convenience one-shot SimHash of a text column (prefer the two-step
-    token_hashes → simhash_from_hashes in real plans to hash tokens once)."""
-    return simhash_from_hashes(token_hashes(col), bits)
-
-
 def token_hashes_sql(col_sql: str) -> str:
     """DuckDB twin of :func:`token_hashes`."""
     norm = norm_text_sql(col_sql)

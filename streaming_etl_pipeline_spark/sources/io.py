@@ -293,20 +293,27 @@ def replace_dir(spark: SparkSession, path: str, writer) -> None:
     so both results are checked and a stale ``.__old__`` is cleared
     first by :func:`repair_store`). A failed second rename rolls the
     original back, so the live path is never left empty; a crash at any
-    point leaves one of the states :func:`repair_store` resolves. A
-    missing ``path`` is simply written. The swap is not atomic for
+    point leaves one of the states :func:`repair_store` resolves, and a
+    writer that raises leaves the live path as it was and no staging
+    directory. A missing ``path`` is simply written. The swap is not atomic for
     concurrent readers: run it between pipeline stages (the versioned
     tables below are the live-reader-safe form)."""
     repair_store(spark, path)
     tmp, old = _swap_paths(path)
-    if callable(writer):
-        writer(tmp)
-    else:
-        writer.mode("overwrite").parquet(tmp)
     fs, jpath = hadoop_fs(spark, path)
     jvm = spark._jvm
     jold = jvm.org.apache.hadoop.fs.Path(old)
     jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    try:
+        if callable(writer):
+            writer(tmp)
+        else:
+            writer.mode("overwrite").parquet(tmp)
+    except BaseException:
+        # a failed write (a plan error, not a crash) leaves no staging
+        # directory beside the live table
+        fs.delete(jtmp, True)
+        raise
     if fs.exists(jpath) and not fs.rename(jpath, jold):
         raise RuntimeError(
             f"store swap: rename {path} -> {old} failed "

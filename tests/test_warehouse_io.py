@@ -208,6 +208,21 @@ def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "fresh.__compact__"))
 
 
+def test_replace_dir_writer_error_leaves_no_staging(spark, tmp_path):
+    """A writer that raises (a plan error, not a crash) re-raises, the
+    live table keeps its rows and no staging directory is left beside
+    it for the next repair_store to find."""
+    from streaming_etl_pipeline_spark.sources.io import replace_dir
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    bad = spark.range(10).withColumn("boom", F.raise_error(F.lit("planted")))
+    with pytest.raises(Exception, match="planted"):
+        replace_dir(spark, path, bad.write)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(10))
+    assert not os.path.exists(path + ".__compact__")
+
+
 def test_jdbc_delete_window_sql_matches_reference():
     # parity with redshift_loader.build_delete_sql (src/loaders/
     # redshift_loader.py:33-55)
