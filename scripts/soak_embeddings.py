@@ -41,22 +41,22 @@ Phases (each timed; shuffle/spill/peak-mem from the event log at exit):
                 bucket edges). Reports each arm, the dense-only fusion,
                 and the hybrid fusion;
 - ``ingest``  — incremental IVF-PQ index maintenance
-                (streaming/ingest.start_ann_index_sink's batch body):
-                two 1M-vector triggers encode + append against frozen
+                (``streaming.ingest.ann_index_batch``):
+                two 1M-vector batches encode + append against frozen
                 centroids/codebooks → per-trigger wall + rows/s, then a
                 200-query ivf_pq_topk over the maintained
                 ``corpus_index=`` → search wall;
 - ``hybrid_store`` — the PRODUCTION hybrid-retrieval shape: BOTH
-                stores maintained by their streaming batch paths (two
-                ANN-sink triggers + two BM25-sink triggers over a
+                stores maintained by their per-batch writers (two
+                ``ann_index_batch`` + two ``bm25_postings_batch`` epochs over a
                 planted-twin corpus and its quantized lexical view),
                 then ONE query batch fused from the stored indexes —
                 ``ivf_pq_topk(corpus_index=load_ann_index(...))`` +
                 ``bm25_topk_from_store`` → ``rrf_fuse``. Reports
                 per-arm and fused twin recall + per-side wall;
 - ``drift_loop`` — recall decay and recovery through the closed drift
-                loop: quantizer trained on pattern A, the sink indexes
-                A then keeps encoding a DC-shifted pattern-B stream
+                loop: quantizer trained on pattern A, ``ann_index_batch``
+                indexes A then keeps encoding DC-shifted pattern-B batches
                 against the frozen state; planted-twin recall on B
                 queries BEFORE, then ``maybe_retrain_ann_index``
                 (monitor fires → retrain on current traffic →
@@ -478,7 +478,7 @@ def main() -> int:
                 3,
             )
 
-        # ---- ingest: per-trigger cost of the streaming ANN index ----
+        # ---- ingest: per-batch cost of the incremental ANN index ----
         if "ingest" in phases:
             from streaming_etl_pipeline_spark.streaming.ingest import (
                 ann_index_batch,
@@ -512,7 +512,7 @@ def main() -> int:
             report["ingest_probe_results"] = found
 
         # ---- hybrid_store: the PRODUCTION hybrid shape — both stores
-        #      maintained by their streaming batch paths, one query
+        #      maintained by their per-batch writers, one query
         #      batch fused from the stored indexes (the r7 hybrid arm
         #      built its BM25 index ad hoc; this proves the end-to-end
         #      store-backed recipe) ----
@@ -556,7 +556,7 @@ def main() -> int:
             report["phases"]["hybrid_quantizer_fit"] = round(
                 time.time() - t0, 1
             )
-            # both stores maintained by their streaming batch paths,
+            # both stores maintained by their per-batch writers,
             # two epochs each
             ann_store = os.path.join(work, "hybrid_ann_store")
             bm_store = os.path.join(work, "hybrid_bm25_store")
@@ -668,7 +668,7 @@ def main() -> int:
                     3,
                 )
 
-            # the sink indexes A, then keeps encoding drifted B against
+            # ann_index_batch indexes A, then keeps encoding drifted B against
             # the FROZEN pattern-A state
             didx = os.path.join(work, "drift_index")
             t0 = time.time()

@@ -256,54 +256,6 @@ def daily_summary(
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation with explicit key salting for skew.
-
-    ``aggs`` maps output column → (input column, fn) where fn ∈
-    {sum, count, min, max} (algebraic — mergeable partials). Phase 1
-    groups by (keys, salt) so a hot key's rows spread over
-    ``salt_buckets`` reducers; phase 2 merges the partials per key.
-    AQE's skew handling covers *joins*; groupBy skew needs this (or
-    ``max_by``-style struct aggregation, see ``deduplicate_latest_agg``)
-    when one key dominates a partition's memory.
-
-    The salt is ``md5(monotonically_increasing_id) % buckets`` — uniform
-    and deterministic per row within a run; results are exactly equal to
-    the unsalted aggregation (the phase-2 merge is exact).
-    """
-    merge_fn = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    phase1_fn = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    salt = (
-        F.conv(
-            F.substring(F.md5(F.monotonically_increasing_id().cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % salt_buckets
-    )
-    p1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(*keys, "_salt")
-        .agg(
-            *[
-                phase1_fn[fn](F.col(src)).alias(out)
-                for out, (src, fn) in aggs.items()
-            ]
-        )
-    )
-    return p1.groupBy(*keys).agg(
-        *[
-            merge_fn[fn](F.col(out)).alias(out)
-            for out, (src, fn) in aggs.items()
-        ]
-    )
-
-
 def last_per_group(
     df: DataFrame,
     keys: Sequence[str],
@@ -372,46 +324,6 @@ def top_k(
     m = F.col(metric) if isinstance(metric, str) else metric
     order = [m.desc()] + [c.asc() for c in _cols(tiebreak)]
     return df.orderBy(*order).limit(k)
-
-
-def top_k_per_group(
-    df: DataFrame,
-    keys: Sequence[str],
-    metric: str | Column,
-    k: int,
-    tiebreak: Sequence[str | Column] = (),
-) -> DataFrame:
-    """Top-k rows per group via rank-window; one shuffle on ``keys``."""
-    m = F.col(metric) if isinstance(metric, str) else metric
-    w = Window.partitionBy(*keys).orderBy(
-        m.desc(), *[c.asc() for c in _cols(tiebreak)]
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def skew_safe_count_distinct(
-    df: DataFrame, keys: Sequence[str], value_col: str
-) -> DataFrame:
-    """Exact per-key distinct count that survives key skew.
-
-    ``countDistinct`` builds each key's full distinct set on one reducer;
-    a hot key (one bot user, one null-ish default) concentrates there.
-    The two-job formulation shuffles on ``(keys, value)`` — a strictly
-    finer, near-uniform key — for the dedup, then counts the already
-    -distinct rows per key; partial counts merge map-side, so the hot
-    key's second shuffle carries counts, not values. Same result set,
-    bounded reducer memory at any skew.
-    """
-    return (
-        df.select(*keys, value_col)
-        .distinct()
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias(f"distinct_{value_col}"))
-    )
 
 
 def robust_stats(

@@ -48,9 +48,6 @@ TOKEN_SQL = (
 )
 
 
-_MAX_INT = 2147483647
-
-
 # ---------------------------------------------------------------------------
 # Spark-SQL expression twins (round 11, guide §5 driver overhead).
 #
@@ -212,17 +209,6 @@ def exact_dedup_groups(
     )
 
 
-def minhash_signature(
-    col: Column | str, num_hashes: int = 16, k: int = 3
-) -> list[Column]:
-    """MinHash signature: for seed s, min over shingles of md5_long(sh, s).
-
-    Returned as a list of named Columns ``mh0..mh{n-1}`` (kept as columns,
-    not an array, so the oracle SQL stays a flat SELECT).
-    """
-    return minhash_from_hashes(hashed_shingles(shingles(col, k)), num_hashes)
-
-
 #: Universal-hash mixing constants for MinHash: h_i = (a_i·h + b_i) mod p,
 #: the Carter-Wegman family over the Mersenne prime p = 2^31 − 1. The
 #: modulus must be ~the domain size (31-bit base hashes) — a much larger
@@ -307,21 +293,6 @@ def minhash_from_hashes_sql(hs_sql: str, num_hashes: int = 16) -> list[str]:
         )
         for i in range(num_hashes)
     ]
-
-
-def minhash_from_shingles(sh: Column | str, num_hashes: int = 16) -> list[Column]:
-    """One-shot MinHash from a shingle array. Prefer the two-step
-    hashed_shingles → minhash_from_hashes across separate selects in real
-    plans so the md5 pass runs once, not per hash function."""
-    return minhash_from_hashes(hashed_shingles(sh), num_hashes)
-
-
-def minhash_signature_sql(col_sql: str, num_hashes: int = 16, k: int = 3) -> list[str]:
-    """True DuckDB twin of :func:`minhash_signature`: the same composition
-    (shingle → single md5 pass → Carter-Wegman mixes), so Spark and oracle
-    signatures match bit-for-bit."""
-    hs = hashed_shingles_sql(shingles_sql(col_sql, k))
-    return minhash_from_hashes_sql(hs, num_hashes)
 
 
 def lsh_candidate_pairs(
@@ -502,9 +473,8 @@ def _probe_signature_store(
     threshold: float = 0.6,
     write: bool = True,
 ) -> DataFrame | None:
-    """The one probe-and-write of the MinHash signature store, shared by
-    the CLI (:func:`incremental_near_dups`) and the streaming sink
-    (``streaming.ingest.dedup_ingest_batch``): the verified
+    """The one probe-and-write of the MinHash signature store behind
+    :func:`incremental_near_dups` (the CLI ``dedup``): the verified
     ``(id_a, id_b, jaccard)`` pairs between ``sigs`` and the store
     (:func:`_batch_store`, tombstoned ids dropped), or None when there
     is no store yet. With ``write``, the pairs are materialized and
@@ -543,12 +513,13 @@ def incremental_near_dups(
     call bootstraps the store. This is the 100 TB dedup loop: per-ingest
     cost scales with the new batch, not the corpus.
 
-    The store layout is the streaming sink's: the batch's signatures
-    land in one ``ingest_batch_id`` partition named by its content
-    (:func:`_batch_label`) through :func:`_probe_signature_store`, so
-    re-running the same batch replaces its partition (and probes as it
-    did the first time) instead of doubling the store, and the CLI and
-    the sink can share one store.
+    The batch's signatures land in one ``ingest_batch_id`` partition
+    named by its content (:func:`_batch_label`) through
+    :func:`_probe_signature_store`, so re-running the same batch
+    replaces its partition (and probes as it did the first time)
+    instead of doubling the store. That is the layout of the other
+    ingest stores, so ``streaming.ingest.delete_ids`` and
+    ``compact_ingest_store`` apply to it unchanged.
     """
     new_sigs = build_signatures(new_docs, id_col=id_col, text_col=text_col)
     label = _batch_label(new_docs, id_col, text_col)
@@ -924,78 +895,6 @@ def substring_dup_stats(
     )
 
 
-def incremental_substring_dups(
-    spark,
-    new_docs: DataFrame,
-    store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 64,
-    stride: int = 32,
-    append: bool = True,
-) -> DataFrame:
-    """Incremental substring-level dedup against a persisted chunk-
-    fingerprint store: chunk only the NEW batch, probe its fingerprints
-    against the store plus the batch itself, and (``append=True``) store
-    the batch's fingerprints.
-
-    Returns the same per-doc profile as :func:`substring_dup_stats`
-    (``id, n_chunks, shared_chunks, dup_frac``) for the new docs, where
-    "shared" means the chunk hash occurs under any OTHER document —
-    previously-stored or elsewhere in this batch. Per-ingest cost is the
-    batch's chunk volume plus one semi-probe of the store on the
-    md5-uniform hash; old text is never rescanned. The store layout is
-    :func:`incremental_near_dups`': the batch's chunks land in one
-    content-named ``ingest_batch_id`` partition that the probe skips, so re-running a batch replaces its own chunks instead
-    of matching and doubling them — the 100 TB ingestion pattern.
-    """
-    new_chunks = chunk_fingerprints(new_docs, id_col, text_col, width, stride)
-    label = _batch_label(new_docs, id_col, text_col)
-    append = append and label is not None
-    store = _batch_store(spark, store_path, label, fold=append)
-    if store is not None:
-        store = store.select(id_col, "chunk_hash")
-
-    probe_src = new_chunks.select(id_col, "chunk_hash")
-    universe = (
-        probe_src if store is None else probe_src.unionByName(store)
-    )
-    # a chunk instance is shared iff its hash maps to >1 distinct doc in
-    # the union universe — min/max window, no self-join (the store side
-    # contributes only (id, hash) pairs, never text)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("chunk_hash")
-    flags = universe.select(
-        id_col,
-        "chunk_hash",
-        (F.min(id_col).over(w) != F.max(id_col).over(w)).alias("_shared"),
-    ).join(
-        new_chunks.select(id_col).distinct(), id_col, "left_semi"
-    )
-    out = (
-        flags.groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.col("_shared").cast("int")).alias("shared_chunks"),
-        )
-        .select(
-            id_col,
-            "n_chunks",
-            "shared_chunks",
-            F.round(F.col("shared_chunks") / F.col("n_chunks"), 6).alias(
-                "dup_frac"
-            ),
-        )
-    )
-    if append:
-        out = out.localCheckpoint(eager=True)
-        write_epoch(
-            new_chunks.select(id_col, "pos", "chunk_hash"), store_path, label
-        )
-    return out
-
-
 def source_overlap(
     docs: DataFrame,
     group_col: str = "source",
@@ -1234,44 +1133,6 @@ def paragraph_dedup_sql(
     FROM flagged
     GROUP BY doc_id
     """
-
-
-def minhash_band_plan(
-    threshold: float, num_hashes: int = 16
-) -> dict:
-    """LSH banding planner: pick (bands b, rows r) with b·r = num_hashes
-    whose S-curve knee (1/b)^(1/r) sits closest to the target Jaccard
-    ``threshold`` (Leskovec/Rajaraman/Ullman, *Mining of Massive
-    Datasets* §3.4). Returns the chosen plan plus the collision
-    probability 1 − (1 − s^r)^b at s = threshold ± 0.1 so callers can
-    see the false-positive / false-negative trade before paying for a
-    corpus pass. Driver-side arithmetic only — use it to parameterize
-    :func:`minhash_signature` / the band join, not inside a plan.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best = None
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b:
-            continue
-        r = num_hashes // b
-        knee = (1.0 / b) ** (1.0 / r)
-        cand = (abs(knee - threshold), b, r, knee)
-        if best is None or cand < best:
-            best = cand
-    _, b, r, knee = best
-
-    def p_collide(s: float) -> float:
-        return 1.0 - (1.0 - s ** r) ** b
-
-    return {
-        "bands": b,
-        "rows_per_band": r,
-        "knee": round(knee, 4),
-        "p_at_threshold": round(p_collide(threshold), 4),
-        "p_below": round(p_collide(max(threshold - 0.1, 0.0)), 4),
-        "p_above": round(p_collide(min(threshold + 0.1, 1.0)), 4),
-    }
 
 
 # ---------------------------------------------------------------------------

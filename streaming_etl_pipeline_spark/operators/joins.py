@@ -172,51 +172,6 @@ def asof_join(
     )
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with explicit left-side key salting for skew.
-
-    For when AQE's skew-join split isn't available or sufficient (e.g.
-    the skewed side feeds a co-grouped downstream op, or a single hot key
-    exceeds even the split threshold): every left row gets a uniform salt
-    in ``[0, salt_buckets)``, the right side is replicated once per salt
-    value (crossJoin with a literal range — ``salt_buckets``× the RIGHT
-    side only, which must be the smaller input), and the join runs on
-    ``(keys, salt)`` so a hot key's rows land on ``salt_buckets``
-    different reducers. Result set is exactly the plain join's.
-
-    ``how`` supports inner/left — semantics where replicating the right
-    side cannot double-match a left row.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins only")
-    salt = (
-        F.conv(
-            F.substring(F.md5(F.monotonically_increasing_id().cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % salt_buckets
-    )
-    salted_left = left.withColumn("_salt", salt)
-    replicated_right = right.crossJoin(
-        F.broadcast(
-            left.sparkSession.range(salt_buckets).select(
-                F.col("id").alias("_salt")
-            )
-        )
-    )
-    return (
-        salted_left.join(replicated_right, [*on, "_salt"], how)
-        .drop("_salt")
-    )
-
-
 def apply_cdc(
     snapshot: DataFrame,
     changes: DataFrame,

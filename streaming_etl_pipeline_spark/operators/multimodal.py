@@ -429,35 +429,6 @@ def image_dhash(assets: DataFrame) -> DataFrame:
     )
 
 
-def image_neardup_pairs(
-    assets: DataFrame, max_hamming: int = 10
-) -> DataFrame:
-    """Perceptual image near-duplicates: dHash per image (0-shuffle
-    decode pass), then the SAME pigeonhole chunk-band join the SimHash
-    text path uses (``dedup.hamming_close_pairs``) — candidates only
-    from matching hash chunks, never an all-pairs scan. Scale shape is
-    identical to text SimHash: one uniform-key shuffle over 64-bit
-    hashes, not images."""
-    from streaming_etl_pipeline_spark.operators.dedup import (
-        hamming_close_pairs,
-    )
-
-    hashes = image_dhash(assets).select(
-        F.col("asset_id").alias("doc_id"), F.col("dhash")
-    )
-    return hamming_close_pairs(
-        hashes,
-        hash_col="dhash",
-        max_hamming=max_hamming,
-        chunks=max_hamming + 1,
-        bits=64,
-    ).select(
-        F.col("id_a").alias("asset_a"),
-        F.col("id_b").alias("asset_b"),
-        "hamming",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Oracle-exact pixel/sample statistics (decode verified end-to-end)
 # ---------------------------------------------------------------------------

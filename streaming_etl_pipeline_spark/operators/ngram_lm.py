@@ -197,7 +197,7 @@ def kn_model_from_counts(
 ) -> KNModel:
     """Derive the full interpolated KN model from a trigram-type count
     frame ``(u, v, w, c3)`` — the shared tail of :func:`kn_lm_fit` and
-    the streaming-count-store path (``streaming/ingest.py``
+    the count-store path (``streaming/ingest.py``
     ``kn_lm_fit_from_store``): n-gram counts are ADDITIVE corpus state,
     so any partitioning of the corpus that sums to the same type counts
     yields the bit-identical model."""
@@ -486,7 +486,7 @@ def save_kn_model(model: KNModel, path: str) -> None:
     """Persist a fitted model as three parquet tables + a meta file —
     the serve-side artifact for fit-once/score-many deployments (the
     count store in ``streaming/ingest.py`` is the MAINTAIN-side
-    artifact: keep that when the corpus ingests continuously, keep
+    artifact: keep that when the corpus ingests in batches, keep
     this when a frozen reference model scores many crawl slices).
     Probabilities are 9 dp doubles, so the round-trip is bit-exact.
     ``meta.json`` goes through the Hadoop FileSystem API, so the whole
@@ -531,7 +531,7 @@ def load_kn_model(spark, path: str) -> KNModel:
 # Order-n generalization with count pruning (KenLM-style)
 # ---------------------------------------------------------------------------
 #
-# The trigram API above is the streaming-count-store-integrated path and
+# The trigram API above is the path the trigram count store feeds and
 # stays bit-frozen; this section is the deployment-shaped generalization:
 # CCNet's production filter is a PRUNED 5-GRAM KenLM, and at crawl scale
 # an unpruned type table is itself a top-3 cost (the sf-soak hit 19.5M

@@ -602,7 +602,7 @@ def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5, c: int = RRF_C) -> str:
 # Stored full-vocabulary posting index: build → prune-scan scoring
 #
 # The index is written by ``streaming.ingest.bm25_postings_batch`` (the
-# CLI ``build-bm25-index`` as one batch, the streaming sink per trigger):
+# CLI ``build-bm25-index`` as one batch, later batches as epochs beside it):
 # ``(doc_id, term, doc_len, tf)`` postings partitioned by epoch and
 # ``term_bucket``, plus per-epoch ``(n_docs, sum_len)`` stats, because
 # BM25's idf/avg_len are CORPUS state that must accumulate. The corpus-
@@ -819,7 +819,7 @@ def bm25_topk_from_store(
     algo: str = "auto",
 ) -> DataFrame:
     """BM25 top-``k`` against a stored posting index (the CLI
-    ``build-bm25-index`` or the streaming sink, both written by
+    ``build-bm25-index`` plus any later epochs, all written by
     ``streaming.ingest.bm25_postings_batch``) — identical scores to
     :func:`bm25_topk` over the same corpus (pinned by
     ``test_bm25_store_matches_direct``).

@@ -509,74 +509,6 @@ def ivf_ann_topk(
     )
 
 
-def ivf_candidate_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 1,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    left_cols: tuple[str, ...] = (),
-    right_cols: tuple[str, ...] = (),
-    centroid_id: str = "centroid_id",
-    cent_id_col: str = "vec_id",
-    cent_vec_col: str | None = None,
-) -> DataFrame:
-    """Corpus-scale candidate-pair generator: score only (left, right)
-    pairs co-located in an IVF cell, instead of the full |left|×|right|
-    grid. The left side probes its ``nprobe`` nearest-centroid cells
-    (:func:`ivf_probe_cells` semantics); the right side sits in exactly
-    one cell (:func:`ivf_assign` semantics), so each pair appears at
-    most once and ``nprobe = |centroids|`` degenerates to the exact
-    grid. Output: ``(left_id, right_id, *left_cols, *right_cols,
-    cosine_sim)`` with the cosine rounded to 9 dp, ready to feed the
-    ``candidates=`` hook of :func:`embedding_decontamination`,
-    :func:`bitext_margin_pairs`, or :func:`hard_negative_mining` when
-    NEITHER side fits in a broadcast.
-
-    Plan/scale: centroid assignment is a shuffle-free literal-scoring
-    projection on both sides (see :func:`_centroid_candidates`); the
-    only data-sized exchange is the equi-join on the cell id — the
-    optimizer picks the strategy (AQE handles skewed cells), so a
-    100M × 100M mining run costs two hash-partitioned scans instead of
-    an impossible 10¹⁶-row grid. Self-pairs are NOT filtered here (the
-    consumers' tails own that). Recall < 1 when ``nprobe`` is capped:
-    a true neighbor in an unprobed cell is never scored — the standard
-    IVF trade, measured in SCALE.md.
-    """
-    cells_l = _centroid_candidates(
-        centroids, F.col(vec_col), cent_id_col, cent_vec_col or vec_col
-    )
-    top = F.slice(F.sort_array(cells_l, asc=False), 1, nprobe)
-    lhs = left.select(
-        F.col(left_id),
-        F.col(vec_col).alias("_l_vec"),
-        *[F.col(c) for c in left_cols],
-        F.explode(top).alias("_c"),
-    ).withColumn(centroid_id, F.col("_c")["cid"]).drop("_c")
-    cells_r = _centroid_candidates(
-        centroids, F.col(vec_col), cent_id_col, cent_vec_col or vec_col
-    )
-    rhs = right.select(
-        F.col(right_id),
-        F.col(vec_col).alias("_r_vec"),
-        *[F.col(c) for c in right_cols],
-        F.array_max(cells_r)["cid"].alias(centroid_id),
-    )
-    sim = F.round(cosine_similarity("_l_vec", "_r_vec"), 9)
-    return (
-        lhs.join(rhs, centroid_id)
-        .select(
-            left_id,
-            right_id,
-            *left_cols,
-            *right_cols,
-            sim.alias("cosine_sim"),
-        )
-    )
-
-
 def cosine_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,
@@ -1037,9 +969,9 @@ def embedding_decontamination(
     by construction) reach the per-vector argmax shuffle. Exact by
     design — decontamination is the one place recall losses are not
     acceptable. For a benchmark too big to broadcast, pass
-    ``candidates=`` — a ``(vec_id, bench_id, cosine_sim)`` frame from
-    :func:`ivf_candidate_pairs` (probe all cells for exact recall, cap
-    ``nprobe`` to trade recall for cost) — and only the threshold filter
+    ``candidates=`` — a ``(vec_id, bench_id, cosine_sim)`` frame of
+    cell-local pairs (an IVF or LSH bucket join: probe all cells for
+    exact recall, fewer to trade recall for cost) — and only the threshold filter
     + argmax tail runs here. Ranking ties break by ``bench_id`` for a
     deterministic result.
     """
@@ -1107,8 +1039,8 @@ def bitext_margin_pairs(
     a map-side-combined aggregate, so nothing data-sized shuffles again
     (the mutual join broadcasts the one-row-per-target stats). For
     corpus-scale × corpus-scale mining pass ``candidates=`` — a
-    ``(src_id, tgt_id, cosine_sim)`` frame from
-    :func:`ivf_candidate_pairs` — and the identical margin tail runs
+    ``(src_id, tgt_id, cosine_sim)`` frame of cell-local pairs (an IVF
+    or LSH bucket join) — and the identical margin tail runs
     over cell-local pairs instead of the grid (neighborhood averages
     then use each side's k best CANDIDATES; with capped ``nprobe`` that
     is the standard IVF recall trade). Memory discipline: the pair
@@ -1231,8 +1163,8 @@ def hard_negative_mining(
     join condition, so pruned pairs never materialize. For mining over
     the full corpus as anchors pass ``candidates=`` — an
     ``(anchor_id, neighbor_id, a_label, neighbor_label, cosine_sim)``
-    frame from :func:`ivf_candidate_pairs` (carry both labels via
-    ``left_cols``/``right_cols``) — and only the label/self filters +
+    frame of cell-local pairs (an IVF or LSH bucket join carrying both
+    labels) — and only the label/self filters +
     per-anchor top-k run here; capped ``nprobe`` trades recall for
     never materializing the corpus² grid.
     """
@@ -1468,14 +1400,14 @@ def retrain_quantizer(
     concentrate in cells the old quantizer carved for a different mix;
     this produces the replacement state and
     :func:`streaming.ingest.reencode_index` migrates the stored index
-    onto it (restart the sink with the new state afterwards — encode is
-    frozen per sink run).
+    onto it (encode later batches with the new state — encode is
+    frozen per quantizer state).
 
     ``sample_fraction``: train on a deterministic (seed-13) Bernoulli
     sample — quantizer quality needs a representative sample, not the
     corpus, so at 100 TB train on ~1M rows and keep every training scan
     sample-sized. Returns ``(centroids, codebooks)`` in exactly the
-    shapes ``start_ann_index_sink`` / :func:`ivf_pq_topk` accept; the
+    shapes ``streaming.ingest.ann_index_batch`` / :func:`ivf_pq_topk` accept; the
     centroid frame is materialized (localCheckpoint) so downstream
     plans embed trained state, not the training lineage.
 
@@ -1681,7 +1613,7 @@ def ivf_pq_topk(
     ``prune_stored_cells=True`` (with ``corpus_index``): collect the
     probed cell ids (bounded — ≤ queries × nprobe longs) and push an
     ``isin`` filter into the index scan. When the index is the
-    streaming sink's centroid_id-partitioned store, this is STATIC
+    ``ann_index_batch(partition_by_cell=True)`` store, this is STATIC
     partition pruning — only the probed cells' directories are listed
     and read, so probe I/O is ∝ nprobe/n_cells of the index regardless
     of corpus size. Semantically a no-op (candidates are cell-join-
@@ -1955,8 +1887,8 @@ def ivf_occupancy_drift(
 ) -> DataFrame:
     """Per-cell IVF occupancy drift: PSI of the CURRENT assignment
     distribution against the TRAINING-TIME reference, cell ids as the
-    bins. This is the retrain trigger the streaming index-maintenance
-    sink defers to (``start_ann_index_sink`` encodes against FROZEN
+    bins. This is the retrain trigger the incremental index writer
+    defers to (``streaming.ingest.ann_index_batch`` encodes against FROZEN
     centroids/codebooks; when new traffic concentrates in cells the
     quantizer carved for a different mix, recall decays silently —
     occupancy drift is the observable).

@@ -60,32 +60,6 @@ def kmv_sketch(
     )
 
 
-def kmv_merge(
-    sketches: DataFrame,
-    keys: Sequence[str],
-    k: int = 64,
-) -> DataFrame:
-    """Merge KMV sketch frames (rows of keys + ``_h``, e.g. the union of
-    per-day/per-source :func:`kmv_sketch` outputs) back into one valid
-    bottom-k sketch per key: distinct-union the hashes, re-take the
-    bottom k. EXACT merge, not an approximation of one — any hash in
-    the union's bottom k is necessarily in its contributing sketch's
-    bottom k, so the merged sketch is bit-identical to sketching the
-    union of the raw value sets directly. This is the 100 TB property:
-    persist k longs per key per partition/day, answer any date range by
-    merging the tiny sketch files, never rescan the corpus (exact
-    countDistinct cannot do this). Feed the result to
-    :func:`kmv_distinct` / :func:`kmv_overlap` via their ``sketch=``
-    hooks."""
-    hashed = sketches.select(*keys, "_h").distinct()
-    w = Window.partitionBy(*keys).orderBy("_h")
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
 def kmv_distinct(
     df: DataFrame,
     keys: Sequence[str],

@@ -183,10 +183,9 @@ def make_parser() -> argparse.ArgumentParser:
 
     bn = sub.add_parser(
         "build-ngram-store",
-        help="materialize the trigram count store from a batch corpus "
-        "(one epoch partition) — the offline seed a "
-        "start_ngram_count_sink stream then appends to, and the "
-        "--model-store score-lm consumes",
+        help="write a batch corpus into an n-gram count store as one "
+        "epoch partition (ngram_counts_batch; a re-run replaces it) — "
+        "the store score-lm --model-store consumes",
     )
     bn.add_argument("--input", required=True, help="parquet with doc_id,text")
     bn.add_argument("--output", required=True, help="count store dir out")
@@ -218,8 +217,8 @@ def make_parser() -> argparse.ArgumentParser:
     sl = sub.add_parser(
         "score-lm",
         help="per-document Kneser-Ney log-prob: self-trained on the "
-        "input by default, or scored against the model rebuilt from a "
-        "streaming n-gram count store (--model-store) or a saved "
+        "input by default, or scored against the model rebuilt from an "
+        "n-gram count store (--model-store) or a saved "
         "fit-lm artifact (--model, either format) with backoff for "
         "OOV n-grams",
     )
@@ -227,7 +226,7 @@ def make_parser() -> argparse.ArgumentParser:
     sl.add_argument("--output", required=True, help="score parquet out")
     sl.add_argument(
         "--model-store", default=None,
-        help="n-gram count store dir (start_ngram_count_sink output); "
+        help="n-gram count store dir (build-ngram-store output); "
         "omit to self-train on --input",
     )
     sl.add_argument(
@@ -254,7 +253,7 @@ def make_parser() -> argparse.ArgumentParser:
         "recent traffic, and when it fires (>= --psi-threshold) "
         "retrain the quantizer on the corpus and re-encode/swap the "
         "stored index; prints the new centroids/codebooks as JSON for "
-        "the sink restart",
+        "encoding later batches",
     )
     ra.add_argument("--index", required=True, help="ANN index store")
     ra.add_argument(

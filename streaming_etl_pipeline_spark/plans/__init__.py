@@ -1,6 +1,5 @@
 from streaming_etl_pipeline_spark.plans.corpus import (  # noqa: F401
     QUERIES,
     QuerySpec,
-    oracle_sql,
     queries,
 )

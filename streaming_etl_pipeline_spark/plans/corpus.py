@@ -2,7 +2,7 @@
 a DuckDB-oracle SQL twin.
 
 This is the correctness contract (SURVEY.md §5): the driver runs each
-``queries()[name]`` on Spark and the matching ``oracle_sql()[name]`` on
+``queries()[name]`` on Spark and the matching ``QUERIES[name].sql`` on
 DuckDB over the same parquet tables and compares row count + schema +
 order-insensitive value hash. Parity rules used throughout:
 
@@ -68,10 +68,6 @@ def _tuned(fn):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: spec.fn for name, spec in QUERIES.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {n: s.sql for n, s in QUERIES.items() if s.sql is not None}
 
 
 # ---------------------------------------------------------------------------

@@ -1718,8 +1718,7 @@ def q_image_dhash_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerates only the 8×9 sampled pixel grid from the counter-mode
     sha256 generator and folds the same bits. Every bit of every hash is
     inside the value-hash gate — this covers the decode + resample +
-    bit-packing path that feeds ``image_neardup_pairs``
-    (pigeonhole-banded Hamming join, pytest-gated)."""
+    bit-packing path."""
     assets = MM.synthesize_assets(spark, n=_MM_N)
     return MM.image_dhash(assets).select("asset_id", "dhash")
 

@@ -1,23 +1,21 @@
-"""Privacy operators for training-data pipelines: pseudonymization and
+"""Privacy operators for training-data pipelines: pseudonym tokens and
 k-anonymity assessment.
 
 PII *redaction* (``operators/curation.py redact_pii``) removes literal
 identifiers from free text; these operators handle the structured side:
 
-- :func:`pseudonymize` — replace identifier columns with a KEYED hash
+- :func:`pseudonym` — a KEYED hash token for an identifier column
   (HMAC-style ``sha256(secret || value)``), so the same input maps to
-  the same token everywhere (joins, sessionization and dedup still work
-  across tables/days) while the raw identifier never leaves the
+  the same token everywhere while the raw identifier never leaves the
   cluster. Unkeyed hashing would be reversible by dictionary attack on
-  low-entropy ids; the secret makes tokens useless without it. Rotating
-  the secret re-keys the whole corpus deterministically.
+  low-entropy ids; the secret makes tokens useless without it.
 - :func:`k_anonymity` — the classic re-identification risk measure
   (Sweeney 2002 — public): a row is k-anonymous if at least k rows
   share its quasi-identifier combination. One groupBy over the
   quasi-identifiers (map-side combined); returns per-combination sizes
   so callers can suppress or generalize the risky groups.
 
-Both are pure column expressions / single aggregations — 0 or 1
+Both are a pure column expression or a single aggregation — 0 or 1
 shuffles, exact DuckDB twins for the differential gate.
 """
 
@@ -32,21 +30,6 @@ from pyspark.sql import functions as F
 def pseudonym(col: str, secret: str) -> "F.Column":
     """Keyed pseudonym token for one column (64-hex sha256)."""
     return F.sha2(F.concat(F.lit(secret), F.col(col).cast("string")), 256)
-
-
-def pseudonymize(
-    df: DataFrame, cols: Sequence[str], secret: str
-) -> DataFrame:
-    """Replace each of ``cols`` in place with its keyed token.
-
-    Deterministic per (value, secret): equality joins, groupBys and
-    dedup over the tokens behave exactly as over the raw ids. 0-shuffle
-    projection.
-    """
-    out = df
-    for c in cols:
-        out = out.withColumn(c, pseudonym(c, secret))
-    return out
 
 
 def k_anonymity(

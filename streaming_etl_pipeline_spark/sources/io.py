@@ -179,10 +179,10 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def epoch_value(batch_id: int, run_token: str | None = None) -> str:
-    """Partition value of one micro-batch: ``<token>-<epoch>``, the token
-    living as long as the stream's checkpoint, so a checkpoint reset
-    (epoch ids restart at 0) appends beside earlier runs instead of
-    replacing them. ``run_token=None`` keeps the bare epoch id."""
+    """Partition value of one batch: ``<token>-<epoch>``, the token naming
+    the run, so a new run whose batch ids restart at 0 appends beside
+    earlier runs instead of replacing them. ``run_token=None`` keeps the
+    bare epoch id."""
     return f"{run_token}-{batch_id}" if run_token else str(batch_id)
 
 
@@ -678,47 +678,6 @@ def write_bloom_indexed(
     writer.parquet(path)
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema, multiline: bool = False
-) -> DataFrame:
-    """JSON-lines corpus source with a declared schema (never
-    ``inferSchema`` — at 100 TB a schema-inference pass is a full extra
-    read of the lake, and silent type drift between files corrupts
-    downstream casts).
-
-    Rows that fail to parse surface as all-null rows in PERMISSIVE mode;
-    pair with a ``_corrupt_record`` column in the schema to route them to
-    a dead-letter sink (same pattern as the streaming JSON split,
-    ``streaming/ingest.py``). JSONL splits by newline, so a single large
-    file still parallelizes across executors — unlike multiline JSON,
-    which is one task per file (``multiline=True`` exists for legacy
-    dumps; avoid it for anything large).
-    """
-    return (
-        spark.read.schema(schema)
-        .option("multiLine", "true" if multiline else "false")
-        .json(path)
-    )
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    compression: str = "gzip",
-) -> None:
-    """JSON-lines sink — the interchange format most tokenizer/training
-    stacks consume. Gzip by default: JSONL is 3-10× more verbose than
-    parquet, and the write is line-splittable only uncompressed — at
-    scale prefer zstd/gzip per-file compression and many files (one per
-    task) over fewer huge ones so the *consumer* parallelizes by file.
-    """
-    writer = df.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
 # ---------------------------------------------------------------------------
 # Versioned tables: atomic manifest-pointer commits
 # ---------------------------------------------------------------------------
@@ -818,47 +777,6 @@ def versioned_write(
             pass
 
 
-def table_history(table_dir: str) -> list[dict]:
-    """Commit history of a versioned table, newest first — the
-    ``DESCRIBE HISTORY`` an operator reaches for before a rollback:
-    ``[{version, committed_at (pointer-visible mtime, UTC ISO),
-    is_current, n_files, bytes}]``. Reads only directory metadata —
-    no Spark job, no data scan."""
-    import datetime as _dt
-    import re
-
-    vroot = os.path.join(table_dir, "_versions")
-    if not os.path.isdir(vroot):  # never-written table: empty history,
-        return []                 # matching latest_version()'s 0
-    current = latest_version(table_dir)
-    out = []
-    for d in sorted(os.listdir(vroot), reverse=True):
-        m = re.fullmatch(r"v(\d+)", d)
-        if not m:
-            continue
-        v = int(m.group(1))
-        vdir = os.path.join(vroot, d)
-        files = [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(vdir)
-            for f in fs
-            if not f.startswith(("_", "."))
-        ]
-        out.append(
-            {
-                "version": v,
-                "committed_at": _dt.datetime.fromtimestamp(
-                    os.path.getmtime(vdir), tz=_dt.timezone.utc
-                ).isoformat(),
-                "is_current": v == current,
-                "n_files": len(files),
-                "bytes": sum(os.path.getsize(f) for f in files),
-            }
-        )
-    out.sort(key=lambda r: -r["version"])
-    return out
-
-
 def break_claim(table_dir: str, version: int | None = None) -> bool:
     """Clear a crashed writer's stale claim (operator action, like
     Delta's ``FSCK``). Returns True if a claim file was removed."""
@@ -883,34 +801,12 @@ def read_versioned(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read a committed snapshot (default: the latest). Older versions
-    stay readable until :func:`vacuum_versions` — free time travel for
+    stay readable (nothing deletes them) — free time travel for
     debugging a pipeline regression against yesterday's input."""
     v = version or latest_version(table_dir)
     if v <= 0:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     return spark.read.parquet(os.path.join(table_dir, "_versions", f"v{v}"))
-
-
-def vacuum_versions(table_dir: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest ``keep`` committed versions; returns the
-    removed version numbers. Never touches the current pointer."""
-    import re
-    import shutil
-
-    vroot = os.path.join(table_dir, "_versions")
-    current = latest_version(table_dir)
-    versions = sorted(
-        int(m.group(1))
-        for d in os.listdir(vroot)
-        if (m := re.fullmatch(r"v(\d+)", d))
-    )
-    keepers = set(versions[-keep:]) | {current}
-    removed = []
-    for v in versions:
-        if v not in keepers:
-            shutil.rmtree(os.path.join(vroot, f"v{v}"))
-            removed.append(v)
-    return removed
 
 
 # ---------------------------------------------------------------------------

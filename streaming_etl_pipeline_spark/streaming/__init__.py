@@ -2,27 +2,12 @@ from streaming_etl_pipeline_spark.streaming.ingest import (  # noqa: F401
     EVENT_SCHEMA,
     KAFKA_WIRE_SCHEMA,
     MetricsListener,
-    cluster_labels_from_store,
-    cluster_pairs_batch,
-    compact_cluster_store,
-    dedup_ingest_batch,
-    enrich_stream,
-    gold_jdbc_upsert_batch,
-    join_streams,
     kafka_reader_options,
     parse_events,
     project_kafka,
     read_json_stream,
-    read_jsonl_stream,
     read_kafka_stream,
-    split_component,
     start_bronze_sink,
     start_dead_letter_sink,
-    start_dedup_ingest_sink,
-    start_gold_jdbc_sink,
     start_gold_upsert_sink,
-)
-from streaming_etl_pipeline_spark.streaming.stateful import (  # noqa: F401
-    dedup_within_watermark,
-    streaming_sessionize,
 )

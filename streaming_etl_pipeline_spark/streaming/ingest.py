@@ -20,30 +20,32 @@ parse/split is stateless and scales linearly with partitions. Downstream
 windowed aggregation belongs in the batch Gold layer (T7 hybrid design,
 ``docs/INTERVIEW_PREP.md:29-31``) or a separate watermarked streaming agg.
 
-The incremental stores below (dedup signatures, cluster labels, ANN
-index, BM25 postings, n-gram counts) share one exactly-once contract:
-a ``foreachBatch`` sink (:func:`_start_epoch_sink`) whose micro-batch
-writes one ``<token>-<epoch>`` partition per store with
-``sources.io.write_epoch``. Each store has that one writer: the CLI's
-batch entry points (``build-bm25-index``, ``build-ngram-store``,
-``dedup``) write through the same per-batch functions. Optional store
-reads go through ``sources.io.read_parquet_if_exists``, tombstones
-through ``sources.io._apply_tombstones``, and folding a store's epochs
-into one partition through ``sources.io.fold_epochs``, so none of that
-is repeated here.
+The incremental stores below (ANN index, BM25 postings, n-gram
+counts) are written one batch at a time by the CLI
+(``build-bm25-index``, ``build-ngram-store``) and the soak scripts:
+each per-batch writer takes a ``batch_id`` and an optional
+``run_token`` and replaces one ``<token>-<epoch>`` partition per store
+with ``sources.io.write_epoch``, so re-running a batch rewrites its own
+partition instead of appending a second copy. The dedup signature store
+has the same layout and its writer lives in
+``operators/dedup._probe_signature_store``. Optional store reads go
+through ``sources.io.read_parquet_if_exists``, tombstones through
+``sources.io._apply_tombstones``, and folding a store's epochs into one
+partition through ``sources.io.fold_epochs``, so none of that is
+repeated here.
 """
 
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.listener import StreamingQueryListener
 
-from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
+from streaming_etl_pipeline_spark.sources.io import (
     TOMBSTONE_DIR,
     _apply_tombstones,
     epoch_value,
@@ -51,9 +53,7 @@ from streaming_etl_pipeline_spark.sources.io import (  # noqa: F401
     hadoop_fs,
     load_tombstones,
     path_exists,
-    read_parquet_if_exists,
     repair_store,
-    replace_dir,
     write_epoch,
     write_partitioned,
 )
@@ -86,26 +86,6 @@ def read_json_stream(
     return raw.select(
         F.col("value").alias("raw_value"),
         F.current_timestamp().alias("source_timestamp"),
-    )
-
-
-def read_jsonl_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Typed JSONL corpus stream: file-source Structured Streaming with a
-    DECLARED schema (streaming schema inference is off session-wide —
-    ``session.RUNTIME_CONF``). The batch twin is ``sources.io.read_jsonl``;
-    use this flavor to ingest document drops (crawl shards, vendor
-    deliveries) incrementally with checkpointed exactly-once file
-    tracking instead of re-scanning the landing prefix each run."""
-    return (
-        spark.readStream.format("json")
-        .schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
-        .load(path)
     )
 
 
@@ -254,596 +234,9 @@ def _start(writer, checkpoint: str, trigger: dict | None) -> StreamingQuery:
     return writer.start()
 
 
-def _start_epoch_sink(
-    stream: DataFrame,
-    checkpoint: str,
-    trigger: dict | None,
-    batch_fn,
-    *args,
-    **kwargs,
-) -> StreamingQuery:
-    """Start a ``foreachBatch`` sink whose micro-batches run
-    ``batch_fn(batch_df, batch_id, *args, run_token=<token>, **kwargs)``
-    with the checkpoint-lifetime token of :func:`_ingest_run_token`."""
-    token = _ingest_run_token(stream.sparkSession, checkpoint)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_fn(batch_df, batch_id, *args, run_token=token, **kwargs)
-
-    return _start(stream.writeStream.foreachBatch(process), checkpoint, trigger)
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: str | list[str],
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static dimension enrichment join.
-
-    The static side is broadcast-hinted: every micro-batch joins against
-    an executor-local copy, so the stream side never shuffles — the join
-    adds zero stateful operators and no watermark requirement. The static
-    DataFrame is re-resolved per micro-batch, so a dimension table backed
-    by a path picks up slowly-changing updates between batches. (The
-    reference loads dimensions only in its warehouse layer,
-    ``redshift_loader.py:136-189``; this brings the same star-schema
-    lookup to the stream.)
-    """
-    return stream.join(F.broadcast(dim), on=on, how=how)
-
-
-def start_dedup_ingest_sink(
-    docs: DataFrame,
-    path: str,
-    checkpoint: str,
-    store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    trigger: dict | None = None,
-    cluster_store: str | None = None,
-) -> StreamingQuery:
-    """Streaming near-dedup ingest: every micro-batch of documents is
-    probed against the persisted MinHash signature store
-    (``operators/dedup.incremental_near_dups``) and only NOVEL documents
-    are appended to ``path``; the batch's signatures join the store for
-    the next trigger. Per-trigger cost scales with the batch (signatures
-    + LSH band join against the store's bands), never with the corpus —
-    the 100 TB training-ingest dedup loop as one continuous job instead
-    of nightly batch sweeps.
-
-    foreachBatch is at-least-once, so a batch can replay after a crash;
-    both writes are made idempotent by partitioning on the epoch id and
-    replacing only that partition (dynamic partition overwrite) — a
-    replayed batch rewrites its own ``ingest_batch_id={N}`` partition
-    instead of appending a second copy. The replay is also
-    *deterministic*: the store probe excludes the batch's own partition,
-    so signatures a half-finished first attempt already persisted can't
-    change which documents count as novel the second time. The CLI
-    ``dedup`` command writes the same store layout through the same
-    probe (``operators/dedup._probe_signature_store``), so both can feed
-    one store. Downstream readers of ``path`` see one extra
-    ``ingest_batch_id`` partition column (drop it if unwanted).
-
-    Batch-internal near-dups are resolved keep-min within the trigger;
-    cross-batch dups are whatever matches the store. All of the batch's
-    signatures (kept and dropped) join the store, so later re-sends of a
-    dropped document still match.
-
-    Partitions are namespaced by a token tied to the CHECKPOINT's
-    lifetime (``<token>-<epoch>``), not the bare epoch id: if the
-    checkpoint is deleted or relocated while ``path``/``store_path`` are
-    kept (a common ops reset), epoch ids restart at 0 — with bare ids
-    each new batch would silently replace previously ingested
-    partitions, while the fresh token makes the new run append beside
-    the old data instead.
-
-    ``cluster_store=`` (r9) additionally maintains the incremental
-    cluster-label store: the trigger's near-dup pairs (within-batch +
-    vs-store) append via :func:`cluster_pairs_batch`, so
-    :func:`cluster_labels_from_store` serves the current component
-    labels without re-running star contraction over history."""
-    return _start_epoch_sink(
-        docs, checkpoint, trigger, dedup_ingest_batch, path, store_path,
-        id_col=id_col, text_col=text_col, threshold=threshold,
-        cluster_store=cluster_store,
-    )
-
-
-def _ingest_run_token(spark, checkpoint: str) -> str:
-    """Token tied to the LIFETIME of a checkpoint directory: read the
-    ``INGEST_RUN_TOKEN-<hex>`` marker file if one exists, else mint one.
-    Deleting the checkpoint (which resets streaming epoch ids to 0)
-    also deletes the marker, so the next run gets a fresh token and its
-    ``<token>-<epoch>`` partitions can never collide with — or silently
-    overwrite — a previous run's. Uses the Hadoop FileSystem API so the
-    checkpoint may live on any supported scheme (local/HDFS/S3)."""
-    import uuid
-
-    fs, root = hadoop_fs(spark, checkpoint)
-    prefix = "INGEST_RUN_TOKEN-"
-    if fs.exists(root):
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if name.startswith(prefix):
-                return name[len(prefix):]
-    else:
-        fs.mkdirs(root)
-    token = uuid.uuid4().hex[:12]
-    fs.create(
-        spark._jvm.org.apache.hadoop.fs.Path(root, prefix + token), False
-    ).close()
-    return token
-
-
-def dedup_ingest_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    path: str,
-    store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.6,
-    run_token: str | None = None,
-    cluster_store: str | None = None,
-) -> None:
-    """One idempotent micro-batch of :func:`start_dedup_ingest_sink`
-    (module-level so a crash-replay — same ``batch_id`` twice — can be
-    exercised deterministically in tests). See the sink docstring for
-    the replay contract. ``run_token`` namespaces the partition value
-    (``<token>-<epoch>``) so a checkpoint reset cannot replay over a
-    previous run's partitions; ``None`` keeps the bare epoch id."""
-    from streaming_etl_pipeline_spark.operators.dedup import (
-        _probe_signature_store,
-        build_signatures,
-        near_dup_pairs_from_signatures,
-    )
-
-    if batch_df.isEmpty():
-        return
-    part_val = epoch_value(batch_id, run_token)
-    batch_df = batch_df.localCheckpoint(eager=True)
-    sigs = build_signatures(
-        batch_df, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
-    # the probe skips this epoch's own partition: on a replay the store
-    # may already hold this batch's signatures from a partial first
-    # attempt, and probing them would flip the keep-min choice (both
-    # ids of a within-batch pair "in the store" → both dropped);
-    # tombstoned (taken-down) docs stop suppressing near-dups of their
-    # content the moment they are deleted
-    cross = _probe_signature_store(
-        batch_df.sparkSession, sigs, store_path, part_val,
-        id_col=id_col, threshold=threshold,
-    )
-    # within-trigger near-dups: greedy keep-min of each pair
-    self_pairs = near_dup_pairs_from_signatures(
-        sigs, id_col=id_col, threshold=threshold
-    )
-    drops = self_pairs.select(
-        F.greatest("id_a", "id_b").alias(id_col)
-    )
-    all_pairs = self_pairs.select("id_a", "id_b")
-    if cross is not None:
-        # the batch-side id may land on either column; store-side ids
-        # simply won't match the anti-join below
-        drops = drops.unionByName(
-            cross.select(F.col("id_a").alias(id_col))
-        ).unionByName(cross.select(F.col("id_b").alias(id_col)))
-        all_pairs = all_pairs.unionByName(cross.select("id_a", "id_b"))
-    if cluster_store is not None:
-        cluster_pairs_batch(
-            all_pairs.select("id_a", "id_b"),
-            batch_id,
-            cluster_store,
-            run_token=run_token,
-        )
-    novel = batch_df.join(
-        drops.distinct().localCheckpoint(eager=True), id_col, "left_anti"
-    )
-    write_epoch(novel, path, part_val)
-
-
 # ---------------------------------------------------------------------------
-# Incremental cluster-label store (r9): streaming maintenance of the
-# connected-component labels that dedup_clusters / cluster_keep_best
-# batch-recompute — without rerunning star contraction over history
+# Incremental stores: per-batch writers, deletes, compaction and health
 # ---------------------------------------------------------------------------
-
-
-def cluster_pairs_batch(
-    pairs: DataFrame,
-    batch_id: int,
-    store_path: str,
-    run_token: str | None = None,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> None:
-    """Append ONE trigger's near-dup pairs to the incremental
-    cluster-label store. Layout (both token-namespaced, idempotent
-    under replay like every ingest store):
-
-    - ``members/``  — ``(node, comp)``: every endpoint registers with
-      ``comp = node``; after a compaction, rows carry the RESOLVED
-      component min. Duplicate registrations are harmless by
-      construction — resolution takes ``min(comp)`` per node, and a
-      fresh ``(x, x)`` row can never beat a resolved comp (component
-      mins only decrease).
-    - ``merge_pairs/`` — the raw ``(ca, cb)`` pair endpoints.
-
-    Both writes are TRIGGER-sized. The expensive part — star
-    contraction — moves to :func:`cluster_labels_from_store`, where it
-    runs over the QUOTIENT graph: pairs since the last compaction,
-    mapped through the resolved members table. Components of a quotient
-    graph equal components of the original (with min-labels composing
-    to the global min), so the result is bit-identical to a full batch
-    ``connected_components_star`` over the entire pair history — pinned
-    in ``tests/test_streaming.py``."""
-    if pairs.isEmpty():
-        return
-    part_val = epoch_value(batch_id, run_token)
-    p = (
-        pairs.select(F.col(src).alias("ca"), F.col(dst).alias("cb"))
-        .filter(F.col("ca") != F.col("cb"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    members = (
-        p.select(F.col("ca").alias("node"))
-        .unionByName(p.select(F.col("cb").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("comp"))
-    )
-    write_epoch(members, os.path.join(store_path, "members"), part_val)
-    write_epoch(p, os.path.join(store_path, "merge_pairs"), part_val)
-
-
-#: Sidecar of post-split label overrides: ``min(comp)`` resolution can
-#: only DECREASE a node's label, so a component split (labels must
-#: INCREASE for the side losing the min node) lives outside members
-#: until a compaction folds it in — same design as the tombstones.
-SPLIT_DIR = "_splits"
-
-
-def _load_split_overrides(
-    spark: SparkSession, store_path: str
-) -> "DataFrame | None":
-    """Latest-generation ``(node, comp)`` override per node from the
-    ``_splits/`` sidecar, or None when no split happened since the last
-    compaction."""
-    raw = read_parquet_if_exists(spark, os.path.join(store_path, SPLIT_DIR))
-    if raw is None:
-        return None
-    return raw.groupBy("node").agg(
-        F.max_by("comp", "gen").alias("_split_comp")
-    )
-
-
-def _apply_split_overrides(
-    spark: SparkSession, store_path: str, m: DataFrame
-) -> DataFrame:
-    ov = _load_split_overrides(spark, store_path)
-    if ov is None:
-        return m
-    return m.join(F.broadcast(ov), "node", "left").select(
-        "node",
-        F.coalesce(F.col("_split_comp"), F.col("comp")).alias("comp"),
-    )
-
-
-def cluster_labels_from_store(
-    spark: SparkSession, store_path: str
-) -> DataFrame:
-    """Resolve the current ``(node, comp)`` labels from a
-    :func:`cluster_pairs_batch` store: one ``min(comp)`` aggregation
-    over members (overridden by any post-split labels — see
-    :func:`split_component`), then star contraction over ONLY the
-    unfolded pairs (mapped to member comps — the quotient graph, which
-    a compaction keeps bounded by pairs-since-compaction, not history).
-    Tombstoned nodes (``delete_ids`` on the store root with id col
-    ``node``) drop from the labeling; their historical pairs still
-    bridge the components they merged until :func:`split_component`
-    recomputes the affected component over its surviving pairs
-    (component-scoped, r10 — the batch-recompute caveat this docstring
-    used to carry is now the scoped operation)."""
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
-    m = _apply_split_overrides(
-        spark,
-        store_path,
-        spark.read.parquet(os.path.join(store_path, "members"))
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp")),
-    )
-    mp = read_parquet_if_exists(spark, os.path.join(store_path, "merge_pairs"))
-    if mp is not None:
-        e = (
-            mp.join(
-                m.select(
-                    F.col("node").alias("ca"), F.col("comp").alias("ca_c")
-                ),
-                "ca",
-            )
-            .join(
-                m.select(
-                    F.col("node").alias("cb"), F.col("comp").alias("cb_c")
-                ),
-                "cb",
-            )
-            .filter(F.col("ca_c") != F.col("cb_c"))
-            .select("ca_c", "cb_c")
-        )
-        cc = connected_components_star(e, src="ca_c", dst="cb_c")
-        m = (
-            m.join(
-                cc.select(
-                    F.col("node").alias("comp"), F.col("comp").alias("_root")
-                ),
-                "comp",
-                "left",
-            )
-            .select(
-                "node", F.coalesce(F.col("_root"), F.col("comp")).alias("comp")
-            )
-        )
-    return _apply_tombstones(spark, store_path, m)
-
-
-def compact_cluster_store(
-    spark: SparkSession, store_path: str, pair_history: bool = False
-) -> dict:
-    """Fold the cluster store: materialize the resolved labels (with
-    tombstones dropped physically and split overrides folded in) as a
-    single compacted ``members`` partition, then clear ``merge_pairs``
-    and the tombstone/split sidecars. After compaction, the next
-    resolution's star contraction sees ONLY pairs appended since — the
-    property that keeps per-trigger cost ∝ trigger pairs on a
-    long-running stream. Crash-safe by idempotence: the members fold is
-    ``sources.io.fold_epochs``, as in :func:`compact_ingest_store`, and
-    leftover merge_pairs/tombstones from a crash after the swap are
-    no-ops on re-read (already-folded pairs map both endpoints to the
-    same comp and drop; already-dropped nodes anti-join against
-    nothing).
-
-    ``pair_history=True`` (r10, judge r9 task #4) additionally folds the
-    raw pair history into ``pair_history/`` PARTITIONED BY the resolved
-    component id instead of discarding it: pairs whose endpoints no
-    longer survive (tombstoned) are dropped, stale partitions from
-    earlier compactions are re-homed under the current component, and
-    :func:`split_component` can later re-run connected components over
-    ONE component's partition(s) — the GDPR-grade takedown split without
-    a full-history recompute. History maintenance is a compaction-time
-    cost proportional to the retained pair history (per-trigger cost is
-    untouched); once a store has a ``pair_history/`` dir, later
-    compactions keep maintaining it regardless of the flag."""
-    labels = cluster_labels_from_store(spark, store_path).persist()
-    n = labels.count()
-    hist_path = os.path.join(store_path, "pair_history")
-    frames = _pair_frames(spark, store_path)
-    have_hist = "pair_history" in frames
-    if (pair_history or have_hist) and frames:
-        # inner joins against the SURVIVING labels drop tombstoned
-        # endpoints' pairs; both endpoints resolve to the same comp,
-        # which becomes the partition key split_component prunes on
-        folded = (
-            reduce(DataFrame.unionByName, frames.values())
-            .join(
-                labels.select(
-                    F.col("node").alias("ca"), F.col("comp").alias("comp")
-                ),
-                "ca",
-            )
-            .join(labels.select(F.col("node").alias("cb")), "cb", "semi")
-            .select("ca", "cb", "comp")
-            .distinct()
-        )
-        replace_dir(spark, hist_path, folded.write.partitionBy("comp"))
-    parts, _ = fold_epochs(
-        spark, os.path.join(store_path, "members"), labels
-    )
-    for sub in ("merge_pairs", TOMBSTONE_DIR, SPLIT_DIR):
-        fs, jp = hadoop_fs(spark, os.path.join(store_path, sub))
-        if fs.exists(jp):
-            fs.delete(jp, True)
-    labels.unpersist()
-    return {"partitions_before": len(parts), "rows": int(n)}
-
-
-def _pair_frames(
-    spark: SparkSession, store_path: str, hist_filter=None
-) -> dict[str, DataFrame]:
-    """The cluster store's ``(ca, cb)`` pair sources that exist: the
-    folded ``pair_history`` (optionally filtered) and the live
-    ``merge_pairs``, keyed by directory name."""
-    frames = {}
-    for sub, cond in (("pair_history", hist_filter), ("merge_pairs", None)):
-        df = read_parquet_if_exists(spark, os.path.join(store_path, sub))
-        if df is not None:
-            frames[sub] = (df if cond is None else df.where(cond)).select(
-                "ca", "cb"
-            )
-    return frames
-
-
-def split_component(
-    spark: SparkSession, store_path: str, node
-) -> dict:
-    """Component-scoped re-labeling after a takedown (r10, judge r9
-    task #4): deleting a bridge node removes the node from the labels,
-    but its historical pairs still merge the components it connected —
-    this recomputes connected components over ONE component's SURVIVING
-    pairs and publishes the (possibly split) labels, without touching
-    the rest of the store or scanning any other component's history.
-
-    Scope discipline: the pair scan reads exactly the target
-    component's ``pair_history/comp=…`` partitions (partition-pruned —
-    the keys are the distinct pre-quotient member comps of the
-    component's nodes, i.e. the partition keys the last compaction
-    wrote) plus the live ``merge_pairs``, both semi-joined to the
-    component's member set. New labels land in the ``_splits/`` sidecar
-    (``min(comp)`` resolution can only decrease a label; a split must
-    raise the losing side's, so overrides live outside members until
-    the next compaction folds them — exactly the tombstone pattern, and
-    replays/re-merges compose: a later pair reconnecting the halves
-    merges them again through the quotient contraction).
-
-    Requires a store compacted with ``pair_history=True`` at least once
-    if any pre-compaction pairs matter; raises when the node is unknown
-    (tombstoned nodes have no component — split by a surviving member).
-    Returns ``{"labels", "n_components", "history_partitions",
-    "n_pairs"}`` — labels is the component's new (node, comp) frame."""
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-
-    labels_all = cluster_labels_from_store(spark, store_path)
-    row = labels_all.filter(F.col("node") == F.lit(node)).first()
-    if row is None:
-        raise ValueError(
-            f"split_component: node {node!r} has no label in the store "
-            "(tombstoned or never ingested) — pass a surviving member "
-            "of the component to split"
-        )
-    comp = row["comp"]
-    members_c = (
-        labels_all.filter(F.col("comp") == F.lit(comp))
-        .select("node")
-        .localCheckpoint(eager=True)  # component-sized
-    )
-    # the history partition keys this component's pairs live under: the
-    # PRE-quotient member comps (what the last compaction resolved and
-    # partitioned by), restricted to this component's nodes. The keys
-    # MUST come from the raw members min-agg WITHOUT _splits overrides
-    # (judge r10 advice, high): pair_history/ partitions are keyed by
-    # compaction-time comps, and overrides always post-date the last
-    # compaction (which clears _splits) — a second split inside a
-    # previously-split half would otherwise derive only the override-
-    # raised comp, miss the half's surviving pairs stored under the old
-    # key, and publish over-split labels. The override-applied comps are
-    # ALSO included defensively (cheap — both are bounded by components
-    # merged since the last compaction) so a key is never missed even if
-    # the partitioning convention ever shifts to post-override comps.
-    raw_min = (
-        spark.read.parquet(os.path.join(store_path, "members"))
-        .groupBy("node")
-        .agg(F.min("comp").alias("comp"))
-    )
-    base = _apply_split_overrides(spark, store_path, raw_min)
-    keys = sorted(
-        {
-            r["comp"]
-            for frame in (raw_min, base)
-            for r in frame.join(F.broadcast(members_c), "node", "semi")
-            .select("comp")
-            .distinct()
-            .collect()
-        }
-    )  # bounded: ≤ components merged since the last compaction
-    pair_frames = _pair_frames(spark, store_path, F.col("comp").isin(keys))
-    new_labels = members_c.select(
-        "node", F.col("node").alias("comp")
-    )
-    n_pairs = 0
-    if pair_frames:
-        allp = reduce(DataFrame.unionByName, pair_frames.values())
-        # surviving pairs of THIS component only: both endpoints must be
-        # current members (drops tombstoned endpoints' pairs and any
-        # other component's live merge_pairs rows)
-        surv = (
-            allp.join(
-                F.broadcast(members_c.select(F.col("node").alias("ca"))),
-                "ca",
-                "semi",
-            )
-            .join(
-                F.broadcast(members_c.select(F.col("node").alias("cb"))),
-                "cb",
-                "semi",
-            )
-            .filter(F.col("ca") != F.col("cb"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_pairs = surv.count()
-        if n_pairs:
-            cc = connected_components_star(surv, src="ca", dst="cb")
-            new_labels = (
-                members_c.join(
-                    cc.select("node", F.col("comp").alias("_cc")),
-                    "node",
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.coalesce(F.col("_cc"), F.col("node")).alias("comp"),
-                )
-            )
-    new_labels = new_labels.localCheckpoint(eager=True)
-    # next generation wins on re-split of an overlapping component
-    splits = read_parquet_if_exists(spark, os.path.join(store_path, SPLIT_DIR))
-    gen = 1 if splits is None else (splits.agg(F.max("gen")).first()[0] or 0) + 1
-    (
-        new_labels.withColumn("gen", F.lit(int(gen)))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(store_path, SPLIT_DIR))
-    )
-    n_components = new_labels.select("comp").distinct().count()
-    return {
-        "labels": new_labels,
-        "n_components": int(n_components),
-        "history_partitions": sorted(keys),
-        "n_pairs": int(n_pairs),
-    }
-
-
-def start_ann_index_sink(
-    vectors: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    codebooks: "list[list[list[float]]] | None" = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = True,
-    partition_by_cell: bool = False,
-    carry: "tuple[str, ...]" = (),
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Incremental IVF-PQ index maintenance: every micro-batch of new
-    embeddings is coarse-assigned against the TRAINED centroids and
-    PQ-encoded against the TRAINED codebooks, and the resulting
-    ``(id, centroid_id, codes)`` rows append to the stored index that
-    ``similarity.ivf_pq_topk(corpus_index=...)`` consumes — the
-    embedding-side mirror of :func:`start_dedup_ingest_sink`, so a
-    100 TB deployment keeps its ANN index fresh from the ingest stream
-    instead of re-encoding the corpus in nightly batches. Quantizer
-    drift is the retrain trigger, not this sink's job: encode is a pure
-    per-row map of frozen model state (assign + encode, 0 shuffles,
-    Arrow GEMM per batch), so per-trigger cost scales with the batch,
-    never the corpus.
-
-    Idempotence: foreachBatch is at-least-once; partitions are
-    namespaced ``<checkpoint-token>-<epoch>`` with dynamic partition
-    overwrite (the :func:`_ingest_run_token` contract), so a replayed
-    epoch rewrites its own partition byte-for-byte (encode is
-    deterministic) and a checkpoint reset appends beside prior runs
-    instead of clobbering them. Read the index back with
-    :func:`load_ann_index`.
-
-    ``carry``: metadata columns stored IN the index rows alongside the
-    codes — the shape ``similarity.ivf_pq_topk(filter_col=)`` consumes
-    for metadata-filtered search on the compressed index without a
-    query-time attribute join.
-    """
-    return _start_epoch_sink(
-        vectors, checkpoint, trigger, ann_index_batch, index_path, centroids,
-        codebooks=codebooks, id_col=id_col, vec_col=vec_col,
-        use_arrow=use_arrow, partition_by_cell=partition_by_cell, carry=carry,
-    )
 
 
 def ann_index_batch(
@@ -859,10 +252,14 @@ def ann_index_batch(
     partition_by_cell: bool = False,
     carry: "tuple[str, ...]" = (),
 ) -> None:
-    """One idempotent micro-batch of :func:`start_ann_index_sink`
-    (module-level so crash-replay and checkpoint-reset behavior can be
-    exercised deterministically in tests). Assign + encode are pure
-    functions of the batch and the frozen quantizer state, so a replay
+    """Append one batch of embeddings to a stored IVF-PQ index: each
+    vector is coarse-assigned against the TRAINED ``centroids`` and
+    PQ-encoded against the TRAINED ``codebooks``, and the
+    ``(id, centroid_id, codes)`` rows replace the batch's
+    ``<run_token>-<batch_id>`` partition, the ``corpus_index=`` shape
+    ``similarity.ivf_pq_topk`` consumes (read it back with
+    :func:`load_ann_index`). Assign + encode are pure functions of the
+    batch and the frozen quantizer state, so re-running a batch
     rewrites identical rows into its own partition. ``carry`` columns
     ride along into the stored rows (filter attributes — the Arrow
     path joins them back by id, still batch-local)."""
@@ -877,8 +274,8 @@ def ann_index_batch(
     # centroid_id as an OPT-IN second partition level: probe-heavy
     # deployments get static cell pruning (ivf_pq_topk's
     # prune_stored_cells reads only nprobe cells' directories), at the
-    # cost of ~3x slower triggers (tasks x cells small files — measured
-    # 8 s -> 23 s per 1M-vector trigger at 256 cells). Write-heavy
+    # cost of ~3x slower writes (tasks x cells small files — measured
+    # 8 s -> 23 s per 1M-vector batch at 256 cells). Write-heavy
     # deployments keep the flat layout and re-shape at compaction time
     # (compact_ingest_store folds the small files either way).
     write_epoch(
@@ -926,7 +323,7 @@ def _encode_index(
 
 
 def load_ann_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """Read the streaming-maintained IVF-PQ index back in the
+    """Read an :func:`ann_index_batch` IVF-PQ index back in the
     ``(vec_id, centroid_id, codes)`` shape ``ivf_pq_topk`` expects as
     ``corpus_index=`` (the partition column is bookkeeping, dropped).
     Tombstoned ids (:func:`delete_ids`) are excluded — one broadcast
@@ -987,7 +384,7 @@ def bm25_delete_ids(
     id_col: str = "doc_id",
 ) -> dict:
     """Delete documents from a stored BM25 index
-    (:func:`start_bm25_index_sink` / the CLI ``build-bm25-index``):
+    (:func:`bm25_postings_batch` / the CLI ``build-bm25-index``):
     tombstones the posting rows AND appends a NEGATIVE stats partition
     (−n_docs, −sum_len for the deleted docs), so the summed corpus
     statistics — idf's N and avg_len — net out at query time without
@@ -1030,9 +427,10 @@ def compact_ingest_store(
     label: str | None = None,
 ) -> dict:
     """Offline small-file compaction for the token-namespaced ingest
-    stores (dedup signature store, ANN index, BM25 postings/stats):
-    every trigger appends one ``ingest_batch_id=<token>-<epoch>``
-    partition, so a long-running stream accumulates thousands of tiny
+    stores (dedup signature store, ANN index, BM25 postings/stats,
+    n-gram counts): every batch appends one
+    ``ingest_batch_id=<token>-<epoch>`` partition, so a store fed in
+    many small batches accumulates thousands of tiny
     partitions/files — the classic small-file problem that slows every
     downstream listing and scan. This folds ALL partitions into one
     (``compacted-<digest>``, digest of the folded partition values;
@@ -1041,9 +439,9 @@ def compact_ingest_store(
     any secondary partition columns (the BM25 postings keep their
     ``term_bucket`` pruning layout).
 
-    Contract: run with the stream STOPPED and its checkpoint retired —
-    a later replay of a compacted epoch would re-append that epoch's
-    partition beside the compacted rows (the idempotence key is gone).
+    Contract: run with no writer active, and do not re-run a batch
+    that was folded — it would re-append its partition beside the
+    compacted rows (the idempotence key is gone).
     The rewritten store is swapped in by ``sources.io.fold_epochs`` (a
     ``replace_dir`` swap); a crash at any point leaves a state
     :func:`repair_store` (called first, here and standalone) rolls
@@ -1076,7 +474,7 @@ def store_health(
 ) -> dict:
     """Health snapshot of a token-namespaced ingest store for the
     metrics exporter (``quality.exporter.record_store_health``):
-    trigger-partition count (the small-file/compaction signal), data
+    batch-partition count (the small-file/compaction signal), data
     file count, live row count (parquet footer metadata — no data
     scan), and pending tombstones. Costs one directory listing plus a
     metadata-only count; safe to run per scrape interval."""
@@ -1122,7 +520,7 @@ def reencode_index(
     carry: "tuple[str, ...]" = (),
     label: str = "reencoded",
 ) -> dict:
-    """Migrate a streaming-maintained ANN index onto RETRAINED quantizer
+    """Migrate an :func:`ann_index_batch` index onto RETRAINED quantizer
     state: the stored index's ids are joined back to their fresh
     vectors, assigned + PQ-encoded against the NEW centroids/codebooks
     (the same pure 0-shuffle map as :func:`ann_index_batch` — one
@@ -1133,11 +531,12 @@ def reencode_index(
     This is the *react* half of the drift loop —
     :func:`similarity.ivf_occupancy_drift` detects,
     :func:`similarity.retrain_quantizer` produces the new state, this
-    migrates the store. Contract: run with the sink STOPPED, then
-    restart it with the new ``centroids=``/``codebooks=`` (encode state
-    is frozen per sink run) and a FRESH checkpoint — the migrated store
-    folds all epochs into one ``<label>`` partition, so the old
-    run's idempotence keys are gone and a replay would re-append.
+    migrates the store. Contract: run with no writer active, then pass
+    the new ``centroids=``/``codebooks=`` to later
+    :func:`ann_index_batch` calls under a FRESH ``run_token`` — the
+    migrated store folds all epochs into one ``<label>`` partition, so
+    the old run's idempotence keys are gone and a re-run would
+    re-append.
 
     ``vectors`` must carry the current embedding for every live id
     (PQ codes are lossy — re-encoding a reconstruction would compound
@@ -1198,9 +597,9 @@ def maybe_retrain_ann_index(
     two per-cell counts (the stored index is read as assignments — no
     vector math on the corpus). Returns ``{"psi", "fired", "centroids",
     "codebooks", "reencode"}`` — ``centroids``/``codebooks`` are the
-    NEW state when fired (restart the sink with them) else the inputs
-    unchanged. Call with the sink stopped; see :func:`reencode_index`
-    for the restart contract."""
+    NEW state when fired (encode later batches with them) else the
+    inputs unchanged. Call with no writer active; see
+    :func:`reencode_index` for the contract."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
 
     n_cells = int(
@@ -1254,40 +653,6 @@ def maybe_retrain_ann_index(
     return out
 
 
-def start_bm25_index_sink(
-    docs: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    buckets: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger: dict | None = None,
-) -> StreamingQuery:
-    """Incremental full-vocabulary BM25 posting maintenance: every
-    micro-batch of documents tokenizes, aggregates its own (doc, term)
-    postings, and appends them — partitioned by ``term_bucket`` for
-    query-time pruning AND by the ``<checkpoint-token>-<epoch>``
-    idempotence key — plus a per-batch (n_docs, sum_len) stats row.
-    ``retrieval.bm25_topk_from_store`` consumes the result directly
-    (it sums the stats partitions and computes df from the pruned
-    posting read, so corpus-level statistics stay consistent as batches
-    append — unlike the ANN sink's frozen centroids/codebooks, BM25's
-    idf/avg_len are CORPUS state and must accumulate).
-
-    Per-trigger cost ∝ batch postings (one batch-local aggregation, no
-    store read at all); replays rewrite their own partitions
-    byte-for-byte. Precondition: doc ids unique across batches — a
-    re-sent doc id would double-count in df/tf. Route the stream through
-    the dedup ingest first when the source replays content. The CLI
-    ``build-bm25-index`` writes its index as one
-    :func:`bm25_postings_batch` epoch, so a sink can keep appending to
-    a CLI-built index."""
-    return _start_epoch_sink(
-        docs, checkpoint, trigger, bm25_postings_batch, index_path,
-        buckets=buckets, id_col=id_col, text_col=text_col,
-    )
-
-
 def bm25_postings_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1297,11 +662,16 @@ def bm25_postings_batch(
     text_col: str = "text",
     run_token: str | None = None,
 ) -> None:
-    """One idempotent micro-batch of :func:`start_bm25_index_sink`
-    (module-level for deterministic replay tests). Postings partition
-    by (ingest_batch_id, term_bucket) — dynamic overwrite of the
-    epoch's partitions replaces BOTH levels under that epoch, so a
-    replay cannot leave orphan buckets behind."""
+    """Append one batch of documents to a stored BM25 index: the
+    batch's (doc, term) postings, partitioned by ``term_bucket`` for
+    query-time pruning, plus one (n_docs, sum_len) stats row, both under
+    the ``<run_token>-<batch_id>`` partition.
+    ``retrieval.bm25_topk_from_store`` sums the stats partitions and
+    computes df from the pruned posting read, so corpus statistics stay
+    consistent as batches append. Replacing the batch's partition
+    replaces BOTH levels under it, so a re-run cannot leave orphan
+    buckets behind. Precondition: doc ids unique across batches — a
+    re-sent doc id would double-count in df/tf."""
     from streaming_etl_pipeline_spark.functions.core import tokenize
     from streaming_etl_pipeline_spark.operators import retrieval as RT
     from streaming_etl_pipeline_spark.operators.text import norm_text
@@ -1334,41 +704,6 @@ def bm25_postings_batch(
     write_epoch(stats, os.path.join(index_path, "stats"), part_val)
 
 
-def start_ngram_count_sink(
-    docs: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger: dict | None = None,
-    order: int = 3,
-) -> StreamingQuery:
-    """Incremental n-gram-count maintenance for the Kneser-Ney LM
-    (``operators/ngram_lm.py``): every micro-batch aggregates its own
-    padded n-gram TYPE counts and appends them under the
-    ``<checkpoint-token>-<epoch>`` idempotence key — the same
-    token-namespaced layout as the dedup/ANN/BM25 ingest stores, so
-    ``compact_ingest_store`` and ``repair_store`` apply unchanged.
-    ``order=3`` keeps the original trigram layout ``(u, v, w, c3)``
-    byte-frozen; other orders store ``(w1..wN, c)`` and feed the
-    pruned order-n model via ``kn_lm_fit_from_store(order=N)``. A
-    store holds ONE order — mixing orders raises at refit.
-
-    N-gram counts are ADDITIVE corpus state (like BM25's idf/avg_len,
-    unlike the ANN sink's frozen quantizer): summing the stored
-    partitions reproduces the exact type counts of the union corpus,
-    so ``kn_lm_fit_from_store`` yields the bit-identical model a batch
-    refit over all documents would — the LM stays fresh under a 100 TB
-    ingest without ever rescanning old text. Per-trigger cost ∝ batch
-    tokens; replays rewrite their own partition byte-for-byte.
-    Precondition (as for the BM25 sink): doc ids unique across batches
-    — route replayed sources through the dedup ingest first."""
-    return _start_epoch_sink(
-        docs, checkpoint, trigger, ngram_counts_batch, store_path,
-        id_col=id_col, text_col=text_col, order=order,
-    )
-
-
 def _ngram_type_counts(
     docs: DataFrame, id_col: str, text_col: str, order: int
 ) -> DataFrame:
@@ -1399,9 +734,14 @@ def ngram_counts_batch(
     run_token: str | None = None,
     order: int = 3,
 ) -> None:
-    """One idempotent micro-batch of :func:`start_ngram_count_sink`
-    (module-level for deterministic replay tests): batch-local n-gram
-    type counts, dynamic-overwritten under the epoch's partition."""
+    """Append one batch of documents to an n-gram count store for the
+    Kneser-Ney LM (``operators/ngram_lm.py``): the batch's padded n-gram
+    TYPE counts replace its ``<run_token>-<batch_id>`` partition, so a
+    re-run rewrites instead of double-counting. ``order=3`` keeps the
+    trigram layout ``(u, v, w, c3)``; other orders store
+    ``(w1..wN, c)``. A store holds ONE order — mixing orders raises in
+    :func:`kn_lm_fit_from_store`. Precondition: doc ids unique across
+    batches."""
     if batch_df.isEmpty():
         return
     batch_df = batch_df.localCheckpoint(eager=True)
@@ -1412,39 +752,6 @@ def ngram_counts_batch(
     )
 
 
-def ngram_delete_docs(
-    store_path: str,
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    order: int = 3,
-) -> None:
-    """Takedown for the n-gram count store: append the documents'
-    trigram counts NEGATED under a content-addressed ``delete-``
-    partition, so the sums net out exactly — the same negative-stats
-    netting as the BM25 delete path. Requires the documents' original
-    text (counts are aggregate state; there is no per-doc row to
-    tombstone). Idempotence: the partition label is the md5 of the
-    sorted id set, so re-running the same takedown overwrites its own
-    partition instead of double-subtracting. ``kn_lm_fit_from_store``
-    drops netted-to-zero types; a type pushed negative (deleting text
-    that was never ingested) raises there rather than silently
-    corrupting the model."""
-    import hashlib
-
-    ids = sorted(
-        str(r[0]) for r in docs.select(id_col).distinct().collect()
-    )  # takedown lists are bounded (id-list-sized), not corpus-sized
-    if not ids:
-        return
-    digest = hashlib.md5(",".join(ids).encode()).hexdigest()[:16]
-    cnt_col = "c3" if order == 3 else "c"
-    neg = _ngram_type_counts(docs, id_col, text_col, order).withColumn(
-        cnt_col, -F.col(cnt_col)
-    )
-    write_epoch(neg, os.path.join(store_path, "counts"), f"delete-{digest}")
-
-
 def kn_lm_fit_from_store(
     spark: SparkSession,
     store_path: str,
@@ -1452,13 +759,13 @@ def kn_lm_fit_from_store(
     order: int = 3,
     min_count=1,
 ):
-    """Rebuild the KN model from a :func:`start_ngram_count_sink`
-    store: sum the per-epoch (and negative ``delete-``) partitions to
-    exact type counts, then derive probabilities with the same code as
-    the batch fit — bit-identical to refitting over the union corpus
-    because counts are additive. One store scan (the aggregated type
-    frame is persisted before the negatives check, so the check and
-    the model derivation share it), everything after at type grain.
+    """Rebuild the KN model from a :func:`ngram_counts_batch` store:
+    sum the per-epoch partitions to exact type counts, then derive
+    probabilities with the same code as the batch fit — bit-identical
+    to refitting over the union corpus because counts are additive.
+    One store scan (the aggregated type frame is persisted before the
+    negatives check, so the check and the model derivation share it),
+    everything after at type grain.
     ``order=3`` returns the trigram :class:`~..operators.ngram_lm
     .KNModel`; other orders return the pruned order-n
     :class:`~..operators.ngram_lm.KNModelN` (``min_count=`` forwards
@@ -1507,8 +814,8 @@ def kn_lm_fit_from_store(
     bad = tt.filter(F.col(cnt_col) < 0).limit(3).collect()
     if bad:
         raise ValueError(
-            "n-gram store has types with negative net counts (a delete "
-            f"was applied for text never ingested), e.g. {bad}"
+            "n-gram store has types with negative net counts (a partition "
+            f"not written by ngram_counts_batch), e.g. {bad}"
         )
     tt = tt.filter(F.col(cnt_col) > 0)
     d = NL.KN_DISCOUNT if discount is None else discount
@@ -1593,243 +900,42 @@ def _gold_windows(
     )
 
 
-def start_gold_jdbc_sink(
-    bronze: DataFrame,
-    url: str,
-    table: str,
-    checkpoint: str,
-    bucket_seconds: int = 300,
-    keys: tuple[str, ...] = ("sensor_type",),
-    value_col: str = "value",
-    ts_col: str = "event_time",
-    properties: dict | None = None,
-    trigger: dict | None = None,
-    max_delete_predicates: int = 1000,
-) -> StreamingQuery:
-    """Streaming Gold straight into a JDBC warehouse — the reference's
-    full production topology (Kafka → Spark → Gold → Redshift,
-    ``spark_streaming.py`` + ``redshift_loader.py``) as one streaming
-    query.
+class MetricsListener(StreamingQueryListener):
+    """T6 (listener flavor) — push-based stream metrics.
 
-    Each update-mode micro-batch carries only the (window, group) rows
-    refreshed in that trigger; ``foreachBatch`` deletes exactly those
-    groups over a driver-side JDBC connection and appends the fresh
-    rows — group-granular delete-then-insert, so late data converges and
-    sibling groups in the same window are never touched (the JDBC
-    analogue of the partition-granularity fix in
-    :func:`start_gold_upsert_sink`). The per-batch group list is
-    collected to build the DELETE predicate, capped at
-    ``max_delete_predicates``; see :func:`gold_jdbc_upsert_batch` for
-    how a giant catch-up batch (availableNow replay of days of history)
-    degrades to a ranged delete instead of a pathological WHERE clause.
+    The reference polls ``query.lastProgress`` in a driver loop
+    (``spark_streaming.py:167-184,244-246``); a listener receives every
+    progress event instead (no polling gap, no missed batches) and is
+    the natural adapter to a metrics registry (the reference exports
+    Prometheus counters from its producer, ``sensor_simulator.py:38-48``).
+    Events accumulate in ``self.progress`` as plain dicts:
+    batchId / numInputRows / inputRowsPerSecond /
+    processedRowsPerSecond / durationMs.
     """
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        gold_jdbc_upsert_batch(
-            batch_df,
-            url,
-            table,
-            keys=keys,
-            properties=properties,
-            max_delete_predicates=max_delete_predicates,
+    def __init__(self) -> None:
+        self.progress: list[dict] = []
+        self.started: list[str] = []
+        self.terminated: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.started.append(str(event.id))
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        self.progress.append(
+            {
+                "id": str(p.id),
+                "batchId": p.batchId,
+                "numInputRows": p.numInputRows,
+                "inputRowsPerSecond": p.inputRowsPerSecond,
+                "processedRowsPerSecond": p.processedRowsPerSecond,
+                "durationMs": dict(p.durationMs or {}),
+            }
         )
 
-    agg = _gold_windows(bronze, bucket_seconds, keys, value_col, ts_col)
-    return _start(
-        agg.writeStream.outputMode("update").foreachBatch(upsert),
-        checkpoint,
-        trigger,
-    )
+    def onQueryIdle(self, event) -> None:  # pragma: no cover
+        pass
 
-
-# OR-groups per DELETE statement on the fine path: several short
-# statements instead of one unbounded WHERE clause (warehouse parsers
-# and plan caches degrade badly on multi-thousand-predicate SQL)
-_DELETE_CHUNK = 200
-
-
-def gold_jdbc_upsert_batch(
-    batch_df: DataFrame,
-    url: str,
-    table: str,
-    keys: tuple[str, ...] = ("sensor_type",),
-    properties: dict | None = None,
-    max_delete_predicates: int = 1000,
-) -> None:
-    """One group-granular delete-then-insert micro-batch of
-    :func:`start_gold_jdbc_sink` (module-level so the catch-up path can
-    be driven directly in tests).
-
-    Two regimes, switched on the number of distinct (window, keys)
-    groups in the batch — collected with a ``limit(cap+1)`` so driver
-    memory is bounded either way (judge r4 item #3):
-
-    - **≤ max_delete_predicates** (steady state, watermark-bounded):
-      delete exactly the refreshed groups, OR-chunks of
-      ``_DELETE_CHUNK`` predicates per statement.
-    - **> max_delete_predicates** (a giant availableNow catch-up batch
-      replaying days of history): one ranged
-      ``window_start BETWEEN min AND max`` delete. Sibling groups in
-      the range that the batch does NOT refresh are first read back
-      (filter pushed down to the warehouse), anti-joined against the
-      batch's group set — distributed, never collected — and
-      re-appended alongside the batch, so the coarse delete loses
-      nothing. Cost is one bulk ranged read+write, the right shape for
-      a replay that rewrites most of the range anyway.
-
-    Delete-then-insert is not atomic in either regime; a crash between
-    the two leaves missing (never duplicated) groups, and the replay of
-    the same epoch converges — the same contract as the reference's
-    loader (``redshift_loader.py:33-55``)."""
-    from streaming_etl_pipeline_spark.warehouse import (
-        jdbc_execute,
-        jdbc_table_exists,
-    )
-
-    group_cols = ["window_start", *keys]
-    spark = batch_df.sparkSession
-    groups = (
-        batch_df.select(*group_cols)
-        .distinct()
-        .limit(max_delete_predicates + 1)
-        .collect()
-    )
-    if not groups:
-        return
-    append = batch_df
-    if jdbc_table_exists(spark, url, table, properties):
-        if len(groups) <= max_delete_predicates:
-            preds = []
-            for g in groups:
-                conj = [f"\"window_start\" = TIMESTAMP('{g['window_start']}')"]
-                for k in keys:
-                    val = str(g[k]).replace("'", "''")
-                    # CAST: Spark's JDBC writer maps strings to CLOB on
-                    # some warehouses (Derby), which '=' can't compare
-                    conj.append(f"CAST(\"{k}\" AS VARCHAR(512)) = '{val}'")
-                preds.append("(" + " AND ".join(conj) + ")")
-            for i in range(0, len(preds), _DELETE_CHUNK):
-                jdbc_execute(
-                    spark, url,
-                    f"DELETE FROM {table} WHERE "
-                    + " OR ".join(preds[i : i + _DELETE_CHUNK]),
-                    properties,
-                )
-        else:
-            lo, hi = batch_df.agg(
-                F.min("window_start"), F.max("window_start")
-            ).first()
-            existing = spark.read.jdbc(
-                url, table, properties=properties or {}
-            ).where(
-                (F.col("window_start") >= F.lit(lo))
-                & (F.col("window_start") <= F.lit(hi))
-            )
-            preserved = (
-                existing.join(
-                    batch_df.select(*group_cols).distinct(),
-                    group_cols,
-                    "left_anti",
-                )
-                .select(*batch_df.columns)
-                # materialize BEFORE the delete — a lazy read-back
-                # evaluated after the DELETE would see an empty range
-                .localCheckpoint(eager=True)
-            )
-            jdbc_execute(
-                spark, url,
-                f"DELETE FROM {table} WHERE \"window_start\" BETWEEN "
-                f"TIMESTAMP('{lo}') AND TIMESTAMP('{hi}')",
-                properties,
-            )
-            append = batch_df.unionByName(preserved)
-    append.write.jdbc(url, table, mode="append", properties=properties or {})
-
-
-def join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str],
-    left_ts: str,
-    right_ts: str,
-    tolerance: str = "10 minutes",
-    how: str = "inner",
-    right_cols: list[str] | None = None,
-) -> DataFrame:
-    """Stream-stream join on a key within a ± time tolerance.
-
-    Spark bounds the join state only when (a) both inputs are watermarked
-    and (b) the join condition constrains the two event times relative to
-    each other — the ``tolerance`` range here. State for rows older than
-    watermark + tolerance is evicted, so the store size tracks the late-
-    data window, not the stream length. Outer flavors additionally emit
-    unmatched rows once their side's state expires.
-
-    ``right_cols`` selects which non-key right columns survive (default:
-    all except the join keys; the right event time is kept as
-    ``right_<ts>``).
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    left_a = left.alias("_l")
-    right_a = right.alias("_r")
-    cond = None
-    for k in keys:
-        c = F.col(f"_l.{k}") == F.col(f"_r.{k}")
-        cond = c if cond is None else (cond & c)
-    lo = F.col(f"_l.{left_ts}") - F.expr(f"INTERVAL {tolerance}")
-    hi = F.col(f"_l.{left_ts}") + F.expr(f"INTERVAL {tolerance}")
-    cond = cond & (F.col(f"_r.{right_ts}") >= lo) & (F.col(f"_r.{right_ts}") <= hi)
-    keep_right = right_cols or [
-        c for c in right.columns if c not in keys and c != right_ts
-    ]
-    out_cols = [F.col(f"_l.{c}") for c in left.columns]
-    out_cols.append(F.col(f"_r.{right_ts}").alias(f"right_{right_ts}"))
-    out_cols += [F.col(f"_r.{c}") for c in keep_right]
-    return left_a.join(right_a, cond, how).select(*out_cols)
-
-
-try:  # StreamingQueryListener requires Spark ≥ 3.4 python support
-    from pyspark.sql.streaming.listener import StreamingQueryListener
-
-    class MetricsListener(StreamingQueryListener):
-        """T6 (listener flavor) — push-based stream metrics.
-
-        The reference polls ``query.lastProgress`` in a driver loop
-        (``spark_streaming.py:167-184,244-246``); a listener receives every
-        progress event instead (no polling gap, no missed batches) and is
-        the natural adapter to a metrics registry (the reference exports
-        Prometheus counters from its producer, ``sensor_simulator.py:38-48``).
-        Events accumulate in ``self.progress`` as plain dicts:
-        batchId / numInputRows / inputRowsPerSecond /
-        processedRowsPerSecond / durationMs.
-        """
-
-        def __init__(self) -> None:
-            self.progress: list[dict] = []
-            self.started: list[str] = []
-            self.terminated: list[str] = []
-
-        def onQueryStarted(self, event) -> None:
-            self.started.append(str(event.id))
-
-        def onQueryProgress(self, event) -> None:
-            p = event.progress
-            self.progress.append(
-                {
-                    "id": str(p.id),
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "inputRowsPerSecond": p.inputRowsPerSecond,
-                    "processedRowsPerSecond": p.processedRowsPerSecond,
-                    "durationMs": dict(p.durationMs or {}),
-                }
-            )
-
-        def onQueryIdle(self, event) -> None:  # pragma: no cover
-            pass
-
-        def onQueryTerminated(self, event) -> None:
-            self.terminated.append(str(event.id))
-
-except ImportError:  # pragma: no cover
-    MetricsListener = None  # type: ignore[assignment,misc]
+    def onQueryTerminated(self, event) -> None:
+        self.terminated.append(str(event.id))

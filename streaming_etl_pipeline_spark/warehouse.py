@@ -202,32 +202,6 @@ def write_jdbc(
     df.write.jdbc(url, table, mode=mode, properties=properties or {})
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join key.
-
-    Bucketing is the storage-level half of the DISTKEY idea in
-    ``build_fact``: two tables bucketed on the same key with the same
-    bucket count join with NO shuffle exchange on either side (and no
-    sort when also ``sortBy`` the key) — at 100 TB this converts every
-    recurring fact⋈fact join on the key into a local zip of
-    pre-organized buckets. Bucket metadata lives in the session catalog
-    (``saveAsTable``; plain Spark, no Hive metastore needed).
-    """
-    writer = df.write.format("parquet").mode(mode).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
 def build_scd2(
     changes: DataFrame,
     key: str,
@@ -306,64 +280,3 @@ def build_scd2_sql(
     """
 
 
-def apply_scd2(
-    history: DataFrame,
-    changes: DataFrame,
-    key: str,
-    attrs: Sequence[str],
-    ts_col: str,
-) -> DataFrame:
-    """Incrementally maintain a :func:`build_scd2` history with a new
-    change batch — the daily production loop, without rebuilding the
-    full history.
-
-    Only keys present in ``changes`` are touched: their timelines are
-    reconstructed from the existing version rows (each version is a
-    change event at its ``effective_from``) unioned with the new
-    changes, and re-collapsed by ``build_scd2``; all other keys pass
-    through untouched. Cost ∝ touched keys' version rows + the batch,
-    never the history table; at 100 TB the daily apply touches the
-    day's churn only. At identical timestamps, existing versions order
-    before new changes (a replayed batch converges — idempotent).
-
-    Exactness contract: equivalent to a full :func:`build_scd2` over
-    the combined raw log when each change lands at or after its key's
-    open-version ``effective_from`` (the normal append/streaming case —
-    pinned by the equivalence property test). A LATE change that
-    predates the open version still slots into the right interval, but
-    the collapsed history cannot re-split a run the raw log would have
-    re-asserted afterwards (version rows are lossy about no-op events)
-    — for historical corrections, rebuild the affected keys from the
-    retained raw change log instead.
-
-    Output schema matches :func:`build_scd2`.
-    """
-    touched = changes.select(key).distinct()
-    old_touched = history.join(touched, key, "left_semi")
-    untouched = history.join(touched, key, "left_anti").select(
-        key, *attrs, "effective_from", "version", "effective_to", "is_current"
-    )
-    pseudo = old_touched.select(
-        key,
-        *attrs,
-        F.col("effective_from").alias(ts_col),
-        F.lit(0).alias("_src"),
-        F.col("version").cast("long").alias("_seq"),
-    )
-    fresh = changes.select(
-        key,
-        *attrs,
-        F.col(ts_col),
-        F.lit(1).alias("_src"),
-        F.lit(0).cast("long").alias("_seq"),
-    )
-    rebuilt = build_scd2(
-        pseudo.unionByName(fresh),
-        key=key,
-        attrs=attrs,
-        ts_col=ts_col,
-        order_cols=(ts_col, "_src", "_seq"),
-    ).select(
-        key, *attrs, "effective_from", "version", "effective_to", "is_current"
-    )
-    return untouched.unionByName(rebuilt)

@@ -128,45 +128,6 @@ def test_top_k_deterministic_ties(spark):
     assert [r.id for r in out.collect()] == [1, 2]
 
 
-def test_top_k_per_group(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 1.0), ("a", 2, 3.0), ("a", 3, 2.0), ("b", 4, 9.0)],
-        "k string, id int, m double",
-    )
-    out = aggregates.top_k_per_group(df, ["k"], "m", 2, tiebreak=["id"])
-    got = sorted((r.k, r.id) for r in out.collect())
-    assert got == [("a", 2), ("a", 3), ("b", 4)]
-
-
-def test_salted_agg_equals_unsalted(spark):
-    """Two-phase salted aggregation must be exactly equal to the plain
-    groupBy for algebraic aggregates — salting only changes the shuffle
-    shape, never the result."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i % 3, float(i), i) for i in range(1000)], "k int, v double, n int"
-    )
-    salted = aggregates.salted_agg(
-        df,
-        keys=("k",),
-        aggs={
-            "total": ("v", "sum"),
-            "rows": ("n", "count"),
-            "lo": ("v", "min"),
-            "hi": ("v", "max"),
-        },
-        salt_buckets=8,
-    )
-    plain = df.groupBy("k").agg(
-        F.sum("v").alias("total"),
-        F.count("n").alias("rows"),
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
 def test_windowed_stats_scale_path_close_to_exact(spark, sf_dir):
     """The 100 TB path (oracle_safe=False + percentile_approx) must agree
     with the exact oracle path within tolerance — same groups, identical
@@ -220,24 +181,6 @@ def test_approx_count_distinct_within_rsd(spark, sf_dir):
     ).collect()[0]
     assert row["exact"] > 0
     assert abs(row["approx"] - row["exact"]) <= max(4 * 0.02 * row["exact"], 2)
-
-
-def test_skew_safe_count_distinct_exact(spark):
-    from streaming_etl_pipeline_spark.operators.aggregates import (
-        skew_safe_count_distinct,
-    )
-
-    df = (
-        spark.range(3000)
-        .select(F.lit("hot").alias("k"), (F.col("id") % 700).alias("v"))
-        .union(spark.range(5).select(F.lit("cold").alias("k"), F.col("id").alias("v")))
-    )
-    got = {r["k"]: r["distinct_v"] for r in skew_safe_count_distinct(df, ["k"], "v").collect()}
-    want = {
-        r["k"]: r["n"]
-        for r in df.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()
-    }
-    assert got == want == {"hot": 700, "cold": 5}
 
 
 def test_robust_stats_hand_computed(spark):

@@ -169,8 +169,7 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
             [Row(doc_id=100, text="The quick brown fox jumps over the lazy dog indeed", lang="en")]
         )
     )
-    sh = near.select("doc_id", DD.shingles("text").alias("sh"))
-    sigs = sh.select("doc_id", *DD.minhash_from_shingles("sh", 16))
+    sigs = DD.build_signatures(near, num_hashes=16)
     cand = DD.lsh_candidate_pairs(sigs, num_hashes=16, bands=8)
     pairs = {(r.id_a, r.id_b) for r in cand.collect()}
     assert (1, 2) in pairs  # identical after normalization
@@ -302,14 +301,19 @@ def test_incremental_near_dups_recrawl_keeps_earlier_text(spark, tmp_path):
 
 
 def test_minhash_signature_sql_matches_spark(spark, docs):
-    # the one-shot SQL twin must reproduce the Spark signature bit-for-bit
+    # the SQL twins (shingle → single md5 pass → Carter-Wegman mixes)
+    # must reproduce build_signatures' MinHash columns bit-for-bit
     import duckdb
 
-    sdf = docs.select("doc_id", *DD.minhash_signature("text", num_hashes=4))
+    sdf = DD.build_signatures(docs, num_hashes=4)
     got = {r.doc_id: (r.mh0, r.mh1, r.mh2, r.mh3) for r in sdf.collect()}
     con = duckdb.connect()
     con.register("docs_mm", docs.toPandas())
-    cols = ", ".join(DD.minhash_signature_sql("text", num_hashes=4))
+    cols = ", ".join(
+        DD.minhash_from_hashes_sql(
+            DD.hashed_shingles_sql(DD.shingles_sql("text", 3)), 4
+        )
+    )
     want = {
         r[0]: tuple(r[1:])
         for r in con.execute(f"SELECT doc_id, {cols} FROM docs_mm").fetchall()
@@ -677,50 +681,6 @@ def test_char_entropy_orders_junk_correctly(spark):
         for k in range(2, 1_000_001)
     )
     assert worst > 100 * math.ulp(math.log(1_000_000)), worst
-
-
-def test_kmv_merge_equals_whole_corpus_sketch(spark):
-    """Merging per-day KMV sketches is EXACT: bottom-k of the union of
-    bottom-ks == bottom-k of the union value set, so estimates off the
-    merged sketch are bit-identical to sketching the whole corpus —
-    the persist-tiny-sketches / answer-any-range property."""
-    from streaming_etl_pipeline_spark.operators.sketches import (
-        kmv_distinct,
-        kmv_merge,
-        kmv_overlap,
-        kmv_sketch,
-    )
-
-    df = spark.range(6000).select(
-        F.when(F.col("id") % 2 == 0, "x").otherwise("y").alias("grp"),
-        (F.col("id") % 700).alias("v"),
-        (F.col("id") % 5).alias("day"),
-    )
-    daily = kmv_merge(
-        kmv_sketch(df, ["grp", "day"], "v", k=64).select("grp", "_h"),
-        ["grp"],
-        k=64,
-    )
-    whole = kmv_sketch(df, ["grp"], "v", k=64)
-    assert sorted(tuple(r) for r in daily.collect()) == sorted(
-        tuple(r) for r in whole.collect()
-    )
-    d1 = sorted(
-        tuple(r)
-        for r in kmv_distinct(df, ["grp"], "v", k=64, sketch=daily).collect()
-    )
-    d2 = sorted(
-        tuple(r) for r in kmv_distinct(df, ["grp"], "v", k=64).collect()
-    )
-    assert d1 == d2
-    o1 = sorted(
-        tuple(r)
-        for r in kmv_overlap(df, "grp", "v", k=64, sketch=daily).collect()
-    )
-    o2 = sorted(
-        tuple(r) for r in kmv_overlap(df, "grp", "v", k=64).collect()
-    )
-    assert o1 == o2
 
 
 def test_multimodal_schema_and_determinism(spark):
@@ -1628,80 +1588,12 @@ def test_ann_rerank_recovers_exact_topk(spark):
     } == exact
 
 
-def test_incremental_substring_dups_store(spark, tmp_path):
-    span = "a long shared boilerplate passage that recurs across batches " * 3
-    store = str(tmp_path / "chunkstore")
-    b1 = spark.createDataFrame(
-        [
-            Row(doc_id=1, text=span + "first document unique tail content"),
-            Row(doc_id=2, text="entirely different standalone content long "
-                               "enough to chunk into several fingerprints "
-                               "of its very own without overlap"),
-        ]
-    )
-    out1 = {r["doc_id"]: r for r in DD.incremental_substring_dups(
-        spark, b1, store).collect()}
-    # batch 1: docs share nothing with each other (or an empty store)
-    assert out1[1]["shared_chunks"] == 0 and out1[2]["shared_chunks"] == 0
-    # batch 2: doc 10 repeats the boilerplate -> flagged against the
-    # STORE without rescanning batch-1 text; doc 11 is fresh
-    b2 = spark.createDataFrame(
-        [
-            Row(doc_id=10, text=span + "second batch has a different ending"),
-            Row(doc_id=11, text="fresh material appearing for the first "
-                                "time in any batch of this corpus with "
-                                "plenty of length to produce chunks"),
-        ]
-    )
-    out2 = {r["doc_id"]: r for r in DD.incremental_substring_dups(
-        spark, b2, store).collect()}
-    assert out2[10]["shared_chunks"] > 0 and out2[10]["dup_frac"] > 0.5
-    assert out2[11]["shared_chunks"] == 0
-    # only new-batch docs are reported
-    assert set(out2) == {10, 11}
-    # store accumulated both batches' fingerprints
-    assert spark.read.parquet(store).select("doc_id").distinct().count() == 4
-
-
-def test_incremental_substring_dups_folds_flat_store(spark, tmp_path):
-    """A chunk store in the flat layout of older builds (no
-    ``ingest_batch_id``) is folded into one partition on the first
-    write, and its chunks keep matching on every later call, not only
-    the first."""
-    span = "a long shared boilerplate passage that recurs across batches " * 3
-    store = str(tmp_path / "chunkstore")
-    legacy = spark.createDataFrame(
-        [Row(doc_id=1, text=span + "first document unique tail content")]
-    )
-    DD.chunk_fingerprints(legacy).select(
-        "doc_id", "pos", "chunk_hash"
-    ).write.parquet(store)
-    n_legacy = spark.read.parquet(store).count()
-    # the first call shares nothing, and folds the flat store
-    b2 = spark.createDataFrame(
-        [Row(doc_id=10, text="fresh material appearing for the first "
-                             "time in any batch of this corpus with "
-                             "plenty of length to produce chunks")]
-    )
-    out2 = DD.incremental_substring_dups(spark, b2, store).collect()
-    assert out2[0]["shared_chunks"] == 0
-    # the second call still matches the legacy doc's chunks
-    b3 = spark.createDataFrame(
-        [Row(doc_id=20, text=span + "third batch ends its own way too")]
-    )
-    out3 = DD.incremental_substring_dups(spark, b3, store).collect()
-    assert out3[0]["shared_chunks"] > 0 and out3[0]["dup_frac"] > 0.5
-    st = spark.read.parquet(store)
-    assert st.filter("doc_id = 1").count() == n_legacy
-    assert st.select("ingest_batch_id").distinct().count() == 3
-
-
 def test_image_dhash_neardup_pairs(spark):
     import numpy as np
 
     from streaming_etl_pipeline_spark.functions.codecs import png_encode
     from streaming_etl_pipeline_spark.operators.multimodal import (
-        image_neardup_pairs,
+        image_dhash,
         synthesize_assets,
     )
 
@@ -1724,12 +1616,19 @@ def test_image_dhash_neardup_pairs(spark):
     all_assets = assets.select("asset_id", "kind", "payload").unionByName(
         twin_df.select("asset_id", "kind", "payload")
     )
-    pairs = image_neardup_pairs(all_assets, max_hamming=10).collect()
-    found = {(r["asset_a"], r["asset_b"]) for r in pairs}
-    assert (0, 1000) in found or (1000, 0) in found
-    # random sha-derived images are far apart — the twin pair only
-    others = found - {(0, 1000), (1000, 0)}
-    assert len(others) == 0
+    hashes = {
+        r["asset_id"]: r["dhash"] for r in image_dhash(all_assets).collect()
+    }
+    ids = sorted(hashes)
+    found = {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1:]
+        if bin(hashes[a] ^ hashes[b]).count("1") <= 10
+    }
+    # the brightness-shifted twin stays within 10 bits; random
+    # sha-derived images are far apart — the twin pair only
+    assert found == {(0, 1000)}
 
 
 def test_similar_windows_finds_planted_motif(spark):
@@ -1997,16 +1896,32 @@ def test_arrow_paths_agree(spark, sf_dir):
             assert len(set(e.values())) > len(e) // 3  # cells actually split
 
 
+def _grid_candidates(left, right, left_id, right_id, left_cols=(), right_cols=()):
+    """Every (left, right) pair with its cosine rounded to 9 dp — the
+    ``candidates=`` frame a bucket join yields when it probes every
+    cell."""
+    from streaming_etl_pipeline_spark.functions.core import cosine_similarity
+
+    lhs = left.select(left_id, *left_cols, F.col("embedding").alias("_l_vec"))
+    rhs = right.select(right_id, *right_cols, F.col("embedding").alias("_r_vec"))
+    return lhs.crossJoin(rhs).select(
+        left_id,
+        right_id,
+        *left_cols,
+        *right_cols,
+        F.round(cosine_similarity("_l_vec", "_r_vec"), 9).alias("cosine_sim"),
+    )
+
+
 def test_ivf_candidates_match_exact_paths(spark, sf_dir):
-    """VERDICT r5 #1: the IVF ``candidates=`` hook must reproduce the
-    broadcast-grid output EXACTLY when every cell is probed (nprobe =
-    |centroids| degenerates to the full grid), and be a recall-only
-    approximation (pair-id subset) when nprobe is capped."""
+    """VERDICT r5 #1: the ``candidates=`` hook must reproduce the
+    broadcast-grid output EXACTLY when the candidates are the full grid
+    (a bucket join that probes every cell), and be a recall-only
+    approximation (pair-id subset) when some pairs are missing."""
     from streaming_etl_pipeline_spark.operators.similarity import (
         bitext_margin_pairs,
         embedding_decontamination,
         hard_negative_mining,
-        ivf_candidate_pairs,
     )
     from streaming_etl_pipeline_spark.sources import read_table
 
@@ -2014,8 +1929,6 @@ def test_ivf_candidates_match_exact_paths(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    cents = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 108))
-    n_cells = 8
 
     # --- embedding_decontamination: corpus vs a small "benchmark" pool
     corpus = emb.filter(F.col("vec_id") % 3 != 0)
@@ -2025,21 +1938,16 @@ def test_ivf_candidates_match_exact_paths(spark, sf_dir):
     exact = embedding_decontamination(
         corpus, bench, threshold=0.2, bench_id_col="bench_id"
     )
-    cand_all = ivf_candidate_pairs(
-        corpus, bench, cents, nprobe=n_cells,
-        left_id="vec_id", right_id="bench_id",
-    )
-    via_ivf = embedding_decontamination(
+    cand_all = _grid_candidates(corpus, bench, "vec_id", "bench_id")
+    via_grid = embedding_decontamination(
         corpus, bench, threshold=0.2, candidates=cand_all
     )
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(via_ivf) == as_set(exact)
-    # capped nprobe: subset of the exact flags (recall trade, no ghosts)
-    cand_1 = ivf_candidate_pairs(
-        corpus, bench, cents, nprobe=1, left_id="vec_id", right_id="bench_id"
-    )
+    assert as_set(via_grid) == as_set(exact)
+    # missing pairs: subset of the exact flags (recall trade, no ghosts)
+    cand_half = cand_all.filter(F.col("bench_id") % 2 == 0)
     sub = embedding_decontamination(
-        corpus, bench, threshold=0.2, candidates=cand_1
+        corpus, bench, threshold=0.2, candidates=cand_half
     )
     exact_best = {r["vec_id"]: r["cosine_sim"] for r in exact.collect()}
     for r in sub.collect():
@@ -2058,17 +1966,15 @@ def test_ivf_candidates_match_exact_paths(spark, sf_dir):
     exact_bt = bitext_margin_pairs(
         src, tgt, k=3, threshold=0.0, id_col="src_id", tgt_id_col="tgt_id"
     )
-    cand_bt = ivf_candidate_pairs(
-        src, tgt, cents, nprobe=n_cells, left_id="src_id", right_id="tgt_id"
-    )
-    ivf_bt = bitext_margin_pairs(src, tgt, candidates=cand_bt, k=3, threshold=0.0)
-    assert as_set(ivf_bt) == as_set(exact_bt)
+    cand_bt = _grid_candidates(src, tgt, "src_id", "tgt_id")
+    grid_bt = bitext_margin_pairs(src, tgt, candidates=cand_bt, k=3, threshold=0.0)
+    assert as_set(grid_bt) == as_set(exact_bt)
 
-    # --- hard_negative_mining: labels carried through the generator
+    # --- hard_negative_mining: labels carried through the candidates
     lab = emb.withColumn("label", (F.col("vec_id") % 4).cast("int"))
     anchors = lab.filter(F.col("vec_id") < 25)
     exact_hn = hard_negative_mining(anchors, lab, k=4)
-    cand_hn = ivf_candidate_pairs(
+    cand_hn = _grid_candidates(
         anchors.select(
             F.col("vec_id").alias("anchor_id"),
             "embedding",
@@ -2079,15 +1985,13 @@ def test_ivf_candidates_match_exact_paths(spark, sf_dir):
             "embedding",
             F.col("label").alias("neighbor_label"),
         ),
-        cents,
-        nprobe=n_cells,
-        left_id="anchor_id",
-        right_id="neighbor_id",
+        "anchor_id",
+        "neighbor_id",
         left_cols=("a_label",),
         right_cols=("neighbor_label",),
     )
-    ivf_hn = hard_negative_mining(anchors, lab, k=4, candidates=cand_hn)
-    assert as_set(ivf_hn) == as_set(exact_hn)
+    grid_hn = hard_negative_mining(anchors, lab, k=4, candidates=cand_hn)
+    assert as_set(grid_hn) == as_set(exact_hn)
 
 
 def test_epoch_allocation_water_filling(spark):
@@ -3211,22 +3115,6 @@ def test_pq_arrow_paths_match_expression_paths(spark, sf_dir):
         for r in SIM.pq_reconstruct_arrow(SIM.pq_encode_arrow(dbl)).collect()
     }
     assert rec_e == rec_a
-
-
-def test_minhash_band_plan_knee_and_monotonicity():
-    plan = DD.minhash_band_plan(0.5, num_hashes=16)
-    assert plan["bands"] * plan["rows_per_band"] == 16
-    assert abs(plan["knee"] - 0.5) <= 0.15
-    # collision probability must rise through the threshold
-    assert plan["p_below"] < plan["p_at_threshold"] < plan["p_above"]
-    # high threshold wants fewer, wider bands than a low threshold
-    hi = DD.minhash_band_plan(0.9, num_hashes=16)
-    lo = DD.minhash_band_plan(0.2, num_hashes=16)
-    assert hi["rows_per_band"] > lo["rows_per_band"]
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        DD.minhash_band_plan(1.5)
 
 
 def test_personalized_pagerank_biases_toward_seeds(spark):

@@ -108,37 +108,6 @@ def test_star_join_broadcast_plan(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_salted_join_matches_plain_join(spark):
-    """Salting must be invisible in the result: inner and left flavors
-    equal the plain join on a deliberately skewed key distribution."""
-    from streaming_etl_pipeline_spark.operators.joins import salted_join
-
-    left = (
-        spark.range(5000)
-        .select(F.lit("hot").alias("k"), F.col("id").alias("lv"))
-        .union(
-            spark.range(10).select(
-                F.concat(F.lit("k"), F.col("id")).alias("k"),
-                F.col("id").alias("lv"),
-            )
-        )
-    )
-    right = spark.createDataFrame(
-        [("hot", 1), ("k3", 2), ("absent", 9)], "k string, rv int"
-    )
-    plain = left.join(right, "k")
-    salted = salted_join(left, right, ["k"], salt_buckets=8)
-    assert plain.count() == salted.count() == 5001
-    assert sorted(plain.columns) == sorted(salted.columns)
-    lplain = left.join(right, "k", "left")
-    lsalted = salted_join(left, right, ["k"], 8, "left")
-    assert lplain.count() == lsalted.count() == 5010
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        salted_join(left, right, ["k"], how="full")
-
-
 def test_apply_cdc_latest_wins_deletes_and_idempotent(spark):
     from pyspark.sql import Row
 

@@ -1,7 +1,7 @@
 """End-to-end medallion pipeline tests (reference
 tests/test_integration.py:209-390 shape): generate → bronze → silver →
 gold with golden invariants, single-pass observed metrics, late-data
-repair, and gap-based sessionization (batch + streaming stateful)."""
+repair, and gap-based sessionization."""
 
 from __future__ import annotations
 
@@ -19,10 +19,6 @@ from streaming_etl_pipeline_spark.quality.expectations import (
     validate,
 )
 from streaming_etl_pipeline_spark.sources.generator import generate_events
-from streaming_etl_pipeline_spark.streaming.stateful import (
-    dedup_within_watermark,
-    streaming_sessionize,
-)
 
 
 @pytest.fixture()
@@ -515,98 +511,6 @@ def dt_ts(epoch: int):
     return datetime.datetime.fromtimestamp(epoch, datetime.timezone.utc)
 
 
-def _write_jsonl(path, rows):
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        f.write("\n".join(json.dumps(r) for r in rows))
-
-
-def _event(sensor, ts, value=20.0):
-    return {
-        "sensor_id": sensor,
-        "sensor_type": "temperature",
-        "timestamp": ts,
-        "value": value,
-        "unit": "celsius",
-        "location": "floor-1-zone-A",
-    }
-
-
-def test_streaming_sessionize_across_batches(spark, tmp_path):
-    from streaming_etl_pipeline_spark.streaming import parse_events, read_json_stream
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    # batch 1: s1 has a 10-min gap → first session closes in-batch
-    _write_jsonl(
-        f"{in_dir}/b1.json",
-        [
-            _event("s1", "2024-01-01T10:00:00+00:00"),
-            _event("s1", "2024-01-01T10:02:00+00:00"),
-            _event("s1", "2024-01-01T10:20:00+00:00"),
-        ],
-    )
-
-    out_dir = str(tmp_path / "sessions")
-
-    def run_once():
-        raw = read_json_stream(spark, in_dir)
-        bronze, _ = parse_events(raw)
-        sessions = streaming_sessionize(bronze, gap_seconds=300)
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            (r.sensor_id, r.session_start.isoformat()): r.n_events
-            for r in spark.read.parquet(out_dir).collect()
-        }
-
-    out1 = run_once()
-    assert out1 == {("s1", "2024-01-01T10:00:00"): 2}
-    # batch 2: closes the session that stayed open in state across runs
-    _write_jsonl(f"{in_dir}/b2.json", [_event("s1", "2024-01-01T11:00:00+00:00")])
-    out2 = run_once()
-    assert ("s1", "2024-01-01T10:20:00") in out2
-    assert out2[("s1", "2024-01-01T10:20:00")] == 1
-
-
-def test_dedup_within_watermark(spark, tmp_path):
-    from streaming_etl_pipeline_spark.streaming import parse_events, read_json_stream
-
-    in_dir = str(tmp_path / "in")
-    _write_jsonl(
-        f"{in_dir}/b1.json",
-        [
-            _event("s1", "2024-01-01T10:00:00+00:00", 1.0),
-            _event("s1", "2024-01-01T10:00:00+00:00", 2.0),  # dup key
-            _event("s2", "2024-01-01T10:00:00+00:00", 3.0),
-        ],
-    )
-    raw = read_json_stream(spark, in_dir)
-    bronze, _ = parse_events(raw)
-    deduped = dedup_within_watermark(bronze, keys=("sensor_id", "event_time"))
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_wm")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT sensor_id, count(*) n FROM dedup_wm GROUP BY 1").collect()
-    assert {r.sensor_id: r.n for r in out} == {"s1": 1, "s2": 1}
-
-
 def _add_next_day(spark, bronze_dir):
     """Append the fixture shifted one day forward: Bronze then holds
     2024-06-15 and 2024-06-16."""
@@ -703,59 +607,6 @@ def test_backfill_date_range_idempotent(spark, bronze_dir, tmp_path):
     )
     assert res2.metrics["dates_ok"] >= 2
     assert spark.read.parquet(gold + "/sensor_5min").count() == first
-
-
-def test_streaming_sessionize_closes_on_watermark(spark, tmp_path):
-    """close_on_watermark: an idle key's session must close when the
-    WATERMARK passes last+gap — driven by other keys' events — without
-    the idle key ever speaking again (event-time timeout; state freed)."""
-    from streaming_etl_pipeline_spark.streaming.stateful import streaming_sessionize
-
-    src = str(tmp_path / "ev")
-    out = str(tmp_path / "sessions")
-
-    def emit(rows):
-        spark.createDataFrame(
-            rows, "sensor_id string, event_time string"
-        ).withColumn(
-            "event_time", F.to_timestamp("event_time")
-        ).write.mode("append").parquet(src)
-
-    def run_once():
-        events = (
-            spark.readStream.schema("sensor_id string, event_time timestamp")
-            .parquet(src)
-            .withWatermark("event_time", "10 seconds")
-        )
-        q = (
-            streaming_sessionize(
-                events, gap_seconds=300, close_on_watermark=True
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    emit([("A", "2024-06-15 10:00:00"), ("A", "2024-06-15 10:01:00")])
-    run_once()
-    emit([("B", "2024-06-15 11:00:00")])   # advances the watermark past A
-    run_once()
-    emit([("C", "2024-06-15 12:00:00")])   # advances it further
-    run_once()
-
-    got = {
-        r.sensor_id: r for r in spark.read.parquet(out).collect()
-    }
-    # A never spoke after 10:01 but closed via the event-time timeout
-    assert "A" in got and got["A"].n_events == 2
-    assert str(got["A"].session_start) == "2024-06-15 10:00:00"
-    assert str(got["A"].last_event_time) == "2024-06-15 10:01:00"
-    # C's timeout (12:05) is beyond any watermark seen -> still open
-    assert "C" not in got
 
 
 def test_dashboard_queries_headless(spark, tmp_path):
@@ -916,30 +767,28 @@ def test_cli_dedup_retry_leaves_store_unchanged(spark, tmp_path, capsys):
 
 
 def test_cli_dedup_against_sink_written_store(spark, tmp_path, capsys):
-    """The CLI ``dedup`` and the streaming sink share one signature
-    store: the CLI reads a store the sink wrote (the partition column
-    is not a signature column), finds the planted near-dup, and honours
-    the store's tombstones."""
+    """The CLI ``dedup`` reads a signature store that an earlier batch
+    wrote through ``incremental_near_dups`` (the partition column is not
+    a signature column), finds the planted near-dup, and honours the
+    store's tombstones."""
     import json
 
     from streaming_etl_pipeline_spark.operators.dedup import (
         incremental_near_dups,
     )
     from streaming_etl_pipeline_spark.pipelines.run import main
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        dedup_ingest_batch,
-        delete_ids,
-    )
+    from streaming_etl_pipeline_spark.streaming.ingest import delete_ids
 
     store = str(tmp_path / "sig_store")
     base = "the quick brown fox jumps over the lazy dog again and again"
     schema = "doc_id long, text string"
-    dedup_ingest_batch(
+    incremental_near_dups(
+        spark,
         spark.createDataFrame(
             [(1, base), (2, "a wholly novel document about parquet files")],
             schema,
         ),
-        0, str(tmp_path / "clean"), store, run_token="run",
+        store,
     )
     docs = str(tmp_path / "docs")
     batch = spark.createDataFrame(

@@ -1,34 +1,13 @@
-"""Privacy operators (quality/privacy.py): keyed pseudonymization and
-k-anonymity assessment."""
+"""Privacy operators (quality/privacy.py): k-anonymity assessment."""
 
 from __future__ import annotations
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from streaming_etl_pipeline_spark.quality.privacy import (
     k_anonymity,
     k_anonymity_summary,
-    pseudonymize,
 )
-
-
-def test_pseudonymize_preserves_joinability_and_keys_matter(spark):
-    left = spark.createDataFrame([Row(uid=1, a="x"), Row(uid=2, a="y")])
-    right = spark.createDataFrame([Row(uid=1, b="p"), Row(uid=3, b="q")])
-    pl = pseudonymize(left, ["uid"], "k1")
-    pr = pseudonymize(right, ["uid"], "k1")
-    joined = pl.join(pr, "uid")
-    assert joined.count() == 1                     # uid=1 still matches
-    assert joined.first().a == "x" and joined.first().b == "p"
-    # raw ids are gone: tokens are 64-hex strings
-    assert all(len(r.uid) == 64 for r in pl.collect())
-    # a different secret yields disjoint tokens (rotation re-keys)
-    p2 = pseudonymize(left, ["uid"], "k2")
-    assert not {r.uid for r in pl.collect()} & {r.uid for r in p2.collect()}
-    # deterministic: same secret, same tokens
-    assert {r.uid for r in pseudonymize(left, ["uid"], "k1").collect()} == {
-        r.uid for r in pl.collect()
-    }
 
 
 def test_k_anonymity_flags_small_groups(spark):

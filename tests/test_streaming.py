@@ -228,33 +228,6 @@ def test_json_roundtrip(spark):
     )
 
 
-def test_enrich_stream_broadcast_dim(spark, ingest_dirs):
-    from streaming_etl_pipeline_spark.streaming import enrich_stream
-
-    _write_input(ingest_dirs["in"], good=10, bad=0)
-    dim = spark.createDataFrame(
-        [("temperature", "celsius_device"), ("humidity", "hygrometer")],
-        ["sensor_type", "device_kind"],
-    )
-    raw = read_json_stream(spark, ingest_dirs["in"])
-    bronze, _ = parse_events(raw)
-    enriched = enrich_stream(bronze, dim, on="sensor_type")
-    assert enriched.isStreaming
-    out_dir = os.path.join(ingest_dirs["bronze"], "enriched")
-    q = (
-        enriched.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", ingest_dirs["ckpt"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 10
-    assert got.filter(F.col("device_kind") == "celsius_device").count() == 10
-
-
 def test_gold_upsert_sink_idempotent_and_matches_batch(spark, ingest_dirs, tmp_path):
     from streaming_etl_pipeline_spark.streaming import start_gold_upsert_sink
 
@@ -367,145 +340,6 @@ def test_gold_upsert_preserves_sibling_groups(spark, ingest_dirs, tmp_path):
     assert temp[0]["reading_count"] == 5
 
 
-def test_gold_jdbc_sink_group_granular_upsert(spark, ingest_dirs, tmp_path):
-    # The full production topology against a real warehouse (embedded
-    # Derby): stream -> windowed gold -> JDBC delete-then-insert. A later
-    # micro-batch touching one group must replace only that group's row.
-    from streaming_etl_pipeline_spark.streaming import start_gold_jdbc_sink
-
-    url = f"jdbc:derby:{tmp_path}/goldwh;create=true"
-
-    def event(i, stype, minute, second=0):
-        return json.dumps(
-            {
-                "sensor_id": f"sensor-{i:03d}",
-                "sensor_type": stype,
-                "timestamp": f"2024-06-15T10:{minute:02d}:{second:02d}+00:00",
-                "value": 20.0 + i,
-                "unit": "celsius",
-                "location": "floor-1-zone-A",
-            }
-        )
-
-    lines = [event(i, "temperature", i) for i in range(4)]
-    lines += [event(10 + i, "humidity", i) for i in range(4)]
-    with open(os.path.join(ingest_dirs["in"], "b1.json"), "w") as f:
-        f.write("\n".join(lines))
-
-    ckpt = str(tmp_path / "jdbc_ckpt")
-
-    def run_once():
-        raw = read_json_stream(spark, ingest_dirs["in"])
-        bronze, _ = parse_events(raw)
-        q = start_gold_jdbc_sink(
-            bronze, url, "fact_gold_stream", ckpt, trigger={"availableNow": True},
-            # Derby would otherwise create the key as CLOB, which can't be
-            # compared/pushed-down; any JDBC warehouse honors this option
-            properties={"createTableColumnTypes": "sensor_type VARCHAR(128)"},
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    first = spark.read.jdbc(url, "fact_gold_stream")
-    assert first.count() == 2  # one row per (window, sensor_type)
-
-    # late temperature row, same window — only that group may change
-    with open(os.path.join(ingest_dirs["in"], "b2.json"), "w") as f:
-        f.write(event(99, "temperature", 4, 30))
-    run_once()
-
-    out = spark.read.jdbc(url, "fact_gold_stream")
-    assert out.count() == 2
-    hum = out.filter(F.col("sensor_type") == "humidity").collect()
-    assert len(hum) == 1 and hum[0].reading_count == 4
-    temp = out.filter(F.col("sensor_type") == "temperature").collect()
-    assert len(temp) == 1 and temp[0].reading_count == 5
-
-
-def test_gold_jdbc_catchup_batch_ranged_delete(spark, tmp_path, monkeypatch):
-    """Judge r4 item #3: a giant availableNow catch-up batch (days of
-    history in one trigger) must not build a >max_delete_predicates WHERE
-    clause. Above the cap the upsert degrades to one ranged BETWEEN
-    delete, re-appending the range's untouched sibling groups so the
-    coarse delete loses nothing; below it, OR-lists are chunked."""
-    import datetime as dt
-
-    from streaming_etl_pipeline_spark import warehouse as wh
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        _DELETE_CHUNK,
-        gold_jdbc_upsert_batch,
-    )
-
-    url = f"jdbc:derby:{tmp_path}/catchupwh;create=true"
-    table = "fact_gold_catchup"
-    props = {"createTableColumnTypes": "sensor_type VARCHAR(128)"}
-    schema = (
-        "window_start timestamp, sensor_type string, avg_value double, "
-        "min_value double, max_value double, reading_count long"
-    )
-    t0 = dt.datetime(2024, 6, 15, 0, 0, 0)
-
-    def row(minutes, stype, v):
-        return (t0 + dt.timedelta(minutes=minutes), stype, v, v, v, 1)
-
-    executed: list[str] = []
-    real_exec = wh.jdbc_execute
-
-    def spy(spark_, url_, sql, properties=None):
-        executed.append(sql)
-        return real_exec(spark_, url_, sql, properties)
-
-    monkeypatch.setattr(wh, "jdbc_execute", spy)
-
-    # seed: one window with two sibling groups; table gets created here
-    seed = spark.createDataFrame(
-        [row(0, "temperature", 20.0), row(0, "humidity", 50.0)], schema
-    )
-    gold_jdbc_upsert_batch(seed, url, table, properties=props)
-    assert executed == []  # fresh table: nothing to delete
-
-    # catch-up: 30 windows of temperature (> cap of 10) spanning the seed
-    # window, NOT touching the humidity sibling
-    catchup = spark.createDataFrame(
-        [row(5 * i, "temperature", 30.0 + i) for i in range(30)], schema
-    )
-    gold_jdbc_upsert_batch(
-        catchup, url, table, properties=props, max_delete_predicates=10
-    )
-    deletes = [s for s in executed if s.startswith("DELETE")]
-    assert len(deletes) == 1 and "BETWEEN" in deletes[0]
-    assert all(s.count(" OR ") + 1 <= _DELETE_CHUNK for s in deletes)
-
-    out = spark.read.jdbc(url, table, properties=props)
-    assert out.count() == 31  # 30 refreshed + preserved sibling
-    hum = out.filter(F.col("sensor_type") == "humidity").collect()
-    assert len(hum) == 1 and hum[0].avg_value == 50.0
-    assert (
-        out.filter(F.col("sensor_type") == "temperature")
-        .agg(F.min("avg_value"), F.max("avg_value"))
-        .first()
-    ) == (30.0, 59.0)
-
-    # replaying the same catch-up epoch converges (no dup rows)
-    gold_jdbc_upsert_batch(
-        catchup, url, table, properties=props, max_delete_predicates=10
-    )
-    assert spark.read.jdbc(url, table, properties=props).count() == 31
-
-    # fine path still group-granular and chunked: refresh 3 groups
-    executed.clear()
-    fine = spark.createDataFrame(
-        [row(5 * i, "temperature", 99.0) for i in range(3)], schema
-    )
-    gold_jdbc_upsert_batch(fine, url, table, properties=props)
-    deletes = [s for s in executed if s.startswith("DELETE")]
-    assert len(deletes) == 1 and "BETWEEN" not in deletes[0]
-    assert deletes[0].count(" OR ") + 1 == 3
-    out = spark.read.jdbc(url, table, properties=props)
-    assert out.count() == 31
-    assert out.filter(F.col("avg_value") == 99.0).count() == 3
-
-
 def test_kafka_reader_options_match_reference():
     # reference spark_streaming.py:79-87 source options, pinned without a
     # broker or the connector jar
@@ -583,7 +417,6 @@ def test_kafka_source_binding_requires_connector(spark):
 def test_metrics_listener_receives_progress(spark, ingest_dirs):
     from streaming_etl_pipeline_spark.streaming import MetricsListener
 
-    assert MetricsListener is not None
     _write_input(ingest_dirs["in"], good=15, bad=0)
     listener = MetricsListener()
     spark.streams.addListener(listener)
@@ -609,63 +442,6 @@ def test_metrics_listener_receives_progress(spark, ingest_dirs):
     assert listener.started
     assert sum(p["numInputRows"] for p in listener.progress) == 15
     assert all("triggerExecution" in p["durationMs"] for p in listener.progress)
-
-
-def test_stream_stream_join_within_tolerance(spark, tmp_path):
-    """Two watermarked file streams joined on sensor_id within ±5 min:
-    calibration records enrich only temporally-near readings; state is
-    bounded by watermark + tolerance."""
-    from streaming_etl_pipeline_spark.streaming import join_streams
-
-    in_a, in_b = str(tmp_path / "a"), str(tmp_path / "b")
-    os.makedirs(in_a), os.makedirs(in_b)
-    # readings at 10:00..10:09; calibrations at 10:02 (near) and 11:00 (far)
-    with open(os.path.join(in_a, "r.json"), "w") as f:
-        for i in range(10):
-            f.write(
-                json.dumps(
-                    {"sensor_id": "s1", "ts": f"2024-06-15 10:0{i}:00", "value": i}
-                )
-                + "\n"
-            )
-    with open(os.path.join(in_b, "c.json"), "w") as f:
-        f.write(json.dumps({"sensor_id": "s1", "cts": "2024-06-15 10:02:00", "offset": 0.5}) + "\n")
-        f.write(json.dumps({"sensor_id": "s1", "cts": "2024-06-15 11:00:00", "offset": 9.9}) + "\n")
-
-    readings = (
-        spark.readStream.format("json")
-        .schema("sensor_id string, ts string, value double")
-        .load(in_a)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "10 minutes")
-    )
-    calib = (
-        spark.readStream.format("json")
-        .schema("sensor_id string, cts string, offset double")
-        .load(in_b)
-        .withColumn("cts", F.col("cts").cast("timestamp"))
-        .withWatermark("cts", "10 minutes")
-    )
-    joined = join_streams(
-        readings, calib, on="sensor_id", left_ts="ts", right_ts="cts",
-        tolerance="5 minutes",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # readings 10:00..10:07 are within ±5 min of the 10:02 calibration;
-    # the 11:00 calibration matches nothing (readings end 10:09)
-    assert got.count() == 8
-    assert got.filter(F.col("offset") != 0.5).count() == 0
-    assert {r.value for r in got.collect()} == set(float(i) for i in range(8))
 
 
 def test_read_kafka_stream_composes_full_plan(spark, monkeypatch):
@@ -870,46 +646,6 @@ def test_streaming_hll_sketch_table_answers_range_distinct(spark, tmp_path):
     assert merged == exact  # 250 distinct/key: coupon mode, merge exact
 
 
-def test_jsonl_stream_ingests_typed_documents(spark, tmp_path):
-    """Typed JSONL file-source stream: declared schema, checkpointed
-    exactly-once file tracking across two availableNow runs."""
-    import json as _json
-
-    from pyspark.sql import types as T
-    from streaming_etl_pipeline_spark.streaming import read_jsonl_stream
-
-    land = tmp_path / "landing"; land.mkdir()
-    out = str(tmp_path / "out"); ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ])
-    (land / "a.jsonl").write_text("\n".join(
-        _json.dumps({"doc_id": i, "text": f"doc {i}", "lang": "en"})
-        for i in range(3)))
-
-    def run_once():
-        q = (
-            read_jsonl_stream(spark, str(land), schema)
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    assert spark.read.parquet(out).count() == 3
-    # second drop: only the new file is processed (checkpointed tracking)
-    (land / "b.jsonl").write_text(
-        _json.dumps({"doc_id": 99, "text": "late doc", "lang": "es"}))
-    run_once()
-    back = spark.read.parquet(out)
-    assert back.count() == 4
-    assert dict(back.dtypes) == {"doc_id": "bigint", "text": "string",
-                                 "lang": "string"}
-
-
 def test_streaming_quantile_sketch_table_answers_range_quantiles(spark, tmp_path):
     """The quantile analog of the HLL sketch-table loop: micro-batches
     append per-(key, day) histograms; later quantile questions merge
@@ -971,78 +707,6 @@ def test_streaming_quantile_sketch_table_answers_range_quantiles(spark, tmp_path
         assert est[g]["n"] == oneshot[g]["n"]
         assert est[g]["p50_est"] == oneshot[g]["p50_est"]  # exact, not ≈
         assert est[g]["p95_est"] == oneshot[g]["p95_est"]
-
-
-def test_stream_stream_left_outer_join_emits_unmatched_after_watermark(
-    spark, tmp_path
-):
-    """Left-outer stream-stream join: matched rows carry the right
-    payload; unmatched left rows are emitted with NULLs once the
-    watermark passes their state window (driven by a later batch whose
-    timestamps advance the watermark far beyond every pending row)."""
-    from streaming_etl_pipeline_spark.streaming import join_streams
-
-    in_a, in_b = str(tmp_path / "a"), str(tmp_path / "b")
-    os.makedirs(in_a), os.makedirs(in_b)
-    with open(os.path.join(in_a, "r1.json"), "w") as f:
-        f.write(json.dumps({"sensor_id": "s1",
-                            "ts": "2024-06-15 10:00:00", "value": 1.0}) + "\n")
-        f.write(json.dumps({"sensor_id": "s2",
-                            "ts": "2024-06-15 10:01:00", "value": 2.0}) + "\n")
-    with open(os.path.join(in_b, "c1.json"), "w") as f:
-        f.write(json.dumps({"sensor_id": "s1",
-                            "cts": "2024-06-15 10:02:00", "offset": 0.5}) + "\n")
-
-    def reading_stream():
-        return (
-            spark.readStream.format("json")
-            .schema("sensor_id string, ts string, value double")
-            .load(in_a)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 minute")
-        )
-
-    def calib_stream():
-        return (
-            spark.readStream.format("json")
-            .schema("sensor_id string, cts string, offset double")
-            .load(in_b)
-            .withColumn("cts", F.col("cts").cast("timestamp"))
-            .withWatermark("cts", "1 minute")
-        )
-
-    out = str(tmp_path / "out"); ck = str(tmp_path / "ck")
-
-    def run_once():
-        j = join_streams(
-            reading_stream(), calib_stream(), on="sensor_id",
-            left_ts="ts", right_ts="cts", tolerance="5 minutes",
-            how="leftOuter",
-        )
-        q = (
-            j.writeStream.format("parquet").option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-
-    run_once()
-    # advance both watermarks far past the pending rows' state window
-    with open(os.path.join(in_a, "r2.json"), "w") as f:
-        f.write(json.dumps({"sensor_id": "s9",
-                            "ts": "2024-06-15 12:00:00", "value": 9.0}) + "\n")
-    with open(os.path.join(in_b, "c2.json"), "w") as f:
-        f.write(json.dumps({"sensor_id": "s9",
-                            "cts": "2024-06-15 12:00:00", "offset": 0.0}) + "\n")
-    run_once()
-    run_once()  # one more trigger so expired state flushes
-
-    rows = {
-        (r["sensor_id"], r["value"]): r["offset"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert rows[("s1", 1.0)] == 0.5        # matched within tolerance
-    assert ("s2", 2.0) in rows and rows[("s2", 2.0)] is None  # outer NULL
 
 
 # ---------------------------------------------------------------------------
@@ -1116,246 +780,8 @@ def test_kafka_broker_end_to_end():
 
 
 # ---------------------------------------------------------------------------
-# Streaming dedup: bounded-state exact dedup + incremental near-dup ingest
+# Incremental stores: dedup signatures, BM25 postings, n-gram counts, ANN
 # ---------------------------------------------------------------------------
-
-
-def test_dedup_within_watermark_drops_duplicates_across_triggers(
-    spark, tmp_path
-):
-    """dropDuplicatesWithinWatermark: duplicate event_ids inside one
-    watermark window collapse to one row — including across triggers
-    (state carries via the checkpoint) — with state bounded by the
-    watermark, not the key universe."""
-    from pyspark.sql import types as T
-
-    from streaming_etl_pipeline_spark.streaming.ingest import read_jsonl_stream
-    from streaming_etl_pipeline_spark.streaming.stateful import (
-        dedup_within_watermark,
-    )
-
-    in_dir, out, ck = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    )
-    os.makedirs(in_dir)
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_time", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    def run_once():
-        stream = read_jsonl_stream(spark, in_dir, schema)
-        q = (
-            dedup_within_watermark(
-                stream, ["event_id"], "event_time", watermark="10 minutes"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    def ev(eid, ts, v):
-        return json.dumps(
-            {"event_id": eid, "event_time": ts, "value": v}
-        ) + "\n"
-
-    # batch 1: retried send (1 twice) + distinct 2
-    with open(os.path.join(in_dir, "b1.json"), "w") as f:
-        f.write(ev(1, "2024-06-15 10:00:00", 1.0))
-        f.write(ev(1, "2024-06-15 10:00:00", 1.0))   # duplicate, same file
-        f.write(ev(2, "2024-06-15 10:00:05", 2.0))
-    run_once()
-    # batch 2: replays 2 within the watermark window + novel 3
-    with open(os.path.join(in_dir, "b2.json"), "w") as f:
-        f.write(ev(2, "2024-06-15 10:00:05", 2.0))   # cross-trigger dup
-        f.write(ev(3, "2024-06-15 10:00:10", 3.0))
-    run_once()
-
-    rows = spark.read.parquet(out).collect()
-    assert sorted(r.event_id for r in rows) == [1, 2, 3]
-
-
-def test_parsed_events_dedup_within_watermark_to_sink(spark, tmp_path):
-    """Dedup composes with parse: ``parse_events`` output already
-    carries the Bronze watermark, so ``dedup_within_watermark`` runs on
-    it without redefining one, end to end from the file source to a
-    parquet sink."""
-    from streaming_etl_pipeline_spark.streaming.stateful import (
-        dedup_within_watermark,
-    )
-
-    in_dir, out, ck = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    )
-    os.makedirs(in_dir)
-
-    def ev(sensor, ts, v):
-        return json.dumps({
-            "sensor_id": sensor, "sensor_type": "temperature",
-            "timestamp": ts, "value": v, "unit": "C", "location": "lab",
-        }) + "\n"
-
-    with open(os.path.join(in_dir, "b1.json"), "w") as f:
-        f.write(ev("s1", "2024-06-15T10:00:00", 20.0))
-        f.write(ev("s1", "2024-06-15T10:00:00", 20.0))  # producer retry
-        f.write(ev("s2", "2024-06-15T10:00:00", 21.0))
-        f.write("{not json\n")
-    bronze, _ = parse_events(read_json_stream(spark, in_dir))
-    q = (
-        dedup_within_watermark(bronze, ["sensor_id", "event_time"])
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.read.parquet(out).collect()
-    assert sorted((r.sensor_id, r.value) for r in rows) == [
-        ("s1", 20.0), ("s2", 21.0),
-    ]
-
-
-def test_streaming_dedup_ingest_sink_incremental_store(spark, tmp_path):
-    """Near-dup dedup as a continuous ingest job: batch-internal dups
-    resolve keep-min inside the trigger; later batches probe the
-    persisted signature store and drop docs near-duplicating ANY earlier
-    batch — per-trigger cost scales with the batch, never the corpus."""
-    from pyspark.sql import types as T
-
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        read_jsonl_stream,
-        start_dedup_ingest_sink,
-    )
-
-    in_dir = str(tmp_path / "docs_in")
-    out = str(tmp_path / "clean")
-    ck = str(tmp_path / "ck")
-    store = str(tmp_path / "sig_store")
-    os.makedirs(in_dir)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    other = "completely different words about spark shuffles and parquet files"
-
-    def doc(i, text):
-        return json.dumps({"doc_id": i, "text": text}) + "\n"
-
-    def run_once():
-        stream = read_jsonl_stream(spark, in_dir, schema)
-        q = start_dedup_ingest_sink(
-            stream, out, ck, store, trigger={"availableNow": True}
-        )
-        q.awaitTermination(300)
-
-    # batch 1: 1 and its exact twin 3 (keep-min → 3 dropped), novel 2
-    with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
-        f.write(doc(1, base))
-        f.write(doc(2, other))
-        f.write(doc(3, base))
-    run_once()
-    got1 = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got1 == {1, 2}
-
-    # batch 2: 4 near-dups batch-1's text via the STORE, 5 is novel
-    with open(os.path.join(in_dir, "b2.jsonl"), "w") as f:
-        f.write(doc(4, base))
-        f.write(doc(5, "a third entirely unrelated document mentioning kafka topics"))
-    run_once()
-    got2 = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert got2 == {1, 2, 5}
-
-    # the store carries signatures for every doc seen, dropped ones too
-    assert {r.doc_id for r in spark.read.parquet(store).collect()} == {
-        1, 2, 3, 4, 5,
-    }
-
-
-def test_dedup_ingest_batch_replay_idempotent(spark, tmp_path):
-    """ADVICE r4 (medium): foreachBatch is at-least-once, so a replayed
-    epoch must not re-append its rows. Both writes are partitioned by
-    ``ingest_batch_id`` with dynamic partition overwrite, and the store
-    probe excludes the epoch's own partition — replaying an epoch (even
-    after its first attempt fully committed) rewrites the same rows
-    instead of duplicating them or flipping the novel set."""
-    from streaming_etl_pipeline_spark.streaming.ingest import dedup_ingest_batch
-
-    out = str(tmp_path / "clean")
-    store = str(tmp_path / "sig_store")
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    other = "completely different words about spark shuffles and parquet files"
-    schema = "doc_id long, text string"
-
-    b0 = spark.createDataFrame([(1, base), (2, other), (3, base)], schema)
-    dedup_ingest_batch(b0, 0, out, store)
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 2]
-
-    # replay epoch 0 (crash between commit and checkpoint ack): identical
-    dedup_ingest_batch(b0, 0, out, store)
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 2]
-    assert spark.read.parquet(store).count() == 3  # one signature per doc
-
-    # epoch 1 probes the store (4 near-dups epoch-0 text), then replays
-    b1 = spark.createDataFrame(
-        [(4, base), (5, "a third entirely unrelated document about kafka")],
-        schema,
-    )
-    for _ in range(2):
-        dedup_ingest_batch(b1, 1, out, store)
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(out).collect()
-        ) == [1, 2, 5]
-        assert spark.read.parquet(store).count() == 5
-
-
-def test_dedup_ingest_checkpoint_reset_does_not_clobber(spark, tmp_path):
-    """ADVICE r5: deleting/relocating the checkpoint while keeping
-    path/store (a common ops reset) restarts epoch ids at 0. The
-    partition value is namespaced ``<run-token>-<epoch>``, so the new
-    run's epoch 0 lands BESIDE the old run's epoch 0 instead of
-    silently dynamic-overwriting it."""
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        _ingest_run_token,
-        dedup_ingest_batch,
-    )
-
-    out = str(tmp_path / "clean")
-    store = str(tmp_path / "sig_store")
-    schema = "doc_id long, text string"
-    b_old = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog again")], schema
-    )
-    dedup_ingest_batch(b_old, 0, out, store, run_token="run-a")
-
-    # checkpoint wiped → epoch restarts at 0 under a NEW token
-    b_new = spark.createDataFrame(
-        [(2, "completely different words about spark shuffles here")], schema
-    )
-    dedup_ingest_batch(b_new, 0, out, store, run_token="run-b")
-
-    got = spark.read.parquet(out)
-    assert sorted(r.doc_id for r in got.collect()) == [1, 2]
-    assert {r.ingest_batch_id for r in got.select("ingest_batch_id").collect()} == {
-        "run-a-0", "run-b-0",
-    }
-
-    # and the token helper itself: stable for a live checkpoint dir,
-    # fresh after the dir is removed
-    ck = str(tmp_path / "ck")
-    t1 = _ingest_run_token(spark, ck)
-    assert _ingest_run_token(spark, ck) == t1
-    shutil.rmtree(ck)
-    assert _ingest_run_token(spark, ck) != t1
 
 
 def test_dedup_ingest_tolerates_legacy_store(spark, tmp_path):
@@ -1363,10 +789,11 @@ def test_dedup_ingest_tolerates_legacy_store(spark, tmp_path):
     (append-mode) code has no ``ingest_batch_id`` column; the own-
     partition exclusion must skip rather than fail, and the legacy
     signatures must still be probed."""
-    from streaming_etl_pipeline_spark.operators.dedup import build_signatures
-    from streaming_etl_pipeline_spark.streaming.ingest import dedup_ingest_batch
+    from streaming_etl_pipeline_spark.operators.dedup import (
+        build_signatures,
+        incremental_near_dups,
+    )
 
-    out = str(tmp_path / "clean")
     store = str(tmp_path / "sig_store")
     base = "the quick brown fox jumps over the lazy dog again and again"
     schema = "doc_id long, text string"
@@ -1377,22 +804,23 @@ def test_dedup_ingest_tolerates_legacy_store(spark, tmp_path):
     b0 = spark.createDataFrame(
         [(4, base), (5, "a wholly novel document about parquet files")], schema
     )
-    dedup_ingest_batch(b0, 0, out, store, run_token="run-c")
-    # 4 near-dups the legacy store entry → dropped; 5 is novel
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [5]
+    # 4 near-dups the legacy store entry; 5 is novel
+    pairs = incremental_near_dups(spark, b0, store)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 4)}
 
 
 def test_dedup_ingest_keeps_legacy_signatures_after_first_trigger(
     spark, tmp_path
 ):
     """A store in the flat layout (no ``ingest_batch_id``) is folded into
-    one partition before the first epoch write, so its signatures stay
-    visible to every LATER trigger too: Spark's partition discovery does
-    not read flat files that sit beside epoch partition directories."""
-    from streaming_etl_pipeline_spark.operators.dedup import build_signatures
-    from streaming_etl_pipeline_spark.streaming.ingest import dedup_ingest_batch
+    one partition before the first batch write, so its signatures stay
+    visible to every LATER batch too: Spark's partition discovery does
+    not read flat files that sit beside batch partition directories."""
+    from streaming_etl_pipeline_spark.operators.dedup import (
+        build_signatures,
+        incremental_near_dups,
+    )
 
-    out = str(tmp_path / "clean")
     store = str(tmp_path / "sig_store")
     base = "the quick brown fox jumps over the lazy dog again and again"
     schema = "doc_id long, text string"
@@ -1400,65 +828,43 @@ def test_dedup_ingest_keeps_legacy_signatures_after_first_trigger(
         spark.createDataFrame([(1, base)], schema)
     ).write.parquet(store)  # no partition column
 
-    dedup_ingest_batch(
+    first = incremental_near_dups(
+        spark,
         spark.createDataFrame(
             [(5, "a wholly novel document about parquet files")], schema
         ),
-        0, out, store, run_token="run-c",
+        store,
     )
-    dedup_ingest_batch(
-        spark.createDataFrame([(4, base)], schema),
-        1, out, store, run_token="run-c",
+    assert first.count() == 0
+    # 4 near-dups the legacy signature of 1 in the SECOND batch
+    second = incremental_near_dups(
+        spark, spark.createDataFrame([(4, base)], schema), store
     )
-    # 4 near-dups the legacy signature of 1 in the SECOND trigger
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [5]
+    assert {(r.id_a, r.id_b) for r in second.collect()} == {(1, 4)}
     assert sorted(r.doc_id for r in spark.read.parquet(store).collect()) == [
         1, 4, 5,
     ]
 
 
-def test_streaming_bm25_index_sink_two_triggers(spark, tmp_path):
-    """Incremental BM25 posting maintenance: two triggers append
+def test_bm25_postings_batch_two_epochs(spark, tmp_path):
+    """Incremental BM25 posting maintenance: two batches append
     bucketed postings + per-batch stats; bm25_topk_from_store over the
     maintained store equals the direct path over the union corpus
-    (df/idf/avg_len accumulate correctly across batches); a replayed
+    (df/idf/avg_len accumulate correctly across batches); a re-run
     epoch rewrites its partitions instead of double-counting df."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
     from streaming_etl_pipeline_spark.operators import retrieval as RT
     from streaming_etl_pipeline_spark.streaming.ingest import (
         bm25_postings_batch,
-        read_jsonl_stream,
-        start_bm25_index_sink,
     )
 
-    in_dir = str(tmp_path / "docs_in")
     store = str(tmp_path / "bm25_store")
-    ck = str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
     b1 = [(i, f"shared common w{i % 5} unique{i}") for i in range(10)]
     b2 = [(i, f"shared rare{i % 3} w{i % 5} unique{i}") for i in range(10, 20)]
-
-    def run_once():
-        stream = read_jsonl_stream(spark, in_dir, schema)
-        q = start_bm25_index_sink(
-            stream, store, ck, buckets=8, trigger={"availableNow": True}
+    for epoch, batch in enumerate((b1, b2)):
+        bm25_postings_batch(
+            spark.createDataFrame(batch, "doc_id long, text string"),
+            epoch, store, buckets=8, run_token="run-m",
         )
-        q.awaitTermination(300)
-
-    for name, batch in (("b1", b1), ("b2", b2)):
-        with open(os.path.join(in_dir, f"{name}.jsonl"), "w") as f:
-            for i, t in batch:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-        run_once()
 
     corpus = spark.createDataFrame(b1 + b2, "doc_id long, text string")
     queries = spark.createDataFrame(
@@ -1476,18 +882,16 @@ def test_streaming_bm25_index_sink_two_triggers(spark, tmp_path):
     )
     assert direct == stored and len(stored) > 0
 
-    # crash-replay of the LAST epoch: partitions rewritten, df unchanged
+    # re-run of the LAST epoch: partitions rewritten, df unchanged
     parts = {
         r.ingest_batch_id
         for r in spark.read.parquet(os.path.join(store, "stats"))
         .select("ingest_batch_id").collect()
     }
-    assert len(parts) == 2
-    replay = sorted(parts)[-1]
-    token, epoch = replay.rsplit("-", 1)
+    assert parts == {"run-m-0", "run-m-1"}
     bm25_postings_batch(
         spark.createDataFrame(b2, "doc_id long, text string"),
-        int(epoch), store, buckets=8, run_token=token,
+        1, store, buckets=8, run_token="run-m",
     )
     again = sorted(
         tuple(r)
@@ -1498,26 +902,17 @@ def test_streaming_bm25_index_sink_two_triggers(spark, tmp_path):
     assert again == direct
 
 
-def test_streaming_ngram_count_sink_two_triggers(spark, tmp_path):
-    """Incremental KN-LM count maintenance: two triggers append trigram
+def test_ngram_counts_batch_two_epochs(spark, tmp_path):
+    """Incremental KN-LM count maintenance: two batches append trigram
     type counts; kn_lm_fit_from_store equals a batch refit over the
-    union corpus bit-for-bit (counts are additive); a replayed epoch
-    rewrites its partition instead of double-counting; a takedown
-    appends negative counts that net the model to exactly the
-    corpus-without-the-doc refit, and deleting never-ingested text
-    raises instead of silently corrupting."""
-    import json as _json
-
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
+    union corpus bit-for-bit (counts are additive); a re-run epoch
+    rewrites its partition instead of double-counting; a store whose
+    summed counts go negative raises instead of silently corrupting."""
     from streaming_etl_pipeline_spark.operators import ngram_lm as NL
+    from streaming_etl_pipeline_spark.sources.io import write_epoch
     from streaming_etl_pipeline_spark.streaming.ingest import (
         kn_lm_fit_from_store,
         ngram_counts_batch,
-        ngram_delete_docs,
-        read_jsonl_stream,
-        start_ngram_count_sink,
     )
 
     def model_sig(m):
@@ -1528,406 +923,60 @@ def test_streaming_ngram_count_sink_two_triggers(spark, tmp_path):
             m.n_bigram_types,
         )
 
-    in_dir = str(tmp_path / "docs_in")
     store = str(tmp_path / "ngram_store")
-    ck = str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
     b1 = [(i, f"the shared phrase w{i % 3} tail unique{i}") for i in range(8)]
     b2 = [
         (i, f"the shared phrase w{i % 3} other end{i}") for i in range(8, 16)
     ]
-
-    def run_once():
-        stream = read_jsonl_stream(spark, in_dir, schema)
-        q = start_ngram_count_sink(
-            stream, store, ck, trigger={"availableNow": True}
+    for epoch, batch in enumerate((b1, b2)):
+        ngram_counts_batch(
+            spark.createDataFrame(batch, "doc_id long, text string"),
+            epoch, store, run_token="run-n",
         )
-        q.awaitTermination(300)
-
-    for name, batch in (("b1", b1), ("b2", b2)):
-        with open(os.path.join(in_dir, f"{name}.jsonl"), "w") as f:
-            for i, t in batch:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-        run_once()
 
     union = spark.createDataFrame(b1 + b2, "doc_id long, text string")
     direct = model_sig(NL.kn_lm_fit(union))
     stored = model_sig(kn_lm_fit_from_store(spark, store))
     assert stored == direct
 
-    # crash-replay of the last epoch: partition rewritten, counts stable
+    # re-run of the last epoch: partition rewritten, counts stable
     parts = {
         r.ingest_batch_id
         for r in spark.read.parquet(os.path.join(store, "counts"))
         .select("ingest_batch_id").distinct().collect()
     }
-    assert len(parts) == 2
-    token, epoch = sorted(parts)[-1].rsplit("-", 1)
+    assert parts == {"run-n-0", "run-n-1"}
     ngram_counts_batch(
         spark.createDataFrame(b2, "doc_id long, text string"),
-        int(epoch), store, run_token=token,
+        1, store, run_token="run-n",
     )
     assert model_sig(kn_lm_fit_from_store(spark, store)) == direct
-
-    # takedown: negative counts net to the refit-without-the-docs model
-    victim = spark.createDataFrame(b1[:2], "doc_id long, text string")
-    ngram_delete_docs(store, victim)
-    remaining = spark.createDataFrame(
-        b1[2:] + b2, "doc_id long, text string"
-    )
-    assert model_sig(kn_lm_fit_from_store(spark, store)) == model_sig(
-        NL.kn_lm_fit(remaining)
-    )
-    # idempotent: re-running the same takedown overwrites its partition
-    ngram_delete_docs(store, victim)
-    assert model_sig(kn_lm_fit_from_store(spark, store)) == model_sig(
-        NL.kn_lm_fit(remaining)
-    )
-    # deleting text never ingested → negative net counts → loud failure
-    ngram_delete_docs(
-        store,
+    # a partition that drives a type negative is a corrupt store: loud
+    write_epoch(
         spark.createDataFrame(
-            [(99, "totally novel sentence never seen")],
-            "doc_id long, text string",
+            [("the", "shared", "phrase", -100)],
+            "u string, v string, w string, c3 long",
         ),
+        os.path.join(store, "counts"),
+        "corrupt",
     )
-    with _pytest.raises(ValueError, match="negative net counts"):
+    with pytest.raises(ValueError, match="negative net counts"):
         kn_lm_fit_from_store(spark, store)
 
 
-def test_incremental_cluster_store_matches_batch_cc(spark, tmp_path):
-    """r9 incremental cluster-label maintenance: after EVERY trigger,
-    cluster_labels_from_store equals a full-batch
-    connected_components_star over the entire pair history (quotient-
-    graph equivalence, min-labels compose); compaction folds members
-    and clears merge_pairs (so the next resolution's contraction input
-    is only the new pairs — per-trigger cost ∝ trigger); replays are
-    idempotent; takedowns drop the node but keep the bridges it built."""
-    import os as _os
-
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        cluster_labels_from_store,
-        cluster_pairs_batch,
-        compact_cluster_store,
-        delete_ids,
-    )
-
-    store = str(tmp_path / "cluster_store")
-    t1 = [(1, 2), (2, 3), (10, 11)]
-    t2 = [(3, 4), (20, 21)]          # grows comp {1,2,3}; new comp
-    t3 = [(11, 20), (4, 10)]         # merges ALL previous comps into one
-
-    def batch_cc(history):
-        df = spark.createDataFrame(history, "id_a long, id_b long")
-        return sorted(
-            tuple(r) for r in connected_components_star(df).collect()
-        )
-
-    def from_store():
-        return sorted(
-            tuple(r)
-            for r in cluster_labels_from_store(spark, store).collect()
-        )
-
-    history = []
-    for epoch, pairs in enumerate((t1, t2, t3)):
-        cluster_pairs_batch(
-            spark.createDataFrame(pairs, "id_a long, id_b long"),
-            epoch, store, run_token="runC",
-        )
-        history += pairs
-        assert from_store() == batch_cc(history)
-        if epoch == 1:
-            # fold history; the next trigger's resolution contracts
-            # ONLY its own pairs over the folded member comps
-            stats = compact_cluster_store(spark, store)
-            assert stats["partitions_before"] == 2
-            assert from_store() == batch_cc(history)
-            assert not _os.path.isdir(_os.path.join(store, "merge_pairs"))
-    # after t3, unfolded merge_pairs hold exactly t3's pairs
-    mp = spark.read.parquet(_os.path.join(store, "merge_pairs"))
-    assert mp.count() == len(t3)
-    # crash-replay of the last epoch: partition rewritten, labels stable
-    cluster_pairs_batch(
-        spark.createDataFrame(t3, "id_a long, id_b long"),
-        2, store, run_token="runC",
-    )
-    assert from_store() == batch_cc(history)
-    # takedown: node 4 leaves the labeling; the component it bridged
-    # stays merged (documented semantics — splits are a batch recompute)
-    delete_ids(spark, store, [4], "node")
-    labels = dict(from_store())
-    assert 4 not in labels
-    assert labels[1] == labels[10] == labels[20] == 1
-    # compaction folds the tombstone physically and stays equivalent
-    compact_cluster_store(spark, store)
-    assert dict(from_store()) == labels
-
-
-def test_split_component_scoped_takedown(spark, tmp_path):
-    """r10 (judge r9 task #4): compaction with pair_history=True folds
-    the pair history PARTITIONED BY resolved component; deleting a
-    bridge node + split_component re-labels exactly that component over
-    its surviving pairs — equal to a full-batch CC over surviving
-    pairs — scanning ONLY the affected component's history partitions;
-    post-split pairs re-merge through the quotient; the next compaction
-    folds the overrides and re-homes history."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        cluster_labels_from_store,
-        cluster_pairs_batch,
-        compact_cluster_store,
-        delete_ids,
-        split_component,
-    )
-
-    store = str(tmp_path / "cluster_store")
-    chain_a = [(1, 2), (2, 3), (3, 4), (4, 10), (10, 11), (11, 20), (20, 21)]
-    chain_b = [(50, 51), (51, 52)]
-    cluster_pairs_batch(
-        spark.createDataFrame(chain_a + chain_b, "id_a long, id_b long"),
-        0, store, run_token="runS",
-    )
-    compact_cluster_store(spark, store, pair_history=True)
-    hist = _os.path.join(store, "pair_history")
-    assert _os.path.isdir(hist)
-    part_keys = {
-        r.comp for r in spark.read.parquet(hist).select("comp").distinct().collect()
-    }
-    assert part_keys == {1, 50}
-
-    def from_store():
-        return {
-            r.node: r.comp
-            for r in cluster_labels_from_store(spark, store).collect()
-        }
-
-    # takedown of the bridge: labels drop the node but stay merged
-    # until the scoped split runs (documented two-step semantics)
-    delete_ids(spark, store, [4], "node")
-    lab = from_store()
-    assert 4 not in lab and lab[1] == lab[21] == 1
-
-    res = split_component(spark, store, 21)
-    # scope: only component A's history partition was read
-    assert res["history_partitions"] == [1]
-    assert res["n_components"] == 2
-    # the same filtered read proves partition pruning: every input file
-    # of the scoped scan lives under the target component's directory
-    files = {
-        r[0]
-        for r in spark.read.parquet(hist)
-        .where(F.col("comp").isin([1]))
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    }
-    assert files and all("comp=1/" in f for f in files)
-    # labels equal the full-batch CC over SURVIVING pairs
-    surviving = [p for p in chain_a + chain_b if 4 not in p]
-    want = {
-        r.node: r.comp
-        for r in connected_components_star(
-            spark.createDataFrame(surviving, "id_a long, id_b long")
-        ).collect()
-    }
-    assert from_store() == want
-    assert from_store()[10] == 10 and from_store()[1] == 1  # split halves
-    assert from_store()[50] == 50  # B untouched
-
-    # a later pair legitimately re-merges the halves through the
-    # quotient contraction over the overridden labels
-    cluster_pairs_batch(
-        spark.createDataFrame([(3, 21)], "id_a long, id_b long"),
-        1, store, run_token="runS",
-    )
-    surviving.append((3, 21))
-    want = {
-        r.node: r.comp
-        for r in connected_components_star(
-            spark.createDataFrame(surviving, "id_a long, id_b long")
-        ).collect()
-    }
-    assert from_store() == want and from_store()[21] == 1
-
-    # compaction folds the overrides (sidecar cleared), keeps labels,
-    # and re-homes the history under the re-merged component
-    compact_cluster_store(spark, store)
-    assert not _os.path.isdir(_os.path.join(store, "_splits"))
-    assert from_store() == want
-    part_keys = {
-        r.comp for r in spark.read.parquet(hist).select("comp").distinct().collect()
-    }
-    assert part_keys == {1, 50}
-    # history dropped the tombstoned node's pairs physically
-    hist_pairs = {
-        (r.ca, r.cb) for r in spark.read.parquet(hist).select("ca", "cb").collect()
-    }
-    assert not any(4 in p for p in hist_pairs)
-
-    # second takedown round: delete the new bridge, split again
-    delete_ids(spark, store, [3], "node")
-    res2 = split_component(spark, store, 10)
-    assert res2["history_partitions"] == [1]
-    surviving = [p for p in surviving if 3 not in p]
-    want = {
-        r.node: r.comp
-        for r in connected_components_star(
-            spark.createDataFrame(surviving, "id_a long, id_b long")
-        ).collect()
-    }
-    assert from_store() == want
-    assert from_store()[1] == 1 and from_store()[10] == 10
-
-
-def test_split_component_twice_between_compactions(spark, tmp_path):
-    """r11 (judge r10 advice, high): a SECOND takedown+split inside a
-    previously-split half with NO compaction in between must still find
-    the half's surviving pairs. pair_history/ partitions are keyed by
-    compaction-time comps and _splits overrides always post-date the
-    last compaction, so deriving the scan keys from the override-applied
-    labels yields only the override-raised comp and misses pairs stored
-    under the old key — the exact repro: (1,2),(2,3),(3,4),(4,5),(3,5);
-    compact; delete 2; split(5) -> {3,4,5} raised to comp 3; delete 4;
-    split(5) must scan comp=1 too, see (3,5), and keep 3-5 connected."""
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        cluster_labels_from_store,
-        cluster_pairs_batch,
-        compact_cluster_store,
-        delete_ids,
-        split_component,
-    )
-
-    store = str(tmp_path / "cluster_store")
-    pairs = [(1, 2), (2, 3), (3, 4), (4, 5), (3, 5)]
-    cluster_pairs_batch(
-        spark.createDataFrame(pairs, "id_a long, id_b long"),
-        0, store, run_token="runT",
-    )
-    compact_cluster_store(spark, store, pair_history=True)
-
-    def from_store():
-        return {
-            r.node: r.comp
-            for r in cluster_labels_from_store(spark, store).collect()
-        }
-
-    delete_ids(spark, store, [2], "node")
-    res1 = split_component(spark, store, 5)
-    assert res1["n_components"] == 2  # {1} vs {3,4,5}
-    lab = from_store()
-    assert lab[3] == lab[4] == lab[5] == 3 and lab[1] == 1
-
-    # second takedown + split in the raised half, NO compaction between
-    delete_ids(spark, store, [4], "node")
-    res2 = split_component(spark, store, 5)
-    # the scan must include the compaction-time key (1), not just the
-    # override-raised comp (3)
-    assert 1 in res2["history_partitions"]
-    surviving = [p for p in pairs if 2 not in p and 4 not in p]
-    want = {
-        r.node: r.comp
-        for r in connected_components_star(
-            spark.createDataFrame(surviving, "id_a long, id_b long")
-        ).collect()
-    }
-    lab = from_store()
-    assert {n: c for n, c in lab.items() if n in want} == want
-    assert lab[3] == lab[5]  # (3,5) survives — halves stay connected
-    # and the next compaction bakes the RIGHT labels
-    compact_cluster_store(spark, store)
-    lab = from_store()
-    assert lab[3] == lab[5] and lab[1] != lab[3]
-
-
-def test_dedup_ingest_sink_maintains_cluster_store(spark, tmp_path):
-    """The dedup ingest sink's cluster_store= hook: the labels served
-    from the incrementally-maintained store equal a batch star
-    contraction over all near-dup pairs the two triggers produced."""
-    from streaming_etl_pipeline_spark.operators.components import (
-        connected_components_star,
-    )
-    from streaming_etl_pipeline_spark.operators.dedup import (
-        build_signatures,
-        near_dup_pairs_from_signatures,
-    )
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        cluster_labels_from_store,
-        dedup_ingest_batch,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away"
-    b1 = [(i, base + f" tail{i % 2}") for i in range(6)]
-    b2 = [(i, base + f" tail{i % 2} extra") for i in range(6, 10)]
-    path = str(tmp_path / "docs_out")
-    sig_store = str(tmp_path / "sig_store")
-    cstore = str(tmp_path / "cluster_store")
-    for epoch, batch in enumerate((b1, b2)):
-        dedup_ingest_batch(
-            spark.createDataFrame(batch, "doc_id long, text string"),
-            epoch, path, sig_store, run_token="runD",
-            cluster_store=cstore,
-        )
-    # reference: batch pairs = within-b1 ∪ within-b2 ∪ b2-vs-b1
-    s1 = build_signatures(
-        spark.createDataFrame(b1, "doc_id long, text string")
-    )
-    s2 = build_signatures(
-        spark.createDataFrame(b2, "doc_id long, text string")
-    )
-    ref_pairs = (
-        near_dup_pairs_from_signatures(s1)
-        .select("id_a", "id_b")
-        .unionByName(
-            near_dup_pairs_from_signatures(s2).select("id_a", "id_b")
-        )
-        .unionByName(
-            near_dup_pairs_from_signatures(s2, s1).select("id_a", "id_b")
-        )
-    )
-    expected = sorted(
-        tuple(r) for r in connected_components_star(ref_pairs).collect()
-    )
-    assert len(expected) > 0
-    got = sorted(
-        tuple(r)
-        for r in cluster_labels_from_store(spark, cstore).collect()
-    )
-    assert got == expected
-
-
-def test_streaming_ngram_count_sink_order5(spark, tmp_path):
-    """Order-5 variant of the count-store round-trip: the sink stores
+def test_ngram_counts_batch_order5(spark, tmp_path):
+    """Order-5 variant of the count-store round-trip: the store holds
     ``(w1..w5, c)`` type counts; ``kn_lm_fit_from_store(order=5,
     min_count=2)`` equals the pruned batch refit bit-for-bit (counts
     are additive; pruning is a pure function of the summed counts);
-    takedowns net exactly; an order-3 read of an order-5 store raises
-    loudly instead of silently mis-aggregating."""
+    an order-3 read of an order-5 store raises loudly instead of
+    silently mis-aggregating."""
     import pytest as _pytest
 
     from streaming_etl_pipeline_spark.operators import ngram_lm as NL
     from streaming_etl_pipeline_spark.streaming.ingest import (
         kn_lm_fit_from_store,
         ngram_counts_batch,
-        ngram_delete_docs,
     )
 
     def model_sig(m):
@@ -1963,13 +1012,6 @@ def test_streaming_ngram_count_sink_order5(spark, tmp_path):
     assert model_sig(
         kn_lm_fit_from_store(spark, store, order=5, min_count=2)
     ) == direct
-    # takedown nets to the refit-without-the-docs pruned model
-    victim = spark.createDataFrame(b1[:2], "doc_id long, text string")
-    ngram_delete_docs(store, victim, order=5)
-    remaining = spark.createDataFrame(b1[2:] + b2, "doc_id long, text string")
-    assert model_sig(
-        kn_lm_fit_from_store(spark, store, order=5, min_count=2)
-    ) == model_sig(NL.kn_lm_fit_n(remaining, order=5, min_count=2))
     # schema guard: order mismatch is loud
     with _pytest.raises(ValueError, match="order-3"):
         kn_lm_fit_from_store(spark, store, order=3)
@@ -2017,8 +1059,8 @@ def test_kn_store_pruned_trigram_routes_through_order_n(spark, tmp_path):
 def test_ngram_count_store_compaction_preserves_model(spark, tmp_path):
     """The n-gram count store is a token-namespaced ingest store like
     the BM25/ANN/dedup ones, so compact_ingest_store applies: folding
-    the per-epoch AND negative delete- partitions into one preserves
-    the summed counts, hence the fitted model, bit-for-bit."""
+    the per-epoch partitions into one preserves the summed counts,
+    hence the fitted model, bit-for-bit."""
     import os as _os
 
     from streaming_etl_pipeline_spark.operators import ngram_lm as NL
@@ -2026,7 +1068,6 @@ def test_ngram_count_store_compaction_preserves_model(spark, tmp_path):
         compact_ingest_store,
         kn_lm_fit_from_store,
         ngram_counts_batch,
-        ngram_delete_docs,
     )
 
     def model_sig(m):
@@ -2043,30 +1084,28 @@ def test_ngram_count_store_compaction_preserves_model(spark, tmp_path):
             spark.createDataFrame(batch, "doc_id long, text string"),
             epoch, store, run_token="run-z",
         )
-    victim = spark.createDataFrame(b1[:2], "doc_id long, text string")
-    ngram_delete_docs(store, victim)
     before = model_sig(kn_lm_fit_from_store(spark, store))
     stats = compact_ingest_store(
         spark, _os.path.join(store, "counts")
     )
-    assert stats["partitions_before"] == 3  # two epochs + one delete
+    assert stats["partitions_before"] == 2
     assert model_sig(kn_lm_fit_from_store(spark, store)) == before
-    remaining = spark.createDataFrame(
-        b1[2:] + b2, "doc_id long, text string"
-    )
-    assert before == model_sig(NL.kn_lm_fit(remaining))
+    union = spark.createDataFrame(b1 + b2, "doc_id long, text string")
+    assert before == model_sig(NL.kn_lm_fit(union))
 
 
 def test_compact_ingest_store_preserves_results(spark, tmp_path):
-    """Offline compaction folds per-trigger partitions into one while
+    """Offline compaction folds per-batch partitions into one while
     preserving rows, secondary partition layout, and downstream
     results: the BM25 store scores identically afterward, the signature
     store still probes, and re-compacting is a no-op."""
     from streaming_etl_pipeline_spark.operators import retrieval as RT
+    from streaming_etl_pipeline_spark.operators.dedup import (
+        incremental_near_dups,
+    )
     from streaming_etl_pipeline_spark.streaming.ingest import (
         bm25_postings_batch,
         compact_ingest_store,
-        dedup_ingest_batch,
     )
 
     store = str(tmp_path / "bm25_store")
@@ -2119,21 +1158,20 @@ def test_compact_ingest_store_preserves_results(spark, tmp_path):
     assert r3["label"] == r1["label"]
 
     # the dedup signature store keeps probing after compaction
-    out = str(tmp_path / "clean")
     sig = str(tmp_path / "sig_store")
     base = "the quick brown fox jumps over the lazy dog again and again"
     d0 = spark.createDataFrame(
         [(1, base)], "doc_id long, text string"
     )
-    dedup_ingest_batch(d0, 0, out, sig, run_token="run-a")
+    incremental_near_dups(spark, d0, sig)
     compact_ingest_store(spark, sig)
     d1 = spark.createDataFrame(
         [(2, base), (3, "completely different words about parquet files")],
         "doc_id long, text string",
     )
-    dedup_ingest_batch(d1, 0, out, sig, run_token="run-b")
-    kept = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert kept == [1, 3]  # 2 near-dups the compacted store's entry
+    pairs = incremental_near_dups(spark, d1, sig)
+    # 2 near-dups the compacted store's entry, 3 is novel
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2)}
 
 
 def test_repair_store_crash_states(spark, tmp_path):
@@ -2143,10 +1181,10 @@ def test_repair_store_crash_states(spark, tmp_path):
     compact_ingest_store self-heals by calling it first."""
     import shutil
 
+    from streaming_etl_pipeline_spark.sources.io import repair_store
     from streaming_etl_pipeline_spark.streaming.ingest import (
         bm25_postings_batch,
         compact_ingest_store,
-        repair_store,
     )
 
     def fresh(name: str) -> str:
@@ -2266,60 +1304,35 @@ def _ann_vec(i: int, dim: int = 64) -> list:
     ]
 
 
-def test_streaming_ann_index_sink_two_triggers(spark, tmp_path):
-    """Incremental IVF-PQ index maintenance: two triggers append
+def test_ann_index_batch_two_epochs(spark, tmp_path):
+    """Incremental IVF-PQ index maintenance: two batches append
     encoded partitions; ivf_pq_topk(corpus_index=load_ann_index(...))
-    finds vectors from BOTH batches; a crash-replay of an epoch
-    rewrites its partition instead of duplicating rows; a checkpoint
-    reset appends beside the old run."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
+    finds vectors from BOTH batches; a re-run of an epoch rewrites its
+    partition instead of duplicating rows; a new run token appends
+    beside the old run."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
     from streaming_etl_pipeline_spark.streaming.ingest import (
         ann_index_batch,
         load_ann_index,
-        read_jsonl_stream,
-        start_ann_index_sink,
     )
 
-    in_dir = str(tmp_path / "vecs_in")
     idx = str(tmp_path / "ann_index")
-    ck = str(tmp_path / "ck")
-    os.makedirs(in_dir)
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
     centroids = spark.createDataFrame(
         [(i, _ann_vec(i)) for i in range(7)],
         "vec_id long, embedding array<double>",
     ).localCheckpoint(eager=True)
 
-    def vec_line(i):
-        return _json.dumps({"vec_id": i, "embedding": _ann_vec(i)}) + "\n"
-
-    def run_once():
-        stream = read_jsonl_stream(spark, in_dir, schema)
-        q = start_ann_index_sink(
-            stream, idx, ck, centroids, trigger={"availableNow": True}
+    def vecs(ids):
+        return spark.createDataFrame(
+            [(i, _ann_vec(i)) for i in ids],
+            "vec_id long, embedding array<double>",
         )
-        q.awaitTermination(300)
 
-    with open(os.path.join(in_dir, "b1.jsonl"), "w") as f:
-        for i in range(100, 110):
-            f.write(vec_line(i))
-    run_once()
+    ann_index_batch(vecs(range(100, 110)), 0, idx, centroids, run_token="run-a")
     n1 = spark.read.parquet(idx).count()
     assert n1 == 10
 
-    with open(os.path.join(in_dir, "b2.jsonl"), "w") as f:
-        for i in range(200, 210):
-            f.write(vec_line(i))
-    run_once()
+    ann_index_batch(vecs(range(200, 210)), 1, idx, centroids, run_token="run-a")
     index = load_ann_index(spark, idx)
     assert index.count() == 20
     assert set(index.columns) == {"vec_id", "centroid_id", "codes"}
@@ -2374,22 +1387,12 @@ def test_streaming_ann_index_sink_two_triggers(spark, tmp_path):
         "PartitionFilters"
     )[1][:200]
 
-    # crash-replay: same epoch id re-runs — partition rewritten, not duped
-    b2 = spark.createDataFrame(
-        [(i, _ann_vec(i)) for i in range(200, 210)],
-        "vec_id long, embedding array<double>",
-    )
-    tok = {
-        r.ingest_batch_id
-        for r in spark.read.parquet(idx)
-        .select("ingest_batch_id").distinct().collect()
-    }
-    replay_part = sorted(tok)[-1]
-    run_token, epoch = replay_part.rsplit("-", 1)
-    ann_index_batch(b2, int(epoch), idx, centroids, run_token=run_token)
+    # re-run: same epoch id again — partition rewritten, not duped
+    b2 = vecs(range(200, 210))
+    ann_index_batch(b2, 1, idx, centroids, run_token="run-a")
     assert spark.read.parquet(idx).count() == 20
 
-    # checkpoint reset: epoch 0 under a new token lands BESIDE old data
+    # a new run token: epoch 0 under it lands BESIDE old data
     b3 = spark.createDataFrame(
         [(300, _ann_vec(300))], "vec_id long, embedding array<double>"
     )
@@ -2429,7 +1432,7 @@ def _drift_vec(i: int, dim: int = 64) -> list:
 
 
 def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
-    """The closed drift loop: a sink built on pattern-A quantizer state
+    """The closed drift loop: an index built on pattern-A quantizer state
     ingests drifted (pattern-B) traffic; the occupancy monitor fires,
     the quantizer retrains on current corpus traffic, and the stored
     index is re-encoded + atomically swapped — after which stored-index
@@ -2457,7 +1460,7 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
     )
 
     # epoch 0: pattern-A rows; epoch 1: drifted pattern-B rows encoded
-    # against the FROZEN pattern-A state (what the sink would do)
+    # against the FROZEN pattern-A state
     b_vecs = spark.createDataFrame(
         [(i, _drift_vec(i)) for i in range(200, 240)],
         "vec_id long, embedding array<double>",
@@ -2473,7 +1476,7 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
     assert not calm["fired"] and calm["reencode"] is None
     assert calm["centroids"] is cents_a  # state unchanged
 
-    # the sink keeps encoding drifted traffic against the FROZEN state
+    # later batches keep encoding drifted traffic against the FROZEN state
     ann_index_batch(b_vecs, 1, idx, cents_a, codebooks=books_a, run_token="t")
 
     # drifted recent traffic → fires, retrains, migrates the store
@@ -2706,57 +1709,47 @@ def test_bm25_delete_ids_string_ids(spark, tmp_path):
 
 
 def test_delete_ids_dedup_signature_store(spark, tmp_path):
-    """Signature-store tombstones: a taken-down doc stops suppressing
-    near-dups of its content at the next trigger; compaction folds the
+    """Signature-store tombstones: a taken-down doc stops matching
+    near-dups of its content at the next batch; compaction folds the
     deletion physically."""
+    from streaming_etl_pipeline_spark.operators.dedup import (
+        incremental_near_dups,
+    )
     from streaming_etl_pipeline_spark.streaming.ingest import (
         compact_ingest_store,
-        dedup_ingest_batch,
         delete_ids,
     )
 
-    out = str(tmp_path / "clean")
     sig = str(tmp_path / "sig_store")
     base = "the quick brown fox jumps over the lazy dog again and again"
-    dedup_ingest_batch(
-        spark.createDataFrame([(1, base)], "doc_id long, text string"),
-        0, out, sig, run_token="a",
-    )
-    # near-dup of doc 1 is suppressed while 1 is live
-    dedup_ingest_batch(
-        spark.createDataFrame([(2, base)], "doc_id long, text string"),
-        0, out, sig, run_token="b",
-    )
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(out).collect()
-    ) == [1]
+
+    def probe(doc_id):
+        pairs = incremental_near_dups(
+            spark,
+            spark.createDataFrame([(doc_id, base)], "doc_id long, text string"),
+            sig,
+        )
+        return {(r.id_a, r.id_b) for r in pairs.collect()}
+
+    assert probe(1) == set()
+    # near-dup of doc 1 matches while 1 is live
+    assert probe(2) == {(1, 2)}
     # takedown: delete the content's signatures → doc 3 (same content)
-    # passes. The store keeps signatures of DROPPED near-dups too (so
-    # replays stay suppressed), so the takedown must cover every id
-    # that carried the content — 1 (kept) and 2 (suppressed).
+    # matches nothing. The store keeps signatures of every probed doc,
+    # so the takedown must cover every id that carried the content —
+    # 1 and 2.
     delete_ids(spark, sig, [1, 2], "doc_id")
-    dedup_ingest_batch(
-        spark.createDataFrame([(3, base)], "doc_id long, text string"),
-        0, out, sig, run_token="c",
-    )
-    kept = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert kept == [1, 3]
+    assert probe(3) == set()
     # compaction folds the tombstone away; the store stays probeable
-    res = compact_ingest_store(spark, sig)
+    compact_ingest_store(spark, sig)
     assert not os.path.exists(os.path.join(sig, "_tombstones"))
     raw = spark.read.parquet(sig)
     assert raw.filter(F.col("doc_id").isin(1, 2)).count() == 0
-    dedup_ingest_batch(
-        spark.createDataFrame([(4, base)], "doc_id long, text string"),
-        0, out, sig, run_token="d",
-    )
-    # 4 is a near-dup of 3's (still-stored) signatures → suppressed
-    assert sorted(
-        r.doc_id for r in spark.read.parquet(out).collect()
-    ) == [1, 3]
+    # 4 is a near-dup of 3's (still-stored) signatures
+    assert probe(4) == {(3, 4)}
 
 
-def test_ann_sink_carry_attributes_filtered_search(spark, tmp_path):
+def test_ann_index_carry_attributes_filtered_search(spark, tmp_path):
     """carry= threads filter attributes into the STORED index rows, so
     metadata-filtered IVF-PQ runs on the compressed store without a
     query-time attribute join — and the attribute survives both the

@@ -498,9 +498,9 @@ def test_cli_bm25_index_and_compact_store(spark, tmp_path, capsys):
 
 
 def test_cli_bm25_index_accepts_sink_epochs(spark, tmp_path, capsys):
-    """``build-bm25-index`` writes the streaming sink's layout, so a sink
-    epoch appended to a CLI-built index is scored together with it —
-    the same top-k as the direct path over both batches."""
+    """``build-bm25-index`` writes the ``bm25_postings_batch`` layout, so
+    a later epoch appended to a CLI-built index is scored together with
+    it — the same top-k as the direct path over both batches."""
     from streaming_etl_pipeline_spark.operators import retrieval as RT
     from streaming_etl_pipeline_spark.pipelines.run import main
     from streaming_etl_pipeline_spark.streaming.ingest import (

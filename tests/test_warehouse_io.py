@@ -86,45 +86,6 @@ def test_read_csv_events_declared_schema(spark, tmp_path):
     assert rows[1].timestamp.isoformat() == "2024-06-15T10:00:10"
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed+sorted on the join key must sort-merge join
-    with zero shuffle exchanges — the co-located-join storage layout
-    SCALE.md prescribes for recurring fact-fact joins."""
-    from streaming_etl_pipeline_spark.sources import read_table
-    from streaming_etl_pipeline_spark.warehouse import write_bucketed
-
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-    write_bucketed(li, "li_b", ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"])
-    write_bucketed(
-        orders, "orders_b", ["o_orderkey"], num_buckets=8, sort_cols=["o_orderkey"]
-    )
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            a = spark.table("li_b")
-            b = spark.table("orders_b")
-            joined = a.join(b, a.l_orderkey == b.o_orderkey)
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan.replace("BroadcastExchange", "")
-            # and it actually computes the right thing
-            want = (
-                li.join(orders, li.l_orderkey == orders.o_orderkey).count()
-            )
-            assert joined.count() == want
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-
-
 def test_compact_consolidates_small_files(spark, tmp_path):
     import glob as _glob
 
@@ -512,63 +473,6 @@ def test_write_bloom_indexed_adds_filters_and_reads_back(spark, tmp_path):
     assert back.filter(F.col("user_id") == -5).count() == 0
 
 
-def test_apply_scd2_incremental_equals_full_rebuild(spark):
-    """Appending a day's change batch incrementally must produce the
-    same history as rebuilding from the full log, and replaying the
-    batch must converge."""
-    from streaming_etl_pipeline_spark.warehouse import apply_scd2, build_scd2
-
-    def log(rows):
-        return spark.createDataFrame(rows, "k long, a string, ts long")
-
-    day1 = [(1, "A", 1), (1, "A", 2), (1, "B", 3),
-            (2, "X", 1), (3, "Z", 5)]
-    day2 = [(1, "B", 10), (1, "C", 11),      # no-op then change
-            (2, "Y", 12), (4, "N", 10)]      # update + brand-new key
-
-    hist1 = build_scd2(log(day1), key="k", attrs=("a",), ts_col="ts")
-    inc = apply_scd2(hist1, log(day2), key="k", attrs=("a",), ts_col="ts")
-    full = build_scd2(log(day1 + day2), key="k", attrs=("a",), ts_col="ts")
-
-    canon = lambda df: sorted(
-        (r.k, r.a, r.effective_from, r.version, r.effective_to, r.is_current)
-        for r in df.collect()
-    )
-    assert canon(inc) == canon(full)
-    # key 3 was untouched by day 2 and passed through
-    assert any(r[0] == 3 for r in canon(inc))
-
-    # replaying day 2 over the result converges
-    again = apply_scd2(inc, log(day2), key="k", attrs=("a",), ts_col="ts")
-    assert canon(again) == canon(inc)
-
-
-def test_jsonl_roundtrip_with_declared_schema(spark, tmp_path):
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-    from streaming_etl_pipeline_spark.sources.io import read_jsonl, write_jsonl
-
-    df = spark.createDataFrame(
-        [(1, "alpha", "en"), (2, "beta", "es"), (3, None, "en")],
-        "doc_id long, text string, lang string",
-    )
-    path = str(tmp_path / "corpus_jsonl")
-    write_jsonl(df, path, partition_by=["lang"], compression="gzip")
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ])
-    back = read_jsonl(spark, path, schema)
-    assert sorted((r.doc_id, r.text, r.lang) for r in back.collect()) == [
-        (1, "alpha", "en"), (2, "beta", "es"), (3, None, "en"),
-    ]
-    # declared schema: no inference pass, stable types
-    assert dict(back.dtypes) == {"doc_id": "bigint", "text": "string",
-                                 "lang": "string"}
-
-
 def test_cli_optimize_consolidates_and_clusters(spark, tmp_path):
     from streaming_etl_pipeline_spark.pipelines.run import main as cli_main
 
@@ -612,7 +516,6 @@ def test_versioned_table_atomic_pointer_and_time_travel(spark, tmp_path):
     from streaming_etl_pipeline_spark.sources.io import (
         latest_version,
         read_versioned,
-        vacuum_versions,
         versioned_write,
     )
 
@@ -628,34 +531,6 @@ def test_versioned_table_atomic_pointer_and_time_travel(spark, tmp_path):
     versioned_write(spark.range(3).selectExpr("id", "id AS x"), tbl)
     assert old.count() == 10
     assert read_versioned(spark, tbl).count() == 3
-    # vacuum keeps the newest snapshots, never the pointer's target
-    removed = vacuum_versions(tbl, keep=2)
-    assert removed == [1]
-    assert read_versioned(spark, tbl).count() == 3
-    import pytest as _p
-
-    with _p.raises(Exception):
-        read_versioned(spark, tbl, version=1).count()
-
-
-def test_versioned_table_history(spark, tmp_path):
-    from streaming_etl_pipeline_spark.sources.io import (
-        table_history,
-        vacuum_versions,
-        versioned_write,
-    )
-
-    tbl = str(tmp_path / "vt_hist")
-    versioned_write(spark.range(10).selectExpr("id", "id AS x"), tbl)
-    versioned_write(spark.range(5).selectExpr("id", "id AS x"), tbl)
-    h = table_history(tbl)
-    assert [r["version"] for r in h] == [2, 1]
-    assert [r["is_current"] for r in h] == [True, False]
-    assert all(r["n_files"] >= 1 and r["bytes"] > 0 for r in h)
-    assert all("T" in r["committed_at"] for r in h)  # ISO timestamps
-    versioned_write(spark.range(3).selectExpr("id", "id AS x"), tbl)
-    vacuum_versions(tbl, keep=2)
-    assert [r["version"] for r in table_history(tbl)] == [3, 2]
 
 
 def test_versioned_concurrent_writers_one_winner(spark, tmp_path):
@@ -754,14 +629,6 @@ def test_versioned_stale_base_raises_before_clobbering(spark, tmp_path, monkeypa
     assert io_mod.versioned_write(
         spark.range(2).selectExpr("id", "id AS x"), tbl
     ) == 3
-
-
-def test_table_history_empty_table(tmp_path):
-    """ADVICE r4 (low): history of a never-written table is [], matching
-    latest_version()'s graceful 0, instead of FileNotFoundError."""
-    from streaming_etl_pipeline_spark.sources.io import table_history
-
-    assert table_history(str(tmp_path / "never_written")) == []
 
 
 def test_cli_optimize_versioned_commits_snapshot(spark, tmp_path):
