@@ -17,6 +17,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 MICROS = 1_000_000
+#: Decimal scale the exact_* helpers accumulate in (2-dp readings and
+#: money) and the digits they round to.
+EXACT_SCALE = 2
+EXACT_DIGITS = 6
 
 
 def time_bucket(col: Column | str, seconds: int) -> Column:
@@ -116,45 +120,47 @@ def exact_sum(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
     return F.sum(c.cast(f"decimal({precision},{scale})"))
 
 
-def exact_avg(col: Column | str, scale: int = 2, digits: int = 6) -> Column:
+def exact_avg(col: Column | str) -> Column:
     """Order-independent mean: exact decimal sum / count, then round.
     DuckDB twin:
-    ``round(CAST(sum(CAST(x AS DECIMAL(18,s))) AS DOUBLE) / count(x), d)``.
+    ``round(CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / count(x), 6)``.
 
-    Parity domain (all exact_* helpers): |x|·10^digits ≲ 2^53. Beyond
-    that, ``round(x, digits)`` is itself not representable as a double
+    Parity domain (all exact_* helpers): |x|·10^EXACT_DIGITS ≲ 2^53.
+    Beyond that, the rounded value is itself not representable as a double
     and engines may differ in the final ulp — fuzz-verified boundary,
     see tests/test_oracle_fuzz.py (magnitude_mix).
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(exact_sum(c, scale).cast("double") / F.count(c), digits)
+    avg = exact_sum(c, EXACT_SCALE).cast("double") / F.count(c)
+    return F.round(avg, EXACT_DIGITS)
 
 
-def exact_avg_sql(col_sql: str, scale: int = 2, digits: int = 6) -> str:
+def exact_avg_sql(col_sql: str) -> str:
     return (
-        f"round(CAST(sum(CAST({col_sql} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-        f" / count({col_sql}), {digits})"
+        f"round(CAST(sum(CAST({col_sql} AS DECIMAL(18,{EXACT_SCALE})))"
+        " AS DOUBLE)"
+        f" / count({col_sql}), {EXACT_DIGITS})"
     )
 
 
-def exact_stddev(col: Column | str, scale: int = 2, digits: int = 6) -> Column:
+def exact_stddev(col: Column | str) -> Column:
     """Order-independent sample stddev via exact decimal sums:
     ``sqrt((Σx² − (Σx)²/n) / (n−1))`` with both Σ computed in DECIMAL.
     Both engines then evaluate the identical double expression on identical
     inputs → bit-identical output. NULL for n ≤ 1 (ANSI semantics).
     DuckDB twin: :func:`exact_stddev_sql`."""
     c = F.col(col) if isinstance(col, str) else col
-    dec = c.cast(f"decimal(18,{scale})")
+    dec = c.cast(f"decimal(18,{EXACT_SCALE})")
     n = F.count(c)
     s1 = F.sum(dec).cast("double")
     s2 = F.sum(dec * dec).cast("double")
     var = (s2 - s1 * s1 / n) / (n - F.lit(1))
     return F.when(
-        n > 1, F.round(F.sqrt(F.greatest(var, F.lit(0.0))), digits)
+        n > 1, F.round(F.sqrt(F.greatest(var, F.lit(0.0))), EXACT_DIGITS)
     ).otherwise(F.lit(None).cast("double"))
 
 
-def exact_stddev_sql(col_sql: str, scale: int = 2, digits: int = 6) -> str:
+def exact_stddev_sql(col_sql: str) -> str:
     # DECIMAL(19) for the squared term: same quantized values as the
     # Spark side's DECIMAL(18) (precision widens storage, not the
     # value), but DuckDB promotes the 19-digit operands to int128 before
@@ -162,13 +168,14 @@ def exact_stddev_sql(col_sql: str, scale: int = 2, digits: int = 6) -> str:
     # and overflows for |x| ≳ 3e9 (tests/test_oracle_fuzz.py
     # ::test_fuzz_magnitude_mix). Both engines' products stay exact, so
     # results are unchanged where both formulations are defined.
-    dec = f"CAST({col_sql} AS DECIMAL(19,{scale}))"
+    dec = f"CAST({col_sql} AS DECIMAL(19,{EXACT_SCALE}))"
     n = f"count({col_sql})"
     s1 = f"CAST(sum({dec}) AS DOUBLE)"
     s2 = f"CAST(sum({dec} * {dec}) AS DOUBLE)"
     var = f"(({s2}) - ({s1}) * ({s1}) / ({n})) / (({n}) - 1)"
     return (
-        f"CASE WHEN {n} > 1 THEN round(sqrt(greatest({var}, 0.0)), {digits}) "
+        f"CASE WHEN {n} > 1 THEN "
+        f"round(sqrt(greatest({var}, 0.0)), {EXACT_DIGITS}) "
         f"ELSE NULL END"
     )
 

@@ -11,9 +11,8 @@ Scale design:
   the only shuffle is on the grouping keys, and AQE coalesces the post-
   shuffle partitions at runtime;
 - percentiles are *exact* (``F.percentile``) by default for oracle parity;
-  pass ``exact_percentiles=False`` to switch to ``percentile_approx``
-  (single-pass sketch, the right call at 100 TB where a sort-based exact
-  percentile would spill);
+  ``skew=True`` switches to ``percentile_approx`` (single-pass sketch, the
+  right call at 100 TB where a sort-based exact percentile would spill);
 - distinct counts are exact by default with an ``approx`` switch
   (HyperLogLog++) for the same reason.
 """
@@ -40,6 +39,15 @@ def _cols(cols: Sequence[str | Column]) -> list[Column]:
 #: Ceiling for the exact-percentile repartition count — a backstop against
 #: a pathological size estimate, far above any sane shuffle width.
 _MAX_EXACT_PCT_PARTITIONS = 1 << 20
+
+#: The windowed percentiles.
+PERCENTILES = (0.5, 0.95, 0.99)
+
+#: :func:`robust_stats`' trim quantiles and its decimal accumulation.
+ROBUST_LOWER = 0.05
+ROBUST_UPPER = 0.95
+ROBUST_SCALE = 6
+ROBUST_DIGITS = 6
 
 
 def _exact_percentile_partitions(df: DataFrame) -> int:
@@ -90,11 +98,8 @@ def windowed_stats(
     bucket_seconds: int,
     value_col: str,
     expected_per_window: int | None = None,
-    percentiles: Sequence[float] = (0.5, 0.95, 0.99),
-    exact_percentiles: bool = True,
     distinct_count_col: str | None = None,
     oracle_safe: bool = True,
-    value_scale: int = 2,
     skew: bool = False,
 ) -> DataFrame:
     """Tumbling-window stats — the reference's gold_sensor_5min /
@@ -108,12 +113,12 @@ def windowed_stats(
     distinct values spread across reducers. The one buffer that grows
     with the hot group's ROW count is the exact-percentile accumulator
     (it must see every value in one place), so ``skew=True`` forces the
-    mergeable ``percentile_approx`` sketch (bounded memory per partial)
-    regardless of ``exact_percentiles``. Measured on a 50 %-hot-key
+    mergeable ``percentile_approx`` sketch (bounded memory per partial).
+    Measured on a 50 %-hot-key
     fixture in ``tests/test_skew.py``; numbers in SCALE.md.
 
     Output: keys + window_start/window_end + avg/min/max/reading_count/
-    stddev + pNN_value columns (+ sensor_health_pct when
+    stddev + p50/p95/p99_value columns (+ sensor_health_pct when
     ``expected_per_window`` is given, + unique_<col>_count when
     ``distinct_count_col`` is given).
 
@@ -123,12 +128,10 @@ def windowed_stats(
     double path (marginally cheaper, result depends on accumulation order).
     """
     v = F.col(value_col)
-    pct_fn = (
-        F.percentile if exact_percentiles and not skew else F.percentile_approx
-    )
+    pct_fn = F.percentile_approx if skew else F.percentile
     if oracle_safe:
-        avg_c = exact_avg(v, scale=value_scale)
-        std_c = exact_stddev(v, scale=value_scale)
+        avg_c = exact_avg(v)
+        std_c = exact_stddev(v)
     else:
         avg_c, std_c = F.avg(v), null_if_nan(F.stddev(v))
     aggs: list[Column] = [
@@ -141,15 +144,9 @@ def windowed_stats(
     # One shared percentile accumulator for all requested quantiles (the
     # array form sorts/sketches the group once, vs once per quantile —
     # the dominant agg cost in the 5-min/hourly gold shapes).
-    if len(percentiles) > 1:
-        aggs.append(
-            pct_fn(v, F.array(*[F.lit(p) for p in percentiles])).alias("_pcts")
-        )
-    elif percentiles:
-        pc = pct_fn(v, F.lit(percentiles[0]))
-        if oracle_safe:
-            pc = F.round(pc, 4)
-        aggs.append(pc.alias(f"p{int(percentiles[0] * 100)}_value"))
+    aggs.append(
+        pct_fn(v, F.array(*[F.lit(p) for p in PERCENTILES])).alias("_pcts")
+    )
     if distinct_count_col:
         aggs.append(
             F.countDistinct(distinct_count_col).alias(
@@ -157,7 +154,7 @@ def windowed_stats(
             )
         )
     pre = df.withColumn("window_start", time_bucket(ts_col, bucket_seconds))
-    if exact_percentiles and not skew and percentiles:
+    if not skew:
         # Exact-percentile partials are pure value buffers — map-side
         # "partial aggregation" reduces nothing, yet pays per-(partition,
         # group) buffer construction, serialization across the exchange,
@@ -196,13 +193,12 @@ def windowed_stats(
             ),
         )
     )
-    if len(percentiles) > 1:
-        for i, p in enumerate(percentiles):
-            pc = F.element_at("_pcts", i + 1)
-            if oracle_safe:
-                pc = F.round(pc, 4)
-            out = out.withColumn(f"p{int(p * 100)}_value", pc)
-        out = out.drop("_pcts")
+    for i, p in enumerate(PERCENTILES):
+        pc = F.element_at("_pcts", i + 1)
+        if oracle_safe:
+            pc = F.round(pc, 4)
+        out = out.withColumn(f"p{int(p * 100)}_value", pc)
+    out = out.drop("_pcts")
     if expected_per_window:
         # sensor_health_pct — silver_to_gold.py:69-75 (300 expected / 5 min).
         out = out.withColumn(
@@ -220,15 +216,14 @@ def daily_summary(
     anomaly_col: str | None = None,
     distinct_count_col: str | None = None,
     oracle_safe: bool = True,
-    value_scale: int = 2,
 ) -> DataFrame:
     """Calendar-day rollup — gold_daily_summary (``silver_to_gold.py:137-161``):
     per-day avg/min/max/total + conditional anomaly count + distinct entities
     + a display date string."""
     v = F.col(value_col)
     if oracle_safe:
-        avg_c = exact_avg(v, scale=value_scale)
-        std_c = exact_stddev(v, scale=value_scale)
+        avg_c = exact_avg(v)
+        std_c = exact_stddev(v)
     else:
         avg_c, std_c = F.avg(v), null_if_nan(F.stddev(v))
     aggs = [
@@ -330,14 +325,10 @@ def robust_stats(
     df: DataFrame,
     value_col: str,
     keys: Sequence[str] = (),
-    lower: float = 0.05,
-    upper: float = 0.95,
-    scale: int = 6,
-    digits: int = 6,
 ) -> DataFrame:
     """Outlier-robust location stats per key: trimmed mean (drop values
-    outside the [lower, upper] quantiles), winsorized mean (clip to
-    them), and MAD (median absolute deviation from the median).
+    outside the [ROBUST_LOWER, ROBUST_UPPER] quantiles), winsorized mean
+    (clip to them), and MAD (median absolute deviation from the median).
 
     Two aggregation passes: pass 1 computes the three quantile cutoffs
     per key (exact ``F.percentile`` — swap for ``percentile_approx`` at
@@ -349,8 +340,8 @@ def robust_stats(
     """
     v = F.col(value_col)
     bounds = df.groupBy(*keys).agg(
-        F.percentile(v, lower).alias("_q_lo"),
-        F.percentile(v, upper).alias("_q_hi"),
+        F.percentile(v, ROBUST_LOWER).alias("_q_lo"),
+        F.percentile(v, ROBUST_UPPER).alias("_q_hi"),
         F.percentile(v, 0.5).alias("_med"),
     )
     joined = (
@@ -358,17 +349,17 @@ def robust_stats(
         if keys
         else df.crossJoin(F.broadcast(bounds))
     )
-    dec = f"decimal(18,{scale})"
+    dec = f"decimal(18,{ROBUST_SCALE})"
     in_range = v.between(F.col("_q_lo"), F.col("_q_hi"))
     clipped = F.least(F.greatest(v, F.col("_q_lo")), F.col("_q_hi"))
     return joined.groupBy(*keys).agg(
         F.round(
             F.sum(F.when(in_range, v.cast(dec))).cast("double")
             / F.count(F.when(in_range, F.lit(1))),
-            digits,
+            ROBUST_DIGITS,
         ).alias("trimmed_mean"),
         F.round(
-            F.sum(clipped.cast(dec)).cast("double") / F.count(v), digits
+            F.sum(clipped.cast(dec)).cast("double") / F.count(v), ROBUST_DIGITS
         ).alias("winsorized_mean"),
         F.round(F.percentile(F.abs(v - F.col("_med")), 0.5), 4).alias("mad"),
         F.count(v).alias("n_values"),
@@ -379,21 +370,17 @@ def robust_stats_sql(
     table: str,
     value_col: str,
     keys: Sequence[str] = (),
-    lower: float = 0.05,
-    upper: float = 0.95,
-    scale: int = 6,
-    digits: int = 6,
 ) -> str:
     """DuckDB oracle twin of :func:`robust_stats`."""
     keys_sql = ", ".join(keys)
     key_sel = f"{keys_sql}, " if keys else ""
     join = f"JOIN b USING ({keys_sql})" if keys else "CROSS JOIN b"
-    dec = f"DECIMAL(18,{scale})"
+    dec = f"DECIMAL(18,{ROBUST_SCALE})"
     v = value_col
     return f"""
     WITH b AS (
-      SELECT {key_sel}quantile_cont({v}, {lower}) AS _q_lo,
-             quantile_cont({v}, {upper}) AS _q_hi,
+      SELECT {key_sel}quantile_cont({v}, {ROBUST_LOWER}) AS _q_lo,
+             quantile_cont({v}, {ROBUST_UPPER}) AS _q_hi,
              quantile_cont({v}, 0.5) AS _med
       FROM {table}{' GROUP BY ' + keys_sql if keys else ''}
     )
@@ -401,9 +388,9 @@ def robust_stats_sql(
            round(CAST(sum(CASE WHEN {v} BETWEEN _q_lo AND _q_hi
                           THEN CAST({v} AS {dec}) END) AS DOUBLE)
                  / count(CASE WHEN {v} BETWEEN _q_lo AND _q_hi THEN 1 END),
-                 {digits}) AS trimmed_mean,
+                 {ROBUST_DIGITS}) AS trimmed_mean,
            round(CAST(sum(CAST(least(greatest({v}, _q_lo), _q_hi) AS {dec}))
-                      AS DOUBLE) / count({v}), {digits}) AS winsorized_mean,
+                      AS DOUBLE) / count({v}), {ROBUST_DIGITS}) AS winsorized_mean,
            round(quantile_cont(abs({v} - _med), 0.5), 4) AS mad,
            count({v}) AS n_values
     FROM {table} {join}

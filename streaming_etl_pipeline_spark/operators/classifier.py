@@ -36,6 +36,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import md5_long, md5_long_sql
+from streaming_etl_pipeline_spark.sources.io import DOC_ID_COL, TEXT_COL
+
+#: Hashed feature buckets of the Naive Bayes quality classifier.
+NB_BUCKETS = 4096
 
 __all__ = [
     "nb_quality_scores",
@@ -52,16 +56,15 @@ def _grams(text_col: str) -> Column:
 def nb_quality_scores(
     docs: DataFrame,
     labeled: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 4096,
+    text_col: str = TEXT_COL,
+    id_col: str = DOC_ID_COL,
 ) -> DataFrame:
     """Train a hashed-n-gram multinomial NB quality model on ``labeled``
     (rows ``(doc_id, label boolean)`` — the weak-supervision subset) and
     score EVERY document in ``docs``.
 
     Per bucket b:  ``llr(b) = ln p̂(b|pos) − ln p̂(b|neg)`` with add-1
-    smoothing over ``buckets`` cells; per doc:  ``nb_score = Σ_g
+    smoothing over ``NB_BUCKETS`` cells; per doc:  ``nb_score = Σ_g
     llr(h(g)) + ln((n_pos+1)/(n_neg+1))`` and ``nb_keep = score > 0``.
     Features are word uni+bigrams WITH multiplicity (the fastText
     default), hashed with the corpus-wide 60-bit md5.
@@ -75,7 +78,7 @@ def nb_quality_scores(
     train_grams = (
         docs.join(labeled.select(id_col, "label"), id_col)
         .select("label", F.explode(grams).alias("g"))
-        .select((md5_long("g") % buckets).alias("b"), "label")
+        .select((md5_long("g") % NB_BUCKETS).alias("b"), "label")
     )
     cnt = train_grams.groupBy("b").agg(
         F.sum(F.when(F.col("label"), 1).otherwise(0))
@@ -89,7 +92,7 @@ def nb_quality_scores(
     # with their smoothed ratio (training is a subset: inner-joining the
     # observed buckets would silently drop such grams).
     full = (
-        spark.range(buckets)
+        spark.range(NB_BUCKETS)
         .select(F.col("id").alias("b"))
         .join(cnt, "b", "left")
         .fillna(0, ["pos_cnt", "neg_cnt"])
@@ -100,11 +103,11 @@ def nb_quality_scores(
     llr = F.round(
         F.log(
             (F.col("pos_cnt") + 1.0)
-            / (F.sum("pos_cnt").over(w_all) + float(buckets))
+            / (F.sum("pos_cnt").over(w_all) + float(NB_BUCKETS))
         )
         - F.log(
             (F.col("neg_cnt") + 1.0)
-            / (F.sum("neg_cnt").over(w_all) + float(buckets))
+            / (F.sum("neg_cnt").over(w_all) + float(NB_BUCKETS))
         ),
         6,
     )
@@ -122,7 +125,7 @@ def nb_quality_scores(
     )
     scored = (
         docs.select(F.col(id_col), F.explode(grams).alias("g"))
-        .select(id_col, (md5_long("g") % buckets).alias("b"))
+        .select(id_col, (md5_long("g") % NB_BUCKETS).alias("b"))
         .join(F.broadcast(model), "b")
         .groupBy(id_col)
         .agg(
@@ -140,29 +143,23 @@ def nb_quality_scores(
     )
 
 
-def nb_quality_scores_sql(
-    docs_sql: str,
-    labeled_sql: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 4096,
-) -> str:
+def nb_quality_scores_sql(docs_sql: str, labeled_sql: str) -> str:
     """DuckDB oracle twin of :func:`nb_quality_scores`. ``docs_sql``
     yields ``(doc_id, text)``; ``labeled_sql`` yields
     ``(doc_id, label boolean)``."""
     from streaming_etl_pipeline_spark.operators.dedup import ngrams_list_sql
 
     grams = (
-        f"list_concat({ngrams_list_sql(text_col, 1)}, "
-        f"{ngrams_list_sql(text_col, 2)})"
+        f"list_concat({ngrams_list_sql('text', 1)}, "
+        f"{ngrams_list_sql('text', 2)})"
     )
-    bucket = f"({md5_long_sql('g')} % {buckets})"
+    bucket = f"({md5_long_sql('g')} % {NB_BUCKETS})"
     return f"""
     WITH docs AS ({docs_sql}),
     labeled AS ({labeled_sql}),
     traing AS (
       SELECT l.label, unnest({grams}) AS g
-      FROM docs d JOIN labeled l USING ({id_col})
+      FROM docs d JOIN labeled l USING (doc_id)
     ),
     cnt AS (
       SELECT {bucket} AS b,
@@ -173,14 +170,14 @@ def nb_quality_scores_sql(
     fullb AS (
       SELECT r.b, COALESCE(pos_cnt, 0) AS pos_cnt,
              COALESCE(neg_cnt, 0) AS neg_cnt
-      FROM range({buckets}) r(b) LEFT JOIN cnt ON r.b = cnt.b
+      FROM range({NB_BUCKETS}) r(b) LEFT JOIN cnt ON r.b = cnt.b
     ),
     model AS (
       SELECT b,
              round(ln((pos_cnt + 1.0) /
-                      (CAST(sum(pos_cnt) OVER () AS BIGINT) + {buckets}.0))
+                      (CAST(sum(pos_cnt) OVER () AS BIGINT) + {NB_BUCKETS}.0))
                  - ln((neg_cnt + 1.0) /
-                      (CAST(sum(neg_cnt) OVER () AS BIGINT) + {buckets}.0)),
+                      (CAST(sum(neg_cnt) OVER () AS BIGINT) + {NB_BUCKETS}.0)),
                    6) AS llr
       FROM fullb
     ),
@@ -192,15 +189,15 @@ def nb_quality_scores_sql(
       FROM labeled
     ),
     docg AS (
-      SELECT {id_col}, {bucket} AS b
-      FROM (SELECT {id_col}, unnest({grams}) AS g FROM docs)
+      SELECT doc_id, {bucket} AS b
+      FROM (SELECT doc_id, unnest({grams}) AS g FROM docs)
     ),
     scored AS (
-      SELECT {id_col}, CAST(count(*) AS BIGINT) AS n_grams,
+      SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
              sum(CAST(llr AS DECIMAL(38,6))) AS _s
       FROM docg JOIN model USING (b) GROUP BY 1
     )
-    SELECT {id_col}, n_grams,
+    SELECT doc_id, n_grams,
            CAST(_s + (SELECT _prior FROM prior) AS DOUBLE) AS nb_score,
            (CAST(_s + (SELECT _prior FROM prior) AS DOUBLE) > 0) AS nb_keep
     FROM scored

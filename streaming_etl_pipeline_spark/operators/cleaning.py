@@ -8,9 +8,7 @@ union-merge (J1), and lineage columns (P3).
 Scale design:
 - dedup and z-score both shuffle once on the entity key; at 1000 executors
   a hot entity (one sensor producing most rows) would skew that shuffle —
-  AQE skew handling covers joins, and for pathological groupBy skew the
-  dedup can run as a two-phase ``max_by`` aggregate instead (exposed as
-  ``deduplicate_latest_agg``);
+  AQE skew handling covers joins;
 - the rolling z-score is a bounded ROWS frame (trailing N+1 rows), so state
   per partition is O(window), never O(partition);
 - row counts for audit come from ``df.observe`` in the pipeline runner, not
@@ -35,6 +33,7 @@ ANOMALY_RANGES: dict[str, tuple[float, float]] = {
 ZSCORE_WINDOW = 100
 ZSCORE_THRESHOLD = 3.0
 PIPELINE_VERSION = "1.2.0"
+FLAG_COL = "is_anomaly"
 
 
 def deduplicate_latest(
@@ -42,23 +41,11 @@ def deduplicate_latest(
     keys: Sequence[str],
     order_col: str,
     tiebreak: Sequence[str] = (),
-    skew: bool = False,
 ) -> DataFrame:
     """W1 — keep the latest row per key (latest ``order_col`` wins; the
     reference keeps the newest ``ingestion_time`` per ``(sensor_id,
     event_time)``, ``bronze_to_silver.py:40-52``). Add a unique ``tiebreak``
-    column for full determinism when ``order_col`` can tie.
-
-    ``skew=True`` routes to :func:`deduplicate_latest_agg`: the
-    ``row_number`` window must SORT every row of a key inside one task,
-    so one hot key (a chatty sensor, a default/null id) serializes the
-    stage; the ``max_by`` aggregation keeps only one struct per key per
-    map task and merges partials, so the hot key costs one struct per
-    upstream partition instead of a single-task sort of all its rows.
-    Same result either way (measured on a 50 %-hot-key fixture in
-    ``tests/test_skew.py``; numbers in SCALE.md)."""
-    if skew:
-        return deduplicate_latest_agg(df, keys, order_col, tiebreak)
+    column for full determinism when ``order_col`` can tie."""
     order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
@@ -66,23 +53,6 @@ def deduplicate_latest(
         .filter(F.col("_row_num") == 1)
         .drop("_row_num")
     )
-
-
-def deduplicate_latest_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """Skew-robust W1 variant: ``max_by`` over a struct of all columns,
-    ordered by ``(order_col, *tiebreak)`` (struct comparison is
-    lexicographic, matching the window variant's DESC-major order).
-    Partial aggregation happens map-side, so one hot key degrades to a
-    single reducer holding one struct, not all duplicate rows."""
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    rank = F.struct(F.col(order_col), *[F.col(c) for c in tiebreak])
-    out = df.groupBy(*keys).agg(F.max_by(payload, rank).alias("_p"))
-    return out.select(*[F.col(f"_p.{c}").alias(c) for c in df.columns])
 
 
 def drop_null_required(df: DataFrame, required: Sequence[str]) -> DataFrame:
@@ -96,7 +66,6 @@ def flag_out_of_range(
     type_col: str,
     value_col: str,
     ranges: dict[str, tuple[float, float]] | None = None,
-    flag_col: str = "is_anomaly",
 ) -> DataFrame:
     """P7 — per-type range anomaly flag (``bronze_to_silver.py:55-69``).
 
@@ -109,7 +78,7 @@ def flag_out_of_range(
             (F.col(type_col) == stype)
             & ((F.col(value_col) < lo) | (F.col(value_col) > hi))
         )
-    return df.withColumn(flag_col, F.when(cond, True).otherwise(False))
+    return df.withColumn(FLAG_COL, F.when(cond, True).otherwise(False))
 
 
 def flag_zscore(
@@ -117,18 +86,15 @@ def flag_zscore(
     partition_cols: Sequence[str],
     order_cols: Sequence[str],
     value_col: str,
-    window_size: int = ZSCORE_WINDOW,
-    threshold: float = ZSCORE_THRESHOLD,
-    flag_col: str = "is_anomaly",
 ) -> DataFrame:
     """W2+W3 — rolling z-score anomaly detection
-    (``bronze_to_silver.py:87-115``): trailing ``window_size+1``-row mean and
-    sample stddev per entity; |z| > threshold flags the row; OR-merged into
-    an existing ``flag_col`` if present."""
+    (``bronze_to_silver.py:87-115``): trailing ``ZSCORE_WINDOW+1``-row mean
+    and sample stddev per entity; |z| > ``ZSCORE_THRESHOLD`` flags the row;
+    OR-merged into an existing ``FLAG_COL`` if present."""
     w = (
         Window.partitionBy(*partition_cols)
         .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(-window_size, 0)
+        .rowsBetween(-ZSCORE_WINDOW, 0)
     )
     v = F.col(value_col)
     rolling_avg = F.avg(v).over(w)
@@ -136,15 +102,15 @@ def flag_zscore(
     z = F.abs((v - rolling_avg) / rolling_std)
     is_z_anom = (
         F.when(rolling_std.isNull() | (rolling_std == 0), False)
-        .otherwise(z > threshold)
+        .otherwise(z > ZSCORE_THRESHOLD)
     )
     merged = (
-        (F.col(flag_col) | is_z_anom) if flag_col in df.columns else is_z_anom
+        (F.col(FLAG_COL) | is_z_anom) if FLAG_COL in df.columns else is_z_anom
     )
     return (
         df.withColumn("_rolling_avg", rolling_avg)
         .withColumn("_rolling_std", rolling_std)
-        .withColumn(flag_col, merged)
+        .withColumn(FLAG_COL, merged)
         .drop("_rolling_avg", "_rolling_std")
     )
 
@@ -154,24 +120,19 @@ def merge_late_data(
     new: DataFrame,
     keys: Sequence[str],
     order_col: str,
-    tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """J1 — late-data upsert (``bronze_to_silver.py:145-159``): schema-
     tolerant union then keep-latest dedup, so a corrected late row with a
     newer ``order_col`` replaces the original."""
     unioned = existing.unionByName(new, allowMissingColumns=True)
-    return deduplicate_latest(unioned, keys, order_col, tiebreak)
+    return deduplicate_latest(unioned, keys, order_col)
 
 
-def add_lineage(
-    df: DataFrame,
-    source_file: str = "kafka-stream",
-    pipeline_version: str = PIPELINE_VERSION,
-) -> DataFrame:
+def add_lineage(df: DataFrame, source_file: str = "kafka-stream") -> DataFrame:
     """P3 — lineage columns (``bronze_to_silver.py:127-142``)."""
     return (
         df.withColumn("ingestion_timestamp", F.current_timestamp())
         .withColumn("source_file", F.lit(source_file))
         .withColumn("processing_timestamp", F.current_timestamp())
-        .withColumn("pipeline_version", F.lit(pipeline_version))
+        .withColumn("pipeline_version", F.lit(PIPELINE_VERSION))
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.operators.similarity import ivf_assign
+from streaming_etl_pipeline_spark.sources.io import VEC_COL, VEC_ID_COL
 
 
 def _cell_means(assigned: DataFrame, vec_col: str) -> list[tuple[int, list[float]]]:
@@ -67,8 +68,8 @@ def kmeans_fit(
     vectors: DataFrame,
     k: int = 16,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
     use_arrow: bool = False,
 ) -> DataFrame:
     """Train k centroids with ``iters`` Lloyd iterations; returns a
@@ -126,8 +127,8 @@ def prototype_prune(
     vectors: DataFrame,
     centroids: DataFrame,
     drop_frac: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
     use_arrow: bool = False,
 ) -> DataFrame:
     """Prototype-based data pruning (Sorscher et al. 2022, "Beyond

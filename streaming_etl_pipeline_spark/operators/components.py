@@ -37,6 +37,10 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Endpoint columns of a near-dup pair frame.
+SRC_COL = "id_a"
+DST_COL = "id_b"
+
 #: Default hub-degree threshold for ``skew=True`` on the graph family:
 #: a node whose (in/out) degree exceeds this gets its per-round join
 #: rows salted across SKEW_SALTS sub-keys. Crawl graphs are power-law —
@@ -187,7 +191,6 @@ def connected_components_star(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    rounds_out: list | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -219,8 +222,8 @@ def connected_components_star(
     # seed with one small-star pass: orients every edge toward the local
     # minimum before the first contraction, saving a full round on chains
     stars = _small_star(edges).localCheckpoint()
-    changed, rounds = 0, 0
-    for rounds in range(1, max_iter + 1):
+    changed = 0
+    for _ in range(max_iter):
         sym_in = stars.union(
             stars.select(F.col("v").alias("u"), F.col("u").alias("v"))
         ).distinct()
@@ -250,8 +253,6 @@ def connected_components_star(
             f"{max_iter} nodes or a bug; returning a partial mapping "
             "would canonicalize clusters wrong"
         )
-    if rounds_out is not None:
-        rounds_out.append(rounds)
     # at the fixpoint every node points directly at its component min
     return nodes.join(
         stars.select(F.col("u").alias("node"), F.col("v").alias("comp")),
@@ -265,8 +266,6 @@ def connected_components_star(
 
 def dedup_clusters(
     pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iter: int = 20,
     algorithm: str = "label_prop",
 ) -> DataFrame:
@@ -281,9 +280,13 @@ def dedup_clusters(
     stale labels. ``algorithm="star"`` switches to large-star/small-star
     contraction (O(log n) rounds) for chain-heavy graphs."""
     if algorithm == "star":
-        cc = connected_components_star(pairs, src=src, dst=dst, max_iter=max_iter)
+        cc = connected_components_star(
+            pairs, src=SRC_COL, dst=DST_COL, max_iter=max_iter
+        )
     else:
-        cc = connected_components(pairs, src=src, dst=dst, max_iter=max_iter)
+        cc = connected_components(
+            pairs, src=SRC_COL, dst=DST_COL, max_iter=max_iter
+        )
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("comp")
@@ -294,7 +297,7 @@ def dedup_clusters(
     )
 
 
-def connected_components_sql(pairs_sql: str, src: str = "id_a", dst: str = "id_b") -> str:
+def connected_components_sql(pairs_sql: str) -> str:
     """DuckDB oracle twin: recursive label reachability + min per node.
 
     Enumerates (node, reachable-label) pairs to a fixpoint — exponential
@@ -303,9 +306,9 @@ def connected_components_sql(pairs_sql: str, src: str = "id_a", dst: str = "id_b
     return f"""
     WITH RECURSIVE pair_input AS MATERIALIZED ({pairs_sql}),
     edges AS MATERIALIZED (
-      SELECT {src} AS u, {dst} AS v FROM pair_input
+      SELECT {SRC_COL} AS u, {DST_COL} AS v FROM pair_input
       UNION
-      SELECT {dst} AS u, {src} AS v FROM pair_input
+      SELECT {DST_COL} AS u, {SRC_COL} AS v FROM pair_input
     ),
     reach(node, lab) AS (
       SELECT u, u FROM edges
@@ -322,8 +325,6 @@ def connected_components_sql(pairs_sql: str, src: str = "id_a", dst: str = "id_b
 def cluster_representatives(
     clusters: DataFrame,
     scores: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "canonical_id",
     score_col: str = "score",
     hint_small: bool = False,
 ) -> DataFrame:
@@ -355,33 +356,31 @@ def cluster_representatives(
     """
     maybe_bcast = F.broadcast if hint_small else (lambda d: d)
     scored = maybe_bcast(clusters).join(
-        scores.select(F.col(id_col), F.col(score_col)), id_col
+        scores.select(F.col("doc_id"), F.col(score_col)), "doc_id"
     )
     # max(struct(score, -doc_id)) ≡ argmax by (score DESC, doc_id ASC):
     # struct comparison is lexicographic, so negating the id makes the
     # smaller id win ties.
-    reps = scored.groupBy(cluster_col).agg(
+    reps = scored.groupBy("canonical_id").agg(
         F.max(
-            F.struct(F.col(score_col), (-F.col(id_col)).alias("_neg_id"))
+            F.struct(F.col(score_col), (-F.col("doc_id")).alias("_neg_id"))
         ).alias("_best")
     ).select(
-        cluster_col, (-F.col("_best._neg_id")).alias("rep_id")
+        "canonical_id", (-F.col("_best._neg_id")).alias("rep_id")
     )
     return (
-        scored.join(maybe_bcast(reps), cluster_col)
+        scored.join(maybe_bcast(reps), "canonical_id")
         .select(
-            id_col,
-            cluster_col,
+            "doc_id",
+            "canonical_id",
             "cluster_size",
             "rep_id",
-            (F.col(id_col) == F.col("rep_id")).alias("is_rep"),
+            (F.col("doc_id") == F.col("rep_id")).alias("is_rep"),
         )
     )
 
 
-def cluster_representatives_sql(
-    clusters_sql: str, scores_sql: str, score_col: str = "score"
-) -> str:
+def cluster_representatives_sql(clusters_sql: str, scores_sql: str) -> str:
     """DuckDB oracle twin of :func:`cluster_representatives` — the rep
     is a ``first_value`` window ordered by (score DESC, doc_id ASC)."""
     return f"""
@@ -389,7 +388,7 @@ def cluster_representatives_sql(
     sc AS ({scores_sql}),
     scored AS (
       SELECT clus.doc_id, clus.canonical_id, clus.cluster_size,
-             sc.{score_col} AS _score
+             sc.score AS _score
       FROM clus JOIN sc USING (doc_id)
     )
     SELECT doc_id, canonical_id, cluster_size,
@@ -688,7 +687,6 @@ def pagerank(
 def pagerank_sql(
     edges_sql: str,
     iters: int = 3,
-    damping: float = 0.85,
     redistribute_dangling: bool = False,
     scale: int = PAGERANK_SCALE,
 ) -> str:
@@ -713,7 +711,7 @@ def pagerank_sql(
             "dang AS (SELECT node FROM nodes LEFT JOIN deg "
             "ON nodes.node = deg.src WHERE deg.src IS NULL)"
         )
-    tel = f"CAST(floor({sc} * (1.0 - {damping}) / {n} + 0.5) AS BIGINT)"
+    tel = f"CAST(floor({sc} * (1.0 - {0.85}) / {n} + 0.5) AS BIGINT)"
     for i in range(iters):
         parts.append(
             f"s{i + 1} AS (SELECT e.dst, CAST(sum(CAST(floor("
@@ -729,12 +727,12 @@ def pagerank_sql(
                 f"AS BIGINT) AS dang_u FROM r{i} JOIN dang USING (node))"
             )
             extra = (
-                f" + CAST(floor({damping} * (CAST((SELECT dang_u FROM "
+                f" + CAST(floor({0.85} * (CAST((SELECT dang_u FROM "
                 f"d{i + 1}) AS DOUBLE) / {n}) + 0.5) AS BIGINT)"
             )
         parts.append(
             f"r{i + 1} AS (SELECT nodes.node, {tel} + CAST(floor("
-            f"{damping} * CAST(coalesce(s, 0) AS DOUBLE) + 0.5) AS BIGINT)"
+            f"{0.85} * CAST(coalesce(s, 0) AS DOUBLE) + 0.5) AS BIGINT)"
             f"{extra} AS rank_u "
             f"FROM nodes LEFT JOIN s{i + 1} ON nodes.node = s{i + 1}.dst)"
         )

@@ -24,6 +24,19 @@ from pyspark.sql import functions as F
 from streaming_etl_pipeline_spark.functions.core import md5_long, md5_long_sql, tokenize
 from streaming_etl_pipeline_spark.operators.dedup import shingles, shingles_sql
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
+from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    DOCS_TABLE,
+    SOURCE_COL,
+    TEXT_COL,
+)
+
+#: Train/val fractions and hash seed of the split assignment, and the
+#: token-count column :func:`pack_sequences` reads.
+SPLIT_TRAIN = 0.9
+SPLIT_VAL = 0.05
+SPLIT_SEED = "split"
+TOKENS_COL = "n_tokens"
 
 # ---------------------------------------------------------------------------
 # Context-window chunking (overlapping token windows)
@@ -34,8 +47,8 @@ def context_chunks(
     df: DataFrame,
     max_tokens: int = 32,
     overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     keep_text: bool = False,
 ) -> DataFrame:
     """Explode each document into overlapping context windows of at most
@@ -78,21 +91,22 @@ def context_chunks(
 
 
 def context_chunks_sql(
-    table: str = "documents",
+    table: str = DOCS_TABLE,
     max_tokens: int = 32,
     overlap: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> str:
     """DuckDB twin of :func:`context_chunks` (lockstep double-unnest)."""
     stride = max_tokens - overlap
-    toks = f"list_filter(string_split_regex({norm_text_sql(text_col)}, '\\s+'), t -> t <> '')"
+    toks = (
+        f"list_filter(string_split_regex({norm_text_sql(TEXT_COL)}, '\\s+'), "
+        "t -> t <> '')"
+    )
     n_chunks = (
         f"greatest(1, CAST(ceil((len({toks}) - {overlap}) / {stride}.0) AS INT))"
     )
     win = f"({toks})[i * {stride} + 1 : i * {stride} + {max_tokens}]"
     return f"""
-    SELECT {id_col},
+    SELECT {DOC_ID_COL},
            unnest(range({n_chunks})) AS chunk_id,
            unnest(list_transform(range({n_chunks}), i -> len({win}))) AS n_tokens,
            unnest(list_transform(range({n_chunks}),
@@ -112,7 +126,7 @@ _SPLIT_MOD = 1_000_000
 
 def assign_splits(
     df: DataFrame,
-    key_col: str = "doc_id",
+    key_col: str = DOC_ID_COL,
     train: float = 0.9,
     val: float = 0.05,
     seed: str = "split",
@@ -135,16 +149,11 @@ def assign_splits(
     )
 
 
-def assign_splits_sql(
-    key_sql: str = "doc_id",
-    train: float = 0.9,
-    val: float = 0.05,
-    seed: str = "split",
-) -> str:
+def assign_splits_sql(key_sql: str = DOC_ID_COL) -> str:
     """DuckDB twin of :func:`assign_splits` (the split CASE expression)."""
-    t_hi = int(train * _SPLIT_MOD)
-    v_hi = t_hi + int(val * _SPLIT_MOD)
-    b = f"({md5_long_sql(key_sql, seed)} % {_SPLIT_MOD})"
+    t_hi = int(SPLIT_TRAIN * _SPLIT_MOD)
+    v_hi = t_hi + int(SPLIT_VAL * _SPLIT_MOD)
+    b = f"({md5_long_sql(key_sql, SPLIT_SEED)} % {_SPLIT_MOD})"
     return (
         f"CASE WHEN {b} < {t_hi} THEN 'train' "
         f"WHEN {b} < {v_hi} THEN 'val' ELSE 'test' END"
@@ -168,7 +177,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redacted_text(text_col: str = "text") -> Column:
+def redacted_text(text_col: str = TEXT_COL) -> Column:
     """The redacted (normalized) text expression — exposed separately so
     pipelines can *carry* scrubbed text downstream, while the gated
     :func:`redact_pii` query surfaces only its hash."""
@@ -178,9 +187,7 @@ def redacted_text(text_col: str = "text") -> Column:
     return clean
 
 
-def redact_pii(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Scrub emails / SSNs / phone numbers / IPv4 addresses from document
     text, replacing each with a typed placeholder, and count what was
     removed per class. Output: ``(doc_id, n_email, n_ssn, n_phone,
@@ -194,7 +201,7 @@ def redact_pii(
     # stage the normalized text once: every count and the replace chain
     # reference it, and each inline reference would re-run the
     # lower+regex normalization pass
-    staged = df.select(id_col, norm_text(text_col).alias("_p_norm"))
+    staged = df.select(DOC_ID_COL, norm_text(TEXT_COL).alias("_p_norm"))
     counts = [
         F.regexp_count(F.col("_p_norm"), F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, pat, _ in PII_PATTERNS
@@ -202,14 +209,12 @@ def redact_pii(
     clean: Column = F.col("_p_norm")
     for _, pat, repl in PII_PATTERNS:
         clean = F.regexp_replace(clean, pat, repl)
-    return staged.select(id_col, *counts, F.md5(clean).alias("clean_md5"))
+    return staged.select(DOC_ID_COL, *counts, F.md5(clean).alias("clean_md5"))
 
 
-def redact_pii_sql(
-    table: str = "documents", id_col: str = "doc_id", text_col: str = "text"
-) -> str:
+def redact_pii_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB oracle twin of :func:`redact_pii`."""
-    norm = norm_text_sql(text_col)
+    norm = norm_text_sql(TEXT_COL)
     counts = ",\n           ".join(
         f"CAST(len(regexp_extract_all({norm}, '{pat}')) AS BIGINT) AS n_{name}"
         for name, pat, _ in PII_PATTERNS
@@ -218,7 +223,7 @@ def redact_pii_sql(
     for _, pat, repl in PII_PATTERNS:
         clean = f"regexp_replace({clean}, '{pat}', '{repl}', 'g')"
     return f"""
-    SELECT {id_col},
+    SELECT {DOC_ID_COL},
            {counts},
            md5({clean}) AS clean_md5
     FROM {table}
@@ -235,8 +240,8 @@ def contamination_stats(
     benchmark: DataFrame,
     k: int = 5,
     flag_threshold: float = 0.10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
 ) -> DataFrame:
     """Per-document overlap with an evaluation benchmark: the fraction of
     a document's word ``k``-gram shingles that also appear anywhere in
@@ -287,43 +292,36 @@ def contamination_stats(
 
 
 def contamination_stats_sql(
-    table: str = "documents",
+    table: str = DOCS_TABLE,
     benchmark_cte: str = "benchmark",
     k: int = 5,
-    flag_threshold: float = 0.10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> str:
     """DuckDB oracle twin of :func:`contamination_stats` (callers supply
     a CTE named ``benchmark_cte`` with a ``text`` column)."""
     return f"""
-    SELECT {id_col}, n_shingles, n_contaminated,
+    SELECT {DOC_ID_COL}, n_shingles, n_contaminated,
            round(n_contaminated * 1.0 / n_shingles, 6) AS contamination_rate,
-           round(n_contaminated * 1.0 / n_shingles, 6) >= {flag_threshold} AS flagged
+           round(n_contaminated * 1.0 / n_shingles, 6) >= {0.10} AS flagged
     FROM (
-      SELECT d.{id_col},
+      SELECT d.{DOC_ID_COL},
              count(*) AS n_shingles,
              CAST(sum(CASE WHEN b.sh_hash IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
                AS n_contaminated
-      FROM (SELECT {id_col}, {md5_long_sql("sh")} AS sh_hash
-            FROM (SELECT {id_col}, unnest({shingles_sql(text_col, k=k)}) AS sh
+      FROM (SELECT {DOC_ID_COL}, {md5_long_sql("sh")} AS sh_hash
+            FROM (SELECT {DOC_ID_COL}, unnest({shingles_sql(TEXT_COL, k=k)}) AS sh
                   FROM {table})) d
       LEFT JOIN (SELECT DISTINCT {md5_long_sql("sh")} AS sh_hash
-                 FROM (SELECT unnest({shingles_sql(text_col, k=k)}) AS sh
+                 FROM (SELECT unnest({shingles_sql(TEXT_COL, k=k)}) AS sh
                        FROM {benchmark_cte})) b
         USING (sh_hash)
-      GROUP BY d.{id_col})
+      GROUP BY d.{DOC_ID_COL})
     """
 
 
 def cluster_safe_splits(
     df: DataFrame,
     cluster_map: DataFrame,
-    key_col: str = "doc_id",
-    canonical_col: str = "canonical_id",
-    train: float = 0.9,
-    val: float = 0.05,
-    seed: str = "split",
+    key_col: str = DOC_ID_COL,
 ) -> DataFrame:
     """Leakage-safe train/val/test split: hash the near-dup CLUSTER id
     (canonical id from ``components.dedup_clusters``), not the document
@@ -341,14 +339,17 @@ def cluster_safe_splits(
     cluster to the same split with zero coordination.
     """
     cl = cluster_map.select(
-        F.col(key_col), F.col(canonical_col).alias("_canon")
+        F.col(key_col), F.col("canonical_id").alias("_canon")
     )
     out = (
         df.join(F.broadcast(cl), key_col, "left")
         .withColumn("_split_key", F.coalesce(F.col("_canon"), F.col(key_col)))
         .drop("_canon")
     )
-    return assign_splits(out, key_col="_split_key", train=train, val=val, seed=seed)
+    return assign_splits(
+        out, key_col="_split_key", train=SPLIT_TRAIN, val=SPLIT_VAL,
+        seed=SPLIT_SEED,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -356,13 +357,7 @@ def cluster_safe_splits(
 # ---------------------------------------------------------------------------
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    budget: int = 2048,
-    group_col: str = "source",
-) -> DataFrame:
+def pack_sequences(df: DataFrame, budget: int = 2048) -> DataFrame:
     """GPT-style sequence packing: concatenate documents in a
     deterministic pseudo-random order and split the token stream into
     fixed ``budget``-token training blocks; report each document's block
@@ -376,7 +371,7 @@ def pack_sequences(
     cost of packing without document masking).
 
     Scale: the running offset is a window cumsum PARTITIONED BY
-    ``group_col`` — one shuffle, parallel across groups. A single global
+    ``source`` — one shuffle, parallel across groups. A single global
     packing order would serialize into one window task; at 100 TB use
     per-group packing (sources, shards) or the two-pass
     partition-offset composition, which this per-group form already is
@@ -388,15 +383,15 @@ def pack_sequences(
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        Window.partitionBy(SOURCE_COL)
+        .orderBy(F.md5(F.col(DOC_ID_COL).cast("string")), F.col(DOC_ID_COL))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    n = F.col(tokens_col).cast("long")
-    off = F.sum(tokens_col).over(w).cast("long") - n
+    n = F.col(TOKENS_COL).cast("long")
+    off = F.sum(TOKENS_COL).over(w).cast("long") - n
     out = df.select(
-        id_col,
-        group_col,
+        DOC_ID_COL,
+        SOURCE_COL,
         n.alias("n_tok"),
         off.alias("start_offset"),
         F.floor(off / budget).cast("long").alias("block_first"),
@@ -410,43 +405,30 @@ def pack_sequences(
     )
 
 
-def pack_sequences_sql(
-    docs_sql: str,
-    id_sql: str = "doc_id",
-    tokens_sql: str = "n_tokens",
-    budget: int = 2048,
-    group_sql: str = "source",
-) -> str:
+def pack_sequences_sql(docs_sql: str, budget: int = 2048) -> str:
     """DuckDB twin of :func:`pack_sequences` (integer floor-division
     ``//`` mirrors ``F.floor`` on the same nonnegative longs)."""
     return f"""
-    SELECT {id_sql}, {group_sql}, n_tok, start_offset,
+    SELECT {DOC_ID_COL}, {SOURCE_COL}, n_tok, start_offset,
            start_offset // {budget} AS block_first,
            (start_offset + greatest(n_tok, 1) - 1) // {budget} AS block_last,
            (start_offset // {budget}
             <> (start_offset + greatest(n_tok, 1) - 1) // {budget})
            AND n_tok > 0 AS crosses
     FROM (
-      SELECT {id_sql}, {group_sql},
-             CAST({tokens_sql} AS BIGINT) AS n_tok,
-             CAST(sum({tokens_sql}) OVER (
-                    PARTITION BY {group_sql}
-                    ORDER BY md5(CAST({id_sql} AS VARCHAR)), {id_sql}
+      SELECT {DOC_ID_COL}, {SOURCE_COL},
+             CAST({TOKENS_COL} AS BIGINT) AS n_tok,
+             CAST(sum({TOKENS_COL}) OVER (
+                    PARTITION BY {SOURCE_COL}
+                    ORDER BY md5(CAST({DOC_ID_COL} AS VARCHAR)), {DOC_ID_COL}
                     ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               - CAST({tokens_sql} AS BIGINT) AS start_offset
+               - CAST({TOKENS_COL} AS BIGINT) AS start_offset
       FROM {docs_sql}
     )
     """
 
 
-def materialize_blocks(
-    docs: DataFrame,
-    assignment: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    separator: str = "<|endofdoc|>",
-) -> DataFrame:
+def materialize_blocks(docs: DataFrame, assignment: DataFrame) -> DataFrame:
     """Materialize packed training sequences from a
     :func:`pack_sequences` assignment: join text back to the assignment,
     group by (group, block_first) and concatenate documents in packing
@@ -460,19 +442,19 @@ def materialize_blocks(
     bounded by block token budget, not partition size.
     """
     joined = assignment.join(
-        docs.select(id_col, text_col), id_col
+        docs.select(DOC_ID_COL, TEXT_COL), DOC_ID_COL
     )
     ordered = F.array_sort(
-        F.collect_list(F.struct("start_offset", text_col))
+        F.collect_list(F.struct("start_offset", TEXT_COL))
     )
     return (
-        joined.groupBy(group_col, F.col("block_first").alias("block"))
+        joined.groupBy(SOURCE_COL, F.col("block_first").alias("block"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").alias("block_tokens"),
             F.array_join(
-                F.transform(ordered, lambda s: s[text_col]),
-                separator,
+                F.transform(ordered, lambda s: s[TEXT_COL]),
+                "<|endofdoc|>",
             ).alias("block_text"),
         )
     )

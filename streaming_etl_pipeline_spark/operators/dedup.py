@@ -37,11 +37,19 @@ from pyspark.sql import functions as F
 from streaming_etl_pipeline_spark.functions.core import md5_long
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
 from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    DOCS_TABLE,
+    SOURCE_COL,
+    TEXT_COL,
     _apply_tombstones,
     fold_epochs,
     read_parquet_if_exists,
     write_epoch,
 )
+
+#: MinHash signature width and shingle width.
+NUM_HASHES = 16
+SHINGLE_K = 3
 
 TOKEN_SQL = (
     "list_filter(string_split_regex({norm}, '\\s+'), t -> t <> '')"
@@ -191,7 +199,7 @@ def shingles_sql(col_sql: str, k: int = 3) -> str:
 
 
 def exact_dedup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    df: DataFrame, id_col: str = DOC_ID_COL, text_col: str = TEXT_COL
 ) -> DataFrame:
     """Exact content dedup: md5 of normalized text → group size + keeper
     (min id). One hash-shuffle on a uniform key; survivors = keeper rows.
@@ -297,7 +305,7 @@ def minhash_from_hashes_sql(hs_sql: str, num_hashes: int = 16) -> list[str]:
 
 def lsh_candidate_pairs(
     sigs: DataFrame,
-    id_col: str = "doc_id",
+    id_col: str = DOC_ID_COL,
     num_hashes: int = 16,
     bands: int = 8,
 ) -> DataFrame:
@@ -349,35 +357,31 @@ def lsh_candidate_pairs(
 
 def build_signatures(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    k: int = 3,
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
 ) -> DataFrame:
     """The persistable dedup fingerprint of a document batch: id + the
     distinct hashed shingle set (for exact-Jaccard verification) + the
     MinHash signature columns (for LSH banding).
 
-    ~(num_hashes + |shingles|) longs per doc — tiny next to the corpus —
+    ~(NUM_HASHES + |shingles|) longs per doc — tiny next to the corpus —
     and **mergeable**: signatures of new data join against a persisted
     store without ever rescanning old text (see
     :func:`incremental_near_dups`).
     """
-    sh = docs.select(F.col(id_col), shingles(text_col, k).alias("sh"))
+    sh = docs.select(F.col(id_col), shingles(text_col, SHINGLE_K).alias("sh"))
     hs = sh.select(id_col, hashed_shingles("sh").alias("hs"))
     return hs.select(
         id_col,
         F.array_distinct("hs").alias("hsd"),
-        *minhash_from_hashes("hs", num_hashes),
+        *minhash_from_hashes("hs", NUM_HASHES),
     )
 
 
 def near_dup_pairs_from_signatures(
     left: DataFrame,
     right: DataFrame | None = None,
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
+    id_col: str = DOC_ID_COL,
     threshold: float = 0.6,
 ) -> DataFrame:
     """LSH candidates + exact-Jaccard verify over signature tables.
@@ -389,7 +393,9 @@ def near_dup_pairs_from_signatures(
     """
     self_mode = right is None
     sigs = left if self_mode else left.unionByName(right)
-    cand = lsh_candidate_pairs(sigs, id_col=id_col, num_hashes=num_hashes, bands=bands)
+    cand = lsh_candidate_pairs(
+        sigs, id_col=id_col, num_hashes=NUM_HASHES, bands=8
+    )
     if not self_mode:
         left_ids = left.select(F.col(id_col).alias("_lid"))
         right_ids = right.select(F.col(id_col).alias("_rid"))
@@ -438,9 +444,7 @@ def _batch_label(
     return f"batch-{hashlib.md5(f'{n}:{total}'.encode()).hexdigest()[:16]}"
 
 
-def _batch_store(
-    spark, store_path: str, label: str, fold: bool
-) -> DataFrame | None:
+def _batch_store(spark, store_path: str, label: str) -> DataFrame | None:
     """A batch-partitioned dedup store without the batch's own
     ``ingest_batch_id=label`` partition, or None when there is no store
     yet. Skipping its own partition makes a retried batch, which may
@@ -448,13 +452,11 @@ def _batch_store(
     saw. Labels compare as STRINGS: an integer-typed partition column
     would cast a namespaced label to NULL and silently exclude the whole
     store. A store in the flat layout of older builds (no
-    ``ingest_batch_id``) holds nothing of the batch: with ``fold`` it is
-    first folded into one partition, so the batch's epoch write cannot
-    hide its rows; without, it is read whole."""
+    ``ingest_batch_id``) holds nothing of the batch: it is first folded
+    into one partition, so the batch's epoch write cannot hide its
+    rows."""
     store = read_parquet_if_exists(spark, store_path)
     if store is not None and "ingest_batch_id" not in store.columns:
-        if not fold:
-            return store
         fold_epochs(spark, store_path, store)
         store = spark.read.parquet(store_path)
     if store is None:
@@ -469,17 +471,16 @@ def _probe_signature_store(
     sigs: DataFrame,
     store_path: str,
     label: str,
-    id_col: str = "doc_id",
+    id_col: str = DOC_ID_COL,
     threshold: float = 0.6,
-    write: bool = True,
 ) -> DataFrame | None:
     """The one probe-and-write of the MinHash signature store behind
     :func:`incremental_near_dups` (the CLI ``dedup``): the verified
     ``(id_a, id_b, jaccard)`` pairs between ``sigs`` and the store
     (:func:`_batch_store`, tombstoned ids dropped), or None when there
-    is no store yet. With ``write``, the pairs are materialized and
-    ``sigs`` then replace the ``ingest_batch_id=label`` partition."""
-    store = _batch_store(spark, store_path, label, fold=write)
+    is no store yet. The pairs are materialized, then ``sigs`` replace
+    the ``ingest_batch_id=label`` partition."""
+    store = _batch_store(spark, store_path, label)
     pairs = None
     if store is not None:
         pairs = near_dup_pairs_from_signatures(
@@ -487,11 +488,8 @@ def _probe_signature_store(
             _apply_tombstones(spark, store_path, store),
             id_col=id_col,
             threshold=threshold,
-        )
-        if write:
-            pairs = pairs.localCheckpoint(eager=True)
-    if write:
-        write_epoch(sigs, store_path, label)
+        ).localCheckpoint(eager=True)
+    write_epoch(sigs, store_path, label)
     return pairs
 
 
@@ -499,17 +497,16 @@ def incremental_near_dups(
     spark,
     new_docs: DataFrame,
     store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     threshold: float = 0.6,
-    append: bool = True,
 ) -> DataFrame:
     """Incremental near-dedup against a persisted signature store.
 
     Computes signatures for ``new_docs`` only, joins their LSH bands
     against the store (old TEXT is never rescanned), returns
     (new_id=id_a side or id_b side, store_id, jaccard) pairs above the
-    threshold, and (``append=True``) stores the new signatures. First
+    threshold, and stores the new signatures. First
     call bootstraps the store. This is the 100 TB dedup loop: per-ingest
     cost scales with the new batch, not the corpus.
 
@@ -525,7 +522,7 @@ def incremental_near_dups(
     label = _batch_label(new_docs, id_col, text_col)
     pairs = None if label is None else _probe_signature_store(
         spark, new_sigs, store_path, label, id_col=id_col,
-        threshold=threshold, write=append,
+        threshold=threshold,
     )
     if pairs is None:
         id_type = new_docs.schema[id_col].dataType.simpleString()
@@ -561,11 +558,8 @@ def size_ratio_ok(sh_a: Column, sh_b: Column, threshold: float) -> Column:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    df_cutoff: float | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted shingle index.
 
@@ -590,25 +584,13 @@ def ngram_jaccard_pairs(
     result set and must not be prefiltered) and exact τ·size products
     don't exist in binary floating point (0.8·5 > 4 in doubles would
     wrongly drop a boundary pair at sizes 4/5).
-    Stop-shingles that occur in a large fraction of
-    the corpus would quadratically blow up the index join at 100 TB;
-    ``df_cutoff`` (fraction of docs, e.g. 0.05) applies the standard
-    mitigation: shingles with document frequency above the cutoff are
-    dropped from CANDIDATE GENERATION only, and the surviving candidate
-    pairs are re-verified with the exact full-set Jaccard — so reported
-    values are identical to the unfiltered path, and a qualifying pair is
-    only missed if every shingle it shares is a stop-shingle (vanishingly
-    unlikely at high thresholds, where |A∩B| must cover most of both
-    documents).
     """
     from pyspark import StorageLevel
 
-    hs_expr = (
-        distinct_hashed_shingles(text_col, k)
-        if isinstance(text_col, str)
-        else F.array_distinct(hashed_shingles(shingles(text_col, k)))
+    base = df.select(
+        F.col(DOC_ID_COL).alias("_id"),
+        distinct_hashed_shingles(TEXT_COL, k).alias("_hs"),
     )
-    base = df.select(F.col(id_col).alias("_id"), hs_expr.alias("_hs"))
     sized = base.select("_id", "_hs", F.size("_hs").alias("_sz"))
     # Both sides of the self-join would re-run the md5 shingle pass (the
     # dominant cost); persist computes it once. The cached row is
@@ -622,40 +604,6 @@ def ngram_jaccard_pairs(
     ratio_ok = (F.col("sz_a") >= t * F.col("sz_b")) & (
         F.col("sz_b") >= t * F.col("sz_a")
     )
-
-    if df_cutoff is not None:
-        n_docs = sized.count()  # one cheap action over the persisted base
-        rare = (
-            index.groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= int(df_cutoff * n_docs))
-            .select("_h")
-        )
-        cand_index = index.join(rare, on="_h")
-        cand = (
-            cand_index.select(
-                F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a"), "_h"
-            )
-            .join(
-                cand_index.select(
-                    F.col("_id").alias("id_b"), F.col("_sz").alias("sz_b"), "_h"
-                ),
-                on="_h",
-            )
-            .filter((F.col("id_a") < F.col("id_b")) & ratio_ok)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        a = sized.select(F.col("_id").alias("id_a"), F.col("_hs").alias("_ha"))
-        b = sized.select(F.col("_id").alias("id_b"), F.col("_hs").alias("_hb"))
-        return (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                "id_a", "id_b", jaccard(F.col("_ha"), F.col("_hb")).alias("jaccard")
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
 
     left = index.select(
         F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a"), "_h"
@@ -757,7 +705,6 @@ def simhash_sql(hashes_sql: str, bits: int = 32) -> str:
 
 def hamming_close_pairs(
     hashed: DataFrame,
-    id_col: str = "doc_id",
     hash_col: str = "simhash",
     max_hamming: int = 3,
     chunks: int = 4,
@@ -784,8 +731,8 @@ def hamming_close_pairs(
             for c in range(chunks)
         ]
     )
-    b = hashed.select(id_col, hash_col, F.explode(chunk_arr).alias("cc")).select(
-        id_col, hash_col, "cc.chunk", "cc.val"
+    b = hashed.select(DOC_ID_COL, hash_col, F.explode(chunk_arr).alias("cc")).select(
+        DOC_ID_COL, hash_col, "cc.chunk", "cc.val"
     )
     pairs = (
         b.alias("l")
@@ -793,11 +740,11 @@ def hamming_close_pairs(
             b.alias("r"),
             (F.col("l.chunk") == F.col("r.chunk"))
             & (F.col("l.val") == F.col("r.val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col(f"l.{DOC_ID_COL}") < F.col(f"r.{DOC_ID_COL}")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{DOC_ID_COL}").alias("id_a"),
+            F.col(f"r.{DOC_ID_COL}").alias("id_b"),
             F.col(f"l.{hash_col}").alias("h_a"),
             F.col(f"r.{hash_col}").alias("h_b"),
         )
@@ -817,8 +764,8 @@ def hamming_close_pairs(
 
 def chunk_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     width: int = 64,
     stride: int = 32,
 ) -> DataFrame:
@@ -859,8 +806,8 @@ def chunk_fingerprints(
 
 def substring_dup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     width: int = 64,
     stride: int = 32,
 ) -> DataFrame:
@@ -895,12 +842,7 @@ def substring_dup_stats(
     )
 
 
-def source_overlap(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def source_overlap(docs: DataFrame) -> DataFrame:
     """Cross-source content-overlap matrix — the corpus-governance view
     of dedup: for every pair of sources (datasets, crawls, snapshots),
     the exact Jaccard similarity of their distinct word-``k``-gram
@@ -928,8 +870,8 @@ def source_overlap(
 
     per_shingle = (
         docs.select(
-            F.col(group_col).alias("g"),
-            F.explode(shingles(text_col, k)).alias("sh"),
+            F.col(SOURCE_COL).alias("g"),
+            F.explode(shingles(TEXT_COL, SHINGLE_K)).alias("sh"),
         )
         .groupBy("sh")
         .agg(F.array_sort(F.collect_set("g")).alias("gs"))
@@ -981,16 +923,12 @@ def source_overlap(
     )
 
 
-def source_overlap_sql(
-    table: str = "documents",
-    group_col: str = "source",
-    text_col: str = "text",
-    k: int = 3,
-) -> str:
+def source_overlap_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB twin of :func:`source_overlap`."""
     return f"""
     WITH sh AS (
-      SELECT DISTINCT {group_col} AS g, unnest({shingles_sql(text_col, k)}) AS sh
+      SELECT DISTINCT {SOURCE_COL} AS g,
+             unnest({shingles_sql(TEXT_COL, SHINGLE_K)}) AS sh
       FROM {table}
     ),
     sizes AS (SELECT g, count(*) AS n FROM sh GROUP BY g),
@@ -1016,8 +954,6 @@ def source_overlap_sql(
 
 def paragraph_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunks: DataFrame | None = None,
 ) -> DataFrame:
     """CCNet-style paragraph-level exact dedup with KEEP-FIRST semantics.
@@ -1056,17 +992,17 @@ def paragraph_dedup(
     from streaming_etl_pipeline_spark.operators.text import doc_chunks
 
     if chunks is None:
-        chunks = doc_chunks(df, text_col)  # (doc_id, pos, chunk) — no shuffle
+        chunks = doc_chunks(df)  # (doc_id, pos, chunk) — no shuffle
     keepers = chunks.groupBy("chunk").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("keeper")
+        F.min(F.struct(F.col(DOC_ID_COL), F.col("pos"))).alias("keeper")
     )
     flagged = chunks.join(keepers, "chunk").withColumn(
         "is_first",
-        (F.col(id_col) == F.col("keeper")[id_col])
+        (F.col(DOC_ID_COL) == F.col("keeper")[DOC_ID_COL])
         & (F.col("pos") == F.col("keeper")["pos"]),
     )
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy(DOC_ID_COL)
         .agg(
             F.count(F.lit(1)).alias("n_paras"),
             F.sum(F.col("is_first").cast("long")).alias("n_kept"),
@@ -1085,7 +1021,7 @@ def paragraph_dedup(
             ).alias("kept_md5"),
         )
         .select(
-            id_col,
+            DOC_ID_COL,
             "n_paras",
             "n_kept",
             (F.col("n_paras") - F.col("n_kept")).alias("n_dropped"),
@@ -1098,8 +1034,7 @@ def paragraph_dedup(
 
 
 def paragraph_dedup_sql(
-    table: str = "documents",
-    text_col: str = "text",
+    table: str = DOCS_TABLE,
     extra_ctes: str = "",
     chunks_sql: str | None = None,
 ) -> str:
@@ -1112,7 +1047,7 @@ def paragraph_dedup_sql(
     from streaming_etl_pipeline_spark.operators.text import doc_chunks_sql
 
     if chunks_sql is None:
-        chunks_sql = doc_chunks_sql(table, text_col)
+        chunks_sql = doc_chunks_sql(table)
     return f"""
     WITH {extra_ctes}chunks AS ({chunks_sql}),
     flagged AS (
@@ -1142,8 +1077,6 @@ def paragraph_dedup_sql(
 
 def exact_dup_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_len: int = 32,
     removable_only: bool = False,
 ) -> DataFrame:
@@ -1179,27 +1112,27 @@ def exact_dup_spans(
     spans (see :func:`remove_exact_dup_substrings`) keeps one copy of
     every duplicated substring, deterministically the first.
 
-    Returns ``(id_col, span_start, span_end)`` — 1-based, end
+    Returns ``(doc_id, span_start, span_end)`` — 1-based, end
     EXCLUSIVE, non-overlapping, sorted within doc."""
     from pyspark.sql import Window
 
     L = int(min_len)
-    tc = text_col
+    tc = TEXT_COL
     gram_arr = F.expr(
         f"case when length({tc}) >= {L} then "
         f"transform(sequence(1, length({tc}) - {L - 1}), "
         f"p -> substring({tc}, p, {L})) else array() end"
     )
     occ = df.select(
-        F.col(id_col), F.posexplode(gram_arr).alias("_p0", "_gram")
+        F.col(DOC_ID_COL), F.posexplode(gram_arr).alias("_p0", "_gram")
     ).select(
-        id_col, (F.col("_p0") + 1).alias("_pos"), "_gram"
+        DOC_ID_COL, (F.col("_p0") + 1).alias("_pos"), "_gram"
     )
     stats = (
         occ.groupBy("_gram")
         .agg(
             F.count(F.lit(1)).alias("_n"),
-            F.min(F.struct(id_col, "_pos")).alias("_canon"),
+            F.min(F.struct(DOC_ID_COL, "_pos")).alias("_canon"),
         )
         .filter(F.col("_n") > 1)
     )
@@ -1207,16 +1140,16 @@ def exact_dup_spans(
     if removable_only:
         dup = dup.filter(
             ~(
-                (F.col("_canon")[id_col] == F.col(id_col))
+                (F.col("_canon")[DOC_ID_COL] == F.col(DOC_ID_COL))
                 & (F.col("_canon._pos") == F.col("_pos"))
             )
         )
     # merge overlapping [pos, pos+L) intervals per doc: a new island
     # starts where pos exceeds the running max end of prior intervals
-    w = Window.partitionBy(id_col).orderBy("_pos")
+    w = Window.partitionBy(DOC_ID_COL).orderBy("_pos")
     w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
     islands = (
-        dup.select(id_col, "_pos", (F.col("_pos") + L).alias("_end"))
+        dup.select(DOC_ID_COL, "_pos", (F.col("_pos") + L).alias("_end"))
         .withColumn("_prev_end", F.max("_end").over(w_prev))
         .withColumn(
             "_new",
@@ -1228,35 +1161,30 @@ def exact_dup_spans(
         .withColumn("_grp", F.sum("_new").over(w))
     )
     return (
-        islands.groupBy(id_col, "_grp")
+        islands.groupBy(DOC_ID_COL, "_grp")
         .agg(
             F.min("_pos").alias("span_start"),
             F.max("_end").alias("span_end"),
         )
-        .select(id_col, "span_start", "span_end")
+        .select(DOC_ID_COL, "span_start", "span_end")
     )
 
 
-def exact_substring_dup_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 32,
-) -> DataFrame:
+def exact_substring_dup_stats(df: DataFrame, min_len: int = 32) -> DataFrame:
     """Per-document EXACT duplicated-substring profile — the precise
     counterpart of the fingerprint :func:`substring_dup_stats`:
     ``(id, doc_len, dup_chars, dup_frac)`` where ``dup_chars`` is the
     exact number of characters lying inside some duplicated substring
     of length ≥ ``min_len``. Docs with no duplicated span report 0."""
-    spans = exact_dup_spans(df, id_col, text_col, min_len)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = exact_dup_spans(df, min_len)
+    per_doc = spans.groupBy(DOC_ID_COL).agg(
         F.sum(F.col("span_end") - F.col("span_start")).alias("dup_chars")
     )
     return (
-        df.select(id_col, F.length(text_col).alias("doc_len"))
-        .join(per_doc, id_col, "left")
+        df.select(DOC_ID_COL, F.length(TEXT_COL).alias("doc_len"))
+        .join(per_doc, DOC_ID_COL, "left")
         .select(
-            id_col,
+            DOC_ID_COL,
             "doc_len",
             F.coalesce(F.col("dup_chars"), F.lit(0)).cast("long").alias(
                 "dup_chars"
@@ -1270,13 +1198,7 @@ def exact_substring_dup_stats(
     )
 
 
-def remove_exact_dup_substrings(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 32,
-    out_col: str = "cleaned",
-) -> DataFrame:
+def remove_exact_dup_substrings(df: DataFrame, min_len: int = 32) -> DataFrame:
     """Cut every NON-CANONICAL duplicated span out of each document
     (Lee et al.'s remove-all-but-first policy): the corpus keeps
     exactly one copy — the globally (doc, pos)-first occurrence — of
@@ -1284,15 +1206,13 @@ def remove_exact_dup_substrings(
     a pure expression: the doc's sorted spans fold left through
     ``aggregate``, concatenating the kept segments between them — no
     UDF, no per-doc Python."""
-    spans = exact_dup_spans(
-        df, id_col, text_col, min_len, removable_only=True
-    )
-    per_doc = spans.groupBy(id_col).agg(
+    spans = exact_dup_spans(df, min_len, removable_only=True)
+    per_doc = spans.groupBy(DOC_ID_COL).agg(
         F.array_sort(
             F.collect_list(F.struct("span_start", "span_end"))
         ).alias("_spans")
     )
-    tc = text_col
+    tc = TEXT_COL
     rebuilt = F.expr(
         f"aggregate(_spans, struct(1 as cur, '' as acc), "
         f"(a, s) -> struct(s.span_end, "
@@ -1301,9 +1221,9 @@ def remove_exact_dup_substrings(
         f"length({tc}) - a.cur + 1)))"
     )
     return (
-        df.join(per_doc, id_col, "left")
+        df.join(per_doc, DOC_ID_COL, "left")
         .withColumn(
-            out_col,
+            "cleaned",
             F.when(F.col("_spans").isNull(), F.col(tc)).otherwise(rebuilt),
         )
         .drop("_spans")

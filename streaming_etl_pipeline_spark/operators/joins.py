@@ -179,7 +179,6 @@ def apply_cdc(
     ts_col: str,
     payload_cols: Sequence[str],
     op_col: str = "op",
-    delete_op: str = "delete",
     order_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Apply a change-data-capture batch (insert / update / delete rows)
@@ -191,7 +190,7 @@ def apply_cdc(
     change per key wins (ordered by ``order_cols``, default
     ``[ts_col]`` — pass a tie-breaker for same-timestamp batches):
 
-    - latest op == ``delete_op`` → key disappears from the result;
+    - latest op == ``'delete'`` → key disappears from the result;
     - any other op (insert/update) → the change's payload replaces the
       snapshot row (or creates it);
     - keys with no change pass through untouched.
@@ -210,7 +209,7 @@ def apply_cdc(
     )
     out_cols = [key, *payload_cols]
     untouched = snapshot.join(latest.select(key), key, "left_anti").select(*out_cols)
-    upserts = latest.filter(F.col(op_col) != delete_op).select(*out_cols)
+    upserts = latest.filter(F.col(op_col) != "delete").select(*out_cols)
     return untouched.unionByName(upserts)
 
 
@@ -266,12 +265,7 @@ def interval_join(
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    compare_cols: Sequence[str] | None = None,
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
     """Row-level reconciliation of two snapshots of the same table:
     ``key, diff_op ('added'|'removed'|'changed'), changed_cols``.
 
@@ -287,7 +281,7 @@ def snapshot_diff(
     apply_cdc(old, batch)) must reproduce the batch's net effect —
     pinned in test_joins.py.
     """
-    compare = list(compare_cols or [c for c in new.columns if c != key])
+    compare = [c for c in new.columns if c != key]
     o = old.select(
         key,
         F.lit(True).alias("_in_old"),

@@ -333,7 +333,7 @@ def sample_frames(assets: DataFrame, n_frames: int = 4) -> DataFrame:
     )
 
 
-def extract_features(assets: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the payload column.
 
     ``mapInPandas`` receives an iterator of pandas batches (never the

@@ -70,7 +70,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.operators.text import norm_text, norm_text_sql
-from streaming_etl_pipeline_spark.sources.io import hadoop_fs
+from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    TEXT_COL,
+    hadoop_fs,
+)
 
 #: Fixed absolute discount (Chen & Goodman 1999's D≈0.75 for trigrams).
 KN_DISCOUNT = 0.75
@@ -138,7 +142,7 @@ class KNModel(NamedTuple):
 
 
 def doc_trigrams(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    df: DataFrame, id_col: str = DOC_ID_COL, text_col: str = TEXT_COL
 ) -> DataFrame:
     """Per-(document, trigram) counts over padded word tokens — the one
     corpus-sized frame both training and scoring consume. Tokens are
@@ -176,8 +180,7 @@ def doc_trigrams(
 
 def kn_lm_fit(
     df: DataFrame,
-    text_col: str = "text",
-    discount: float = KN_DISCOUNT,
+    text_col: str = TEXT_COL,
     doc_tri: DataFrame | None = None,
 ) -> KNModel:
     """Estimate the interpolated KN trigram model from a corpus.
@@ -189,12 +192,10 @@ def kn_lm_fit(
         )
     # trigram TYPE counts — everything below re-aggregates this frame
     t3 = doc_tri.groupBy("u", "v", "w").agg(F.sum("c").alias("c3"))
-    return kn_model_from_counts(t3, discount=discount)
+    return kn_model_from_counts(t3)
 
 
-def kn_model_from_counts(
-    t3: DataFrame, discount: float = KN_DISCOUNT
-) -> KNModel:
+def kn_model_from_counts(t3: DataFrame) -> KNModel:
     """Derive the full interpolated KN model from a trigram-type count
     frame ``(u, v, w, c3)`` — the shared tail of :func:`kn_lm_fit` and
     the count-store path (``streaming/ingest.py``
@@ -219,7 +220,7 @@ def kn_model_from_counts(
     )
     n_types = cvw.count()  # N1+(··): bounded scalar, embedded as literal
     _floor_underflow_guard(n_types, 3)
-    d = float(discount)
+    d = float(KN_DISCOUNT)
     nt = float(n_types)
     uni = cvw.groupBy("w").agg(F.count(F.lit(1)).alias("cw")).select(
         "w",
@@ -280,10 +281,9 @@ def kn_model_from_counts(
 
 def kn_lm_scores(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     model: KNModel | None = None,
-    discount: float = KN_DISCOUNT,
 ) -> DataFrame:
     """Per-document KN trigram log-probability. With ``model=None`` the
     model is trained on ``df`` itself (the oracle-gated path — no OOV
@@ -307,7 +307,7 @@ def kn_lm_scores(
     )
     self_trained = model is None
     if self_trained:
-        model = kn_lm_fit(df, text_col, discount, doc_tri=dt)
+        model = kn_lm_fit(df, text_col, doc_tri=dt)
     b = float(KN_BACKOFF)
     if not self_trained:  # only the cross-corpus cascade can hit the floor
         _floor_underflow_guard(model.n_bigram_types, 3)
@@ -370,9 +370,7 @@ def kn_lm_scores(
     )
 
 
-def kn_lm_scores_sql(
-    docs_sql: str, id_sql: str = "doc_id", discount: float = KN_DISCOUNT
-) -> str:
+def kn_lm_scores_sql(docs_sql: str) -> str:
     """DuckDB twin of the self-trained :func:`kn_lm_scores` path over
     ``docs_sql`` (a relation with ``doc_id`` and ``text``): identical
     counts, identical 9-dp probability expressions (same
@@ -380,24 +378,24 @@ def kn_lm_scores_sql(
     so matching trees give matching bits), identical 6-dp-rounded
     ``ln`` before the decimal accumulation."""
     norm_c = norm_text_sql("coalesce(text, '')")
-    d = float(discount)
+    d = float(KN_DISCOUNT)
     return f"""
     WITH toks AS (
-      SELECT {id_sql},
+      SELECT {DOC_ID_COL},
              list_concat(list_concat(['{_BOS}', '{_BOS}'],
                list_filter(string_split({norm_c}, ' '), x -> x <> '')),
                ['{_EOS}']) AS p
       FROM {docs_sql}
     ),
     pos AS (
-      SELECT {id_sql}, p, unnest(range(1, len(p) - 1)) AS i FROM toks
+      SELECT {DOC_ID_COL}, p, unnest(range(1, len(p) - 1)) AS i FROM toks
     ),
     tg AS (
-      SELECT {id_sql}, p[i] AS u, p[i + 1] AS v, p[i + 2] AS w FROM pos
+      SELECT {DOC_ID_COL}, p[i] AS u, p[i + 1] AS v, p[i + 2] AS w FROM pos
     ),
     doc_tri AS (
-      SELECT {id_sql}, u, v, w, count(*) AS c
-      FROM tg GROUP BY {id_sql}, u, v, w
+      SELECT {DOC_ID_COL}, u, v, w, count(*) AS c
+      FROM tg GROUP BY {DOC_ID_COL}, u, v, w
     ),
     t3 AS (
       SELECT u, v, w, CAST(sum(c) AS BIGINT) AS c3
@@ -439,13 +437,13 @@ def kn_lm_scores_sql(
               JOIN big ON t3.v = big.v AND t3.w = big.w
     ),
     scored AS (
-      SELECT {id_sql}, CAST(sum(c) AS BIGINT) AS n_trigrams,
+      SELECT {DOC_ID_COL}, CAST(sum(c) AS BIGINT) AS n_trigrams,
              sum(c * CAST(p3 AS DECIMAL(12,9))) AS sp,
              sum(c * CAST(round(ln(greatest(p3, 1e-9)), 6) AS DECIMAL(16,6))) AS slp
       FROM doc_tri JOIN tri USING (u, v, w)
-      GROUP BY {id_sql}
+      GROUP BY {DOC_ID_COL}
     )
-    SELECT {id_sql}, n_trigrams,
+    SELECT {DOC_ID_COL}, n_trigrams,
            round(CAST(sp AS DOUBLE) / n_trigrams::DOUBLE, 6) AS avg_p,
            round(CAST(slp AS DOUBLE) / n_trigrams::DOUBLE, 6) AS avg_logp
     FROM scored
@@ -635,7 +633,7 @@ class KNModelN(NamedTuple):
 
 
 def doc_ngrams(
-    df: DataFrame, order: int, id_col: str = "doc_id", text_col: str = "text"
+    df: DataFrame, order: int, id_col: str = DOC_ID_COL, text_col: str = TEXT_COL
 ) -> DataFrame:
     """Per-(document, n-gram) counts over padded word tokens — the
     order-n generalization of :func:`doc_trigrams` ((order−1) BOS + one
@@ -674,7 +672,6 @@ def doc_ngrams(
 def kn_model_from_counts_n(
     tn: DataFrame,
     order: int,
-    discount: float = KN_DISCOUNT,
     min_count=1,
 ) -> KNModelN:
     """Derive the pruned order-n interpolated KN model from a raw
@@ -689,7 +686,7 @@ def kn_model_from_counts_n(
 
     if order < 2:
         raise ValueError("order must be >= 2")
-    d = float(discount)
+    d = float(KN_DISCOUNT)
     th = _norm_prune(order, min_count)
     # One exchange per level (r10, judge r9 task #2): each level's frame
     # is repartitioned on a prefix CONTAINED in every downstream
@@ -859,8 +856,7 @@ def kn_model_from_counts_n(
 def kn_lm_fit_n(
     df: DataFrame,
     order: int = 5,
-    text_col: str = "text",
-    discount: float = KN_DISCOUNT,
+    text_col: str = TEXT_COL,
     min_count=1,
     doc_ng: DataFrame | None = None,
 ) -> KNModelN:
@@ -872,9 +868,7 @@ def kn_lm_fit_n(
             df.select(F.lit(0).alias("_id"), text_col), order, "_id", text_col
         )
     tn = doc_ng.groupBy(*_wcols(order)).agg(F.sum("c").alias("c"))
-    return kn_model_from_counts_n(
-        tn, order, discount=discount, min_count=min_count
-    )
+    return kn_model_from_counts_n(tn, order, min_count=min_count)
 
 
 def _cascade_joins(dng, model: KNModelN, n: int, d: int, floor_p):
@@ -925,11 +919,10 @@ def _cascade_joins(dng, model: KNModelN, n: int, d: int, floor_p):
 
 def kn_lm_scores_n(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     order: int = 5,
     model: KNModelN | None = None,
-    discount: float = KN_DISCOUNT,
     min_count=1,
 ) -> DataFrame:
     """Per-document order-n KN log-probability with the γ-weighted
@@ -950,9 +943,7 @@ def kn_lm_scores_n(
     )
     self_trained = model is None
     if self_trained:
-        model = kn_lm_fit_n(
-            df, order, text_col, discount, min_count, doc_ng=dng
-        )
+        model = kn_lm_fit_n(df, order, text_col, min_count, doc_ng=dng)
     if model.order != order:
         raise ValueError(
             f"model order {model.order} != requested order {order}"
@@ -1028,10 +1019,7 @@ def kn_lm_scores_n(
 
 def kn_lm_suite_scores(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     order: int = 5,
-    discount: float = KN_DISCOUNT,
     min_count=1,
 ) -> DataFrame:
     """Both word-level KN scoring surfaces — the interpolated TRIGRAM
@@ -1070,7 +1058,7 @@ def kn_lm_suite_scores(
     analytic windows over prefix-repartitioned frames (one exchange per
     level, see :func:`kn_model_from_counts_n`).
 
-    Output: one row per document, ``(id_col, n_ngrams, kn_avg_p,
+    Output: one row per document, ``(doc_id, n_ngrams, kn_avg_p,
     kn_avg_logp, kn5_avg_p, kn5_avg_logp)`` — kn_* bit-identical to
     :func:`kn_lm_scores`, kn5_* to :func:`kn_lm_scores_n` (pinned in
     tests/test_docs_ops.py)."""
@@ -1082,20 +1070,18 @@ def kn_lm_suite_scores(
             "kn_lm_suite_scores derives the trigram arm from the "
             "order-n frame; use kn_lm_scores for order <= 3"
         )
-    dng = doc_ngrams(df, n, id_col, text_col).persist(
+    dng = doc_ngrams(df, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     tn = dng.groupBy(*_wcols(n)).agg(F.sum("c").alias("c"))
-    model5 = kn_model_from_counts_n(
-        tn, n, discount=discount, min_count=min_count
-    )
+    model5 = kn_model_from_counts_n(tn, n, min_count=min_count)
     if model5.min_counts[0] > 1 or model5.min_counts[1] > 1:
         raise ValueError(
             "kn_lm_suite_scores shares the order-n chain's levels 1-2 "
             "with the trigram arm, which needs them unpruned; got "
             f"min_counts {model5.min_counts}"
         )
-    d = float(discount)
+    d = float(KN_DISCOUNT)
     # cached[0] is the persisted (repartitioned) order-n type frame —
     # first entry by construction in kn_model_from_counts_n; deriving
     # t3 from it shares the cache instead of re-aggregating doc grain.
@@ -1169,7 +1155,7 @@ def kn_lm_suite_scores(
     p3 = F.col("_ptri")
     scored = (
         joined.select(
-            id_col,
+            DOC_ID_COL,
             "c",
             p3.cast("decimal(12,9)").alias("_p3"),
             F.round(F.log(F.greatest(p3, F.lit(1e-9))), 6)
@@ -1180,7 +1166,7 @@ def kn_lm_suite_scores(
             .cast("decimal(16,6)")
             .alias("_lp5"),
         )
-        .groupBy(id_col)
+        .groupBy(DOC_ID_COL)
         .agg(
             F.sum("c").alias("n_ngrams"),
             F.sum(F.col("c") * F.col("_p3")).alias("_sp3"),
@@ -1191,7 +1177,7 @@ def kn_lm_suite_scores(
     )
     nn = F.col("n_ngrams").cast("double")
     return scored.select(
-        id_col,
+        DOC_ID_COL,
         "n_ngrams",
         F.round(F.col("_sp3").cast("double") / nn, 6).alias("kn_avg_p"),
         F.round(F.col("_slp3").cast("double") / nn, 6).alias("kn_avg_logp"),
@@ -1200,13 +1186,7 @@ def kn_lm_suite_scores(
     )
 
 
-def kn_lm_scores_n_sql(
-    docs_sql: str,
-    order: int = 5,
-    id_sql: str = "doc_id",
-    discount: float = KN_DISCOUNT,
-    min_count=1,
-) -> str:
+def kn_lm_scores_n_sql(docs_sql: str, order: int = 5, min_count=1) -> str:
     """DuckDB twin of the self-trained :func:`kn_lm_scores_n` path —
     the full pruned order-n estimation AND the γ-weighted backoff
     cascade re-expressed as one generated CTE chain with the identical
@@ -1214,7 +1194,7 @@ def kn_lm_scores_n_sql(
     for the decimal-accumulated ``avg_p``)."""
     if order < 2:
         raise ValueError("order must be >= 2")
-    d = float(discount)
+    d = float(KN_DISCOUNT)
     b = float(KN_BACKOFF)
     th = _norm_prune(order, min_count)
     norm_c = norm_text_sql("coalesce(text, '')")
@@ -1224,20 +1204,20 @@ def kn_lm_scores_n_sql(
     parts = [
         f"""
     toks AS (
-      SELECT {id_sql},
+      SELECT {DOC_ID_COL},
              list_concat(list_concat([{bos}],
                list_filter(string_split({norm_c}, ' '), x -> x <> '')),
                ['{_EOS}']) AS p
       FROM {docs_sql}
     ),
     pos AS (
-      SELECT {id_sql}, p, unnest(range(1, len(p) - {n - 2})) AS i FROM toks
+      SELECT {DOC_ID_COL}, p, unnest(range(1, len(p) - {n - 2})) AS i FROM toks
     ),
     dng AS (
-      SELECT {id_sql},
+      SELECT {DOC_ID_COL},
              {', '.join(f'p[i + {j}] AS w{j + 1}' for j in range(n))},
              count(*) AS c
-      FROM pos GROUP BY {id_sql}, {w(n)}
+      FROM pos GROUP BY {DOC_ID_COL}, {w(n)}
     ),
     c{n} AS (
       SELECT {w(n)}, CAST(sum(c) AS BIGINT) AS c
@@ -1326,21 +1306,21 @@ def kn_lm_scores_n_sql(
     parts.append(
         f"""
     scored AS (
-      SELECT dng.{id_sql}, CAST(sum(dng.c) AS BIGINT) AS n_ngrams,
+      SELECT dng.{DOC_ID_COL}, CAST(sum(dng.c) AS BIGINT) AS n_ngrams,
              sum(dng.c * CAST({q} AS DECIMAL(12,9))) AS sp,
              sum(dng.c * CAST(round(ln(greatest({q}, 1e-9)), 6)
                  AS DECIMAL(16,6))) AS slp
       FROM dng
       {' '.join(joins)}
       CROSS JOIN nt
-      GROUP BY dng.{id_sql}
+      GROUP BY dng.{DOC_ID_COL}
     )"""
     )
     return (
         "WITH "
         + ",".join(parts)
         + f"""
-    SELECT {id_sql}, n_ngrams,
+    SELECT {DOC_ID_COL}, n_ngrams,
            round(CAST(sp AS DOUBLE) / n_ngrams::DOUBLE, 6) AS avg_p,
            round(CAST(slp AS DOUBLE) / n_ngrams::DOUBLE, 6) AS avg_logp
     FROM scored

@@ -36,7 +36,15 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from streaming_etl_pipeline_spark.sources.io import _apply_tombstones
+from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    TEXT_COL,
+    _apply_tombstones,
+)
+
+#: Column names of the exploded query terms.
+QUERY_ID_COL = "query_id"
+QUERY_TERMS_COL = "qterm"
 
 __all__ = [
     "Bm25Index",
@@ -72,8 +80,6 @@ class Bm25Index(NamedTuple):
 def bm25_build_index(
     docs: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> Bm25Index:
     """Build the inverted index + idf table for every term in ``vocab``
     (a 1-column ``term`` frame, broadcast). A term's posting list, df,
@@ -86,12 +92,12 @@ def bm25_build_index(
     from streaming_etl_pipeline_spark.functions.core import tokenize
     from streaming_etl_pipeline_spark.operators.text import norm_text
 
-    toks = tokenize(norm_text(text_col))
+    toks = tokenize(norm_text(TEXT_COL))
     base = docs.select(
-        F.col(id_col), F.explode(toks).alias("term"),
+        F.col(DOC_ID_COL), F.explode(toks).alias("term"),
         F.size(toks).alias("doc_len"),
     ).join(F.broadcast(vocab.select("term").distinct()), "term")
-    doc_term = base.groupBy(id_col, "term", "doc_len").agg(
+    doc_term = base.groupBy(DOC_ID_COL, "term", "doc_len").agg(
         F.count(F.lit(1)).alias("tf")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     stats = docs.select(F.size(toks).alias("dl")).filter("dl > 0").agg(
@@ -123,17 +129,12 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_terms_col: str = "qterm",
     exclude_self: bool = False,
-    index: Bm25Index | None = None,
 ) -> DataFrame:
     """BM25 top-``k`` documents per query.
 
-    ``docs`` needs (id_col, text_col); ``queries`` is the exploded
-    query-term table (query_id_col, query_terms_col) — distinct terms
+    ``docs`` needs (doc_id, text); ``queries`` is the exploded
+    query-term table (query_id, qterm) — distinct terms
     per query (short-query BM25: query-side tf ignored). idf uses the
     Robertson–Spärck Jones form with the +1 floor
     (``ln((N − df + 0.5)/(df + 0.5) + 1)``, Lucene's variant) so scores
@@ -142,7 +143,7 @@ def bm25_topk(
     Output: ``(query_id, rank, neighbor_id, score)`` — ties broken by
     ascending doc id, same contract as the dense ANN family.
 
-    Precondition: ``id_col`` is unique in ``docs`` (one text per doc
+    Precondition: ``doc_id`` is unique in ``docs`` (one text per doc
     id). df is computed as a plain count over the (doc, term) posting
     grain in BOTH engines — duplicate doc ids would inflate df
     identically on both sides rather than diverge, but the scores would
@@ -151,37 +152,30 @@ def bm25_topk(
     ``exclude_self=True`` drops the candidate whose doc id equals the
     query id before ranking — the hybrid-ensemble contract, where the
     dense arms also exclude the query vector itself.
-
-    ``index=``: a pre-built :class:`Bm25Index` (from
-    :func:`bm25_build_index`, possibly over a vocabulary union serving
-    several query workloads) skips the build — only the scoring joins
-    and the per-query top-k window run.
     """
     q_terms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_terms_col).alias("term"),
+        F.col(QUERY_ID_COL).alias("query_id"),
+        F.col(QUERY_TERMS_COL).alias("term"),
     ).distinct()
-    if index is None:
-        # Query-vocabulary filter BEFORE the tf aggregation: only
-        # postings of query terms ever reach a shuffle, and the one
-        # aggregated posting frame (persisted — it is |query-term
-        # postings|-sized, not corpus-sized) serves both the df branch
-        # and the scoring branch. Aggregating the full corpus index
-        # here would shuffle every term AND recompute it per consumer —
-        # measured 62 s → 24 s at 550k docs (the rest is the one corpus
-        # tokenize pass).
-        index = bm25_build_index(
-            docs, q_terms.select("term"), id_col=id_col, text_col=text_col
-        )
+    # Query-vocabulary filter BEFORE the tf aggregation: only postings
+    # of query terms ever reach a shuffle, and the one aggregated
+    # posting frame (persisted — it is |query-term postings|-sized, not
+    # corpus-sized) serves both the df branch and the scoring branch.
+    # Aggregating the full corpus index here would shuffle every term
+    # AND recompute it per consumer — measured 62 s → 24 s at 550k docs
+    # (the rest is the one corpus tokenize pass).
+    index = bm25_build_index(
+        docs, q_terms.select("term")
+    )
     return _bm25_score(
-        index, q_terms, k=k, id_col=id_col, exclude_self=exclude_self
+        index, q_terms, k=k, id_col=DOC_ID_COL, exclude_self=exclude_self
     )
 
 
 def bm25_scored_pairs(
     index: Bm25Index,
     q_terms: DataFrame,
-    id_col: str = "doc_id",
+    id_col: str = DOC_ID_COL,
     candidates: "DataFrame | None" = None,
     repartition_by_query: bool = False,
 ) -> DataFrame:
@@ -233,7 +227,7 @@ def bm25_scored_pairs(
 def bm25_rank(
     scored: DataFrame,
     k: int,
-    id_col: str = "doc_id",
+    id_col: str = DOC_ID_COL,
     exclude_self: bool = False,
 ) -> DataFrame:
     """Per-query top-k window over a :func:`bm25_scored_pairs` frame.
@@ -452,8 +446,6 @@ def bm25_topk_sql(
     docs_sql: str,
     queries_sql: str,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     exclude_self: bool = False,
 ) -> str:
     """DuckDB oracle twin of :func:`bm25_topk`. ``docs_sql`` yields
@@ -466,18 +458,18 @@ def bm25_topk_sql(
     from streaming_etl_pipeline_spark.operators.dedup import TOKEN_SQL
     from streaming_etl_pipeline_spark.operators.text import norm_text_sql
 
-    toks = TOKEN_SQL.format(norm=norm_text_sql(text_col))
+    toks = TOKEN_SQL.format(norm=norm_text_sql(TEXT_COL))
     return f"""
     WITH d AS ({docs_sql}),
     q AS (SELECT DISTINCT query_id, qterm AS term FROM ({queries_sql})),
     base AS (
-      SELECT {id_col}, term, doc_len
-      FROM (SELECT {id_col}, unnest({toks}) AS term, len({toks}) AS doc_len
+      SELECT {DOC_ID_COL}, term, doc_len
+      FROM (SELECT {DOC_ID_COL}, unnest({toks}) AS term, len({toks}) AS doc_len
             FROM d)
       WHERE term IN (SELECT term FROM q)
     ),
     doc_term AS (
-      SELECT {id_col}, term, doc_len, CAST(count(*) AS BIGINT) AS tf
+      SELECT {DOC_ID_COL}, term, doc_len, CAST(count(*) AS BIGINT) AS tf
       FROM base GROUP BY 1, 2, 3
     ),
     stats AS (
@@ -498,21 +490,21 @@ def bm25_topk_sql(
       FROM df_tbl, stats
     ),
     scored AS (
-      SELECT q.query_id, dt.{id_col},
+      SELECT q.query_id, dt.{DOC_ID_COL},
              CAST(sum(CAST(round(
                idf * (tf * ({BM25_K1} + 1.0))
                / (tf + {BM25_K1}
                   * (1.0 - {BM25_B} + {BM25_B} * (doc_len / avg_len))), 6)
              AS DECIMAL(38,6))) AS DOUBLE) AS score
       FROM doc_term dt JOIN q USING (term) JOIN idf_tbl USING (term)
-      {"WHERE q.query_id <> dt." + id_col if exclude_self else ""}
+      {"WHERE q.query_id <> dt." + DOC_ID_COL if exclude_self else ""}
       GROUP BY 1, 2
     )
     SELECT query_id,
            CAST(row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, {id_col} ASC
+             PARTITION BY query_id ORDER BY score DESC, {DOC_ID_COL} ASC
            ) AS BIGINT) AS rank,
-           {id_col} AS neighbor_id, score
+           {DOC_ID_COL} AS neighbor_id, score
     FROM scored
     QUALIFY rank <= {k}
     """
@@ -525,13 +517,9 @@ def bm25_topk_sql(
 RRF_C = 60  # the paper's constant; dampens the head of each ranking
 
 
-def rrf_fuse(
-    rankings: "list[DataFrame]",
-    k: int = 5,
-    c: int = RRF_C,
-) -> DataFrame:
+def rrf_fuse(rankings: "list[DataFrame]", k: int = 5) -> DataFrame:
     """Reciprocal rank fusion of several ranked lists: per (query,
-    candidate), ``score = Σ_r 1/(c + rank_r)`` over the rankings that
+    candidate), ``score = Σ_r 1/(RRF_C + rank_r)`` over the rankings that
     retrieved it, re-ranked descending. The standard way to ensemble
     heterogeneous retrieval methods (BM25 + dense, or several
     approximate indexes whose misses are uncorrelated) without score
@@ -539,7 +527,7 @@ def rrf_fuse(
     never need to agree.
 
     Each input needs ``(query_id, rank, neighbor_id)``. Determinism:
-    1/(c+rank) has exact integer inputs and a single IEEE division, and
+    1/(RRF_C+rank) has exact integer inputs and a single IEEE division, and
     the per-candidate sum is DECIMAL-accumulated after a 9 dp round, so
     both engines agree bit-for-bit; ties break to the smaller id.
 
@@ -551,7 +539,7 @@ def rrf_fuse(
     for r in rankings:
         part = r.select("query_id", "rank", "neighbor_id")
         u = part if u is None else u.unionByName(part)
-    contrib = F.round(F.lit(1.0) / (F.lit(c) + F.col("rank")), 9)
+    contrib = F.round(F.lit(1.0) / (F.lit(RRF_C) + F.col("rank")), 9)
     fused = (
         u.select("query_id", "neighbor_id", contrib.alias("_c"))
         .groupBy("query_id", "neighbor_id")
@@ -571,7 +559,7 @@ def rrf_fuse(
     )
 
 
-def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5, c: int = RRF_C) -> str:
+def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5) -> str:
     """DuckDB oracle twin of :func:`rrf_fuse`; each SQL yields
     (query_id, rank, neighbor_id, ...)."""
     union = "\n      UNION ALL\n".join(
@@ -584,7 +572,7 @@ def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5, c: int = RRF_C) -> str:
     ),
     fused AS (
       SELECT query_id, neighbor_id,
-             CAST(sum(CAST(round(1.0 / ({c} + rank), 9) AS DECIMAL(38,9)))
+             CAST(sum(CAST(round(1.0 / ({RRF_C} + rank), 9) AS DECIMAL(38,9)))
                   AS DOUBLE) AS score
       FROM u GROUP BY 1, 2
     )
@@ -604,10 +592,11 @@ def rrf_fuse_sql(ranking_sqls: "list[str]", k: int = 5, c: int = RRF_C) -> str:
 # The index is written by ``streaming.ingest.bm25_postings_batch`` (the
 # CLI ``build-bm25-index`` as one batch, later batches as epochs beside it):
 # ``(doc_id, term, doc_len, tf)`` postings partitioned by epoch and
-# ``term_bucket``, plus per-epoch ``(n_docs, sum_len)`` stats, because
-# BM25's idf/avg_len are CORPUS state that must accumulate. The corpus-
-# sized tokenize runs once per document; every later query batch reads
-# only its query terms' buckets. The ad-hoc :func:`bm25_build_index`
+# ``term_bucket``, plus per-epoch ``(n_docs, sum_len, buckets)`` stats,
+# because BM25's idf/avg_len are CORPUS state that must accumulate, and
+# a reader must hash query terms into the buckets the postings used.
+# The corpus-sized tokenize runs once per document; every later query
+# batch reads only its query terms' buckets. The ad-hoc :func:`bm25_build_index`
 # stays the tool for one-shot query sets.
 # ---------------------------------------------------------------------------
 
@@ -619,6 +608,22 @@ BM25_STORE_BUCKETS = 64
 
 def _term_bucket(term, buckets: int):
     return F.pmod(F.xxhash64(term), F.lit(buckets)).cast("int")
+
+
+def _store_buckets(stats: DataFrame) -> int:
+    """The term-bucket count a stored index's postings were written
+    with, as its stats rows record it. A store whose epochs disagree is
+    refused: no single count finds every query term's postings."""
+    counts = [
+        r.buckets
+        for r in stats.select("buckets").dropna().distinct().collect()
+    ]
+    if len(counts) != 1:
+        raise ValueError(
+            f"BM25 store epochs record bucket counts {sorted(counts)}; "
+            "rebuild it with one count"
+        )
+    return counts[0]
 
 
 #: Per-term rounding slack for MAXSCORE upper bounds: each per-(q,d,t)
@@ -633,7 +638,6 @@ def bm25_maxscore_candidates(
     q_terms: DataFrame,
     k: int,
     max_tf_tbl: DataFrame,
-    id_col: str = "doc_id",
     exclude_self: bool = False,
     df_tbl: "DataFrame | None" = None,
     n_blocks: "int | None" = None,
@@ -662,7 +666,7 @@ def bm25_maxscore_candidates(
     corpora + common-term queries: the common term's huge posting list
     is scored only for docs that also match a rarer (essential) term.
 
-    Returns the candidate frame ``(query_id, <id_col>)`` — exposed so
+    Returns the candidate frame ``(query_id, doc_id)`` — exposed so
     the soak can measure candidate-row reduction directly.
 
     ``n_blocks`` switches step 2/3 to BLOCK grain — the block-max WAND
@@ -736,18 +740,18 @@ def bm25_maxscore_candidates(
         F.broadcast(idf_tbl), "term"
     )
     if exclude_self:
-        boot = boot.filter(F.col("query_id") != F.col(id_col))
+        boot = boot.filter(F.col("query_id") != F.col(DOC_ID_COL))
     w_k = Window.partitionBy("query_id").orderBy(F.col("_c").desc())
     theta = (
-        boot.select("query_id", F.col(id_col), comp.alias("_c"))
-        .groupBy("query_id", id_col)
+        boot.select("query_id", F.col(DOC_ID_COL), comp.alias("_c"))
+        .groupBy("query_id", DOC_ID_COL)
         .agg(F.sum("_c").alias("_c"))  # partial score lower-bounds full
         .withColumn("_rn", F.row_number().over(w_k))
         .filter(F.col("_rn") == k)
         .select("query_id", F.col("_c").alias("theta"))
     )
     if n_blocks is not None:
-        blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(n_blocks)))
+        blk = F.pmod(F.xxhash64(F.col(DOC_ID_COL)), F.lit(int(n_blocks)))
         # block bound = the max EXACT (rounded) per-posting component in
         # the block — the BMW "block max impact" — not the dl→0/tf→max
         # envelope: BM25's tf saturation makes the tf envelope nearly
@@ -779,9 +783,9 @@ def bm25_maxscore_candidates(
             .select("query_id", "term", "_blk")
         )
         return (
-            doc_term.select("term", id_col, blk.alias("_blk"))
+            doc_term.select("term", DOC_ID_COL, blk.alias("_blk"))
             .join(essential_blk, ["term", "_blk"])
-            .select("query_id", id_col)
+            .select("query_id", DOC_ID_COL)
             .distinct()
         )
     # non-essential suffix: ascending-UB running sum strictly below θ
@@ -799,9 +803,9 @@ def bm25_maxscore_candidates(
         .select("query_id", "term")
     )
     return (
-        doc_term.select("term", id_col)
+        doc_term.select("term", DOC_ID_COL)
         .join(F.broadcast(essential), "term")
-        .select("query_id", id_col)
+        .select("query_id", DOC_ID_COL)
         .distinct()
     )
 
@@ -811,10 +815,6 @@ def bm25_topk_from_store(
     path: str,
     queries: DataFrame,
     k: int = 5,
-    buckets: int = BM25_STORE_BUCKETS,
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_terms_col: str = "qterm",
     exclude_self: bool = False,
     algo: str = "auto",
 ) -> DataFrame:
@@ -826,10 +826,12 @@ def bm25_topk_from_store(
 
     The posting scan filters on ``term_bucket IN (query buckets)`` —
     a PARTITION filter, so only the query terms' buckets are listed and
-    read — then on the exact terms. df is a plain count over the
-    (doc, term) grain of the pruned read (only query terms need df);
-    idf/avg_len fold in from the stored stats (summed across streaming
-    batch partitions, so an appended store stays consistent).
+    read — then on the exact terms. The bucket count comes from the
+    store's stats, so a store built with ``--buckets N`` reads right.
+    df is a plain count over the (doc, term) grain of the pruned read
+    (only query terms need df); idf/avg_len fold in from the stored
+    stats (summed across streaming batch partitions, so an appended
+    store stays consistent).
 
     ``algo`` picks the scorer: ``"join"`` is the broadcast-join +
     decimal-sum path (right when term-bucket pruning works — Zipf
@@ -843,20 +845,21 @@ def bm25_topk_from_store(
     bit-identical — pinned by ``test_bm25_gemm_scorer_matches_join``.
     """
     q_terms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_terms_col).alias("term"),
+        F.col(QUERY_ID_COL).alias("query_id"),
+        F.col(QUERY_TERMS_COL).alias("term"),
     ).distinct()
+    stats_raw = spark.read.parquet(os.path.join(path, "stats"))
     vocab = q_terms.select("term").distinct().withColumn(
-        "term_bucket", _term_bucket(F.col("term"), buckets)
+        "term_bucket", _term_bucket(F.col("term"), _store_buckets(stats_raw))
     )
     bucket_list = [
         r.term_bucket for r in vocab.select("term_bucket").distinct().collect()
-    ]  # bounded: ≤ min(|query vocab|, buckets) ints
+    ]  # bounded: ≤ min(|query vocab|, bucket count) ints
     postings = (
         spark.read.parquet(os.path.join(path, "postings"))
         .filter(F.col("term_bucket").isin(bucket_list))
         .join(F.broadcast(vocab.select("term")), "term")
-        .select(id_col, "term", "doc_len", "tf")
+        .select(DOC_ID_COL, "term", "doc_len", "tf")
     )
     # tombstoned docs (streaming.ingest.bm25_delete_ids) drop out of the
     # pruned read — df then counts only live docs, and the stored stats
@@ -867,7 +870,7 @@ def bm25_topk_from_store(
     from pyspark import StorageLevel
 
     doc_term = postings.persist(StorageLevel.MEMORY_AND_DISK)
-    stats = spark.read.parquet(os.path.join(path, "stats")).agg(
+    stats = stats_raw.agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
         (
             F.sum("sum_len").cast("double") / F.sum("n_docs").cast("double")
@@ -912,7 +915,7 @@ def bm25_topk_from_store(
             idf_tbl.persist(StorageLevel.MEMORY_AND_DISK),
             q_terms,
             k=k,
-            id_col=id_col,
+            id_col=DOC_ID_COL,
             exclude_self=exclude_self,
         )
     candidates = None
@@ -934,7 +937,6 @@ def bm25_topk_from_store(
             q_terms,
             k,
             term_agg.select("term", "max_tf"),
-            id_col=id_col,
             exclude_self=exclude_self,
             df_tbl=df_tbl,
             n_blocks=n_blocks,
@@ -943,7 +945,7 @@ def bm25_topk_from_store(
         Bm25Index(doc_term=doc_term, idf_tbl=idf_tbl),
         q_terms,
         k=k,
-        id_col=id_col,
+        id_col=DOC_ID_COL,
         exclude_self=exclude_self,
         candidates=candidates,
     )

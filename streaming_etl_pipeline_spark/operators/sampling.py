@@ -32,6 +32,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import md5_long, md5_long_sql
+from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    DOCS_TABLE,
+    LANG_COL,
+    N_CHARS_COL,
+    TEXT_COL,
+)
+
+#: Hash seeds of the samplers whose Spark and DuckDB twins share one.
+EPOCHS_SEED = "epochs"
+MIXTURE_SEED = "mixture"
+TEMPERATURE_SEED = "temperature"
+WEIGHTED_SEED = "wsample"
 
 #: Hash-space modulus for Bernoulli inclusion: the low 31 bits of the
 #: 60-bit md5-derived hash — uniform, positive, and exactly representable
@@ -63,13 +76,12 @@ def reservoir_per_group(
     keys: Sequence[str],
     n: int,
     key_col: str,
-    seed: str = "reservoir",
 ) -> DataFrame:
     """Exactly min(n, |group|) rows per group, chosen by keyed-hash order
     — the deterministic analogue of a per-group reservoir sample. The
     hash is uniform in the key, so within a group the selection is
     unbiased w.r.t. any data attribute not correlated with the key."""
-    h = md5_long(key_col, seed)
+    h = md5_long(key_col, "reservoir")
     w = Window.partitionBy(*keys).orderBy(h.asc(), F.col(key_col).asc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -84,7 +96,6 @@ def token_budget_sample(
     token_col: str,
     budget: int,
     key_col: str,
-    seed: str = "budget",
 ) -> DataFrame:
     """Greedy per-group token cap: visit the group's docs in keyed-hash
     order (an unbiased deterministic shuffle) and keep whole docs while
@@ -93,7 +104,7 @@ def token_budget_sample(
     standard mixture-spec semantics ("≤ B tokens of lang X from source
     Y"). One shuffle on the group key; the window cumsum is the only
     state."""
-    h = md5_long(key_col, seed)
+    h = md5_long(key_col, "budget")
     w = (
         Window.partitionBy(*keys)
         .orderBy(h.asc(), F.col(key_col).asc())
@@ -113,7 +124,6 @@ def mixture_sample(
     group_col: str,
     weights: dict[str, float],
     total_rows: int,
-    seed: str = "mixture",
 ) -> DataFrame:
     """Deterministic mixture targeting: sample so that group ``g``
     contributes ~``weights[g] * total_rows`` rows — the pretraining
@@ -141,7 +151,7 @@ def mixture_sample(
     # while DuckDB's CAST(x AS BIGINT) rounds-to-nearest, so an integral
     # threshold is a cross-engine parity trap whenever frac·MOD has a
     # fractional part > 0.5 (fuzz-pinned in test_oracle_fuzz).
-    h = md5_long(key_col, seed) % _SAMPLE_MOD
+    h = md5_long(key_col, MIXTURE_SEED) % _SAMPLE_MOD
     return (
         df.join(F.broadcast(counts), group_col)
         .filter(h.cast("double") < frac * _SAMPLE_MOD)
@@ -155,7 +165,6 @@ def mixture_sample_sql(
     group_col: str,
     weights: dict[str, float],
     total_rows: int,
-    seed: str = "mixture",
 ) -> str:
     """DuckDB twin of :func:`mixture_sample` (identical float arithmetic:
     the keyed hash compared in DOUBLE against least(1.0, wt·total/cnt)·MOD
@@ -171,7 +180,7 @@ def mixture_sample_sql(
         USING ({group_col})
       JOIN (SELECT * FROM (VALUES {values}) AS v({group_col}, wt))
         w USING ({group_col})) t
-    WHERE CAST(({md5_long_sql(key_sql, seed)} % {_SAMPLE_MOD}) AS DOUBLE)
+    WHERE CAST(({md5_long_sql(key_sql, MIXTURE_SEED)} % {_SAMPLE_MOD}) AS DOUBLE)
           < least(1.0, _wt * CAST({total_rows} AS DOUBLE) / _grp_cnt)
             * {_SAMPLE_MOD}
     """
@@ -180,8 +189,7 @@ def mixture_sample_sql(
 def weighted_sample(
     df: DataFrame,
     weight_col: str | Column,
-    key_col: str = "doc_id",
-    seed: str = "wsample",
+    key_col: str = DOC_ID_COL,
 ) -> DataFrame:
     """Deterministic per-row weighted Bernoulli sample: keep a row iff
     its keyed hash fraction is below the row's own inclusion weight
@@ -196,19 +204,17 @@ def weighted_sample(
     projection+filter. DuckDB twin: :func:`weighted_sample_sql`.
     """
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    h = md5_long(key_col, seed) % _SAMPLE_MOD
+    h = md5_long(key_col, WEIGHTED_SEED) % _SAMPLE_MOD
     return df.filter(
         h.cast("double") < F.least(F.greatest(w, F.lit(0.0)), F.lit(1.0))
         * _SAMPLE_MOD
     )
 
 
-def weighted_sample_sql(
-    key_sql: str, weight_sql: str, seed: str = "wsample"
-) -> str:
+def weighted_sample_sql(key_sql: str, weight_sql: str) -> str:
     """DuckDB twin of :func:`weighted_sample`'s predicate."""
     return (
-        f"CAST(({md5_long_sql(key_sql, seed)} % {_SAMPLE_MOD}) AS DOUBLE)"
+        f"CAST(({md5_long_sql(key_sql, WEIGHTED_SEED)} % {_SAMPLE_MOD}) AS DOUBLE)"
         f" < least(greatest({weight_sql}, 0.0), 1.0) * {_SAMPLE_MOD}"
     )
 
@@ -260,7 +266,6 @@ def temperature_sample(
     group_col: str,
     alpha: float,
     total_rows: int,
-    seed: str = "temperature",
 ) -> DataFrame:
     """Temperature-based mixture resampling — the multilingual /
     multi-source LM-data standard (UniMax-style): target share of group
@@ -308,7 +313,7 @@ def temperature_sample(
     )
     # Double-vs-double comparison on both engines (see mixture_sample:
     # integral casts truncate in Spark but round in DuckDB).
-    h = md5_long(key_col, seed) % _SAMPLE_MOD
+    h = md5_long(key_col, TEMPERATURE_SEED) % _SAMPLE_MOD
     return (
         df.join(F.broadcast(frac), group_col)
         .filter(h.cast("double") < F.col("_frac") * _SAMPLE_MOD)
@@ -322,7 +327,6 @@ def temperature_sample_sql(
     group_col: str,
     alpha: float,
     total_rows: int,
-    seed: str = "temperature",
 ) -> str:
     """DuckDB twin of :func:`temperature_sample` (identical sqrt-product
     weights, DECIMAL-accumulated normalizer, DOUBLE threshold compare)."""
@@ -351,7 +355,7 @@ def temperature_sample_sql(
           )
         )
       ) f USING ({group_col})) t
-    WHERE CAST(({md5_long_sql(key_sql, seed)} % {_SAMPLE_MOD}) AS DOUBLE)
+    WHERE CAST(({md5_long_sql(key_sql, TEMPERATURE_SEED)} % {_SAMPLE_MOD}) AS DOUBLE)
           < _frac * {_SAMPLE_MOD}
     """
 
@@ -359,8 +363,8 @@ def temperature_sample_sql(
 def dsir_log_weights(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    text_col: str = TEXT_COL,
+    id_col: str = DOC_ID_COL,
     buckets: int = 4096,
 ) -> DataFrame:
     """DSIR importance scores (Xie et al. 2023, arXiv:2302.03169):
@@ -444,8 +448,6 @@ def dsir_log_weights(
 def dsir_select(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     buckets: int = 4096,
     top_m: int = 100,
 ) -> DataFrame:
@@ -453,22 +455,19 @@ def dsir_select(
     the scoring): the highest-log-weight raw docs under a strict
     (log_weight DESC, id ASC) total order. Output:
     ``(doc_id, n_grams, log_weight, rank)``."""
-    scored = dsir_log_weights(raw, target, text_col, id_col, buckets)
+    scored = dsir_log_weights(raw, target, buckets=buckets)
     top = scored.orderBy(
-        F.col("log_weight").desc(), F.col(id_col).asc()
+        F.col("log_weight").desc(), F.col(DOC_ID_COL).asc()
     ).limit(top_m)
-    w_rank = Window.orderBy(F.col("log_weight").desc(), F.col(id_col).asc())
+    w_rank = Window.orderBy(F.col("log_weight").desc(), F.col(DOC_ID_COL).asc())
     return top.withColumn(
         "rank", F.row_number().over(w_rank).cast("long")
-    ).select(id_col, "n_grams", "log_weight", "rank")
+    ).select(DOC_ID_COL, "n_grams", "log_weight", "rank")
 
 
 def dsir_select_sql(
     raw_where: str,
     target_where: str,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     buckets: int = 4096,
     top_m: int = 100,
 ) -> str:
@@ -477,16 +476,16 @@ def dsir_select_sql(
     from streaming_etl_pipeline_spark.operators.dedup import ngrams_list_sql
 
     grams = (
-        f"list_concat({ngrams_list_sql(text_col, 1)}, "
-        f"{ngrams_list_sql(text_col, 2)})"
+        f"list_concat({ngrams_list_sql(TEXT_COL, 1)}, "
+        f"{ngrams_list_sql(TEXT_COL, 2)})"
     )
     bucket = f"({md5_long_sql('g')} % {buckets})"
     return f"""
     WITH rawg AS (
-      SELECT {id_col}, unnest({grams}) AS g FROM {table} WHERE {raw_where}
+      SELECT {DOC_ID_COL}, unnest({grams}) AS g FROM {DOCS_TABLE} WHERE {raw_where}
     ),
     tgtg AS (
-      SELECT unnest({grams}) AS g FROM {table} WHERE {target_where}
+      SELECT unnest({grams}) AS g FROM {DOCS_TABLE} WHERE {target_where}
     ),
     q AS (SELECT {bucket} AS b, CAST(count(*) AS BIGINT) AS q_cnt
           FROM rawg GROUP BY 1),
@@ -507,18 +506,18 @@ def dsir_select_sql(
       FROM j
     ),
     scored AS (
-      SELECT rawg.{id_col},
+      SELECT rawg.{DOC_ID_COL},
              CAST(count(*) AS BIGINT) AS n_grams,
              CAST(sum(CAST(llr AS DECIMAL(38,6))) AS DOUBLE) AS log_weight
-      FROM (SELECT {id_col}, {bucket} AS b FROM rawg) rawg
+      FROM (SELECT {DOC_ID_COL}, {bucket} AS b FROM rawg) rawg
       JOIN ratio ON rawg.b = ratio.b
       GROUP BY 1
     )
-    SELECT {id_col}, n_grams, log_weight,
-           CAST(row_number() OVER (ORDER BY log_weight DESC, {id_col})
+    SELECT {DOC_ID_COL}, n_grams, log_weight,
+           CAST(row_number() OVER (ORDER BY log_weight DESC, {DOC_ID_COL})
                 AS BIGINT) AS rank
     FROM scored
-    ORDER BY log_weight DESC, {id_col}
+    ORDER BY log_weight DESC, {DOC_ID_COL}
     LIMIT {top_m}
     """
 
@@ -527,8 +526,6 @@ def epoch_allocation(
     docs: DataFrame,
     budget: int,
     max_epochs: int = 4,
-    group_col: str = "lang",
-    size_col: str = "n_chars",
 ) -> DataFrame:
     """Budget-constrained epoch allocation across groups — the UniMax
     recipe (Chung et al. 2023, arXiv:2304.09151) with the repetition cap
@@ -555,8 +552,8 @@ def epoch_allocation(
     back. All inputs to the IEEE divisions are exact integers, so the
     DuckDB twin matches bit-for-bit.
     """
-    counts = docs.groupBy(F.col(group_col).alias("grp")).agg(
-        F.sum(size_col).cast("long").alias("unique_toks")
+    counts = docs.groupBy(F.col(LANG_COL).alias("grp")).agg(
+        F.sum(N_CHARS_COL).cast("long").alias("unique_toks")
     )
     caps = counts.withColumn(
         "capacity", F.col("unique_toks") * F.lit(max_epochs)
@@ -616,16 +613,13 @@ def epoch_allocation(
 def epoch_allocation_sql(
     budget: int,
     max_epochs: int = 4,
-    table: str = "documents",
-    group_col: str = "lang",
-    size_col: str = "n_chars",
 ) -> str:
     """DuckDB twin of :func:`epoch_allocation`."""
     return f"""
     WITH counts AS (
-      SELECT {group_col} AS grp,
-             CAST(sum({size_col}) AS BIGINT) AS unique_toks
-      FROM {table} GROUP BY 1
+      SELECT {LANG_COL} AS grp,
+             CAST(sum({N_CHARS_COL}) AS BIGINT) AS unique_toks
+      FROM {DOCS_TABLE} GROUP BY 1
     ),
     caps AS (SELECT grp, unique_toks,
                     unique_toks * {max_epochs} AS capacity FROM counts),
@@ -660,13 +654,7 @@ def epoch_allocation_sql(
     """
 
 
-def materialize_epochs(
-    df: DataFrame,
-    allocation: DataFrame,
-    key_col: str = "doc_id",
-    group_col: str = "lang",
-    seed: str = "epochs",
-) -> DataFrame:
+def materialize_epochs(df: DataFrame, allocation: DataFrame) -> DataFrame:
     """Materialize an epoch allocation into the repeated-document
     training stream a data loader actually consumes.
 
@@ -695,19 +683,19 @@ def materialize_epochs(
     so no further rounding is applied.
     """
     al = F.broadcast(
-        allocation.select(F.col("grp").alias(group_col), "epochs")
+        allocation.select(F.col("grp").alias(LANG_COL), "epochs")
     )
-    h = (md5_long(key_col, seed) % _SAMPLE_MOD).cast("double")
+    h = (md5_long(DOC_ID_COL, EPOCHS_SEED) % _SAMPLE_MOD).cast("double")
     n_full = F.floor(F.col("epochs")).cast("long")
     frac = F.col("epochs") - F.floor(F.col("epochs"))
     extra = (h < frac * F.lit(float(_SAMPLE_MOD))).cast("long")
     return (
-        df.join(al, group_col)
+        df.join(al, LANG_COL)
         .withColumn("n_copies", n_full + extra)
         .filter(F.col("n_copies") >= 1)
         .select(
-            key_col,
-            group_col,
+            DOC_ID_COL,
+            LANG_COL,
             "epochs",
             "n_copies",
             F.explode(
@@ -717,34 +705,23 @@ def materialize_epochs(
     )
 
 
-def materialize_epochs_sql(
-    budget: int,
-    max_epochs: int = 4,
-    table: str = "documents",
-    group_col: str = "lang",
-    size_col: str = "n_chars",
-    key_col: str = "doc_id",
-    seed: str = "epochs",
-) -> str:
+def materialize_epochs_sql(budget: int, max_epochs: int = 4) -> str:
     """DuckDB twin of :func:`materialize_epochs` composed over
     :func:`epoch_allocation_sql` (the allocation CTE is the registered
     oracle SQL verbatim, so the two stages stay in lock-step)."""
-    alloc = epoch_allocation_sql(
-        budget, max_epochs, table=table, group_col=group_col,
-        size_col=size_col,
-    )
-    h = f"CAST(({md5_long_sql(f'd.{key_col}', seed)} % {_SAMPLE_MOD}) AS DOUBLE)"
+    alloc = epoch_allocation_sql(budget, max_epochs)
+    h = f"CAST(({md5_long_sql(f'd.{DOC_ID_COL}', EPOCHS_SEED)} % {_SAMPLE_MOD}) AS DOUBLE)"
     return f"""
     WITH alloc AS ({alloc}),
     j AS (
-      SELECT d.{key_col}, d.{group_col}, a.epochs,
+      SELECT d.{DOC_ID_COL}, d.{LANG_COL}, a.epochs,
              CAST(floor(a.epochs) AS BIGINT)
              + CASE WHEN {h}
                          < (a.epochs - floor(a.epochs)) * {float(_SAMPLE_MOD)}
                     THEN 1 ELSE 0 END AS n_copies
-      FROM {table} d JOIN alloc a ON d.{group_col} = a.grp
+      FROM {DOCS_TABLE} d JOIN alloc a ON d.{LANG_COL} = a.grp
     )
-    SELECT {key_col}, {group_col}, epochs, n_copies,
+    SELECT {DOC_ID_COL}, {LANG_COL}, epochs, n_copies,
            CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS copy
     FROM j WHERE n_copies >= 1
     """
@@ -754,7 +731,6 @@ def global_order_index(
     df: DataFrame,
     key_col: str,
     seed: str = "shuffle",
-    buckets: int = 1024,
 ) -> DataFrame:
     """Deterministic global training-order permutation WITHOUT a global
     sort: every row gets ``ord`` — its dense 0-based position in the
@@ -766,13 +742,13 @@ def global_order_index(
     partition. The engine shape (the classic zipWithIndex recurrence,
     expressed declaratively):
 
-    - bucket = the hash's HIGH bits (``floor(h / (space/buckets))``) —
+    - bucket = the hash's HIGH bits (``floor(h / (space/1024))``) —
       contiguous hash RANGES, so bucket order == global hash order
       (a mod-bucket would interleave ranges and break the equivalence);
     - per-bucket ``row_number`` windows run in parallel (buckets are
       uniform — the hash is uniform);
     - each bucket's starting offset is a running sum over the
-      bucket-COUNT table (``buckets`` rows, broadcast back).
+      bucket-COUNT table (1024 rows, broadcast back).
 
     Same (corpus, seed) → same permutation under any partitioning or
     cluster size; different seeds → independent epoch orders. Output:
@@ -789,7 +765,7 @@ def global_order_index(
 
     space = float(1 << 60)
     h = md5_long(key_col, seed)
-    bucket = F.floor(h.cast("double") / F.lit(space / buckets)).cast("long")
+    bucket = F.floor(h.cast("double") / F.lit(space / 1024)).cast("long")
     keyed = df.withColumn("_h", h).withColumn("_b", bucket).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -31,6 +31,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import cosine_similarity, dot
+from streaming_etl_pipeline_spark.sources.io import (
+    EMBEDDINGS_TABLE,
+    VEC_COL,
+    VEC_ID_COL,
+)
+
+#: Column name of the IVF cell id.
+CENTROID_ID = "centroid_id"
 
 #: Fixed Rademacher hyperplanes: MAX_PLANES × dim entries in {+1.0, -1.0}.
 #: Deterministic (seed 7) and embedded as literals on BOTH engines.
@@ -114,8 +122,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (self excluded).
 
@@ -125,10 +131,10 @@ def cosine_topk(
     for a total deterministic order.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(VEC_ID_COL).alias("query_id"), F.col(VEC_COL).alias("q_vec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col(VEC_ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("c_vec")
     )
     sim = F.round(cosine_similarity("q_vec", "c_vec"), 9)
     scored = (
@@ -149,8 +155,6 @@ def lsh_ann_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = N_PLANES,
     multiprobe: bool = False,
 ) -> DataFrame:
@@ -167,14 +171,14 @@ def lsh_ann_topk(
     matches exactly.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(lsh_probe_buckets(vec_col, n_planes, multiprobe)).alias("bucket"),
+        F.col(VEC_ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        F.explode(lsh_probe_buckets(VEC_COL, n_planes, multiprobe)).alias("bucket"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        lsh_bucket(vec_col, n_planes).alias("bucket"),
+        F.col(VEC_ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        lsh_bucket(VEC_COL, n_planes).alias("bucket"),
     )
     sim = F.round(cosine_similarity("q_vec", "c_vec"), 9)
     scored = (
@@ -224,9 +228,8 @@ def _centroid_candidates(
 def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
     carry: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """IVF coarse quantizer: assign each vector to its nearest centroid
@@ -245,7 +248,7 @@ def ivf_assign(
         id_col,
         vec_col,
         *carry,
-        F.array_max(cands)["cid"].alias(centroid_id),
+        F.array_max(cands)["cid"].alias(CENTROID_ID),
     )
 
 
@@ -253,20 +256,17 @@ def ivf_probe_cells(
     vectors: DataFrame,
     centroids: DataFrame,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
 ) -> DataFrame:
     """Query-side IVF probing: one row per (vector, probed cell) for the
     vector's ``nprobe`` nearest centroids (deterministic centroid-id
     tiebreak). nprobe=1 reproduces :func:`ivf_assign`'s choice. Same
     shuffle-free literal-centroid scoring; the only row expansion is the
     explode to nprobe rows per query."""
-    cands = _centroid_candidates(centroids, F.col(vec_col), id_col, vec_col)
+    cands = _centroid_candidates(centroids, F.col(VEC_COL), VEC_ID_COL, VEC_COL)
     top = F.slice(F.sort_array(cands, asc=False), 1, nprobe)
     return vectors.select(
-        id_col, vec_col, F.explode(top).alias("_c")
-    ).select(id_col, vec_col, F.col("_c")["cid"].alias(centroid_id))
+        VEC_ID_COL, VEC_COL, F.explode(top).alias("_c")
+    ).select(VEC_ID_COL, VEC_COL, F.col("_c")["cid"].alias(CENTROID_ID))
 
 
 # ---------------------------------------------------------------------------
@@ -303,9 +303,8 @@ def _centroid_matrix(centroids: DataFrame, id_col: str, vec_col: str):
 def ivf_assign_arrow(
     vectors: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
 ) -> DataFrame:
     """:func:`ivf_assign` as one numpy GEMM per Arrow batch: sims =
     V·Cᵀ / (‖v‖‖c‖), rounded to 9 dp, argmax with lowest-id tiebreak
@@ -324,7 +323,7 @@ def ivf_assign_arrow(
     norms = np.linalg.norm(mat, axis=1)
     bc = spark.sparkContext.broadcast((ids, mat, norms))
     in_cols = vectors.select(id_col, vec_col)
-    out_schema = f"{id_col} long, {vec_col} array<double>, {centroid_id} long"
+    out_schema = f"{id_col} long, {vec_col} array<double>, {CENTROID_ID} long"
 
     def assign(batches):
         c_ids, c_mat, c_norms = bc.value
@@ -343,7 +342,7 @@ def ivf_assign_arrow(
                 {
                     id_col: pdf[id_col].values,
                     vec_col: pdf[vec_col],
-                    centroid_id: best,
+                    CENTROID_ID: best,
                 }
             )
 
@@ -354,8 +353,6 @@ def cosine_topk_arrow(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """:func:`cosine_topk` (exact brute force) as per-batch GEMM +
     per-batch partial top-k: each Arrow batch emits its own k best
@@ -367,7 +364,7 @@ def cosine_topk_arrow(
     import pandas as pd
 
     spark = queries.sparkSession
-    q_ids, q_mat = _centroid_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _centroid_matrix(queries, VEC_ID_COL, VEC_COL)
     q_norms = np.linalg.norm(q_mat, axis=1)
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norms))
     out_schema = "query_id long, neighbor_id long, cosine_sim double"
@@ -375,10 +372,10 @@ def cosine_topk_arrow(
     def partial(batches):
         ids_q, mat_q, norms_q = bc.value
         for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype="float64")
+            v = np.array(pdf[VEC_COL].tolist(), dtype="float64")
             if v.size == 0:
                 continue
-            nid = pdf[id_col].values
+            nid = pdf[VEC_ID_COL].values
             vn = np.linalg.norm(v, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 sims = np.round(
@@ -404,7 +401,7 @@ def cosine_topk_arrow(
                 }
             )
 
-    cands = corpus.select(id_col, vec_col).mapInPandas(partial, out_schema)
+    cands = corpus.select(VEC_ID_COL, VEC_COL).mapInPandas(partial, out_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
@@ -418,9 +415,7 @@ def cosine_topk_arrow(
 def lsh_bucket_arrow(
     vectors: DataFrame,
     n_planes: int = N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
+    id_col: str = VEC_ID_COL,
 ) -> DataFrame:
     """:func:`lsh_bucket` as one sign-GEMM per Arrow batch (V·Pᵀ > 0
     packed to the same little-endian bit order as the expression path).
@@ -434,11 +429,11 @@ def lsh_bucket_arrow(
 
     planes = np.array(PLANES[:n_planes], dtype="float64")  # P x D
     weights = (1 << np.arange(n_planes, dtype="int64"))
-    out_schema = f"{id_col} long, {vec_col} array<double>, {bucket_col} long"
+    out_schema = f"{id_col} long, {VEC_COL} array<double>, bucket long"
 
     def bucketize(batches):
         for pdf in batches:
-            v = np.array(pdf[vec_col].tolist(), dtype="float64")
+            v = np.array(pdf[VEC_COL].tolist(), dtype="float64")
             if v.size == 0:
                 continue
             bits = (v @ planes.T) > 0  # B x P
@@ -446,12 +441,12 @@ def lsh_bucket_arrow(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    vec_col: pdf[vec_col],
-                    bucket_col: bucket,
+                    VEC_COL: pdf[VEC_COL],
+                    "bucket": bucket,
                 }
             )
 
-    return vectors.select(id_col, vec_col).mapInPandas(bucketize, out_schema)
+    return vectors.select(id_col, VEC_COL).mapInPandas(bucketize, out_schema)
 
 
 def ivf_ann_topk(
@@ -459,8 +454,6 @@ def ivf_ann_topk(
     corpus: DataFrame,
     centroids: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     nprobe: int = 1,
     corpus_cells: DataFrame | None = None,
 ) -> DataFrame:
@@ -478,19 +471,19 @@ def ivf_ann_topk(
     column a 100 TB deployment writes at ingest) skips the per-call
     quantizer scan, which otherwise dominates repeated query batches.
     """
-    q = ivf_probe_cells(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+    q = ivf_probe_cells(queries, centroids, nprobe).select(
+        F.col(VEC_ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
         "centroid_id",
     )
     assigned = (
         corpus_cells
         if corpus_cells is not None
-        else ivf_assign(corpus, centroids, id_col, vec_col)
+        else ivf_assign(corpus, centroids)
     )
     c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
+        F.col(VEC_ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
         "centroid_id",
     )
     sim = F.round(cosine_similarity("q_vec", "c_vec"), 9)
@@ -512,8 +505,7 @@ def ivf_ann_topk(
 def cosine_neardup_pairs(
     vectors: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vec_col: str = VEC_COL,
     n_planes: int = N_PLANES,
     bucketed: DataFrame | None = None,
 ) -> DataFrame:
@@ -527,7 +519,7 @@ def cosine_neardup_pairs(
     expected cell size keeps the cell-local join quadratic term small.
     """
     b = bucketed if bucketed is not None else vectors.select(
-        F.col(id_col),
+        F.col(VEC_ID_COL),
         F.col(vec_col),
         lsh_bucket(vec_col, n_planes).alias("bucket"),
     )
@@ -539,11 +531,11 @@ def cosine_neardup_pairs(
         .join(
             b.alias("r"),
             (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col(f"l.{VEC_ID_COL}") < F.col(f"r.{VEC_ID_COL}")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{VEC_ID_COL}").alias("id_a"),
+            F.col(f"r.{VEC_ID_COL}").alias("id_b"),
             sim.alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
@@ -555,9 +547,7 @@ def cosine_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization: ``scale = max|e| / 127``,
     ``q_i = floor(e_i / scale + 0.5)`` — the standard storage/bandwidth
     lever for large embedding tables (4× smaller than float32; cosine
@@ -577,9 +567,9 @@ def quantize_embeddings(
     error term re-evaluates each array pass combinatorially — measured
     35.5 s → 1.36 s (26×, 500k × 64-dim) from the staging alone.
     """
-    e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    staged = df.select(F.col(id_col), e.alias("_e")).select(
-        id_col,
+    e = F.transform(F.col(VEC_COL), lambda x: x.cast("double"))
+    staged = df.select(F.col(VEC_ID_COL), e.alias("_e")).select(
+        VEC_ID_COL,
         "_e",
         (F.array_max(F.transform(F.col("_e"), F.abs)) / F.lit(127.0)).alias(
             "_scale"
@@ -593,7 +583,7 @@ def quantize_embeddings(
             F.col("_e"), lambda x: F.floor(x / scale + F.lit(0.5)).cast("int")
         )
     )
-    staged = staged.select(id_col, "_e", "_scale", q.alias("qvec"))
+    staged = staged.select(VEC_ID_COL, "_e", "_scale", q.alias("qvec"))
     recon_err = (
         F.aggregate(
             F.zip_with(
@@ -607,7 +597,7 @@ def quantize_embeddings(
         / F.size(F.col("_e"))
     )
     return staged.select(
-        F.col(id_col),
+        F.col(VEC_ID_COL),
         F.round(scale, 9).alias("scale"),
         F.col("qvec"),
         F.md5(
@@ -619,24 +609,22 @@ def quantize_embeddings(
     )
 
 
-def quantize_embeddings_sql(
-    table: str = "embeddings", id_col: str = "vec_id", vec_col: str = "embedding"
-) -> str:
+def quantize_embeddings_sql(table: str = EMBEDDINGS_TABLE) -> str:
     """DuckDB oracle twin of :func:`quantize_embeddings` (without the
     qvec payload column — the gate compares scale, q_md5 and error)."""
-    e = f"CAST({vec_col} AS DOUBLE[])"
+    e = f"CAST({VEC_COL} AS DOUBLE[])"
     return f"""
-    SELECT {id_col}, round(scale, 9) AS scale,
+    SELECT {VEC_ID_COL}, round(scale, 9) AS scale,
            md5(array_to_string(q, ',')) AS q_md5,
            round(list_sum(list_transform(range(1, len(q) + 1),
                  i -> abs(e[i] - q[i] * scale))) / len(q), 6) AS mean_abs_err
     FROM (
-      SELECT {id_col}, e, scale,
+      SELECT {VEC_ID_COL}, e, scale,
              CASE WHEN scale = 0
                   THEN list_transform(e, x -> 0)
                   ELSE list_transform(e, x -> CAST(floor(x / scale + 0.5) AS INT))
              END AS q
-      FROM (SELECT {id_col}, {e} AS e,
+      FROM (SELECT {VEC_ID_COL}, {e} AS e,
                    list_max(list_transform({e}, x -> abs(x))) / 127.0 AS scale
             FROM {table}))
     """
@@ -651,9 +639,7 @@ def semantic_dedup(
     vectors: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.99,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iter: int = 20,
+    vec_col: str = VEC_COL,
 ) -> DataFrame:
     """Semantic deduplication in embedding space (the SemDeDup recipe,
     Abbas et al. 2023, arXiv:2303.09540): partition the corpus with a
@@ -686,7 +672,7 @@ def semantic_dedup(
     from streaming_etl_pipeline_spark.operators.components import dedup_clusters
 
     assigned = ivf_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col
+        vectors, centroids, vec_col=vec_col
     ).localCheckpoint()  # referenced 3× (both pair sides + final join)
     sim = F.round(
         cosine_similarity(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 9
@@ -696,27 +682,27 @@ def semantic_dedup(
         .join(
             assigned.alias("r"),
             (F.col("l.centroid_id") == F.col("r.centroid_id"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col(f"l.{VEC_ID_COL}") < F.col(f"r.{VEC_ID_COL}")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
+            F.col(f"l.{VEC_ID_COL}").alias("id_a"),
+            F.col(f"r.{VEC_ID_COL}").alias("id_b"),
             sim.alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
-    clusters = dedup_clusters(pairs, max_iter=max_iter).withColumnRenamed(
-        "doc_id", id_col
+    clusters = dedup_clusters(pairs, max_iter=20).withColumnRenamed(
+        "doc_id", VEC_ID_COL
     )
-    canonical = F.coalesce("canonical_id", F.col(id_col))
+    canonical = F.coalesce("canonical_id", F.col(VEC_ID_COL))
     # cluster members are change-sized (near-dups only) — broadcast
     # them instead of shuffling the whole assigned corpus for the join
-    return assigned.join(F.broadcast(clusters), id_col, "left").select(
-        id_col,
+    return assigned.join(F.broadcast(clusters), VEC_ID_COL, "left").select(
+        VEC_ID_COL,
         "centroid_id",
         canonical.alias("canonical_id"),
         F.coalesce("cluster_size", F.lit(1).cast("long")).alias("cluster_size"),
-        (canonical == F.col(id_col)).alias("keep"),
+        (canonical == F.col(VEC_ID_COL)).alias("keep"),
     )
 
 
@@ -725,15 +711,10 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
-def mean_pool(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-    renormalize: bool = True,
-) -> DataFrame:
+def mean_pool(df: DataFrame, group_col: str) -> DataFrame:
     """Mean-pool vectors per group (chunk embeddings → one document
-    embedding, user events → one profile vector), optionally L2-renorm
-    so downstream cosine math keeps unit-norm assumptions.
+    embedding, user events → one profile vector), L2-renormed so
+    downstream cosine math keeps unit-norm assumptions.
 
     Pure built-in composition: posexplode → per-(group, dim) mean → one
     ``array_agg`` ordered by dim. Two shuffles on uniform keys; at
@@ -741,7 +722,7 @@ def mean_pool(
     one partial per (group, dim, partition), never the raw vectors.
     """
     dims = df.select(
-        group_col, F.posexplode(vec_col).alias("dim", "x")
+        group_col, F.posexplode(VEC_COL).alias("dim", "x")
     )
     pooled = dims.groupBy(group_col, "dim").agg(
         F.avg(F.col("x").cast("double")).alias("x")
@@ -750,26 +731,22 @@ def mean_pool(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "x"))),
             lambda s: s["x"],
-        ).alias(vec_col)
+        ).alias(VEC_COL)
     )
-    if not renormalize:
-        return vecs
     norm = F.sqrt(
-        F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x * x)
+        F.aggregate(VEC_COL, F.lit(0.0), lambda acc, x: acc + x * x)
     )
     return vecs.select(
         group_col,
         F.transform(
-            vec_col, lambda x: x / F.greatest(norm, F.lit(1e-12))
-        ).alias(vec_col),
+            VEC_COL, lambda x: x / F.greatest(norm, F.lit(1e-12))
+        ).alias(VEC_COL),
     )
 
 
 def truncate_embeddings(
     df: DataFrame,
     out_dims: int,
-    vec_col: str = "embedding",
-    renormalize: bool = True,
 ) -> DataFrame:
     """Matryoshka-style truncation: keep the first ``out_dims``
     components and L2-renormalize — the storage/CPU scale knob for ANN
@@ -780,9 +757,7 @@ def truncate_embeddings(
     0-shuffle per-row projection; composes with ``quantize_embeddings``
     for a further 4× (int8) on top of the dimension cut.
     """
-    short = F.slice(F.col(vec_col), 1, out_dims)
-    if not renormalize:
-        return df.withColumn(vec_col, short)
+    short = F.slice(F.col(VEC_COL), 1, out_dims)
     sq = F.aggregate(
         short, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
@@ -790,7 +765,7 @@ def truncate_embeddings(
         df.withColumn("_short", short)
         .withColumn("_norm", F.sqrt(sq))
         .withColumn(
-            vec_col,
+            VEC_COL,
             F.transform(
                 "_short",
                 lambda x: (
@@ -802,9 +777,7 @@ def truncate_embeddings(
     )
 
 
-def mean_pool_exact(
-    df: DataFrame, group_col: str, vec_col: str = "embedding"
-) -> DataFrame:
+def mean_pool_exact(df: DataFrame, group_col: str) -> DataFrame:
     """Decimal-exact, exploded form of :func:`mean_pool` for
     differential gating: per (group, dim) rows with the pooled mean and
     its L2-renormalized value, every float step engine-portable
@@ -815,7 +788,7 @@ def mean_pool_exact(
     """
     from pyspark.sql import Window
 
-    exploded = df.select(group_col, F.posexplode(vec_col).alias("dim", "x"))
+    exploded = df.select(group_col, F.posexplode(VEC_COL).alias("dim", "x"))
     pooled = exploded.groupBy(group_col, "dim").agg(
         F.round(
             F.sum(F.col("x").cast("double").cast("decimal(27,12)"))
@@ -848,12 +821,9 @@ def filtered_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    filter_col: str = "label",
 ) -> DataFrame:
     """Metadata-filtered exact top-k: neighbors must match the query's
-    ``filter_col`` — PRE-filter semantics (the constraint is part of the
+    ``label`` — PRE-filter semantics (the constraint is part of the
     join condition, so ranking happens over the filtered candidate set
     and always yields k results when k candidates exist; post-filtering
     a plain top-k can silently return fewer).
@@ -864,14 +834,14 @@ def filtered_cosine_topk(
     files entirely — the standard "filtered vector search" shape.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(filter_col).alias("_qf"),
-        F.col(vec_col).alias("q_vec"),
+        F.col(VEC_ID_COL).alias("query_id"),
+        F.col("label").alias("_qf"),
+        F.col(VEC_COL).alias("q_vec"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(filter_col).alias("_cf"),
-        F.col(vec_col).alias("c_vec"),
+        F.col(VEC_ID_COL).alias("neighbor_id"),
+        F.col("label").alias("_cf"),
+        F.col(VEC_COL).alias("c_vec"),
     )
     sim = F.round(cosine_similarity("q_vec", "c_vec"), 9)
     scored = c.join(
@@ -895,8 +865,6 @@ def ann_rerank(
     k: int = 5,
     candidate_k: int = 50,
     stage1_dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage retrieval: a cheap wide net, then exact scoring of the
     survivors — the production ANN shape (coarse quantizer / truncated
@@ -914,17 +882,17 @@ def ann_rerank(
     is still scanned once per stage and never shuffled.
     """
     if stage1_dims is None:
-        return cosine_topk(queries, corpus, k, id_col, vec_col)
-    short_corpus = truncate_embeddings(corpus, stage1_dims, vec_col)
-    short_queries = truncate_embeddings(queries, stage1_dims, vec_col)
-    cands = cosine_topk(
-        short_queries, short_corpus, candidate_k, id_col, vec_col
-    ).select("query_id", "neighbor_id")
+        return cosine_topk(queries, corpus, k)
+    short_corpus = truncate_embeddings(corpus, stage1_dims)
+    short_queries = truncate_embeddings(queries, stage1_dims)
+    cands = cosine_topk(short_queries, short_corpus, candidate_k).select(
+        "query_id", "neighbor_id"
+    )
     full_q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(VEC_ID_COL).alias("query_id"), F.col(VEC_COL).alias("q_vec")
     )
     full_c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col(VEC_ID_COL).alias("neighbor_id"), F.col(VEC_COL).alias("c_vec")
     )
     scored = (
         full_c.join(F.broadcast(cands), "neighbor_id")
@@ -949,10 +917,8 @@ def embedding_decontamination(
     corpus: DataFrame,
     benchmark: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vec_col: str = VEC_COL,
     bench_id_col: str | None = None,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-level benchmark decontamination: for every corpus
     vector whose cosine similarity to ANY benchmark vector reaches
@@ -968,31 +934,22 @@ def embedding_decontamination(
     similarity filter, and only the flagged rows (contamination is rare
     by construction) reach the per-vector argmax shuffle. Exact by
     design — decontamination is the one place recall losses are not
-    acceptable. For a benchmark too big to broadcast, pass
-    ``candidates=`` — a ``(vec_id, bench_id, cosine_sim)`` frame of
-    cell-local pairs (an IVF or LSH bucket join: probe all cells for
-    exact recall, fewer to trade recall for cost) — and only the threshold filter
-    + argmax tail runs here. Ranking ties break by ``bench_id`` for a
-    deterministic result.
+    acceptable. Ranking ties break by ``bench_id`` for a deterministic
+    result.
     """
-    if candidates is not None:
-        scored = candidates.select(
-            F.col(id_col).alias("vec_id"), "bench_id", "cosine_sim"
-        ).filter(F.col("cosine_sim") >= threshold)
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")
-        )
-        b = benchmark.select(
-            F.col(bench_id_col or id_col).alias("bench_id"),
-            F.col(vec_col).alias("b_vec"),
-        )
-        sim = F.round(cosine_similarity("c_vec", "b_vec"), 9)
-        scored = (
-            c.join(F.broadcast(b))
-            .select("vec_id", "bench_id", sim.alias("cosine_sim"))
-            .filter(F.col("cosine_sim") >= threshold)
-        )
+    c = corpus.select(
+        F.col(VEC_ID_COL).alias("vec_id"), F.col(vec_col).alias("c_vec")
+    )
+    b = benchmark.select(
+        F.col(bench_id_col or VEC_ID_COL).alias("bench_id"),
+        F.col(vec_col).alias("b_vec"),
+    )
+    sim = F.round(cosine_similarity("c_vec", "b_vec"), 9)
+    scored = (
+        c.join(F.broadcast(b))
+        .select("vec_id", "bench_id", sim.alias("cosine_sim"))
+        .filter(F.col("cosine_sim") >= threshold)
+    )
     # Per-vector argmax as max(struct) — unlike a row_number window this
     # gets map-side partial aggregation, so the (already rare) flagged
     # rows combine before the shuffle; (-bench_id) makes ties pick the
@@ -1014,9 +971,7 @@ def bitext_margin_pairs(
     tgt: DataFrame,
     k: int = 4,
     threshold: float = 1.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tgt_id_col: str | None = None,
+    vec_col: str = VEC_COL,
     candidates: DataFrame | None = None,
     cache_candidates: bool = True,
 ) -> DataFrame:
@@ -1061,10 +1016,10 @@ def bitext_margin_pairs(
         )
     else:
         s = src.select(
-            F.col(id_col).alias("src_id"), F.col(vec_col).alias("s_vec")
+            F.col(VEC_ID_COL).alias("src_id"), F.col(vec_col).alias("s_vec")
         )
         t = tgt.select(
-            F.col(tgt_id_col or id_col).alias("tgt_id"),
+            F.col(VEC_ID_COL).alias("tgt_id"),
             F.col(vec_col).alias("t_vec"),
         )
         cos = F.round(cosine_similarity("s_vec", "t_vec"), 9)
@@ -1143,10 +1098,6 @@ def hard_negative_mining(
     anchors: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (the E5/GTE/DPR
     data recipe): per anchor, the ``k`` most-similar corpus vectors with
@@ -1160,38 +1111,26 @@ def hard_negative_mining(
     the broadcast side, the corpus streams through one scan, and only
     (anchor, candidate) survivors of the label-inequality predicate
     reach the per-anchor top-k window. The label filter lives IN the
-    join condition, so pruned pairs never materialize. For mining over
-    the full corpus as anchors pass ``candidates=`` — an
-    ``(anchor_id, neighbor_id, a_label, neighbor_label, cosine_sim)``
-    frame of cell-local pairs (an IVF or LSH bucket join carrying both
-    labels) — and only the label/self filters +
-    per-anchor top-k run here; capped ``nprobe`` trades recall for
-    never materializing the corpus² grid.
+    join condition, so pruned pairs never materialize.
     """
-    if candidates is not None:
-        scored = candidates.filter(
-            (F.col("a_label") != F.col("neighbor_label"))
-            & (F.col("anchor_id") != F.col("neighbor_id"))
-        ).select("anchor_id", "neighbor_id", "neighbor_label", "cosine_sim")
-    else:
-        a = anchors.select(
-            F.col(id_col).alias("anchor_id"),
-            F.col(vec_col).alias("a_vec"),
-            F.col(label_col).alias("a_label"),
-        )
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col(label_col).alias("neighbor_label"),
-        )
-        sim = F.round(cosine_similarity("a_vec", "c_vec"), 9)
-        scored = c.join(
-            F.broadcast(a),
-            (F.col("a_label") != F.col("neighbor_label"))
-            & (F.col("anchor_id") != F.col("neighbor_id")),
-        ).select(
-            "anchor_id", "neighbor_id", "neighbor_label", sim.alias("cosine_sim")
-        )
+    a = anchors.select(
+        F.col(VEC_ID_COL).alias("anchor_id"),
+        F.col(VEC_COL).alias("a_vec"),
+        F.col("label").alias("a_label"),
+    )
+    c = corpus.select(
+        F.col(VEC_ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        F.col("label").alias("neighbor_label"),
+    )
+    sim = F.round(cosine_similarity("a_vec", "c_vec"), 9)
+    scored = c.join(
+        F.broadcast(a),
+        (F.col("a_label") != F.col("neighbor_label"))
+        & (F.col("anchor_id") != F.col("neighbor_id")),
+    ).select(
+        "anchor_id", "neighbor_id", "neighbor_label", sim.alias("cosine_sim")
+    )
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
@@ -1235,8 +1174,8 @@ def pq_fit(
     vectors: DataFrame,
     codebooks_shape: tuple[int, int] = (PQ_M, PQ_K),
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
     use_arrow: bool = False,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: an independent k-means per subspace slice.
@@ -1270,128 +1209,14 @@ def pq_fit(
     return books
 
 
-def _kmeans_np(Z, k: int, iters: int, rng):
-    """Seeded k-means++ + Lloyd over an in-memory sample (numpy): the
-    OPQ inner fit. Empty clusters reseed to the point farthest from its
-    centroid — deterministic given the seeded rng."""
-    import numpy as np
-
-    n = Z.shape[0]
-    cents = np.empty((k, Z.shape[1]))
-    cents[0] = Z[rng.randint(n)]
-    d2 = ((Z - cents[0]) ** 2).sum(1)
-    for i in range(1, k):
-        probs = d2 / max(d2.sum(), 1e-30)
-        cents[i] = Z[rng.choice(n, p=probs)]
-        d2 = np.minimum(d2, ((Z - cents[i]) ** 2).sum(1))
-    for _ in range(iters):
-        dist = ((Z[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-        assign = dist.argmin(1)
-        for i in range(k):
-            mask = assign == i
-            if mask.any():
-                cents[i] = Z[mask].mean(0)
-            else:
-                cents[i] = Z[dist.min(1).argmax()]
-    return cents
-
-
-def opq_fit(
-    vectors: DataFrame,
-    codebooks_shape: tuple[int, int] = (PQ_M, PQ_K),
-    iters: int = 5,
-    opq_iters: int = 8,
-    sample_limit: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "tuple[list[list[float]], list[list[list[float]]]]":
-    """OPQ (Ge et al. 2013, the FAISS ``OPQ`` pre-transform; judge r10
-    "next round" #5): learn an ORTHOGONAL rotation R that aligns the
-    vector space with the PQ subspace grid before quantization, by
-    alternating (a) per-subspace k-means on the rotated sample with
-    (b) the orthogonal-Procrustes update R = V·Uᵀ from
-    SVD(Xᵀ·Y) = U·S·Vᵀ, where Y is the codebook reconstruction of the
-    rotated sample. Plain PQ quantizes each axis-aligned slice
-    independently, so variance that straddles subspace boundaries is
-    quantized badly; the rotation concentrates it, buying recall at
-    identical bits.
-
-    Trains on a bounded DETERMINISTIC sample (first ``sample_limit``
-    rows by id — quantizer quality needs a representative sample, not
-    the corpus; FAISS trains OPQ exactly this way) fully driver-side in
-    numpy: ~opq_iters·(m k-means + one d×d SVD), seconds at d=64. The
-    distributed side only ever applies R as a codegen expression
-    (:func:`opq_rotate`). Returns ``(rotation, codebooks)`` rounded to
-    6dp — rotation is d×d row-major (y = R·x), codebooks live in the
-    ROTATED space and drop into every existing encode/ADC/IVF-PQ path
-    via their ``rotation=`` parameter. R orthogonal ⇒ cosine and L2
-    are preserved, so IVF coarse assignment stays on raw vectors."""
-    import numpy as np
-
-    rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample_limit)
-        .collect()
-    )
-    X = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-    n, d = X.shape
-    m, k = codebooks_shape
-    sub = d // m
-    if m * sub != d:
-        raise ValueError(f"dim {d} not divisible into {m} subspaces")
-    rng = np.random.RandomState(11)
-    R = np.eye(d)
-    books = None
-    for it in range(opq_iters):
-        Xr = X @ R.T
-        Y = np.empty_like(Xr)
-        books = []
-        for s in range(m):
-            Z = Xr[:, s * sub:(s + 1) * sub]
-            C = _kmeans_np(Z, k, iters, rng)
-            dist = ((Z[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            Y[:, s * sub:(s + 1) * sub] = C[dist.argmin(1)]
-            books.append(C)
-        if it < opq_iters - 1:  # keep the RETURNED books consistent
-            # with the returned R (the last fit runs on R-rotated data);
-            # opq_iters=1 is then exactly plain PQ under this trainer
-            U, _s, Vt = np.linalg.svd(X.T @ Y)
-            R = (U @ Vt).T  # argmin ||X·Rᵀ − Y||_F over orthogonal R
-    rotation = [[round(float(x), 6) for x in row] for row in R]
-    codebooks = [
-        [[round(float(x), 6) for x in cw] for cw in book] for book in books
-    ]
-    return rotation, codebooks
-
-
-def opq_rotate(
-    vec: "Column | str", rotation: list[list[float]]
-) -> Column:
-    """Apply the OPQ rotation as a pure codegen expression: output
-    component i is ``dot(v, R[i])`` over literal rows — 0 shuffles, no
-    UDF, exactly the quantizer-state-as-literals pattern the PQ
-    codebooks use."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.array(
-        *[
-            F.round(dot(v, F.array(*[F.lit(x) for x in row])), 6)
-            for row in rotation
-        ]
-    )
-
-
 def retrain_quantizer(
     vectors: DataFrame,
     n_cells: int,
     codebooks_shape: tuple[int, int] = (PQ_M, PQ_K),
     iters: int = 5,
     sample_fraction: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = True,
-    opq: bool = False,
-    opq_iters: int = 8,
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
 ):
     """Retrain the full IVF-PQ quantizer state — coarse centroids
     (:func:`clustering.kmeans_fit`) AND PQ codebooks (:func:`pq_fit`)
@@ -1409,14 +1234,7 @@ def retrain_quantizer(
     sample-sized. Returns ``(centroids, codebooks)`` in exactly the
     shapes ``streaming.ingest.ann_index_batch`` / :func:`ivf_pq_topk` accept; the
     centroid frame is materialized (localCheckpoint) so downstream
-    plans embed trained state, not the training lineage.
-
-    ``opq=True`` (r11): returns ``(centroids, codebooks, rotation)``
-    with the codebooks trained by :func:`opq_fit` in the learned
-    rotated space — the full OPQ drift-retrain: pass ``rotation=`` to
-    :func:`ivf_pq_topk` / :func:`pq_encode` and reencode the stored
-    index with the same pair. Centroids stay raw-space either way
-    (orthogonal invariance keeps coarse routing valid)."""
+    plans embed trained state, not the training lineage."""
     from streaming_etl_pipeline_spark.operators.clustering import kmeans_fit
 
     if sample_fraction is not None:
@@ -1424,17 +1242,11 @@ def retrain_quantizer(
     vectors = vectors.localCheckpoint(eager=True)  # scanned m+1 times
     centroids = kmeans_fit(
         vectors, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col,
-        use_arrow=use_arrow,
+        use_arrow=True,
     ).localCheckpoint(eager=True)
-    if opq:
-        rotation, books = opq_fit(
-            vectors, codebooks_shape=codebooks_shape, iters=iters,
-            opq_iters=opq_iters, id_col=id_col, vec_col=vec_col,
-        )
-        return centroids, books, rotation
     books = pq_fit(
         vectors, codebooks_shape=codebooks_shape, iters=iters,
-        id_col=id_col, vec_col=vec_col, use_arrow=use_arrow,
+        id_col=id_col, vec_col=vec_col, use_arrow=True,
     )
     return centroids, books
 
@@ -1462,16 +1274,11 @@ def _pq_subspace_scores(
 def pq_encode(
     vec: Column | str,
     codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
-    rotation: "list[list[float]] | None" = None,
 ) -> Column:
     """PQ code array (m small ints) for a vector column — a 0-shuffle
     map: every distance is a literal-codeword dot product inside
-    whole-stage codegen, argmin via ``array_position(scores, min)``.
-    ``rotation`` (from :func:`opq_fit`) pre-rotates the vector; the
-    codebooks must then be the rotated-space ones from the same fit."""
+    whole-stage codegen, argmin via ``array_position(scores, min)``."""
     v = F.col(vec) if isinstance(vec, str) else vec
-    if rotation is not None:
-        v = opq_rotate(v, rotation)
     sub_len = len(codebooks[0][0])
     codes = []
     for s, book in enumerate(codebooks):
@@ -1480,14 +1287,12 @@ def pq_encode(
     return F.array(*codes)
 
 
-def pq_encode_sql(
-    vec_sql: str, codebooks: list[list[list[float]]] = PQ_CODEBOOKS
-) -> str:
+def pq_encode_sql(vec_sql: str) -> str:
     """DuckDB twin of :func:`pq_encode` (list_position is 1-based and
     returns the FIRST occurrence — same lowest-code tiebreak)."""
-    sub_len = len(codebooks[0][0])
+    sub_len = len(PQ_CODEBOOKS[0][0])
     codes = []
-    for s, book in enumerate(codebooks):
+    for s, book in enumerate(PQ_CODEBOOKS):
         sub = f"list_slice(CAST({vec_sql} AS DOUBLE[]), {s * sub_len + 1}, {(s + 1) * sub_len})"
         terms = []
         for cw in book:
@@ -1518,12 +1323,10 @@ def pq_reconstruct(
     return F.flatten(F.array(*parts))
 
 
-def pq_reconstruct_sql(
-    codes_sql: str, codebooks: list[list[list[float]]] = PQ_CODEBOOKS
-) -> str:
+def pq_reconstruct_sql(codes_sql: str) -> str:
     """DuckDB twin of :func:`pq_reconstruct`."""
     parts = []
-    for s, book in enumerate(codebooks):
+    for s, book in enumerate(PQ_CODEBOOKS):
         lit = (
             "["
             + ", ".join("[" + ", ".join(str(x) for x in cw) + "]" for cw in book)
@@ -1537,10 +1340,6 @@ def pq_adc_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
-    rotation: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """Approximate top-k over a PQ-compressed corpus via asymmetric
     distance: the corpus is carried as m-byte code arrays (encode is a
@@ -1549,23 +1348,13 @@ def pq_adc_topk(
     against the reconstruction. Broadcast queries × one corpus scan —
     identical shape (and ranking contract) to :func:`cosine_topk`, so PQ
     recall is directly measurable against the brute-force arm.
-    ``rotation`` (:func:`opq_fit`): corpus vectors are rotated before
-    encoding and queries before scoring — R is orthogonal, so cosine in
-    the rotated space equals cosine in the raw space and the ranking
-    contract is unchanged; only the quantization error shrinks.
     """
-    q_vec_expr = (
-        opq_rotate(vec_col, rotation) if rotation is not None
-        else F.col(vec_col)
-    )
     q = queries.select(
-        F.col(id_col).alias("query_id"), q_vec_expr.alias("q_vec")
+        F.col(VEC_ID_COL).alias("query_id"), F.col(VEC_COL).alias("q_vec")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        pq_reconstruct(
-            pq_encode(vec_col, codebooks, rotation=rotation), codebooks
-        ).alias("c_vec"),
+        F.col(VEC_ID_COL).alias("neighbor_id"),
+        pq_reconstruct(pq_encode(VEC_COL)).alias("c_vec"),
     )
     sim = F.round(cosine_similarity("q_vec", "c_vec"), 9)
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
@@ -1586,15 +1375,10 @@ def ivf_pq_topk(
     corpus: DataFrame,
     centroids: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     nprobe: int = 1,
     codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
     corpus_index: DataFrame | None = None,
-    prune_stored_cells: bool = False,
     filter_col: str | None = None,
-    attributes: DataFrame | None = None,
-    rotation: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """IVF-PQ (the FAISS-standard billion-scale layout): candidates are
     restricted to the query's ``nprobe`` nearest IVF cells AND the
@@ -1606,19 +1390,9 @@ def ivf_pq_topk(
     matches :func:`cosine_topk`, so recall decomposes into the IVF
     routing loss × the PQ quantization loss (both measured in SCALE.md).
 
-    ``corpus_index``: a pre-built ``(id_col, centroid_id, codes)``
+    ``corpus_index``: a pre-built ``(vec_id, centroid_id, codes)``
     frame (the stored-at-ingest shape) skips both the quantizer scan
     and the encode pass for repeated query batches.
-
-    ``prune_stored_cells=True`` (with ``corpus_index``): collect the
-    probed cell ids (bounded — ≤ queries × nprobe longs) and push an
-    ``isin`` filter into the index scan. When the index is the
-    ``ann_index_batch(partition_by_cell=True)`` store, this is STATIC
-    partition pruning — only the probed cells' directories are listed
-    and read, so probe I/O is ∝ nprobe/n_cells of the index regardless
-    of corpus size. Semantically a no-op (candidates are cell-join-
-    restricted anyway — pinned by the pruned-vs-unpruned equality
-    test); opt-in because it runs one small eager job per call.
 
     ``filter_col``: metadata-filtered search on the COMPRESSED index —
     :func:`filtered_cosine_topk`'s pre-filter semantics (the attribute
@@ -1627,47 +1401,23 @@ def ivf_pq_topk(
     returns no rows rather than wrong ones). The filter applies BEFORE
     reconstruction: candidates failing it are discarded as code rows —
     one column-equality test — and only survivors pay the m-subspace
-    decode. Corpus-side attributes come from ``filter_col`` already on
-    ``corpus_index``/``corpus``, else from ``attributes`` (an
-    ``(id_col, filter_col)`` frame joined onto the index — at 100 TB
-    store the attribute column IN the index instead and skip that
-    id-shuffle).
-
-    ``rotation`` (:func:`opq_fit`): OPQ pre-transform — corpus vectors
-    rotate before PQ encode, query vectors before scoring; coarse
-    assignment stays raw (orthogonal invariance). A stored
-    ``corpus_index`` must have been encoded with the SAME rotation and
-    codebooks.
+    decode. The corpus-side attribute is ``filter_col`` on
+    ``corpus_index`` or ``corpus``.
     """
-    # coarse probing stays on RAW vectors — the OPQ rotation is
-    # orthogonal, so cell geometry is preserved and centroids trained
-    # on raw vectors remain valid; only the PQ encode/score step moves
-    # into the rotated space
-    q = ivf_probe_cells(queries, centroids, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        (
-            opq_rotate(vec_col, rotation) if rotation is not None
-            else F.col(vec_col)
-        ).alias("q_vec"),
+    q = ivf_probe_cells(queries, centroids, nprobe).select(
+        F.col(VEC_ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
         "centroid_id",
     )
     if filter_col is not None:
         q = q.join(
             F.broadcast(
                 queries.select(
-                    F.col(id_col).alias("query_id"),
+                    F.col(VEC_ID_COL).alias("query_id"),
                     F.col(filter_col).alias("_qf"),
                 )
             ),
             "query_id",
-        )
-    if corpus_index is not None and prune_stored_cells:
-        probed = [
-            r.centroid_id
-            for r in q.select("centroid_id").distinct().collect()
-        ]
-        corpus_index = corpus_index.filter(
-            F.col("centroid_id").isin(probed)
         )
     if corpus_index is None:
         carry = (
@@ -1675,26 +1425,19 @@ def ivf_pq_topk(
             if filter_col is not None and filter_col in corpus.columns
             else ()
         )
-        corpus_index = ivf_assign(
-            corpus, centroids, id_col, vec_col, carry=carry
-        ).select(
-            id_col, "centroid_id", *carry,
-            pq_encode(vec_col, codebooks, rotation=rotation).alias("codes"),
+        corpus_index = ivf_assign(corpus, centroids, carry=carry).select(
+            VEC_ID_COL, "centroid_id", *carry,
+            pq_encode(VEC_COL, codebooks).alias("codes"),
         )
     if filter_col is not None and filter_col not in corpus_index.columns:
-        if attributes is None:
-            raise ValueError(
-                f"filter_col={filter_col!r} is on neither the corpus "
-                "index nor provided via attributes="
-            )
-        corpus_index = corpus_index.join(
-            attributes.select(id_col, filter_col), id_col
+        raise ValueError(
+            f"filter_col={filter_col!r} is on neither the corpus nor its index"
         )
     if filter_col is not None:
         # pre-filter BEFORE reconstruction: failing candidates cost one
         # column equality, never the m-subspace decode
         cand = corpus_index.select(
-            F.col(id_col).alias("neighbor_id"),
+            F.col(VEC_ID_COL).alias("neighbor_id"),
             "centroid_id",
             F.col(filter_col).alias("_cf"),
             "codes",
@@ -1716,7 +1459,7 @@ def ivf_pq_topk(
         )
     else:
         c = corpus_index.select(
-            F.col(id_col).alias("neighbor_id"),
+            F.col(VEC_ID_COL).alias("neighbor_id"),
             "centroid_id",
             pq_reconstruct("codes", codebooks).alias("c_vec"),
         )
@@ -1790,8 +1533,8 @@ def random_project_sql(vec_sql: str, out_dim: int = 16) -> str:
 def pq_encode_arrow(
     vectors: DataFrame,
     codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
 ) -> DataFrame:
     """:func:`pq_encode` as numpy per Arrow batch — one (rows × K)
     distance GEMM per subspace instead of 1024 scalar expressions per
@@ -1843,8 +1586,6 @@ def pq_encode_arrow(
 def pq_reconstruct_arrow(
     codes: DataFrame,
     codebooks: list[list[list[float]]] = PQ_CODEBOOKS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Decode a ``(id, codes)`` frame back to quantized vectors in bulk
     (one numpy gather per subspace per Arrow batch). Feeding the result
@@ -1856,7 +1597,7 @@ def pq_reconstruct_arrow(
     spark = codes.sparkSession
     books = [np.array(b, dtype="float64") for b in codebooks]
     bc = spark.sparkContext.broadcast(books)
-    out_schema = f"{id_col} long, {vec_col} array<double>"
+    out_schema = f"{VEC_ID_COL} long, {VEC_COL} array<double>"
 
     def decode(batches):
         bks = bc.value
@@ -1868,7 +1609,7 @@ def pq_reconstruct_arrow(
                 [bk[c[:, s]] for s, bk in enumerate(bks)], axis=1
             )
             yield pd.DataFrame(
-                {id_col: pdf[id_col].values, vec_col: list(recon)}
+                {VEC_ID_COL: pdf[VEC_ID_COL].values, VEC_COL: list(recon)}
             )
 
     return codes.mapInPandas(decode, out_schema)
@@ -1883,7 +1624,6 @@ def ivf_occupancy_drift(
     ref_cells: DataFrame,
     cur_cells: DataFrame,
     n_cells: int,
-    cell_col: str = "centroid_id",
 ) -> DataFrame:
     """Per-cell IVF occupancy drift: PSI of the CURRENT assignment
     distribution against the TRAINING-TIME reference, cell ids as the
@@ -1893,7 +1633,7 @@ def ivf_occupancy_drift(
     quantizer carved for a different mix, recall decays silently —
     occupancy drift is the observable).
 
-    Inputs are assignment frames (one row per vector with ``cell_col``
+    Inputs are assignment frames (one row per vector with ``centroid_id``
     — ``ivf_assign`` output or ``load_ann_index``). Output: one row per
     cell ``(centroid_id, cnt_ref, cnt_cur, psi_term, psi, drifted)``
     with the same Laplace smoothing, 0.1 threshold, and reading as
@@ -1910,7 +1650,7 @@ def ivf_occupancy_drift(
 
     def counts(df: DataFrame, label: str) -> DataFrame:
         return (
-            df.select(F.col(cell_col).alias("cell"))
+            df.select(F.col(CENTROID_ID).alias("cell"))
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias(f"cnt_{label}"))
         )
@@ -1936,7 +1676,7 @@ def ivf_occupancy_drift(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     out = bins.crossJoin(F.broadcast(tot)).select(
-        F.col("cell").alias(cell_col),
+        F.col("cell").alias(CENTROID_ID),
         "cnt_ref",
         "cnt_cur",
         F.round(term, 6).alias("psi_term"),
@@ -1947,21 +1687,16 @@ def ivf_occupancy_drift(
     return out.withColumn("drifted", F.col("psi") >= 0.1)
 
 
-def ivf_occupancy_drift_sql(
-    ref_sql: str,
-    cur_sql: str,
-    n_cells: int,
-    cell_col: str = "centroid_id",
-) -> str:
+def ivf_occupancy_drift_sql(ref_sql: str, cur_sql: str, n_cells: int) -> str:
     """DuckDB oracle twin of :func:`ivf_occupancy_drift` —
     ``ref_sql``/``cur_sql`` yield one assignment row per vector with
-    ``cell_col``."""
+    ``centroid_id``."""
     return f"""
     WITH refc AS (
-      SELECT {cell_col} AS cell, count(*) AS cnt
+      SELECT {CENTROID_ID} AS cell, count(*) AS cnt
       FROM ({ref_sql}) GROUP BY 1),
     curc AS (
-      SELECT {cell_col} AS cell, count(*) AS cnt
+      SELECT {CENTROID_ID} AS cell, count(*) AS cnt
       FROM ({cur_sql}) GROUP BY 1),
     bins AS (
       SELECT b.cell,
@@ -1979,7 +1714,7 @@ def ivf_occupancy_drift_sql(
                         / ((cnt_ref + 0.5) / (n_ref + 0.5 * {n_cells}))),
                    9) AS t
       FROM bins, tot)
-    SELECT cell AS {cell_col}, CAST(cnt_ref AS BIGINT) AS cnt_ref,
+    SELECT cell AS {CENTROID_ID}, CAST(cnt_ref AS BIGINT) AS cnt_ref,
            CAST(cnt_cur AS BIGINT) AS cnt_cur,
            round(t, 6) AS psi_term,
            round(CAST(sum(CAST(t AS DECIMAL(38,9))) OVER () AS DOUBLE), 6)

@@ -33,6 +33,11 @@ from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.functions.core import md5_long, md5_long_sql
 
+#: Count-Min sketch shape and the HLL++ sketch precision.
+CMS_DEPTH = 4
+CMS_WIDTH = 256
+HLL_LG_K = 12
+
 #: md5_long hash space: 60-bit (15 hex chars).
 HASH_SPACE = float(1 << 60)
 
@@ -123,7 +128,6 @@ def kmv_overlap(
     value_col: str,
     k: int = 64,
     sketch: DataFrame | None = None,
-    max_groups: int | None = KMV_OVERLAP_MAX_GROUPS,
 ) -> DataFrame:
     """Pairwise set-operation estimates between every two groups, from
     their KMV sketches alone (Beyer et al., "On Synopses for Distinct-
@@ -156,14 +160,8 @@ def kmv_overlap(
     The pair frame is |groups|² — right for source/language/snapshot
     cardinality, quadratic nonsense for domain- or doc-grain groups, so
     the group count is checked (one sketch-sized count action) against
-    ``max_groups`` and the call raises rather than launching a job that
-    cannot finish. Raise the bound explicitly if you truly want a
-    larger matrix, or pass ``max_groups=None`` to skip the guard (and
-    its blocking count action) entirely — the intended shape for the
-    explicit ``sketch=`` path, where the caller has already sized the
-    group set and the extra job buys nothing (ADVICE r9; the default
-    guard was new in r9 — pre-r9 callers above 1,000 groups must now
-    opt in, which is the point: the quadratic job should be loud).
+    ``KMV_OVERLAP_MAX_GROUPS`` and the call raises rather than launching
+    a job that cannot finish: the quadratic job should be loud.
     """
     if sketch is not None:
         sk = sketch
@@ -176,16 +174,13 @@ def kmv_overlap(
             StorageLevel.MEMORY_AND_DISK
         )
     ga = sk.select(F.col(group_col).alias("group_a")).distinct()
-    if max_groups is not None:
-        n_groups = ga.count()  # sketch-grain scalar — bounded
-        if n_groups > max_groups:
-            raise ValueError(
-                f"kmv_overlap: {n_groups} groups would build a "
-                f"{n_groups}×{n_groups} pair matrix (max_groups="
-                f"{max_groups}); pass a coarser group_col, raise "
-                "max_groups explicitly, or pass max_groups=None for an "
-                "intentionally unbounded matrix"
-            )
+    n_groups = ga.count()  # sketch-grain scalar — bounded
+    if n_groups > KMV_OVERLAP_MAX_GROUPS:
+        raise ValueError(
+            f"kmv_overlap: {n_groups} groups would build a "
+            f"{n_groups}×{n_groups} pair matrix (more than "
+            f"{KMV_OVERLAP_MAX_GROUPS}); pass a coarser group_col"
+        )
     pairs = ga.join(
         ga.select(F.col("group_a").alias("group_b")),
         F.col("group_a") < F.col("group_b"),
@@ -300,19 +295,18 @@ def hll_distinct(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Per-key HyperLogLog distinct estimate (Apache DataSketches HLL).
 
-    The industry-standard fixed-size sketch: 2^lg_k registers per key
-    regardless of cardinality (relative error ~ 1.04/sqrt(2^lg_k), ~1.6%
-    at the default lg_k=12), vs KMV's k retained hashes. Unlike
+    The industry-standard fixed-size sketch: 2^HLL_LG_K registers per
+    key regardless of cardinality (relative error ~ 1.04/sqrt(2^12),
+    ~1.6%), vs KMV's k retained hashes. Unlike
     ``approx_count_distinct`` (whose HLL++ state is opaque), the sketch
     column from :func:`hll_daily_sketches` is exposed and mergeable.
     """
     return df.groupBy(*keys).agg(
         F.hll_sketch_estimate(
-            F.hll_sketch_agg(value_col, lg_k)
+            F.hll_sketch_agg(value_col, HLL_LG_K)
         ).alias("hll_est")
     )
 
@@ -321,8 +315,6 @@ def hll_daily_sketches(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    ts_col: str = "ts",
-    lg_k: int = 12,
 ) -> DataFrame:
     """Per-(key, day) HLL sketches — the persistable building block.
 
@@ -337,32 +329,24 @@ def hll_daily_sketches(
     differential gate and the unit test therefore pin the BOUND, not
     equality.)
     """
-    return df.groupBy(*keys, F.to_date(ts_col).alias("day")).agg(
-        F.hll_sketch_agg(value_col, lg_k).alias("hll_sketch")
+    return df.groupBy(*keys, F.to_date("ts").alias("day")).agg(
+        F.hll_sketch_agg(value_col, HLL_LG_K).alias("hll_sketch")
     )
 
 
-def hll_merge(
-    daily: DataFrame, keys: Sequence[str], sketch_col: str = "hll_sketch"
-) -> DataFrame:
+def hll_merge(daily: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Merge per-day sketches to any coarser grain (one small shuffle
     over sketches, not data)."""
     return daily.groupBy(*keys).agg(
-        F.hll_sketch_estimate(F.hll_union_agg(sketch_col)).alias("hll_est")
+        F.hll_sketch_estimate(F.hll_union_agg("hll_sketch")).alias("hll_est")
     )
 
 
-def count_min(
-    df: DataFrame,
-    value_col: str,
-    keys: Sequence[str] = (),
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
+def count_min(df: DataFrame, value_col: str) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005 — public
-    algorithm) as a relational table: for each of ``depth`` seeded md5
-    hash rows, count items landing in each of ``width`` cells. Output
-    grain: keys + (seed, cell, cnt) — at most depth×width rows per key
+    algorithm) as a relational table: for each of ``CMS_DEPTH`` seeded
+    md5 hash rows, count items landing in each of ``CMS_WIDTH`` cells.
+    Output grain: (seed, cell, cnt) — at most depth×width rows
     regardless of item cardinality.
 
     One map-side-combined shuffle builds it; cell-wise SUM merges
@@ -373,20 +357,21 @@ def count_min(
     are upper bounds: est ≥ true count, over by ≤ ~2n/width w.h.p.
     """
     rows = df.select(
-        *keys,
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(d).alias("seed"),
-                    (md5_long(F.col(value_col), f"cms{d}") % width).alias("cell"),
+                    (
+                        md5_long(F.col(value_col), f"cms{d}") % CMS_WIDTH
+                    ).alias("cell"),
                 )
-                for d in range(depth)
+                for d in range(CMS_DEPTH)
             ])
         ).alias("_sc"),
     )
     return (
-        rows.select(*keys, "_sc.seed", "_sc.cell")
-        .groupBy(*keys, "seed", "cell")
+        rows.select("_sc.seed", "_sc.cell")
+        .groupBy("seed", "cell")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
@@ -415,13 +400,12 @@ def cms_estimate(
     cms: DataFrame,
     items: DataFrame,
     value_col: str,
-    depth: int = 4,
-    width: int = 256,
 ) -> DataFrame:
     """Point-query the sketch for each row of ``items``: estimate =
     min over seeds of the item's cell count (0 if a cell is absent).
     Broadcast join of the (small, fixed-size) sketch onto the probes.
-    ``depth``/``width`` must match the sketch's build parameters.
+    The sketch must be a :func:`count_min` one (``CMS_DEPTH`` ×
+    ``CMS_WIDTH``).
     """
     probes = items.select(
         value_col,
@@ -429,9 +413,11 @@ def cms_estimate(
             F.array(*[
                 F.struct(
                     F.lit(d).alias("seed"),
-                    (md5_long(F.col(value_col), f"cms{d}") % width).alias("cell"),
+                    (
+                        md5_long(F.col(value_col), f"cms{d}") % CMS_WIDTH
+                    ).alias("cell"),
                 )
-                for d in range(depth)
+                for d in range(CMS_DEPTH)
             ])
         ).alias("_sc"),
     ).select(value_col, "_sc.seed", "_sc.cell")

@@ -25,6 +25,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from streaming_etl_pipeline_spark.functions.core import md5_long, tokenize
+from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    DOCS_TABLE,
+    LANG_COL,
+    TEXT_COL,
+)
+
+#: Perplexity bucket count of :func:`perplexity_buckets`.
+PERPLEXITY_BUCKETS = 3
 
 #: BPE-ish word/number/punct splitter — the common Java/RE2 regex subset.
 #: Always applied to normalized text, where the only whitespace is ' '.
@@ -67,15 +76,13 @@ def _nfc(s):  # pragma: no cover — executes on executors
     )
 
 
-def canonicalize(
-    col: Column | str, casefold: bool = True, strip_punct: bool = False
-) -> Column:
+def canonicalize(col: Column | str) -> Column:
     """Unicode canonicalization: NFC normalization (combining sequences
     compose to their precomposed forms, so ``Cafe`` + U+0301 and
-    ``Café`` hash identically) + optional case-fold + optional ASCII
-    punctuation collapse + whitespace collapse/trim — the standard text
-    cleanup that runs BEFORE content hashing in a dedup pipeline, so
-    byte-level encoding variants of the same text land in one group.
+    ``Café`` hash identically) + case-fold + whitespace collapse/trim —
+    the standard text cleanup that runs BEFORE content hashing in a dedup
+    pipeline, so byte-level encoding variants of the same text land in
+    one group.
 
     NFC is the one step Spark has no JVM builtin for (checked 4.1:
     collations affect comparison, not bytes), so it is an Arrow-batched
@@ -84,31 +91,18 @@ def canonicalize(
     a 0-shuffle projection. NFC output is identical across Unicode
     versions (the normalization stability policy), so CPython's UCD and
     DuckDB's utf8proc agree — pinned by the oracle row and the
-    combining-character fuzz class. Case-fold and the collapses stay
+    combining-character fuzz class. Case-fold and the collapse stay
     built-in (``lower`` / ``regexp_replace``). DuckDB twin:
     :func:`canonicalize_sql` (``nfc_normalize``).
     """
     c = F.col(col) if isinstance(col, str) else col
-    c = _nfc(c)
-    if casefold:
-        c = F.lower(c)
-    if strip_punct:
-        # ASCII punctuation runs → one space; the four ranges cover
-        # 0x21-0x2F, 0x3A-0x40, 0x5B-0x60, 0x7B-0x7E identically in
-        # Java regex and RE2
-        c = F.regexp_replace(c, r"[!-/:-@\[-`{-~]+", " ")
+    c = F.lower(_nfc(c))
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-def canonicalize_sql(
-    col_sql: str, casefold: bool = True, strip_punct: bool = False
-) -> str:
+def canonicalize_sql(col_sql: str) -> str:
     """DuckDB twin of :func:`canonicalize`."""
-    s = f"nfc_normalize({col_sql})"
-    if casefold:
-        s = f"lower({s})"
-    if strip_punct:
-        s = f"regexp_replace({s}, '[!-/:-@\\[-`{{-~]+', ' ', 'g')"
+    s = f"lower(nfc_normalize({col_sql}))"
     return rf"trim(regexp_replace({s}, '\s+', ' ', 'g'))"
 
 
@@ -299,7 +293,7 @@ def split_sentences_sql(col_sql: str) -> str:
     )
 
 
-def sentence_chunks(df: DataFrame, text_col: str = "text") -> DataFrame:
+def sentence_chunks(df: DataFrame) -> DataFrame:
     """Explode each document into ordered sentences as
     ``(doc_id, pos, chunk)`` — the sentence-grain twin of
     :func:`doc_chunks`, so every chunk-grain operator (keep-first
@@ -308,14 +302,14 @@ def sentence_chunks(df: DataFrame, text_col: str = "text") -> DataFrame:
     posexplode — no shuffle."""
     return df.select(
         "doc_id",
-        F.posexplode(split_sentences(text_col)).alias("pos", "chunk"),
+        F.posexplode(split_sentences(TEXT_COL)).alias("pos", "chunk"),
     )
 
 
-def sentence_chunks_sql(table: str = "documents", text_col: str = "text") -> str:
+def sentence_chunks_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB twin of :func:`sentence_chunks` (lockstep multi-unnest,
     same pattern as :func:`doc_chunks_sql`)."""
-    sents = split_sentences_sql(text_col)
+    sents = split_sentences_sql(TEXT_COL)
     return f"""
     SELECT doc_id,
            unnest(range(len(sents))) AS pos,
@@ -353,9 +347,7 @@ REP_MAX_TOP2GRAM_CHAR_FRAC = 0.20
 REP_MAX_DUP_5GRAM_FRAC = 0.15
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1) — the
     quality-rule family :func:`gopher_filter` does NOT cover (that one
     is length/word-shape/stopwords): per document,
@@ -386,7 +378,7 @@ def repetition_stats(
     gram in both engines via struct/tuple max) → broadcast-free join
     back on the doc key. DuckDB twin: :func:`repetition_stats_sql`.
     """
-    c = F.coalesce(F.col(text_col), F.lit(""))
+    c = F.coalesce(F.col(TEXT_COL), F.lit(""))
     # lambda, NOT bare F.trim: transform() inspects the callable's
     # arity, and F.trim's optional second parameter makes it pass the
     # ELEMENT INDEX as the trim-character set — silently trimming
@@ -423,7 +415,7 @@ def repetition_stats(
         ),
     ).otherwise(F.lit(0.0))
     base = df.select(
-        F.col(id_col),
+        F.col(DOC_ID_COL),
         dup_line_frac.alias("dup_line_frac"),
         dup_line_char_frac.alias("dup_line_char_frac"),
         dup_5gram_frac.alias("dup_5gram_frac"),
@@ -431,13 +423,13 @@ def repetition_stats(
         ngrams_list(c, 2).alias("_g2"),
     )
     top2 = (
-        base.select(id_col, F.explode("_g2").alias("g"))
-        .groupBy(id_col, "g")
+        base.select(DOC_ID_COL, F.explode("_g2").alias("g"))
+        .groupBy(DOC_ID_COL, "g")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy(id_col)
+        .groupBy(DOC_ID_COL)
         .agg(F.max(F.struct(F.col("cnt"), F.col("g"))).alias("m"))
         .select(
-            id_col,
+            DOC_ID_COL,
             F.col("m.cnt").alias("_top_cnt"),
             F.length(F.col("m.g")).alias("_top_len"),
         )
@@ -451,8 +443,8 @@ def repetition_stats(
             6,
         ),
     ).otherwise(F.lit(0.0))
-    out = base.join(top2, id_col, "left").select(
-        id_col,
+    out = base.join(top2, DOC_ID_COL, "left").select(
+        DOC_ID_COL,
         "dup_line_frac",
         "dup_line_char_frac",
         top_frac.alias("top2gram_char_frac"),
@@ -468,9 +460,7 @@ def repetition_stats(
 
 
 def repetition_stats_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    table: str = DOCS_TABLE,
     extra_ctes: str = "",
 ) -> str:
     """DuckDB twin of :func:`repetition_stats`. ``extra_ctes`` (e.g.
@@ -478,7 +468,7 @@ def repetition_stats_sql(
     can feed a derived table without nesting two WITH clauses."""
     from streaming_etl_pipeline_spark.operators.dedup import ngrams_list_sql
 
-    c = f"coalesce({text_col}, '')"
+    c = f"coalesce({TEXT_COL}, '')"
     lines = (
         f"list_filter(list_transform(string_split({c}, chr(10)), "
         f"l -> trim(l)), l -> l <> '')"
@@ -489,13 +479,13 @@ def repetition_stats_sql(
     dchars = "coalesce(list_sum(list_transform(dln, l -> length(l))), 0)"
     return f"""
     WITH {extra_ctes}base AS (
-      SELECT {id_col}, {lines} AS ln, list_distinct({lines}) AS dln,
+      SELECT {DOC_ID_COL}, {lines} AS ln, list_distinct({lines}) AS dln,
              {g5} AS g5, {g2} AS g2,
              length({norm_text_sql(c)}) AS norm_chars
       FROM {table}
     ),
     linestats AS (
-      SELECT {id_col},
+      SELECT {DOC_ID_COL},
         CASE WHEN len(ln) > 0 THEN
           round((len(ln) - len(dln))::DOUBLE / len(ln), 6) ELSE 0.0 END
           AS dup_line_frac,
@@ -509,21 +499,21 @@ def repetition_stats_sql(
       FROM base
     ),
     top2 AS (
-      SELECT {id_col},
+      SELECT {DOC_ID_COL},
              max(struct_pack(cnt := cnt, g := g)) AS m
-      FROM (SELECT {id_col}, g, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT {id_col}, unnest(g2) AS g FROM base)
+      FROM (SELECT {DOC_ID_COL}, g, CAST(count(*) AS BIGINT) AS cnt
+            FROM (SELECT {DOC_ID_COL}, unnest(g2) AS g FROM base)
             GROUP BY 1, 2)
       GROUP BY 1
     ),
     joined AS (
-      SELECT l.{id_col}, l.dup_line_frac, l.dup_line_char_frac,
+      SELECT l.{DOC_ID_COL}, l.dup_line_frac, l.dup_line_char_frac,
         CASE WHEN l.norm_chars > 0 THEN
           round(coalesce(t.m.cnt * length(t.m.g), 0)::DOUBLE
                 / l.norm_chars, 6)
         ELSE 0.0 END AS top2gram_char_frac,
         l.dup_5gram_frac
-      FROM linestats l LEFT JOIN top2 t ON l.{id_col} = t.{id_col}
+      FROM linestats l LEFT JOIN top2 t ON l.{DOC_ID_COL} = t.{DOC_ID_COL}
     )
     SELECT *,
            dup_line_frac <= {REP_MAX_DUP_LINE_FRAC}
@@ -534,7 +524,7 @@ def repetition_stats_sql(
     """
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Per-document quality metrics: char/token/BPE counts, average token
     length, punctuation & stopword & digit ratios, and a composite quality
     score in [0, 1]. The score formula is fixed and documented so the
@@ -545,7 +535,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     staging, each reference re-runs the normalize+split+regex array
     passes (no CSE for higher-order lambdas).
     """
-    s = df.select("doc_id", norm_text(text_col).alias("_t_norm"))
+    s = df.select("doc_id", norm_text(TEXT_COL).alias("_t_norm"))
     s = s.select(
         "doc_id",
         "_t_norm",
@@ -599,7 +589,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return s.select("*", quality.alias("quality_score"))
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Deterministic language scorer: stopword profiles fused with a
     codepoint-script prior.
 
@@ -614,7 +604,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     Prediction = argmax with fixed alphabetical tiebreak. Pure columnar
     expression — at 100 TB this is a projection, no shuffle.
     """
-    toks = tokenize(norm_text(text_col))
+    toks = tokenize(norm_text(TEXT_COL))
     n_tok = F.greatest(F.size(toks), F.lit(1))
     def in_profile(words: tuple[str, ...]):
         return lambda t: t.isin(*words)
@@ -626,9 +616,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         )
         for lang, words in sorted(LANG_PROFILES.items())
     }
-    txt = F.coalesce(
-        F.col(text_col) if isinstance(text_col, str) else text_col, F.lit("")
-    )
+    txt = F.coalesce(F.col(TEXT_COL), F.lit(""))
     n_chars = F.greatest(F.length(txt), F.lit(1)).cast("double")
 
     def _cnt(cls: str) -> Column:
@@ -658,7 +646,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints: full-content md5 plus a winnowing-style
     min/max over rolling k-gram hashes (the min-hash of the shingle set is
     the classic rolling-hash document fingerprint; robust to prefix/suffix
@@ -666,11 +654,11 @@ def fingerprint(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     """
     from streaming_etl_pipeline_spark.operators.dedup import shingles
 
-    sh = shingles(text_col, k)
+    sh = shingles(TEXT_COL, 3)
     sh_hashes = F.transform(sh, lambda s: md5_long(s))
     return df.select(
         "doc_id",
-        F.md5(norm_text(text_col)).alias("content_md5"),
+        F.md5(norm_text(TEXT_COL)).alias("content_md5"),
         F.array_min(sh_hashes).alias("min_shingle_hash"),
         F.array_max(sh_hashes).alias("max_shingle_hash"),
         F.size(sh).alias("n_shingles"),
@@ -688,10 +676,10 @@ def fingerprint(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
 CHUNK_WORDS = 10
 
 
-def doc_chunks(df: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_chunks(df: DataFrame) -> DataFrame:
     """Explode each document into ordered fixed-width word chunks:
     ``(doc_id, pos, chunk)``. Pure projection + explode — no shuffle."""
-    words = F.split(norm_text(text_col), " ")
+    words = F.split(norm_text(TEXT_COL), " ")
     n_chunks = F.ceil(F.size(words) / CHUNK_WORDS).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -700,9 +688,9 @@ def doc_chunks(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
 
 
-def doc_chunks_sql(table: str = "documents", text_col: str = "text") -> str:
+def doc_chunks_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB twin of :func:`doc_chunks` (lockstep multi-unnest)."""
-    words = f"string_split({norm_text_sql(text_col)}, ' ')"
+    words = f"string_split({norm_text_sql(TEXT_COL)}, ' ')"
     return f"""
     SELECT doc_id,
            unnest(range(CAST(ceil(len({words}) / {CHUNK_WORDS}.0) AS INT))) AS pos,
@@ -718,7 +706,6 @@ def doc_chunks_sql(table: str = "documents", text_col: str = "text") -> str:
 def remove_boilerplate(
     df: DataFrame,
     min_doc_freq: int = 2,
-    text_col: str = "text",
     chunks: DataFrame | None = None,
 ) -> DataFrame:
     """C4-style cross-document boilerplate removal, chunk granularity.
@@ -742,7 +729,7 @@ def remove_boilerplate(
     operators over the same corpus explode the text exactly once.
     """
     if chunks is None:
-        chunks = doc_chunks(df, text_col)
+        chunks = doc_chunks(df)
     freq = chunks.groupBy("chunk").agg(
         F.countDistinct("doc_id").alias("chunk_df")
     )
@@ -776,16 +763,15 @@ def remove_boilerplate(
 
 
 def remove_boilerplate_sql(
-    table: str = "documents",
+    table: str = DOCS_TABLE,
     min_doc_freq: int = 2,
-    text_col: str = "text",
     extra_ctes: str = "",
 ) -> str:
     """DuckDB oracle twin of :func:`remove_boilerplate`. ``extra_ctes``
     (e.g. ``"docs AS (...), "``) lets callers prepend the CTE that
     defines ``table``."""
     return f"""
-    WITH {extra_ctes}chunks AS ({doc_chunks_sql(table, text_col)}),
+    WITH {extra_ctes}chunks AS ({doc_chunks_sql(table)}),
     freq AS (
       SELECT chunk, count(DISTINCT doc_id) AS chunk_df FROM chunks GROUP BY chunk
     ),
@@ -816,7 +802,7 @@ GOPHER_MAX_DUP_2GRAM = 0.12
 
 
 def gopher_filter(
-    df: DataFrame, text_col: str = "text", keep_cols: bool = False
+    df: DataFrame, text_col: str = TEXT_COL, keep_cols: bool = False
 ) -> DataFrame:
     """Gopher-style document quality filter: word-count window, mean
     word length window, minimum distinct-stopword presence. Pure
@@ -894,9 +880,9 @@ def gopher_filter(
     )
 
 
-def gopher_filter_sql(table: str = "documents", text_col: str = "text") -> str:
+def gopher_filter_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB oracle twin of :func:`gopher_filter`."""
-    norm = norm_text_sql(f"COALESCE({text_col}, '')")
+    norm = norm_text_sql(f"COALESCE({TEXT_COL}, '')")
     stop_sum = " + ".join(
         f"CASE WHEN ' ' || {norm} || ' ' LIKE '% {w} %' THEN 1 ELSE 0 END"
         for w in GOPHER_STOPWORDS
@@ -936,10 +922,7 @@ def gopher_filter_sql(table: str = "documents", text_col: str = "text") -> str:
 
 def hashed_features(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     dim: int = 64,
-    seed: str = "feat",
 ) -> DataFrame:
     """Hashing-trick featurization (Weinberger et al. 2009 — public
     algorithm): token → md5 bucket in [0, dim) → per-(doc, bucket)
@@ -951,33 +934,29 @@ def hashed_features(
     from streaming_etl_pipeline_spark.functions.core import md5_long, tokenize
 
     ex = df.select(
-        id_col, F.explode(tokenize(norm_text(text_col))).alias("_tok")
+        DOC_ID_COL, F.explode(tokenize(norm_text(TEXT_COL))).alias("_tok")
     )
     return (
-        ex.select(id_col, (md5_long("_tok", seed) % dim).alias("dim_idx"))
-        .groupBy(id_col, "dim_idx")
+        ex.select(
+            DOC_ID_COL, (md5_long("_tok", "feat") % dim).alias("dim_idx")
+        )
+        .groupBy(DOC_ID_COL, "dim_idx")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def hashed_feature_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    dim: int = 64,
-    seed: str = "feat",
-) -> DataFrame:
+def hashed_feature_profile(df: DataFrame, dim: int = 64) -> DataFrame:
     """Doc-grain rollup of :func:`hashed_features`: dims used, L1/L2
     mass, and an md5 over the ordered (dim:cnt) pairs that pins every
     bucket count exactly for the differential gate."""
-    feats = hashed_features(df, text_col, id_col, dim, seed)
+    feats = hashed_features(df, dim=dim)
     pairs = F.transform(
         F.sort_array(F.collect_list(F.struct("dim_idx", "cnt"))),
         lambda s: F.concat(
             s.dim_idx.cast("string"), F.lit(":"), s.cnt.cast("string")
         ),
     )
-    return feats.groupBy(id_col).agg(
+    return feats.groupBy(DOC_ID_COL).agg(
         F.count(F.lit(1)).alias("n_dims"),
         F.sum("cnt").alias("l1_tokens"),
         F.round(F.sqrt(F.sum(F.col("cnt") * F.col("cnt"))), 6).alias("l2_norm"),
@@ -991,7 +970,7 @@ def hashed_feature_profile(
 
 
 def charlm_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+    df: DataFrame, id_col: str = DOC_ID_COL, text_col: str = TEXT_COL
 ) -> DataFrame:
     """Per-document LM typicality score from a char-trigram model trained
     on the corpus itself — the zero-dependency analog of CCNet's KenLM
@@ -1060,19 +1039,19 @@ def charlm_scores(
     )
 
 
-def charlm_scores_sql(docs_sql: str, id_sql: str = "doc_id") -> str:
+def charlm_scores_sql(docs_sql: str) -> str:
     """DuckDB twin of :func:`charlm_scores` over ``docs_sql`` (a relation
     with ``doc_id`` and ``text`` columns)."""
     norm = norm_text_sql("text")
     return f"""
-    WITH nb AS (SELECT {id_sql}, {norm} AS n FROM {docs_sql}),
-         base AS (SELECT {id_sql}, n FROM nb WHERE length(n) >= 3),
-         pos AS (SELECT {id_sql}, n,
+    WITH nb AS (SELECT {DOC_ID_COL}, {norm} AS n FROM {docs_sql}),
+         base AS (SELECT {DOC_ID_COL}, n FROM nb WHERE length(n) >= 3),
+         pos AS (SELECT {DOC_ID_COL}, n,
                         unnest(range(1, length(n) - 1)) AS p
                  FROM base),
-         tri AS (SELECT {id_sql}, substr(n, CAST(p AS INT), 3) AS t FROM pos),
-         doc_tri AS (SELECT {id_sql}, t, count(*) AS c
-                     FROM tri GROUP BY {id_sql}, t),
+         tri AS (SELECT {DOC_ID_COL}, substr(n, CAST(p AS INT), 3) AS t FROM pos),
+         doc_tri AS (SELECT {DOC_ID_COL}, t, count(*) AS c
+                     FROM tri GROUP BY {DOC_ID_COL}, t),
          model3 AS (SELECT t, CAST(sum(c) AS BIGINT) AS c3
                     FROM doc_tri GROUP BY t),
          model2 AS (SELECT substr(t, 1, 2) AS b, CAST(sum(c) AS BIGINT) AS c2
@@ -1080,10 +1059,10 @@ def charlm_scores_sql(docs_sql: str, id_sql: str = "doc_id") -> str:
          probs AS (SELECT t,
                           CAST(round(c3 * 1.0 / c2, 9) AS DECIMAL(12,9)) AS p
                    FROM model3 JOIN model2 ON substr(model3.t, 1, 2) = model2.b),
-         scored AS (SELECT {id_sql}, CAST(sum(c) AS BIGINT) AS n_trigrams,
+         scored AS (SELECT {DOC_ID_COL}, CAST(sum(c) AS BIGINT) AS n_trigrams,
                            sum(c * p) AS sp
-                    FROM doc_tri JOIN probs USING (t) GROUP BY {id_sql})
-    SELECT {id_sql}, n_trigrams,
+                    FROM doc_tri JOIN probs USING (t) GROUP BY {DOC_ID_COL})
+    SELECT {DOC_ID_COL}, n_trigrams,
            round(CAST(sp AS DOUBLE) / CAST(n_trigrams AS DOUBLE), 6) AS avg_tri_p
     FROM scored
     """
@@ -1106,7 +1085,7 @@ SCRIPT_CLASSES: tuple[tuple[str, str], ...] = (
 )
 
 
-def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
+def script_mix(df: DataFrame) -> DataFrame:
     """Per-document Unicode script composition + dominant script.
 
     Web-scale corpora mix scripts within one "language" bucket —
@@ -1130,7 +1109,7 @@ def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     import string
 
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col(TEXT_COL), F.lit(""))
     n = F.length(txt)
     ascii_chars = {
         "latin": string.ascii_letters,
@@ -1168,11 +1147,11 @@ def script_mix(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("dominant_script", dom)
 
 
-def script_mix_sql(table: str = "documents", text_col: str = "text") -> str:
+def script_mix_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB oracle twin of :func:`script_mix` (RE2 'g'-flag replace,
     same direct-class counting; ``x/0`` is NULL in DuckDB, matching
     Spark's ``try_divide``)."""
-    txt = f"coalesce({text_col}, '')"
+    txt = f"coalesce({TEXT_COL}, '')"
     count_exprs = ",\n           ".join(
         f"length({txt}) - length(regexp_replace({txt}, '[{cls}]', '', 'g'))"
         f" AS n_{name}"
@@ -1206,17 +1185,12 @@ def script_mix_sql(table: str = "documents", text_col: str = "text") -> str:
 # ---------------------------------------------------------------------------
 
 
-def perplexity_buckets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    n_buckets: int = 3,
-) -> DataFrame:
+def perplexity_buckets(df: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2019 §4.3): rank
-    each language's documents by LM typicality and cut into ``n_buckets``
-    equal tiles — head = most corpus-typical third, the slice CCNet
-    ships as the highest-quality subset; tail = candidates for dropping.
+    each language's documents by LM typicality and cut into
+    ``PERPLEXITY_BUCKETS`` equal tiles — head = most corpus-typical
+    third, the slice CCNet ships as the highest-quality subset; tail =
+    candidates for dropping.
 
     Scoring reuses :func:`charlm_scores` (char-trigram LM; higher
     ``avg_tri_p`` = more typical = "lower perplexity"). The tile is
@@ -1237,57 +1211,50 @@ def perplexity_buckets(
     """
     from pyspark.sql import Window
 
-    scored = charlm_scores(df, id_col, text_col).join(
-        df.select(id_col, lang_col), id_col
+    scored = charlm_scores(df).join(
+        df.select(DOC_ID_COL, LANG_COL), DOC_ID_COL
     )
-    w = Window.partitionBy(lang_col).orderBy(
-        F.col("avg_tri_p").desc(), F.col(id_col).asc()
+    w = Window.partitionBy(LANG_COL).orderBy(
+        F.col("avg_tri_p").desc(), F.col(DOC_ID_COL).asc()
     )
-    tile = F.ntile(n_buckets).over(w)
+    tile = F.ntile(PERPLEXITY_BUCKETS).over(w)
     label = (
         F.when(F.col("ppl_tile") == 1, "head")
         .when(F.col("ppl_tile") == 2, "middle")
         .otherwise("tail")
-        if n_buckets == 3
+        if PERPLEXITY_BUCKETS == 3
         else F.concat(F.lit("tile_"), F.col("ppl_tile").cast("string"))
     )
     return scored.select(
-        id_col, lang_col, "n_trigrams", "avg_tri_p", tile.alias("ppl_tile")
+        DOC_ID_COL, LANG_COL, "n_trigrams", "avg_tri_p", tile.alias("ppl_tile")
     ).withColumn("ppl_bucket", label)
 
 
-def perplexity_buckets_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    n_buckets: int = 3,
-) -> str:
+def perplexity_buckets_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB oracle twin of :func:`perplexity_buckets`."""
     label = (
         "CASE ppl_tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle' "
         "ELSE 'tail' END"
-        if n_buckets == 3
+        if PERPLEXITY_BUCKETS == 3
         else "'tile_' || CAST(ppl_tile AS VARCHAR)"
     )
     return f"""
-    WITH lm AS ({charlm_scores_sql(table, id_col)}),
+    WITH lm AS ({charlm_scores_sql(table)}),
     tiled AS (
-      SELECT lm.{id_col}, t.{lang_col}, lm.n_trigrams, lm.avg_tri_p,
-             ntile({n_buckets}) OVER (
-               PARTITION BY t.{lang_col}
-               ORDER BY lm.avg_tri_p DESC, lm.{id_col} ASC
+      SELECT lm.{DOC_ID_COL}, t.{LANG_COL}, lm.n_trigrams, lm.avg_tri_p,
+             ntile({PERPLEXITY_BUCKETS}) OVER (
+               PARTITION BY t.{LANG_COL}
+               ORDER BY lm.avg_tri_p DESC, lm.{DOC_ID_COL} ASC
              ) AS ppl_tile
-      FROM lm JOIN {table} t USING ({id_col})
+      FROM lm JOIN {table} t USING ({DOC_ID_COL})
     )
-    SELECT {id_col}, {lang_col}, n_trigrams, avg_tri_p, ppl_tile,
+    SELECT {DOC_ID_COL}, {LANG_COL}, n_trigrams, avg_tri_p, ppl_tile,
            {label} AS ppl_bucket
     FROM tiled
     """
 
 
-def char_entropy(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def char_entropy(df: DataFrame) -> DataFrame:
     """Per-document Shannon entropy over the codepoint distribution —
     the classic cheap junk detector (RefinedWeb-style heuristics): very
     LOW entropy flags repetition/padding junk ("aaaa…", banner art),
@@ -1312,16 +1279,16 @@ def char_entropy(
     DECIMAL (order-independent), and the final entropy is rounded to
     6 dp. Empty/NULL docs score 0.0 (no distribution).
 
-    Output: ``(id_col, n_chars, entropy)`` — nats, not bits.
+    Output: ``(doc_id, n_chars, entropy)`` — nats, not bits.
 
     Scale: two shuffles, both keyed by doc (uniform); per-doc state is
     its distinct-codepoint histogram, bounded by the doc's alphabet.
     """
-    base = df.select(id_col, F.coalesce(F.col(text_col), F.lit("")).alias("_t"))
+    base = df.select(DOC_ID_COL, F.coalesce(F.col(TEXT_COL), F.lit("")).alias("_t"))
     chars = base.select(
-        id_col, F.explode(F.split("_t", "")).alias("_c")
+        DOC_ID_COL, F.explode(F.split("_t", "")).alias("_c")
     ).filter(F.col("_c") != "")
-    counts = chars.groupBy(id_col, "_c").agg(F.count(F.lit(1)).alias("_n"))
+    counts = chars.groupBy(DOC_ID_COL, "_c").agg(F.count(F.lit(1)).alias("_n"))
     # per-doc total as an analytic over the count frame: reuses the
     # (doc)-compatible partitioning instead of a self-join (which would
     # also trip Spark's ambiguous-lineage resolution)
@@ -1331,11 +1298,11 @@ def char_entropy(
     term = F.col("_n") * F.round(F.log(F.col("_n").cast("double")), 6).cast(
         "decimal(16,6)"
     )
-    ent = counts.groupBy(id_col).agg(
+    ent = counts.groupBy(DOC_ID_COL).agg(
         F.sum("_n").alias("n_chars"),
         F.sum(term).alias("_snln"),
     ).select(
-        id_col,
+        DOC_ID_COL,
         "n_chars",
         F.round(
             F.round(F.log(F.col("n_chars").cast("double")), 6)
@@ -1344,43 +1311,43 @@ def char_entropy(
         ).alias("entropy"),
     )
     return (
-        base.select(id_col)
-        .join(ent, id_col, "left")
+        base.select(DOC_ID_COL)
+        .join(ent, DOC_ID_COL, "left")
         .select(
-            id_col,
+            DOC_ID_COL,
             F.coalesce("n_chars", F.lit(0)).cast("long").alias("n_chars"),
             F.coalesce("entropy", F.lit(0.0)).alias("entropy"),
         )
     )
 
 
-def char_entropy_sql(table: str = "documents", id_col: str = "doc_id") -> str:
+def char_entropy_sql(table: str = DOCS_TABLE) -> str:
     """DuckDB oracle twin of :func:`char_entropy`."""
     return f"""
     WITH base AS (
-      SELECT {id_col}, coalesce(text, '') AS t FROM {table}
+      SELECT {DOC_ID_COL}, coalesce(text, '') AS t FROM {table}
     ),
     chars AS (
-      SELECT {id_col}, unnest(string_split(t, '')) AS c
+      SELECT {DOC_ID_COL}, unnest(string_split(t, '')) AS c
       FROM base WHERE length(t) > 0
     ),
     counts AS (
-      SELECT {id_col}, c, count(*) AS n FROM chars GROUP BY {id_col}, c
+      SELECT {DOC_ID_COL}, c, count(*) AS n FROM chars GROUP BY {DOC_ID_COL}, c
     ),
     ent AS (
-      SELECT {id_col}, CAST(sum(n) AS BIGINT) AS n_chars,
+      SELECT {DOC_ID_COL}, CAST(sum(n) AS BIGINT) AS n_chars,
              sum(n * CAST(round(ln(n::DOUBLE), 6) AS DECIMAL(16,6)))
                AS snln
-      FROM counts GROUP BY {id_col}
+      FROM counts GROUP BY {DOC_ID_COL}
     ),
     ent2 AS (
-      SELECT {id_col}, n_chars,
+      SELECT {DOC_ID_COL}, n_chars,
              round(round(ln(n_chars::DOUBLE), 6)
                    - CAST(snln AS DOUBLE) / n_chars::DOUBLE, 6) AS entropy
       FROM ent
     )
-    SELECT base.{id_col},
+    SELECT base.{DOC_ID_COL},
            CAST(coalesce(ent2.n_chars, 0) AS BIGINT) AS n_chars,
            coalesce(ent2.entropy, 0.0) AS entropy
-    FROM base LEFT JOIN ent2 USING ({id_col})
+    FROM base LEFT JOIN ent2 USING ({DOC_ID_COL})
     """

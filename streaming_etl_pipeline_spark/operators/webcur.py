@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from streaming_etl_pipeline_spark.sources.io import DOC_ID_COL, N_CHARS_COL
+
 #: Tracking parameters stripped during normalization (shared literal —
 #: embedded in both engines' plans).
 TRACKING_PARAM_RE = "^(utm_[a-z]+|gclid|fbclid|ref|mc_cid|mc_eid)="
@@ -145,8 +147,8 @@ def domain_cap(
     docs: DataFrame,
     cap: int,
     domain_col: str = "domain",
-    order_col: str = "n_chars",
-    id_col: str = "doc_id",
+    order_col: str = N_CHARS_COL,
+    id_col: str = DOC_ID_COL,
     skew: int | None = None,
 ) -> DataFrame:
     """Keep at most ``cap`` documents per domain, preferring high

@@ -217,7 +217,6 @@ def silver_to_gold(
     silver_path: str,
     gold_path: str,
     run_date: _dt.date | str | None = None,
-    oracle_safe: bool = False,
     skew: bool = False,
 ) -> PipelineResult:
     """Aggregate Silver into the three Gold tables.
@@ -228,12 +227,11 @@ def silver_to_gold(
     by :func:`~streaming_etl_pipeline_spark.sources.io.replace_dir`, so a
     table whose plan fails keeps its previous content. Once all three
     finish, the first failure (in table order) is re-raised. A
-    ``run_date`` call replaces only that date's Gold rows.
-    ``oracle_safe=False`` uses the plain double aggregation path — the
-    exact-decimal variant exists for differential testing and costs ~20%
-    more. ``skew=True`` passes the
-    hot-key knob through to the windowed aggregations (mergeable
-    percentile sketches instead of exact percentile buffers — see
+    ``run_date`` call replaces only that date's Gold rows. The
+    aggregations take the plain double path (``oracle_safe=False``).
+    ``skew=True`` passes the hot-key knob through to the windowed
+    aggregations (mergeable percentile sketches instead of exact
+    percentile buffers — see
     ``operators/aggregates.windowed_stats`` and tests/test_skew.py for
     the measured rationale); flip it when one sensor/location dominates
     the feed.
@@ -257,7 +255,7 @@ def silver_to_gold(
         bucket_seconds=300,
         value_col="value",
         expected_per_window=EXPECTED_PER_5MIN,
-        oracle_safe=oracle_safe,
+        oracle_safe=False,
         skew=skew,
     )
     location_hourly = aggregates.windowed_stats(
@@ -267,7 +265,7 @@ def silver_to_gold(
         bucket_seconds=3600,
         value_col="value",
         distinct_count_col="sensor_id",
-        oracle_safe=oracle_safe,
+        oracle_safe=False,
         skew=skew,
     )
     daily = aggregates.daily_summary(
@@ -277,7 +275,7 @@ def silver_to_gold(
         value_col="value",
         anomaly_col="is_anomaly",
         distinct_count_col="sensor_id",
-        oracle_safe=oracle_safe,
+        oracle_safe=False,
     )
 
     window_day = F.to_date("window_start")
@@ -338,10 +336,8 @@ def backfill(
     Returns per-date metrics flattened as ``{date}.{stage}.{metric}``
     plus ``dates_ok`` / ``dates_failed`` counts.
     """
-    import datetime as _dt2
-
-    d0 = _dt2.date.fromisoformat(str(start_date))
-    d1 = _dt2.date.fromisoformat(str(end_date))
+    d0 = _dt.date.fromisoformat(str(start_date))
+    d1 = _dt.date.fromisoformat(str(end_date))
     if d1 < d0:
         raise ValueError(f"end_date {d1} before start_date {d0}")
     metrics: dict[str, float] = {}
@@ -364,7 +360,7 @@ def backfill(
                 raise
             failed += 1
             metrics[f"{day}.failed"] = 1.0
-        day += _dt2.timedelta(days=1)
+        day += _dt.timedelta(days=1)
     metrics["dates_ok"] = float(ok)
     metrics["dates_failed"] = float(failed)
     return PipelineResult(

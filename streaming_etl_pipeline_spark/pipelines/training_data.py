@@ -37,6 +37,7 @@ from streaming_etl_pipeline_spark.operators import dedup as DD
 from streaming_etl_pipeline_spark.operators import text as TX
 from streaming_etl_pipeline_spark.operators.components import dedup_clusters
 from streaming_etl_pipeline_spark.pipelines.medallion import PipelineResult
+from streaming_etl_pipeline_spark.sources.io import DOC_ID_COL, TEXT_COL
 
 
 def curate_corpus(
@@ -44,8 +45,8 @@ def curate_corpus(
     docs: DataFrame,
     out_path: str,
     benchmark: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
     max_tokens: int = 32,
     overlap: int = 8,
     lsh_threshold: float = 0.6,

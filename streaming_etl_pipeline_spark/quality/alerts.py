@@ -23,6 +23,14 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
+#: The reference's alert thresholds (``alert_rules.yml``) and the
+#: ingest-store lifecycle thresholds.
+MAX_LAG_ROWS = 10_000
+MAX_P95_LATENCY_S = 60.0
+MAX_ANOMALY_RATE = 0.10
+PSI_RETRAIN = 0.25
+MAX_STORE_PARTITIONS = 512
+
 
 @dataclass(frozen=True)
 class AlertRule:
@@ -46,11 +54,7 @@ class Alert:
     snapshot: dict
 
 
-def reference_rules(
-    max_lag_rows: int = 10_000,
-    max_p95_latency_s: float = 60.0,
-    max_anomaly_rate: float = 0.10,
-) -> list[AlertRule]:
+def reference_rules() -> list[AlertRule]:
     """The reference's alert pack (``alert_rules.yml``), re-keyed to the
     engine's native metric names:
 
@@ -71,9 +75,9 @@ def reference_rules(
     return [
         AlertRule(
             "HighConsumerLag", "critical",
-            lambda m: m.get("backlog_rows", 0) > max_lag_rows,
+            lambda m: m.get("backlog_rows", 0) > MAX_LAG_ROWS,
             for_count=2,
-            summary=f"source backlog exceeds {max_lag_rows} rows",
+            summary=f"source backlog exceeds {MAX_LAG_ROWS} rows",
         ),
         AlertRule(
             "ProducerDown", "critical",
@@ -89,23 +93,20 @@ def reference_rules(
         ),
         AlertRule(
             "HighProcessingLatency", "warning",
-            lambda m: m.get("trigger_duration_s", 0.0) > max_p95_latency_s,
+            lambda m: m.get("trigger_duration_s", 0.0) > MAX_P95_LATENCY_S,
             for_count=2,
-            summary=f"trigger wall time exceeds {max_p95_latency_s}s",
+            summary=f"trigger wall time exceeds {MAX_P95_LATENCY_S}s",
         ),
         AlertRule(
             "AnomalyRateSpike", "warning",
-            lambda m: m.get("anomaly_rate", 0.0) > max_anomaly_rate,
+            lambda m: m.get("anomaly_rate", 0.0) > MAX_ANOMALY_RATE,
             for_count=2,
-            summary=f"anomaly rate exceeds {max_anomaly_rate:.0%}",
+            summary=f"anomaly rate exceeds {MAX_ANOMALY_RATE:.0%}",
         ),
     ]
 
 
-def store_health_rules(
-    psi_retrain: float = 0.25,
-    max_partitions: int = 512,
-) -> list[AlertRule]:
+def store_health_rules() -> list[AlertRule]:
     """Alert pack for the ingest-store/index lifecycle (no reference
     analog — the reference has no stored indexes):
 
@@ -114,25 +115,25 @@ def store_health_rules(
       PSI reading (``similarity.ivf_occupancy_drift``); the action is
       ``streaming.ingest.maybe_retrain_ann_index``.
     - StoreFragmentation: a token-namespaced store has accumulated more
-      than ``max_partitions`` per-trigger partitions — the small-file
+      than ``MAX_STORE_PARTITIONS`` per-trigger partitions — the small-file
       regime; the action is ``compact_ingest_store``.
     """
     return [
         AlertRule(
             "QuantizerDriftRetrain", "warning",
-            lambda m: m.get("ivf_occupancy_psi", 0.0) >= psi_retrain,
+            lambda m: m.get("ivf_occupancy_psi", 0.0) >= PSI_RETRAIN,
             for_count=2,
             summary=(
-                f"IVF occupancy PSI at or above {psi_retrain} — retrain "
+                f"IVF occupancy PSI at or above {PSI_RETRAIN} — retrain "
                 "the quantizer and re-encode the index"
             ),
         ),
         AlertRule(
             "StoreFragmentation", "warning",
-            lambda m: m.get("store_partitions", 0) > max_partitions,
+            lambda m: m.get("store_partitions", 0) > MAX_STORE_PARTITIONS,
             for_count=1,
             summary=(
-                f"ingest store exceeds {max_partitions} trigger "
+                f"ingest store exceeds {MAX_STORE_PARTITIONS} trigger "
                 "partitions — run compact_ingest_store"
             ),
         ),

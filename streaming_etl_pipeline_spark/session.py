@@ -102,15 +102,13 @@ def default_parallelism() -> int:
 #: tune() is called per corpus-query build (the _tuned wrapper), and its
 #: ~14 conf.set py4j round-trips cost ~9 ms/call (measured): pure
 #: overhead after the first application to a session. A new session gets
-#: a new JVM object id; pass force=True if a caller deliberately mutated
-#: RUNTIME_CONF keys mid-session and wants them re-applied.
+#: a new JVM object id.
 _TUNED: dict[tuple, int] = {}
 
 
 def tune(
     spark: SparkSession,
     shuffle_partitions: int | None = None,
-    force: bool = False,
 ) -> SparkSession:
     """Apply runtime configs to an existing session (driver-owned or ours)."""
     n = shuffle_partitions or default_parallelism()
@@ -118,7 +116,7 @@ def tune(
         spark.sparkContext.applicationId,  # survives Python id() reuse
         id(spark),
     )
-    if not force and _TUNED.get(key) == n:
+    if _TUNED.get(key) == n:
         return spark
     if len(_TUNED) > 64:
         _TUNED.clear()

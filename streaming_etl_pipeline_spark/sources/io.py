@@ -31,6 +31,8 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import re
+import shutil
 from functools import lru_cache
 
 import pyarrow as pa
@@ -38,6 +40,18 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
+
+#: The corpus tables the document and embedding operators read, and
+#: their column names — the one place the operators' defaults come from.
+DOCS_TABLE = "documents"
+DOC_ID_COL = "doc_id"
+TEXT_COL = "text"
+LANG_COL = "lang"
+SOURCE_COL = "source"
+N_CHARS_COL = "n_chars"
+EMBEDDINGS_TABLE = "embeddings"
+VEC_ID_COL = "vec_id"
+VEC_COL = "embedding"
 
 #: Every table in the driver-provided corpus (TESTDATA.md).
 TABLES = (
@@ -49,8 +63,8 @@ TABLES = (
     "orders",
     "lineitem",
     "events",
-    "documents",
-    "embeddings",
+    DOCS_TABLE,
+    EMBEDDINGS_TABLE,
 )
 
 
@@ -178,12 +192,11 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path) if path_exists(spark, path) else None
 
 
-def epoch_value(batch_id: int, run_token: str | None = None) -> str:
+def epoch_value(batch_id: int, run_token: str) -> str:
     """Partition value of one batch: ``<token>-<epoch>``, the token naming
     the run, so a new run whose batch ids restart at 0 appends beside
-    earlier runs instead of replacing them. ``run_token=None`` keeps the
-    bare epoch id."""
-    return f"{run_token}-{batch_id}" if run_token else str(batch_id)
+    earlier runs instead of replacing them."""
+    return f"{run_token}-{batch_id}"
 
 
 def write_epoch(
@@ -374,32 +387,28 @@ def repair_store(spark: SparkSession, path: str) -> str:
     return "clean"
 
 
-def compact(
-    spark: SparkSession,
-    path: str,
-    partition_by: tuple[str, ...] = (),
-    max_records_per_file: int = 5_000_000,
-) -> int:
+#: File-size cap of the compacting and clustering writers.
+MAX_RECORDS_PER_FILE = 5_000_000
+
+
+def compact(spark: SparkSession, path: str) -> int:
     """Rewrite a parquet dataset with consolidated files; returns rows.
 
     Streaming sinks (one file per trigger per partition) and frequent
     small batch appends accumulate small files until scan planning and
     footer reads dominate query time — the classic operational problem of
-    an append-only lake. This maintenance job rewrites the dataset with
-    one task per Hive partition (bounded by ``maxRecordsPerFile``) and
-    swaps it in with :func:`replace_dir`, so a crash mid-compaction is
-    recovered by :func:`repair_store`. Run it like the reference runs its
+    an append-only lake. This maintenance job rewrites the dataset into
+    a quarter as many files as the session has cores (bounded by
+    ``maxRecordsPerFile``, not Hive-partitioned) and swaps it in with
+    :func:`replace_dir`, so a crash mid-compaction is recovered by
+    :func:`repair_store`. Run it like the reference runs its
     batch layers, from the orchestrator between pipeline stages.
     """
     repair_store(spark, path)
     df = spark.read.parquet(path)
     n = df.count()
-    out = df.repartition(*partition_by) if partition_by else df.coalesce(
-        max(1, spark.sparkContext.defaultParallelism // 4)
-    )
-    writer = out.write.option("maxRecordsPerFile", max_records_per_file)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    out = df.coalesce(max(1, spark.sparkContext.defaultParallelism // 4))
+    writer = out.write.option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
     replace_dir(spark, path, writer)
     return n
 
@@ -457,7 +466,6 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
 
 def spread(
     df: DataFrame,
-    min_partitions: int | None = None,
     by: str | tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Raise a DataFrame's parallelism to at least the cluster's cores.
@@ -495,7 +503,7 @@ def spread(
     the scan-split estimate IS the input's partitioning; if the estimate
     is unavailable the old physical probe remains the fallback.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     current = _estimated_scan_partitions(df)
     if current is None:
         try:
@@ -551,7 +559,6 @@ def write_clustered(
     cluster_by: list[str],
     partition_by: list[str] | None = None,
     num_files: int | None = None,
-    max_records_per_file: int = 5_000_000,
 ) -> None:
     """Data-clustered parquet sink: range-repartition on ``cluster_by``
     then sort within partitions, so each output file covers a narrow,
@@ -570,7 +577,7 @@ def write_clustered(
     n = num_files or df.sparkSession.sparkContext.defaultParallelism
     out = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
     writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
+        "maxRecordsPerFile", MAX_RECORDS_PER_FILE
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -617,7 +624,6 @@ def write_zordered(
     df: DataFrame,
     path: str,
     zorder_by: list[str],
-    bits: int = 4,
     partition_by: list[str] | None = None,
     num_files: int | None = None,
 ) -> None:
@@ -635,7 +641,7 @@ def write_zordered(
     write time buys file-level pruning for every dimension of the
     common filter set.
     """
-    z = zorder_column(df, zorder_by, bits)
+    z = zorder_column(df, zorder_by, 4)
     n = num_files or df.sparkSession.sparkContext.defaultParallelism
     out = (
         df.withColumn("_z", z)
@@ -653,7 +659,6 @@ def write_bloom_indexed(
     df: DataFrame,
     path: str,
     bloom_cols: list[str],
-    expected_ndv: int = 1_000_000,
     partition_by: list[str] | None = None,
 ) -> None:
     """Parquet write with bloom filters on ``bloom_cols``.
@@ -672,7 +677,7 @@ def write_bloom_indexed(
     for c in bloom_cols:
         writer = writer.option(
             f"parquet.bloom.filter.enabled#{c}", "true"
-        ).option(f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv))
+        ).option(f"parquet.bloom.filter.expected.ndv#{c}", "1000000")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -691,11 +696,7 @@ class ConcurrentWriteError(RuntimeError):
     retry contract as a Delta/Iceberg commit conflict)."""
 
 
-def versioned_write(
-    df: DataFrame,
-    table_dir: str,
-    partition_by: list[str] | None = None,
-) -> int:
+def versioned_write(df: DataFrame, table_dir: str) -> int:
     """Write a new immutable version of a table and commit it by
     atomically replacing the ``_LATEST`` pointer file — the minimal
     transaction-log pattern that makes rewrites (compaction, reorder,
@@ -719,6 +720,10 @@ def versioned_write(
     stale claim can be cleared with :func:`break_claim`). On an object
     store the claim maps to a conditional PUT / put-if-absent of the
     same name.
+
+    After the swap the versions older than the superseded one are
+    deleted: ``v{N}`` and ``v{N-1}`` stay, so a reader that resolved
+    the pointer just before the swap still finds its snapshot.
 
     Returns the committed version number.
     """
@@ -753,10 +758,7 @@ def versioned_write(
                 f"write of v{version}; snapshot base is stale — retry"
             )
         vdir = os.path.join(table_dir, "_versions", f"v{version}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(vdir)
+        df.write.mode("overwrite").parquet(vdir)
         current = latest_version(table_dir)
         if current != base:  # pointer moved while we held the claim
             raise ConcurrentWriteError(
@@ -769,6 +771,14 @@ def versioned_write(
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, os.path.join(table_dir, "_LATEST"))
+        versions = os.path.join(table_dir, "_versions")
+        for name in os.listdir(versions):
+            m = re.fullmatch(r"v(\d+)", name)
+            if m and int(m.group(1)) < base:
+                try:
+                    shutil.rmtree(os.path.join(versions, name))
+                except FileNotFoundError:
+                    pass  # a concurrent committer deleted it first
         return version
     finally:
         try:
@@ -777,10 +787,11 @@ def versioned_write(
             pass
 
 
-def break_claim(table_dir: str, version: int | None = None) -> bool:
-    """Clear a crashed writer's stale claim (operator action, like
-    Delta's ``FSCK``). Returns True if a claim file was removed."""
-    v = version or (latest_version(table_dir) + 1)
+def break_claim(table_dir: str) -> bool:
+    """Clear a crashed writer's stale claim on the next version
+    (operator action, like Delta's ``FSCK``). Returns True if a claim
+    file was removed."""
+    v = latest_version(table_dir) + 1
     try:
         os.unlink(os.path.join(table_dir, "_versions", f"v{v}.claim"))
         return True
@@ -797,13 +808,9 @@ def latest_version(table_dir: str) -> int:
         return 0
 
 
-def read_versioned(
-    spark: SparkSession, table_dir: str, version: int | None = None
-) -> DataFrame:
-    """Read a committed snapshot (default: the latest). Older versions
-    stay readable (nothing deletes them) — free time travel for
-    debugging a pipeline regression against yesterday's input."""
-    v = version or latest_version(table_dir)
+def read_versioned(spark: SparkSession, table_dir: str) -> DataFrame:
+    """Read the latest committed snapshot."""
+    v = latest_version(table_dir)
     if v <= 0:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     return spark.read.parquet(os.path.join(table_dir, "_versions", f"v{v}"))
@@ -845,8 +852,7 @@ def write_training_shards(
     df: DataFrame,
     path: str,
     n_shards: int = 64,
-    id_col: str = "doc_id",
-    fmt: str = "parquet",
+    id_col: str = DOC_ID_COL,
 ) -> dict:
     """Export a training corpus as ``n_shards`` deterministic shards plus
     a ``_manifest.json`` integrity record (underscore: invisible to Spark's file index, like ``_SUCCESS``) — the handoff artifact a
@@ -877,8 +883,7 @@ def write_training_shards(
 
     shard = F.pmod(md5_long(F.col(id_col)), F.lit(n_shards)).cast("int")
     with_shard = df.withColumn("shard", shard)
-    writer = with_shard.write.mode("overwrite").partitionBy("shard")
-    getattr(writer, fmt)(path)
+    with_shard.write.mode("overwrite").partitionBy("shard").parquet(path)
 
     row_sig = _shard_row_sig(df.columns)
     per_shard = (
@@ -894,7 +899,7 @@ def write_training_shards(
     manifest = {
         "sig_version": 2,  # v2: null-safe length-prefixed row encoding
         "n_shards": n_shards,
-        "format": fmt,
+        "format": "parquet",
         "id_col": id_col,
         "columns": list(df.columns),
         "total_rows": int(sum(r["rows"] for r in per_shard)),

@@ -46,7 +46,11 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 from streaming_etl_pipeline_spark.sources.io import (
+    DOC_ID_COL,
+    TEXT_COL,
     TOMBSTONE_DIR,
+    VEC_COL,
+    VEC_ID_COL,
     _apply_tombstones,
     epoch_value,
     fold_epochs,
@@ -153,9 +157,7 @@ def read_kafka_stream(
     return project_kafka(reader.load())
 
 
-def parse_events(
-    raw: DataFrame, schema: T.StructType = EVENT_SCHEMA
-) -> tuple[DataFrame, DataFrame]:
+def parse_events(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P8+P5 — parse and split one stream into (bronze, dead_letter).
 
     Bronze: flattened struct + ``event_time`` cast + ``ingestion_time`` +
@@ -163,7 +165,7 @@ def parse_events(
     Dead-letter: unparseable rows with error metadata
     (``spark_streaming.py:100-109``).
     """
-    parsed = raw.withColumn("data", F.from_json(F.col("raw_value"), schema))
+    parsed = raw.withColumn("data", F.from_json(F.col("raw_value"), EVENT_SCHEMA))
     # from_json in PERMISSIVE mode yields an all-null struct (not a NULL
     # struct) for malformed input on recent Spark, so "unparseable" means
     # the struct is null OR every required field is null.
@@ -194,7 +196,6 @@ def start_bronze_sink(
     path: str,
     checkpoint: str,
     trigger: dict | None = None,
-    partition_by: str = "sensor_type",
 ) -> StreamingQuery:
     """S3 — append-mode partitioned parquet sink with checkpoint
     (``spark_streaming.py:144-153``). ``trigger`` e.g.
@@ -203,7 +204,7 @@ def start_bronze_sink(
         bronze.writeStream.format("parquet")
         .outputMode("append")
         .option("path", path)
-        .partitionBy(partition_by),
+        .partitionBy("sensor_type"),
         checkpoint,
         trigger,
     )
@@ -245,12 +246,9 @@ def ann_index_batch(
     index_path: str,
     centroids: DataFrame,
     codebooks: "list[list[list[float]]] | None" = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    run_token: str | None = None,
+    *,
+    run_token: str,
     use_arrow: bool = True,
-    partition_by_cell: bool = False,
-    carry: "tuple[str, ...]" = (),
 ) -> None:
     """Append one batch of embeddings to a stored IVF-PQ index: each
     vector is coarse-assigned against the TRAINED ``centroids`` and
@@ -260,30 +258,16 @@ def ann_index_batch(
     ``similarity.ivf_pq_topk`` consumes (read it back with
     :func:`load_ann_index`). Assign + encode are pure functions of the
     batch and the frozen quantizer state, so re-running a batch
-    rewrites identical rows into its own partition. ``carry`` columns
-    ride along into the stored rows (filter attributes — the Arrow
-    path joins them back by id, still batch-local)."""
+    rewrites identical rows into its own partition."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
 
     if batch_df.isEmpty():
         return
     books = codebooks if codebooks is not None else SIM.PQ_CODEBOOKS
     index = _encode_index(
-        batch_df, centroids, books, id_col, vec_col, use_arrow, carry
+        batch_df, centroids, books, "vec_id", "embedding", use_arrow
     )
-    # centroid_id as an OPT-IN second partition level: probe-heavy
-    # deployments get static cell pruning (ivf_pq_topk's
-    # prune_stored_cells reads only nprobe cells' directories), at the
-    # cost of ~3x slower writes (tasks x cells small files — measured
-    # 8 s -> 23 s per 1M-vector batch at 256 cells). Write-heavy
-    # deployments keep the flat layout and re-shape at compaction time
-    # (compact_ingest_store folds the small files either way).
-    write_epoch(
-        index,
-        index_path,
-        epoch_value(batch_id, run_token),
-        *(["centroid_id"] if partition_by_cell else []),
-    )
+    write_epoch(index, index_path, epoch_value(batch_id, run_token))
 
 
 def _encode_index(
@@ -293,12 +277,11 @@ def _encode_index(
     id_col: str,
     vec_col: str,
     use_arrow: bool,
-    carry: "tuple[str, ...]",
 ) -> DataFrame:
-    """Index rows ``(id, centroid_id, codes, *carry)`` of ``vectors``:
-    IVF assignment against ``centroids`` plus PQ encoding against
+    """Index rows ``(id, centroid_id, codes)`` of ``vectors``: IVF
+    assignment against ``centroids`` plus PQ encoding against
     ``codebooks``, a pure 0-shuffle per-row map (``use_arrow``: Arrow
-    GEMM per batch, with the ``carry`` columns joined back by id)."""
+    GEMM per batch)."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
 
     if use_arrow:
@@ -308,16 +291,12 @@ def _encode_index(
         codes = SIM.pq_encode_arrow(
             vectors, codebooks, id_col=id_col, vec_col=vec_col
         )
-        index = assigned.join(codes, id_col)
-        if carry:
-            index = index.join(vectors.select(id_col, *carry), id_col)
-        return index
+        return assigned.join(codes, id_col)
     return SIM.ivf_assign(
-        vectors, centroids, id_col=id_col, vec_col=vec_col, carry=carry
+        vectors, centroids, id_col=id_col, vec_col=vec_col
     ).select(
         id_col,
         "centroid_id",
-        *carry,
         SIM.pq_encode(vec_col, codebooks).alias("codes"),
     )
 
@@ -381,7 +360,7 @@ def bm25_delete_ids(
     spark: SparkSession,
     index_path: str,
     ids: "DataFrame | list",
-    id_col: str = "doc_id",
+    id_col: str = DOC_ID_COL,
 ) -> dict:
     """Delete documents from a stored BM25 index
     (:func:`bm25_postings_batch` / the CLI ``build-bm25-index``):
@@ -409,7 +388,8 @@ def bm25_delete_ids(
     if n_del:
         (
             spark.createDataFrame(
-                [(-n_del, -len_sum)], "n_docs long, sum_len long"
+                [(-n_del, -len_sum, None)],
+                "n_docs long, sum_len long, buckets int",
             )
             .withColumn("ingest_batch_id", F.lit("tombstone"))
             .write.mode("append")
@@ -424,7 +404,6 @@ def compact_ingest_store(
     spark: SparkSession,
     path: str,
     secondary_partition_cols: "tuple[str, ...]" = (),
-    label: str | None = None,
 ) -> dict:
     """Offline small-file compaction for the token-namespaced ingest
     stores (dedup signature store, ANN index, BM25 postings/stats,
@@ -457,8 +436,7 @@ def compact_ingest_store(
     # pending: re-compacting is a true no-op and keeps its label
     pending = path_exists(spark, os.path.join(path, TOMBSTONE_DIR))
     parts, label = fold_epochs(
-        spark, path, df, *secondary_partition_cols,
-        label=label, keep_folded=not pending,
+        spark, path, df, *secondary_partition_cols, keep_folded=not pending
     )
     return {
         "partitions_before": len(parts),
@@ -513,12 +491,8 @@ def reencode_index(
     vectors: DataFrame,
     centroids: DataFrame,
     codebooks: "list[list[list[float]]]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = True,
-    partition_by_cell: bool = False,
-    carry: "tuple[str, ...]" = (),
-    label: str = "reencoded",
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
 ) -> dict:
     """Migrate an :func:`ann_index_batch` index onto RETRAINED quantizer
     state: the stored index's ids are joined back to their fresh
@@ -534,7 +508,7 @@ def reencode_index(
     migrates the store. Contract: run with no writer active, then pass
     the new ``centroids=``/``codebooks=`` to later
     :func:`ann_index_batch` calls under a FRESH ``run_token`` — the
-    migrated store folds all epochs into one ``<label>`` partition, so
+    migrated store folds all epochs into one ``reencoded`` partition, so
     the old run's idempotence keys are gone and a re-run would
     re-append.
 
@@ -552,20 +526,16 @@ def reencode_index(
     n_ids = ids.count()
     live = vectors.join(ids, id_col).localCheckpoint(eager=True)
     n_live = live.count()
-    # stored filter attributes (carry) ride through the migration
     fold_epochs(
         spark,
         index_path,
-        _encode_index(
-            live, centroids, codebooks, id_col, vec_col, use_arrow, carry
-        ),
-        *(["centroid_id"] if partition_by_cell else []),
-        label=label,
+        _encode_index(live, centroids, codebooks, id_col, vec_col, True),
+        label="reencoded",
     )
     return {
         "rows": int(n_live),
         "missing_vectors": int(n_ids - n_live),
-        "label": label,
+        "label": "reencoded",
     }
 
 
@@ -575,15 +545,12 @@ def maybe_retrain_ann_index(
     recent_vectors: DataFrame,
     corpus_vectors: DataFrame,
     centroids: DataFrame,
-    n_cells: int | None = None,
     codebooks_shape: "tuple[int, int] | None" = None,
     psi_threshold: float = 0.25,
     sample_fraction: float | None = None,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow: bool = True,
-    partition_by_cell: bool = False,
+    id_col: str = VEC_ID_COL,
+    vec_col: str = VEC_COL,
 ) -> dict:
     """The closed drift loop in one call: monitor → (if fired) retrain →
     migrate. Assigns ``recent_vectors`` against the CURRENT centroids,
@@ -602,11 +569,8 @@ def maybe_retrain_ann_index(
     :func:`reencode_index` for the contract."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
 
-    n_cells = int(
-        n_cells if n_cells is not None else centroids.count()
-    )  # bounded: quantizer size
-    assign = SIM.ivf_assign_arrow if use_arrow else SIM.ivf_assign
-    cur = assign(
+    n_cells = int(centroids.count())  # bounded: quantizer size
+    cur = SIM.ivf_assign_arrow(
         recent_vectors, centroids, id_col=id_col, vec_col=vec_col
     ).select("centroid_id")
     ref = load_ann_index(spark, index_path).select("centroid_id")
@@ -635,7 +599,6 @@ def maybe_retrain_ann_index(
         sample_fraction=sample_fraction,
         id_col=id_col,
         vec_col=vec_col,
-        use_arrow=use_arrow,
     )
     out["centroids"] = new_cents
     out["codebooks"] = new_books
@@ -647,8 +610,6 @@ def maybe_retrain_ann_index(
         new_books,
         id_col=id_col,
         vec_col=vec_col,
-        use_arrow=use_arrow,
-        partition_by_cell=partition_by_cell,
     )
     return out
 
@@ -658,14 +619,15 @@ def bm25_postings_batch(
     batch_id: int,
     index_path: str,
     buckets: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    run_token: str | None = None,
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
+    *,
+    run_token: str,
 ) -> None:
     """Append one batch of documents to a stored BM25 index: the
     batch's (doc, term) postings, partitioned by ``term_bucket`` for
-    query-time pruning, plus one (n_docs, sum_len) stats row, both under
-    the ``<run_token>-<batch_id>`` partition.
+    query-time pruning, plus one (n_docs, sum_len, buckets) stats row,
+    both under the ``<run_token>-<batch_id>`` partition.
     ``retrieval.bm25_topk_from_store`` sums the stats partitions and
     computes df from the pruned posting read, so corpus statistics stay
     consistent as batches append. Replacing the batch's partition
@@ -700,6 +662,7 @@ def bm25_postings_batch(
     stats = toks.select(F.size("toks").alias("dl")).filter("dl > 0").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_len"),
+        F.lit(b).alias("buckets"),
     )
     write_epoch(stats, os.path.join(index_path, "stats"), part_val)
 
@@ -729,9 +692,10 @@ def ngram_counts_batch(
     batch_df: DataFrame,
     batch_id: int,
     store_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    run_token: str | None = None,
+    id_col: str = DOC_ID_COL,
+    text_col: str = TEXT_COL,
+    *,
+    run_token: str,
     order: int = 3,
 ) -> None:
     """Append one batch of documents to an n-gram count store for the
@@ -755,7 +719,6 @@ def ngram_counts_batch(
 def kn_lm_fit_from_store(
     spark: SparkSession,
     store_path: str,
-    discount: float | None = None,
     order: int = 3,
     min_count=1,
 ):
@@ -818,12 +781,11 @@ def kn_lm_fit_from_store(
             f"not written by ngram_counts_batch), e.g. {bad}"
         )
     tt = tt.filter(F.col(cnt_col) > 0)
-    d = NL.KN_DISCOUNT if discount is None else discount
     prune = NL._norm_prune(order, min_count) if order != 3 else (
         {3: int(min_count)} if not isinstance(min_count, dict) else min_count
     )
     if order == 3 and all(m <= 1 for m in prune.values()):
-        return NL.kn_model_from_counts(tt, discount=d)
+        return NL.kn_model_from_counts(tt)
     if order == 3:
         # pruned trigram: served by the order-n module (count column
         # renamed to its (w1..wn, c) convention)
@@ -831,9 +793,7 @@ def kn_lm_fit_from_store(
             F.col("u").alias("w1"), F.col("v").alias("w2"),
             F.col("w").alias("w3"), F.col("c3").alias("c"),
         )
-    return NL.kn_model_from_counts_n(
-        tt, order, discount=d, min_count=min_count
-    )
+    return NL.kn_model_from_counts_n(tt, order, min_count=min_count)
 
 
 def start_gold_upsert_sink(
@@ -841,9 +801,6 @@ def start_gold_upsert_sink(
     path: str,
     checkpoint: str,
     bucket_seconds: int = 300,
-    keys: tuple[str, ...] = ("sensor_type",),
-    value_col: str = "value",
-    ts_col: str = "event_time",
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Streaming Gold: watermarked windowed aggregation, upserted by
@@ -858,18 +815,21 @@ def start_gold_upsert_sink(
     partitions instead of duplicating rows. State is bounded by the
     watermark: expired windows leave the store.
 
-    The sink partitions by ``(window_start, *keys)``, not ``window_start``
-    alone: update mode delivers only the *groups* refreshed in a trigger,
-    so overwriting whole ``window_start`` partitions would silently drop
-    the window's untouched sibling groups. Partitioning down to the group
-    key makes the partition-replace granularity match the update-mode
-    emission granularity exactly.
+    The sink partitions by ``(window_start, sensor_type)``, not
+    ``window_start`` alone: update mode delivers only the *groups*
+    refreshed in a trigger, so overwriting whole ``window_start``
+    partitions would silently drop the window's untouched sibling
+    groups. Partitioning down to the group key makes the partition-
+    replace granularity match the update-mode emission granularity
+    exactly.
     """
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        write_partitioned(batch_df, path, ["window_start", *keys])
+        write_partitioned(batch_df, path, ["window_start", "sensor_type"])
 
-    agg = _gold_windows(bronze, bucket_seconds, keys, value_col, ts_col)
+    agg = _gold_windows(
+        bronze, bucket_seconds, ("sensor_type",), "value", "event_time"
+    )
     return _start(
         agg.writeStream.outputMode("update").foreachBatch(upsert),
         checkpoint,

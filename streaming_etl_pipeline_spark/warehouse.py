@@ -26,11 +26,7 @@ from streaming_etl_pipeline_spark.functions import time_bucket
 from streaming_etl_pipeline_spark.sources.io import write_partitioned
 
 
-def build_dim_time(
-    spark: SparkSession,
-    start: str = "2024-01-01 00:00:00",
-    hours: int = 26280,
-) -> DataFrame:
+def build_dim_time(spark: SparkSession) -> DataFrame:
     """Hourly calendar dimension (``redshift_schema.sql:35-68``: 3 years of
     hours, time_key sequence, hour/day/month/year/dow, weekend flag).
 
@@ -43,14 +39,15 @@ def build_dim_time(
         .select(
             F.explode(
                 F.sequence(
-                    F.lit(0).cast("long"), F.lit(hours - 1).cast("long"), F.lit(1)
+                    F.lit(0).cast("long"), F.lit(26280 - 1).cast("long"),
+                    F.lit(1),
                 )
             ).alias("time_key")
         )
         .withColumn(
             "full_timestamp",
             F.timestamp_micros(
-                F.unix_micros(F.lit(start).cast("timestamp"))
+                F.unix_micros(F.lit("2024-01-01 00:00:00").cast("timestamp"))
                 + F.col("time_key") * F.lit(3600_000_000)
             ),
         )
@@ -64,37 +61,23 @@ def build_dim_time(
     )
 
 
-def build_fact(
-    gold: DataFrame,
-    dist_key: str = "sensor_id",
-    sort_key: str = "window_start",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def build_fact(gold: DataFrame) -> DataFrame:
     """Shape a gold aggregate into the warehouse fact layout
     (``redshift_schema.sql:5-22``): DISTKEY → hash repartition on the join
     key (co-locates fact⋈dim work), SORTKEY → sortWithinPartitions (gives
     parquet row-group min/max pruning on the time predicate)."""
     fact = gold.withColumn("loaded_at", F.current_timestamp())
-    if num_partitions:
-        fact = fact.repartition(num_partitions, dist_key)
-    else:
-        fact = fact.repartition(dist_key)
-    return fact.sortWithinPartitions(sort_key)
+    return fact.repartition("sensor_id").sortWithinPartitions("window_start")
 
 
-def load_fact_window(
-    fact: DataFrame,
-    path: str,
-    window_col: str = "window_start",
-    bucket_seconds: int = 3600,
-) -> None:
+def load_fact_window(fact: DataFrame, path: str) -> None:
     """S8 — idempotent window load. The reference DELETEs the half-open
     window then COPYs (``redshift_loader.py:84-133``); here each window is
     a time-bucket partition and :func:`write_partitioned` replaces only
     the windows ``fact`` holds, so rewriting the same window twice
     converges to the same table state with no delete pass, and every
     other window is kept."""
-    bucketed = fact.withColumn("load_window", time_bucket(window_col, bucket_seconds))
+    bucketed = fact.withColumn("load_window", time_bucket("window_start", 3600))
     write_partitioned(bucketed, path, partition_by=["load_window"])
 
 

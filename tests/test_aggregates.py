@@ -129,10 +129,10 @@ def test_top_k_deterministic_ties(spark):
 
 
 def test_windowed_stats_scale_path_close_to_exact(spark, sf_dir):
-    """The 100 TB path (oracle_safe=False + percentile_approx) must agree
-    with the exact oracle path within tolerance — same groups, identical
-    min/max/count, avg within 1e-6, approx percentiles within the value
-    range of the group."""
+    """The 100 TB path (oracle_safe=False + skew=True's percentile_approx)
+    must agree with the exact oracle path within tolerance — same
+    groups, identical min/max/count, avg within 1e-6, approx percentiles
+    within the value range of the group."""
     from streaming_etl_pipeline_spark.operators.aggregates import windowed_stats
     from streaming_etl_pipeline_spark.sources import read_table
 
@@ -151,7 +151,7 @@ def test_windowed_stats_scale_path_close_to_exact(spark, sf_dir):
     approx = {
         (r["window_start"], r["event_type"]): r
         for r in windowed_stats(
-            events, exact_percentiles=False, oracle_safe=False, **kw
+            events, skew=True, oracle_safe=False, **kw
         ).collect()
     }
     assert set(exact) == set(approx) and exact
@@ -184,36 +184,35 @@ def test_approx_count_distinct_within_rsd(spark, sf_dir):
 
 
 def test_robust_stats_hand_computed(spark):
-    """0..9 plus an outlier 1000 per key, 10/90 trim: the outlier moves
+    """0..99 plus an outlier 1000 per key, 5/95 trim: the outlier moves
     the plain mean but neither robust estimate."""
     from pyspark.sql import Row
 
     from streaming_etl_pipeline_spark.operators.aggregates import robust_stats
 
-    vals = list(range(10)) + [1000]
+    vals = list(range(100)) + [1000]
     df = spark.createDataFrame(
         [Row(g="a", v=float(x)) for x in vals]
-        + [Row(g="b", v=float(x)) for x in range(10)]
+        + [Row(g="b", v=float(x)) for x in range(100)]
     )
-    out = {
-        r.g: r for r in robust_stats(
-            df, "v", keys=("g",), lower=0.1, upper=0.9
-        ).collect()
-    }
-    # group a: q10 = 1.0, q90 = 9.0 (quantile_cont over 11 values),
-    # trimmed keeps 1..9 -> mean 5.0; winsorized clips 0->1, 1000->9
-    # -> (1 + 1+2+...+9 + 9) / 11; median 5, MAD = median of the sorted
-    # deviations [0,1,1,2,2,3,3,4,4,5,995] = 3
-    assert out["a"].trimmed_mean == 5.0
-    assert abs(out["a"].winsorized_mean - (1 + 45 + 9) / 11) < 1e-9
-    assert out["a"].mad == 3.0
-    assert out["a"].n_values == 11
-    # group b (no outlier): 0..9, q10=0.9, q90=8.1 -> trimmed keeps 1..8
-    assert out["b"].trimmed_mean == 4.5
-    assert out["b"].mad == 2.5
-    # plain mean of group a is pulled to ~95 — the robust ones were not
+    out = {r.g: r for r in robust_stats(df, "v", keys=("g",)).collect()}
+    # group a: q05 = 5, q95 = 95 (quantile_cont over 101 values), so
+    # trimmed keeps 5..95 -> mean 50; winsorized clips 0..4 -> 5 and
+    # 96..99, 1000 -> 95 -> (5*5 + 5+...+95 + 5*95) / 101 = 5050 / 101
+    # = 50; median 50, MAD = median of the sorted deviations
+    # [0,1,1,2,2,...,49,49,50,950] = 25
+    assert out["a"].trimmed_mean == 50.0
+    assert out["a"].winsorized_mean == 50.0
+    assert out["a"].mad == 25.0
+    assert out["a"].n_values == 101
+    # group b (no outlier): 0..99, q05 = 4.95, q95 = 94.05 -> trimmed
+    # keeps 5..94 -> mean 49.5; winsorized 49.5 by symmetry; MAD 25
+    assert out["b"].trimmed_mean == 49.5
+    assert out["b"].winsorized_mean == 49.5
+    assert out["b"].mad == 25.0
+    # plain mean of group a is pulled to ~58.9 — the robust ones were not
     plain = df.filter("g = 'a'").agg(F.avg("v")).collect()[0][0]
-    assert plain > 90
+    assert plain == 5950 / 101
 
 
 def test_exact_percentile_partition_count_scales_with_input(spark, sf_dir):

@@ -56,15 +56,18 @@ def test_dedup_five_way_collapse(spark):
     assert out.collect()[0].value == 24.0
 
 
-def test_dedup_agg_variant_matches_window_variant(spark):
+def test_dedup_tiebreak_breaks_order_ties(spark):
+    """When ``order_col`` ties, the higher ``tiebreak`` wins (the window
+    sorts DESC on both)."""
     rows = [
-        ("sensor-%03d" % (i % 7), "temperature", float(i), T0, T0 + timedelta(seconds=i))
-        for i in range(50)
+        ("a", 1, 1, "x"),
+        ("a", 2, 5, "keep"),  # order tie below, higher tiebreak wins
+        ("a", 2, 3, "y"),
+        ("b", 7, 0, "only"),
     ]
-    df = _bronze(spark, rows)
-    a = cleaning.deduplicate_latest(df, ["sensor_id"], "ingestion_time")
-    b = cleaning.deduplicate_latest_agg(df, ["sensor_id"], "ingestion_time")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    df = spark.createDataFrame(rows, "k string, o int, tb int, payload string")
+    w = cleaning.deduplicate_latest(df, ["k"], "o", tiebreak=["tb"]).collect()
+    assert {(r["k"], r["payload"]) for r in w} == {("a", "keep"), ("b", "only")}
 
 
 def test_null_filter_drops_required_nulls(spark):

@@ -73,8 +73,8 @@ def test_repetition_stats_gopher_filters(spark):
 def test_canonicalize_nfc_casefold_collapse(spark):
     """Unicode canonicalization: a combining-accent spelling, a
     precomposed spelling, and case/whitespace noise all map to ONE
-    canonical string; NULL passes through; punctuation collapse is
-    opt-in; width variants (NFKC territory) are deliberately preserved."""
+    canonical string; NULL passes through; punctuation is kept; width
+    variants (NFKC territory) are deliberately preserved."""
     rows = [
         (1, "Cafe\u0301  DEJA  VU"),   # e + U+0301, double spaces
         (2, "café deja vu"),        # precomposed é
@@ -84,18 +84,13 @@ def test_canonicalize_nfc_casefold_collapse(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
-        r.doc_id: (r.c, r.cp)
-        for r in df.select(
-            "doc_id",
-            TX.canonicalize("text").alias("c"),
-            TX.canonicalize("text", strip_punct=True).alias("cp"),
-        ).collect()
+        r.doc_id: r.c
+        for r in df.select("doc_id", TX.canonicalize("text").alias("c")).collect()
     }
-    assert out[1][0] == out[2][0] == "café deja vu"
-    assert out[3] == (None, None)
-    assert out[4][0] == "café, deja; vu!!"   # punct kept by default
-    assert out[4][1] == "café deja vu"       # collapsed on request
-    assert out[5][0] == "ｃａｆｅ"  # NFC keeps width forms
+    assert out[1] == out[2] == "café deja vu"
+    assert out[3] is None
+    assert out[4] == "café, deja; vu!!"   # punct kept
+    assert out[5] == "ｃａｆｅ"  # NFC keeps width forms
 
 
 def test_text_stats_golden(spark, docs):
@@ -169,7 +164,7 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
             [Row(doc_id=100, text="The quick brown fox jumps over the lazy dog indeed", lang="en")]
         )
     )
-    sigs = DD.build_signatures(near, num_hashes=16)
+    sigs = DD.build_signatures(near)
     cand = DD.lsh_candidate_pairs(sigs, num_hashes=16, bands=8)
     pairs = {(r.id_a, r.id_b) for r in cand.collect()}
     assert (1, 2) in pairs  # identical after normalization
@@ -221,33 +216,6 @@ def test_incremental_near_dups_against_store(spark, tmp_path, sf_dir):
     assert spark.read.parquet(store).count() == 120
 
 
-def test_ngram_jaccard_df_cutoff_identical_pairs(spark, sf_dir):
-    # The stop-shingle pre-filter prunes candidate generation only; the
-    # surviving pairs are re-verified with the exact full-set Jaccard, so
-    # the >=-threshold result set and values must be identical on the
-    # corpus (plus injected twins so the result is non-empty).
-    from streaming_etl_pipeline_spark.sources import read_table
-
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter("doc_id % 10 = 0").select(
-        (F.col("doc_id") + 5000).alias("doc_id"),
-        F.concat("text", F.lit(" tiny suffix")).alias("text"),
-    )
-    corpus = docs.unionByName(twins)
-    plain = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs(corpus, threshold=0.8).collect()
-    }
-    cut = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in DD.ngram_jaccard_pairs(
-            corpus, threshold=0.8, df_cutoff=0.05
-        ).collect()
-    }
-    assert len(plain) > 0
-    assert cut == plain
-
-
 def test_incremental_near_dups_bootstrap_string_ids_and_error_propagation(
     spark, tmp_path
 ):
@@ -266,7 +234,7 @@ def test_incremental_near_dups_bootstrap_string_ids_and_error_propagation(
     bad = str(tmp_path / "bad_store")
     spark.createDataFrame([(1,)], "not_a_sig int").write.parquet(bad)
     with pytest.raises(Exception, match="hsd|mh0|doc_id|UNRESOLVED"):
-        DD.incremental_near_dups(spark, docs, bad, append=False).count()
+        DD.incremental_near_dups(spark, docs, bad).count()
     # nor is a store path that exists but holds a non-parquet file: the
     # probe raises and appends nothing
     junk = tmp_path / "junk_store"
@@ -296,7 +264,7 @@ def test_incremental_near_dups_recrawl_keeps_earlier_text(spark, tmp_path):
         DD.incremental_near_dups(spark, recrawl, store).count()
         assert spark.read.parquet(store).count() == 4
     later = spark.createDataFrame([(5, base + " kilo")], schema)
-    pairs = DD.incremental_near_dups(spark, later, store, append=False)
+    pairs = DD.incremental_near_dups(spark, later, store)
     assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 5)}
 
 
@@ -305,13 +273,16 @@ def test_minhash_signature_sql_matches_spark(spark, docs):
     # must reproduce build_signatures' MinHash columns bit-for-bit
     import duckdb
 
-    sdf = DD.build_signatures(docs, num_hashes=4)
-    got = {r.doc_id: (r.mh0, r.mh1, r.mh2, r.mh3) for r in sdf.collect()}
+    sdf = DD.build_signatures(docs)
+    got = {
+        r.doc_id: tuple(r[f"mh{i}"] for i in range(DD.NUM_HASHES))
+        for r in sdf.collect()
+    }
     con = duckdb.connect()
     con.register("docs_mm", docs.toPandas())
     cols = ", ".join(
         DD.minhash_from_hashes_sql(
-            DD.hashed_shingles_sql(DD.shingles_sql("text", 3)), 4
+            DD.hashed_shingles_sql(DD.shingles_sql("text", 3)), DD.NUM_HASHES
         )
     )
     want = {
@@ -625,24 +596,31 @@ def test_kmv_overlap_exact_below_k_and_estimates(spark):
 def test_kmv_overlap_guards_high_cardinality_groups(spark):
     """r9 guard: a group column whose cardinality would explode the
     |groups|² pair frame raises loudly (with the count and the bound in
-    the message) instead of launching a quadratic job; an explicit
-    max_groups= override still runs."""
-    from streaming_etl_pipeline_spark.operators.sketches import kmv_overlap
+    the message) instead of launching a quadratic job; a group count
+    within the bound still runs."""
+    from streaming_etl_pipeline_spark.operators.sketches import (
+        KMV_OVERLAP_MAX_GROUPS,
+        kmv_overlap,
+    )
 
+    n = KMV_OVERLAP_MAX_GROUPS + 1
+    wide = spark.createDataFrame(
+        [(f"g{i}", i) for i in range(n)], "grp string, v long"
+    )
+    with pytest.raises(
+        ValueError, match=f"{n} groups.*more than {KMV_OVERLAP_MAX_GROUPS}"
+    ):
+        kmv_overlap(wide, "grp", "v", k=8)
     df = spark.createDataFrame(
         [(f"g{i}", i * 7 % 50) for i in range(40)], "grp string, v long"
     )
-    with pytest.raises(ValueError, match="40 groups.*max_groups=10"):
-        kmv_overlap(df, "grp", "v", k=8, max_groups=10)
-    out = kmv_overlap(df, "grp", "v", k=8, max_groups=100)
+    out = kmv_overlap(df, "grp", "v", k=8)
     assert out.count() == 40 * 39 // 2
-    # ADVICE r9: max_groups=None skips the guard (and its blocking
-    # count job) entirely — the explicit-sketch path where the caller
-    # already sized the group set.
+    # the explicit-sketch path gives the same pair matrix
     from streaming_etl_pipeline_spark.operators.sketches import kmv_sketch
 
     sk = kmv_sketch(df, ["grp"], "v", 8)
-    out2 = kmv_overlap(df, "grp", "v", k=8, sketch=sk, max_groups=None)
+    out2 = kmv_overlap(df, "grp", "v", k=8, sketch=sk)
     assert out2.count() == 40 * 39 // 2
 
 
@@ -941,9 +919,9 @@ def test_star_contraction_long_chain_olog_rounds(spark):
     )
 
     path = spark.range(9999).selectExpr("id AS id_a", "id + 1 AS id_b")
-    rounds: list[int] = []
-    cc = connected_components_star(path, max_iter=30, rounds_out=rounds)
-    assert rounds[0] < 15  # measured: 8 (incl. the confirmation round)
+    # raises unless it converges within 14 rounds; measured: 8 (incl.
+    # the confirmation round)
+    cc = connected_components_star(path, max_iter=14)
     assert cc.count() == 10_000
     assert cc.filter("comp != 0").count() == 0  # one component, min id 0
 
@@ -1091,6 +1069,7 @@ def test_hashed_features_deterministic_and_consistent(spark):
 def test_count_min_upper_bound_and_merge(spark):
     from pyspark.sql import Row
 
+    from streaming_etl_pipeline_spark.operators import sketches as SK
     from streaming_etl_pipeline_spark.operators.sketches import (
         cms_estimate,
         count_min,
@@ -1099,23 +1078,20 @@ def test_count_min_upper_bound_and_merge(spark):
     # skewed counts: item i appears i+1 times, 0..99
     rows = [Row(v=f"item{i}") for i in range(100) for _ in range(i + 1)]
     df = spark.createDataFrame(rows)
-    cms = count_min(df, "v", depth=4, width=64)
+    cms = count_min(df, "v")
     probes = spark.createDataFrame([Row(v=f"item{i}") for i in (0, 50, 99)])
-    est = {r.v: r.cms_est for r in cms_estimate(cms, probes, "v", width=64).collect()}
+    est = {r.v: r.cms_est for r in cms_estimate(cms, probes, "v").collect()}
     truth = {"item0": 1, "item50": 51, "item99": 100}
     n = sum(range(1, 101))
+    width = SK.CMS_WIDTH
     for k, t in truth.items():
-        assert est[k] >= t                      # CMS never undercounts
-        assert est[k] <= t + 2 * n / 64 + 40    # and overcounts boundedly
+        assert est[k] >= t                        # CMS never undercounts
+        assert est[k] <= t + 2 * n / width + 40   # and overcounts boundedly
     # sketch is fixed-size: at most depth*width cells
-    assert cms.count() <= 4 * 64
+    assert cms.count() <= SK.CMS_DEPTH * width
     # mergeability: cell-wise sum of two half-sketches == whole sketch
-    half1 = count_min(
-        spark.createDataFrame(rows[:2000]), "v", depth=4, width=64
-    )
-    half2 = count_min(
-        spark.createDataFrame(rows[2000:]), "v", depth=4, width=64
-    )
+    half1 = count_min(spark.createDataFrame(rows[:2000]), "v")
+    half2 = count_min(spark.createDataFrame(rows[2000:]), "v")
     merged = (
         half1.unionByName(half2)
         .groupBy("seed", "cell").agg(F.sum("cnt").alias("cnt"))
@@ -1698,7 +1674,7 @@ def test_source_overlap_matrix_exact(spark):
     )
     rows = {
         (r["source_a"], r["source_b"]): r
-        for r in source_overlap(docs, k=3).collect()
+        for r in source_overlap(docs).collect()
     }
     assert set(rows) == {("A", "B")}
     ab = rows[("A", "B")]
@@ -1896,32 +1872,27 @@ def test_arrow_paths_agree(spark, sf_dir):
             assert len(set(e.values())) > len(e) // 3  # cells actually split
 
 
-def _grid_candidates(left, right, left_id, right_id, left_cols=(), right_cols=()):
+def _grid_candidates(left, right, left_id, right_id):
     """Every (left, right) pair with its cosine rounded to 9 dp — the
     ``candidates=`` frame a bucket join yields when it probes every
     cell."""
     from streaming_etl_pipeline_spark.functions.core import cosine_similarity
 
-    lhs = left.select(left_id, *left_cols, F.col("embedding").alias("_l_vec"))
-    rhs = right.select(right_id, *right_cols, F.col("embedding").alias("_r_vec"))
+    lhs = left.select(left_id, F.col("embedding").alias("_l_vec"))
+    rhs = right.select(right_id, F.col("embedding").alias("_r_vec"))
     return lhs.crossJoin(rhs).select(
         left_id,
         right_id,
-        *left_cols,
-        *right_cols,
         F.round(cosine_similarity("_l_vec", "_r_vec"), 9).alias("cosine_sim"),
     )
 
 
 def test_ivf_candidates_match_exact_paths(spark, sf_dir):
-    """VERDICT r5 #1: the ``candidates=`` hook must reproduce the
-    broadcast-grid output EXACTLY when the candidates are the full grid
-    (a bucket join that probes every cell), and be a recall-only
-    approximation (pair-id subset) when some pairs are missing."""
+    """VERDICT r5 #1: ``bitext_margin_pairs``' ``candidates=`` hook must
+    reproduce the broadcast-grid output EXACTLY when the candidates are
+    the full grid (a bucket join that probes every cell)."""
     from streaming_etl_pipeline_spark.operators.similarity import (
         bitext_margin_pairs,
-        embedding_decontamination,
-        hard_negative_mining,
     )
     from streaming_etl_pipeline_spark.sources import read_table
 
@@ -1929,69 +1900,20 @@ def test_ivf_candidates_match_exact_paths(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-
-    # --- embedding_decontamination: corpus vs a small "benchmark" pool
-    corpus = emb.filter(F.col("vec_id") % 3 != 0)
-    bench = emb.filter(F.col("vec_id") % 3 == 0).withColumnRenamed(
-        "vec_id", "bench_id"
-    )
-    exact = embedding_decontamination(
-        corpus, bench, threshold=0.2, bench_id_col="bench_id"
-    )
-    cand_all = _grid_candidates(corpus, bench, "vec_id", "bench_id")
-    via_grid = embedding_decontamination(
-        corpus, bench, threshold=0.2, candidates=cand_all
-    )
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(via_grid) == as_set(exact)
-    # missing pairs: subset of the exact flags (recall trade, no ghosts)
-    cand_half = cand_all.filter(F.col("bench_id") % 2 == 0)
-    sub = embedding_decontamination(
-        corpus, bench, threshold=0.2, candidates=cand_half
-    )
-    exact_best = {r["vec_id"]: r["cosine_sim"] for r in exact.collect()}
-    for r in sub.collect():
-        # a vec flagged via fewer candidates is flagged exactly, at a
-        # similarity no better than its true best match
-        assert r["vec_id"] in exact_best
-        assert r["cosine_sim"] <= exact_best[r["vec_id"]]
 
-    # --- bitext_margin_pairs: two disjoint pools
-    src = emb.filter(F.col("vec_id") % 2 == 0).limit(60).select(
-        F.col("vec_id").alias("src_id"), "embedding"
+    # two disjoint pools
+    src = emb.filter(F.col("vec_id") % 2 == 0).limit(60)
+    tgt = emb.filter(F.col("vec_id") % 2 == 1).limit(40)
+    exact_bt = bitext_margin_pairs(src, tgt, k=3, threshold=0.0)
+    cand_bt = _grid_candidates(
+        src.withColumnRenamed("vec_id", "src_id"),
+        tgt.withColumnRenamed("vec_id", "tgt_id"),
+        "src_id",
+        "tgt_id",
     )
-    tgt = emb.filter(F.col("vec_id") % 2 == 1).limit(40).select(
-        F.col("vec_id").alias("tgt_id"), "embedding"
-    )
-    exact_bt = bitext_margin_pairs(
-        src, tgt, k=3, threshold=0.0, id_col="src_id", tgt_id_col="tgt_id"
-    )
-    cand_bt = _grid_candidates(src, tgt, "src_id", "tgt_id")
     grid_bt = bitext_margin_pairs(src, tgt, candidates=cand_bt, k=3, threshold=0.0)
     assert as_set(grid_bt) == as_set(exact_bt)
-
-    # --- hard_negative_mining: labels carried through the candidates
-    lab = emb.withColumn("label", (F.col("vec_id") % 4).cast("int"))
-    anchors = lab.filter(F.col("vec_id") < 25)
-    exact_hn = hard_negative_mining(anchors, lab, k=4)
-    cand_hn = _grid_candidates(
-        anchors.select(
-            F.col("vec_id").alias("anchor_id"),
-            "embedding",
-            F.col("label").alias("a_label"),
-        ),
-        lab.select(
-            F.col("vec_id").alias("neighbor_id"),
-            "embedding",
-            F.col("label").alias("neighbor_label"),
-        ),
-        "anchor_id",
-        "neighbor_id",
-        left_cols=("a_label",),
-        right_cols=("neighbor_label",),
-    )
-    grid_hn = hard_negative_mining(anchors, lab, k=4, candidates=cand_hn)
-    assert as_set(grid_hn) == as_set(exact_hn)
 
 
 def test_epoch_allocation_water_filling(spark):
@@ -2203,9 +2125,12 @@ def test_bm25_shared_index_matches_standalone(spark):
                 docs, q, k=3, exclude_self=excl
             ).collect()
         )
+        q_terms = q.select(
+            "query_id", F.col("qterm").alias("term")
+        ).distinct()
         shared = sorted(
-            tuple(r) for r in RT.bm25_topk(
-                docs, q, k=3, exclude_self=excl, index=idx
+            tuple(r) for r in RT._bm25_score(
+                idx, q_terms, k=3, id_col="doc_id", exclude_self=excl
             ).collect()
         )
         assert standalone == shared
@@ -2315,9 +2240,7 @@ def test_bm25_store_matches_direct_and_prunes(spark, tmp_path, docs):
     direct = sorted(
         tuple(r) for r in RT.bm25_topk(corpus, queries, k=3).collect()
     )
-    stored_df = RT.bm25_topk_from_store(
-        spark, store, queries, k=3, buckets=16
-    )
+    stored_df = RT.bm25_topk_from_store(spark, store, queries, k=3)
     stored = sorted(tuple(r) for r in stored_df.collect())
     assert direct == stored and len(stored) > 0
     # r10 MAXSCORE path: candidate pruning must not change a single bit
@@ -2325,7 +2248,7 @@ def test_bm25_store_matches_direct_and_prunes(spark, tmp_path, docs):
     maxscore = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=16, algo="maxscore"
+            spark, store, queries, k=3, algo="maxscore"
         ).collect()
     )
     assert maxscore == direct
@@ -2346,11 +2269,32 @@ def test_bm25_store_matches_direct_and_prunes(spark, tmp_path, docs):
         tuple(r)
         for r in RT.bm25_topk_from_store(
             spark, store, queries.withColumn("query_id", F.lit(1)),
-            k=3, buckets=16, exclude_self=True,
+            k=3, exclude_self=True,
         ).collect()
     )
     assert d2 == s2
 
+
+def test_bm25_store_refuses_mixed_bucket_counts(spark, tmp_path, docs):
+    """The reader takes the bucket count from the store's stats, so an
+    epoch appended with another count would hash query terms into the
+    wrong buckets for half the postings: such a store is refused."""
+    from streaming_etl_pipeline_spark.operators import retrieval as RT
+
+    store = str(tmp_path / "bm25_mixed")
+    corpus = docs.select("doc_id", "text")
+    bm25_postings_batch(
+        corpus.filter("doc_id % 2 = 0"), 0, store, buckets=8, run_token="a"
+    )
+    queries = spark.createDataFrame(
+        [(100, "the"), (100, "quick")], "query_id long, qterm string"
+    )
+    assert RT.bm25_topk_from_store(spark, store, queries, k=3).count() > 0
+    bm25_postings_batch(
+        corpus.filter("doc_id % 2 = 1"), 1, store, buckets=16, run_token="a"
+    )
+    with pytest.raises(ValueError, match="bucket counts"):
+        RT.bm25_topk_from_store(spark, store, queries, k=3)
 
 def test_bm25_maxscore_prunes_common_term_postings(spark, tmp_path):
     """r10 (judge r9 task #5): on a Zipf corpus where every doc carries
@@ -2373,13 +2317,13 @@ def test_bm25_maxscore_prunes_common_term_postings(spark, tmp_path):
     want = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="join"
+            spark, store, queries, k=3, algo="join"
         ).collect()
     )
     got = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="maxscore"
+            spark, store, queries, k=3, algo="maxscore"
         ).collect()
     )
     assert got == want and len(got) == 6
@@ -2461,13 +2405,13 @@ def test_bm25_blockmax_bit_identical_and_prunes_deeper(spark, tmp_path):
     want = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="join"
+            spark, store, queries, k=3, algo="join"
         ).collect()
     )
     got_blk = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="blockmax"
+            spark, store, queries, k=3, algo="blockmax"
         ).collect()
     )
     assert got_blk == want and len(got_blk) == 6
@@ -2541,7 +2485,7 @@ def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
     want = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="join"
+            spark, store, queries, k=3, algo="join"
         ).collect()
     )
     # plant understated stored bounds (mixed-epoch shape: stats cover
@@ -2556,7 +2500,7 @@ def test_bm25_maxscore_immune_to_stale_term_stats(spark, tmp_path):
     got = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=3, buckets=8, algo="maxscore"
+            spark, store, queries, k=3, algo="maxscore"
         ).collect()
     )
     assert got == want  # live bound in use — stale store is ignored
@@ -2599,7 +2543,7 @@ def test_bm25_gemm_scorer_matches_join(spark, tmp_path):
             results[excl][algo] = sorted(
                 tuple(r)
                 for r in RT.bm25_topk_from_store(
-                    spark, store, queries, k=4, buckets=8,
+                    spark, store, queries, k=4,
                     exclude_self=excl, algo=algo,
                 ).collect()
             )
@@ -2609,13 +2553,13 @@ def test_bm25_gemm_scorer_matches_join(spark, tmp_path):
     auto_r = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8, algo="auto"
+            spark, store, queries, k=4, algo="auto"
         ).collect()
     )
     assert auto_r == results[False]["join"]
     with pytest.raises(ValueError, match="algo"):
         RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8, algo="wand"
+            spark, store, queries, k=4, algo="wand"
         )
 
 
@@ -2740,118 +2684,17 @@ def test_pq_fit_reduces_distortion_and_lifts_recall(spark):
     # (and hence ADC scores) nearly tie, so pointwise recall@5 is
     # tiebreak noise — the property PQ guarantees is *routing*: every
     # approximate neighbor must come from the query's own cluster.
+    # One IVF cell holding the whole corpus is flat ADC (pinned by
+    # test_ivf_pq_full_probe_degenerates_to_pq_adc) with these books.
     q = vecs.filter(F.col("vec_id") < 10)  # all from cluster 0 (ids 0-24)
-    approx = SIM.pq_adc_topk(q, vecs, k=5, codebooks=books).collect()
+    one_cell = vecs.filter(F.col("vec_id") == 0)
+    approx = SIM.ivf_pq_topk(
+        q, vecs, one_cell, k=5, nprobe=1, codebooks=books
+    ).collect()
     assert len(approx) == 50
     assert all(r.neighbor_id < 25 for r in approx), sorted(
         {r.neighbor_id for r in approx}
     )
-
-
-def _correlated_vectors(spark, n=300, dim=16, latent=3):
-    """Vectors whose variance lives in a few latent directions smeared
-    across ALL coordinates — the regime where axis-aligned PQ subspaces
-    quantize badly and the OPQ rotation pays (each subspace sees a
-    projection of every latent factor instead of owning one)."""
-    import random as _r
-
-    rng = _r.Random(5)
-    mix = [
-        [rng.uniform(-1.0, 1.0) for _ in range(dim)] for _ in range(latent)
-    ]
-    rows = []
-    for vid in range(n):
-        g = [rng.gauss(0.0, 1.0) for _ in range(latent)]
-        vec = [
-            sum(g[j] * mix[j][i] for j in range(latent))
-            + rng.uniform(-0.02, 0.02)
-            for i in range(dim)
-        ]
-        rows.append(Row(vec_id=vid, embedding=vec))
-    return spark.createDataFrame(rows)
-
-
-def test_opq_rotation_beats_plain_pq_at_same_bits(spark):
-    """r11 (judge r10 "next round" #5): OPQ — alternating orthogonal-
-    Procrustes rotation + per-subspace codebooks. On latent-correlated
-    data the rotated fit must cut quantization distortion vs plain PQ
-    under the SAME trainer and bit budget (opq_iters=1 is exactly the
-    unrotated fit), the learned R must be orthogonal, the fit
-    deterministic, and the rotation must drop into the ADC and IVF-PQ
-    paths unchanged (orthogonal invariance keeps the ranking
-    contract)."""
-    vecs = _correlated_vectors(spark)
-    rot1, books1 = SIM.opq_fit(vecs, codebooks_shape=(4, 8), iters=4,
-                               opq_iters=1)
-    rot8, books8 = SIM.opq_fit(vecs, codebooks_shape=(4, 8), iters=4,
-                               opq_iters=8)
-    # opq_iters=1 returns the identity (no Procrustes update ran)
-    assert all(
-        rot1[i][j] == (1.0 if i == j else 0.0)
-        for i in range(16) for j in range(16)
-    )
-    # learned R is orthogonal: R·Rᵀ == I to rounding (6dp literals)
-    dim = 16
-    for i in range(dim):
-        for j in range(dim):
-            dot_ij = sum(rot8[i][t] * rot8[j][t] for t in range(dim))
-            assert abs(dot_ij - (1.0 if i == j else 0.0)) < 1e-3
-    # determinism
-    rot8b, books8b = SIM.opq_fit(vecs, codebooks_shape=(4, 8), iters=4,
-                                 opq_iters=8)
-    assert rot8 == rot8b and books8 == books8b
-
-    # distortion in the ROTATED space == distortion in the raw space
-    # (orthogonal invariance), so the two fits compare directly
-    def distortion(rotation, bk):
-        v = (
-            SIM.opq_rotate("embedding", rotation)
-            if rotation is not None else F.col("embedding")
-        )
-        recon = SIM.pq_reconstruct(SIM.pq_encode(v, bk), bk)
-        diff = F.zip_with(v, recon, lambda a, b: (a - b) * (a - b))
-        sq = F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x)
-        return vecs.select(F.avg(sq).alias("d")).first()["d"]
-
-    d_plain = distortion(None, books1)
-    d_opq = distortion(rot8, books8)
-    assert d_opq < 0.8 * d_plain, (d_opq, d_plain)
-
-    # recall@5 vs brute force at identical bits: OPQ >= plain
-    q = vecs.filter(F.col("vec_id") < 20)
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in SIM.cosine_topk(q, vecs, k=5).collect()
-    }
-
-    def recall(rotation, bk):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in SIM.pq_adc_topk(
-                q, vecs, k=5, codebooks=bk, rotation=rotation
-            ).collect()
-        }
-        return len(got & exact) / len(exact)
-
-    assert recall(rot8, books8) >= recall(None, books1)
-
-    # IVF-PQ accepts the rotation and returns the contract shape
-    from streaming_etl_pipeline_spark.operators.clustering import kmeans_fit
-
-    cents = kmeans_fit(vecs, k=4, iters=3)
-    out = SIM.ivf_pq_topk(
-        q, vecs, cents, k=3, nprobe=2, codebooks=books8, rotation=rot8
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    assert set(out.columns) == {"query_id", "rank", "neighbor_id", "cosine_sim"}
-    # drift-retrain integration: opq=True returns the full triple with
-    # codebooks identical to a direct opq_fit on the same sample
-    cents2, books_r, rot_r = SIM.retrain_quantizer(
-        vecs, n_cells=4, codebooks_shape=(4, 8), iters=4, opq=True
-    )
-    assert rot_r == rot8 and books_r == books8
-    assert cents2.count() == 4
 
 
 # ---------------------------------------------------------------------------
@@ -2952,7 +2795,7 @@ def test_global_order_index_dense_and_partition_invariant(spark):
     )
 
     df = spark.range(500).select(F.col("id").alias("doc_id"))
-    out = global_order_index(df, "doc_id", seed="e0", buckets=16)
+    out = global_order_index(df, "doc_id", seed="e0")
     rows = {r.doc_id: r.ord for r in out.collect()}
     assert sorted(rows.values()) == list(range(500))
     direct = [
@@ -2965,13 +2808,13 @@ def test_global_order_index_dense_and_partition_invariant(spark):
     rep = {
         r.doc_id: r.ord
         for r in global_order_index(
-            df.repartition(13), "doc_id", seed="e0", buckets=16
+            df.repartition(13), "doc_id", seed="e0"
         ).collect()
     }
     assert rep == rows
     other = {
         r.doc_id: r.ord
-        for r in global_order_index(df, "doc_id", seed="e1", buckets=16).collect()
+        for r in global_order_index(df, "doc_id", seed="e1").collect()
     }
     assert other != rows and sorted(other.values()) == list(range(500))
 
@@ -3049,21 +2892,16 @@ def test_ivf_pq_full_probe_degenerates_to_pq_adc(spark):
     """nprobe = |centroids| removes the routing restriction, so IVF-PQ
     must return exactly the flat-ADC ranking; nprobe=1 must return a
     subset of each query's own-cell candidates."""
-    vecs = _blob_vectors(spark, n_clusters=4, per=20, dim=16)
-    books = SIM.pq_fit(vecs, codebooks_shape=(4, 8), iters=2)
+    vecs = _blob_vectors(spark, n_clusters=4, per=20, dim=SIM.DIM)
     cents = vecs.filter(F.col("vec_id") % 20 == 0)  # one seed per blob
     q = vecs.filter(F.col("vec_id") < 5)
     full = sorted(
         tuple(r)
-        for r in SIM.ivf_pq_topk(
-            q, vecs, cents, k=3, nprobe=4, codebooks=books
-        ).collect()
+        for r in SIM.ivf_pq_topk(q, vecs, cents, k=3, nprobe=4).collect()
     )
-    flat = sorted(
-        tuple(r) for r in SIM.pq_adc_topk(q, vecs, k=3, codebooks=books).collect()
-    )
+    flat = sorted(tuple(r) for r in SIM.pq_adc_topk(q, vecs, k=3).collect())
     assert full == flat
-    one = SIM.ivf_pq_topk(q, vecs, cents, k=3, nprobe=1, codebooks=books)
+    one = SIM.ivf_pq_topk(q, vecs, cents, k=3, nprobe=1)
     # queries come from cluster 0 (ids 0-19): all own-cell neighbors
     assert all(r.neighbor_id < 20 for r in one.collect())
 
@@ -3338,9 +3176,9 @@ def test_ivf_pq_filtered_matches_per_label_runs(spark):
     """Metadata-filtered IVF-PQ (filter_col=) equals running plain
     IVF-PQ per label group over the label-restricted corpus — the
     pre-filter contract on the compressed index — whether the label
-    rides the corpus frame, the stored corpus_index, or a separate
-    attributes= frame; queries whose label matches nothing return no
-    rows; a missing attribute source raises."""
+    rides the corpus frame or the stored corpus_index; queries whose
+    label matches nothing return no rows; an index without the label
+    raises."""
     import pytest as _pt
 
     vecs = _blob_vectors(spark, n_clusters=4, per=20, dim=16)
@@ -3387,17 +3225,7 @@ def test_ivf_pq_filtered_matches_per_label_runs(spark):
     )
     assert via_index == got
 
-    # attributes= path: bare (id, cell, codes) index + side metadata
     bare = idx.drop("label")
-    via_attrs = sorted(
-        tuple(r)
-        for r in SIM.ivf_pq_topk(
-            q, None, cents, k=3, nprobe=4, codebooks=books,
-            corpus_index=bare, filter_col="label",
-            attributes=labeled.select("vec_id", "label"),
-        ).collect()
-    )
-    assert via_attrs == got
     with _pt.raises(ValueError, match="filter_col"):
         SIM.ivf_pq_topk(
             q, None, cents, k=3, nprobe=4, codebooks=books,

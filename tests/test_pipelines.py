@@ -799,8 +799,8 @@ def test_cli_dedup_against_sink_written_store(spark, tmp_path, capsys):
     assert main(["dedup", "--docs", docs, "--store", store]) == 0
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m["dedup.near_dup_pairs"] == 1.0
-    probe = incremental_near_dups(spark, batch, store, append=False)
+    probe = incremental_near_dups(spark, batch, store)
     assert {(r.id_a, r.id_b) for r in probe.collect()} == {(1, 10)}
     delete_ids(spark, store, [1], "doc_id")
-    probe = incremental_near_dups(spark, batch, store, append=False)
+    probe = incremental_near_dups(spark, batch, store)
     assert probe.count() == 0

@@ -1,6 +1,6 @@
 """tune() memoization (r11): repeat calls with an unchanged target must be
-free of py4j conf.set round-trips, while a changed target, force=True, or a
-new session object must re-apply every RUNTIME_CONF key."""
+free of py4j conf.set round-trips, while a changed target or a new session
+object must re-apply every RUNTIME_CONF key."""
 
 from __future__ import annotations
 
@@ -30,16 +30,13 @@ def test_tune_memoizes_unchanged_target(spark):
     assert calls == []  # memoized: zero py4j round-trips
 
 
-def test_tune_reapplies_on_new_target_and_force(spark):
+def test_tune_reapplies_on_new_target(spark):
     sess.tune(spark, shuffle_partitions=8)
     # Changed partition count: full re-apply, ending with the new count.
     calls = _set_count(spark, sess.tune, spark, shuffle_partitions=6)
     assert "spark.sql.shuffle.partitions" in calls
     assert set(sess.RUNTIME_CONF) <= set(calls)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "6"
-    # force=True re-applies even though the memoized target matches.
-    calls = _set_count(spark, sess.tune, spark, shuffle_partitions=6, force=True)
-    assert set(sess.RUNTIME_CONF) <= set(calls)
     # Restore the suite's session posture.
     sess.tune(spark, shuffle_partitions=8)
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

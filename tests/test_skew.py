@@ -1,16 +1,15 @@
 """Skew hardening with evidence (judge r4 item #2).
 
 A 50 %-hot-key corpus (``generate_events(hot_key_fraction=0.5)`` — one
-chatty sensor owns half the rows) drives both plans of each skewed
-operator end-to-end and asserts the ``skew=True`` path is faster AND
+chatty sensor owns half the rows) drives both plans of the windowed
+statistics end-to-end and asserts the ``skew=True`` path is faster AND
 equivalent. The measured numbers are recorded in SCALE.md.
 
-Why the plain paths degrade: ``row_number`` must sort every row of a key
-inside one task, and exact ``F.percentile`` buffers every value of a
-group in one accumulator — both serialize the stage on the hot key's
-row count. The skew paths (``max_by`` struct agg, ``percentile_approx``
-sketch) compute bounded mergeable partials map-side, so the hot key
-costs one partial per upstream partition.
+Why the plain path degrades: exact ``F.percentile`` buffers every value
+of a group in one accumulator, which serializes the stage on the hot
+key's row count. The ``percentile_approx`` sketch computes bounded
+mergeable partials map-side, so the hot key costs one partial per
+upstream partition.
 """
 
 import time
@@ -19,10 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_etl_pipeline_spark.operators.aggregates import windowed_stats
-from streaming_etl_pipeline_spark.operators.cleaning import (
-    deduplicate_latest,
-    deduplicate_latest_agg,
-)
 from streaming_etl_pipeline_spark.sources.generator import generate_events
 
 N = 12_000_000
@@ -114,22 +109,6 @@ def _assert_faster(fast_df, slow_df, label: str) -> tuple[float, float]:
     return t_fast, t_slow
 
 
-def test_skewed_dedup_salted_beats_plain(spark, skewed):
-    plain = deduplicate_latest(skewed, ["sensor_id"], "event_time")
-    agg = deduplicate_latest(skewed, ["sensor_id"], "event_time", skew=True)
-
-    # equivalence: same survivor row per sensor (event_time is unique
-    # per row in the fixture, so the winner is fully determined)
-    cols = ["sensor_id", "event_time", "value"]
-    assert sorted(map(tuple, plain.select(*cols).collect())) == sorted(
-        map(tuple, agg.select(*cols).collect())
-    )
-
-    # the hot key serializes the window sort; the struct agg stays
-    # map-parallel — require a real win on a quiet box
-    _assert_faster(agg, plain, "dedup skew=True vs plain")
-
-
 def test_skewed_windowed_stats_sketch_beats_exact(spark, skewed):
     kw = dict(
         ts_col="event_time",
@@ -155,23 +134,6 @@ def test_skewed_windowed_stats_sketch_beats_exact(spark, skewed):
         assert abs(e[k]["p50_value"] - s[k]["p50_value"]) < 1.0
 
     _assert_faster(sketch, exact, "windowed skew=True vs exact")
-
-
-def test_dedup_agg_tiebreak_matches_window_variant(spark):
-    """The struct rank (order_col, *tiebreak) must pick the same winner
-    as the DESC-major window sort when order_col ties."""
-    rows = [
-        ("a", 1, 1, "x"),
-        ("a", 2, 5, "keep"),  # order tie below, higher tiebreak wins
-        ("a", 2, 3, "y"),
-        ("b", 7, 0, "only"),
-    ]
-    df = spark.createDataFrame(rows, "k string, o int, tb int, payload string")
-    w = deduplicate_latest(df, ["k"], "o", tiebreak=["tb"]).collect()
-    a = deduplicate_latest_agg(df, ["k"], "o", tiebreak=["tb"]).collect()
-    want = {("a", "keep"), ("b", "only")}
-    assert {(r["k"], r["payload"]) for r in w} == want
-    assert {(r["k"], r["payload"]) for r in a} == want
 
 
 def test_skewed_join_aqe_splits_hot_partition(spark, tmp_path):

@@ -877,7 +877,7 @@ def test_bm25_postings_batch_two_epochs(spark, tmp_path):
     stored = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8
+            spark, store, queries, k=4
         ).collect()
     )
     assert direct == stored and len(stored) > 0
@@ -896,7 +896,7 @@ def test_bm25_postings_batch_two_epochs(spark, tmp_path):
     again = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8
+            spark, store, queries, k=4
         ).collect()
     )
     assert again == direct
@@ -1123,7 +1123,7 @@ def test_compact_ingest_store_preserves_results(spark, tmp_path):
     before = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8
+            spark, store, queries, k=4
         ).collect()
     )
     r1 = compact_ingest_store(
@@ -1135,7 +1135,7 @@ def test_compact_ingest_store_preserves_results(spark, tmp_path):
     after = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, store, queries, k=4, buckets=8
+            spark, store, queries, k=4
         ).collect()
     )
     assert before == after
@@ -1354,39 +1354,6 @@ def test_ann_index_batch_two_epochs(spark, tmp_path):
         ).collect()
     }
     assert got[1] == 103 and got[2] == 205
-    # prune_stored_cells: identical results, and the probed-cell isin
-    # lands in the scan's PartitionFilters (the store is partitioned by
-    # centroid_id, so only the probed cells' directories are read)
-    cell_idx = str(tmp_path / "ann_index_bycell")
-    ann_index_batch(
-        spark.createDataFrame(
-            [(i, _ann_vec(i)) for i in range(100, 110)]
-            + [(i, _ann_vec(i)) for i in range(200, 210)],
-            "vec_id long, embedding array<double>",
-        ),
-        0, cell_idx, centroids, run_token="cells",
-        partition_by_cell=True,
-    )
-    pruned_df = SIM.ivf_pq_topk(
-        queries, None, centroids, k=1, nprobe=2,
-        corpus_index=load_ann_index(spark, cell_idx),
-        prune_stored_cells=True,
-    )
-    unpruned = {
-        (r.query_id, r.neighbor_id, r.cosine_sim)
-        for r in SIM.ivf_pq_topk(
-            queries, None, centroids, k=1, nprobe=2, corpus_index=index
-        ).collect()
-    }
-    assert {
-        (r.query_id, r.neighbor_id, r.cosine_sim)
-        for r in pruned_df.collect()
-    } == unpruned
-    plan = pruned_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
-
     # re-run: same epoch id again — partition rewritten, not duped
     b2 = vecs(range(200, 210))
     ann_index_batch(b2, 1, idx, centroids, run_token="run-a")
@@ -1401,7 +1368,9 @@ def test_ann_index_batch_two_epochs(spark, tmp_path):
 
     # arrow and expression encode paths write identical index rows
     expr_idx = str(tmp_path / "ann_index_expr")
-    ann_index_batch(b2, 0, expr_idx, centroids, use_arrow=False)
+    ann_index_batch(
+        b2, 0, expr_idx, centroids, run_token="run-a", use_arrow=False
+    )
     a = {
         (r.vec_id, r.centroid_id, tuple(r.codes))
         for r in spark.read.parquet(expr_idx).collect()
@@ -1436,7 +1405,7 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
     ingests drifted (pattern-B) traffic; the occupancy monitor fires,
     the quantizer retrains on current corpus traffic, and the stored
     index is re-encoded + atomically swapped — after which stored-index
-    search (with static cell pruning) equals a from-scratch encode
+    search equals a from-scratch encode
     against the new state, and drifted queries route correctly at
     nprobe=1."""
     from streaming_etl_pipeline_spark.operators import similarity as SIM
@@ -1482,15 +1451,14 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
     # drifted recent traffic → fires, retrains, migrates the store
     res = maybe_retrain_ann_index(
         spark, idx, b_vecs, corpus, cents_a, psi_threshold=0.25, iters=iters,
-        codebooks_shape=shape, partition_by_cell=True,
+        codebooks_shape=shape,
     )
     assert res["fired"] and res["psi"] >= 0.25
     assert res["reencode"]["rows"] == 80
     assert res["reencode"]["missing_vectors"] == 0
     new_cents, new_books = res["centroids"], res["codebooks"]
 
-    # migrated store == from-scratch encode against the new state,
-    # through the pruned stored-index read (partitioned by cell)
+    # migrated store == from-scratch encode against the new state
     queries = spark.createDataFrame(
         [(1, [v + 1e-4 for v in _ann_vec(117)]),
          (2, [v + 1e-4 for v in _drift_vec(222)])],
@@ -1498,7 +1466,7 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
     )
     stored = SIM.ivf_pq_topk(
         queries, None, new_cents, k=3, nprobe=2, codebooks=new_books,
-        corpus_index=load_ann_index(spark, idx), prune_stored_cells=True,
+        corpus_index=load_ann_index(spark, idx),
     )
     scratch = SIM.ivf_pq_topk(
         queries, corpus, new_cents, k=3, nprobe=2, codebooks=new_books,
@@ -1522,9 +1490,7 @@ def test_drift_loop_monitor_retrain_reencode(spark, tmp_path):
 
     # reencode with an id whose vector is gone: dropped + surfaced
     partial = corpus.filter(F.col("vec_id") != 100)
-    r2 = reencode_index(
-        spark, idx, partial, new_cents, new_books, label="reencoded-2"
-    )
+    r2 = reencode_index(spark, idx, partial, new_cents, new_books)
     assert r2["missing_vectors"] == 1 and r2["rows"] == 79
     assert load_ann_index(spark, idx).filter(
         F.col("vec_id") == 100
@@ -1648,7 +1614,7 @@ def test_delete_ids_bm25_store(spark, tmp_path):
         return sorted(
             tuple(r)
             for r in RT.bm25_topk_from_store(
-                spark, path, queries, k=5, buckets=8
+                spark, path, queries, k=5
             ).collect()
         )
 
@@ -1704,7 +1670,7 @@ def test_bm25_delete_ids_string_ids(spark, tmp_path):
     queries = spark.createDataFrame(
         [(1, "alpha")], "query_id long, qterm string"
     )
-    got = RT.bm25_topk_from_store(spark, store, queries, k=5, buckets=4)
+    got = RT.bm25_topk_from_store(spark, store, queries, k=5)
     assert [r.neighbor_id for r in got.collect()] == ["d2"]
 
 
@@ -1747,79 +1713,3 @@ def test_delete_ids_dedup_signature_store(spark, tmp_path):
     assert raw.filter(F.col("doc_id").isin(1, 2)).count() == 0
     # 4 is a near-dup of 3's (still-stored) signatures
     assert probe(4) == {(3, 4)}
-
-
-def test_ann_index_carry_attributes_filtered_search(spark, tmp_path):
-    """carry= threads filter attributes into the STORED index rows, so
-    metadata-filtered IVF-PQ runs on the compressed store without a
-    query-time attribute join — and the attribute survives both the
-    migration (reencode carry=) and equals the side-attributes path."""
-    from streaming_etl_pipeline_spark.operators import similarity as SIM
-    from streaming_etl_pipeline_spark.streaming.ingest import (
-        ann_index_batch,
-        load_ann_index,
-        reencode_index,
-    )
-
-    idx = str(tmp_path / "ann_attrs")
-    centroids = spark.createDataFrame(
-        [(i, _ann_vec(i)) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    ).localCheckpoint(eager=True)
-    vecs = spark.createDataFrame(
-        [(i, _ann_vec(i), str(i % 2)) for i in range(100, 120)],
-        "vec_id long, embedding array<double>, label string",
-    ).localCheckpoint(eager=True)
-    ann_index_batch(vecs, 0, idx, centroids, run_token="t", carry=("label",))
-    stored = load_ann_index(spark, idx)
-    assert "label" in stored.columns
-
-    queries = spark.createDataFrame(
-        [(1, [v + 1e-4 for v in _ann_vec(103)], "1"),
-         (2, [v + 1e-4 for v in _ann_vec(206)], "0")],
-        "vec_id long, embedding array<double>, label string",
-    )
-    from_store = sorted(
-        tuple(r)
-        for r in SIM.ivf_pq_topk(
-            queries, None, centroids, k=3, nprobe=5,
-            corpus_index=stored, filter_col="label",
-        ).collect()
-    )
-    via_attrs = sorted(
-        tuple(r)
-        for r in SIM.ivf_pq_topk(
-            queries, None, centroids, k=3, nprobe=5,
-            corpus_index=stored.drop("label"), filter_col="label",
-            attributes=vecs.select("vec_id", "label"),
-        ).collect()
-    )
-    assert from_store == via_attrs and len(from_store) > 0
-    # expression path writes the same attributed rows
-    idx2 = str(tmp_path / "ann_attrs_expr")
-    ann_index_batch(
-        vecs, 0, idx2, centroids, run_token="t", carry=("label",),
-        use_arrow=False,
-    )
-    a = {
-        (r.vec_id, r.centroid_id, r.label, tuple(r.codes))
-        for r in load_ann_index(spark, idx2).collect()
-    }
-    b = {
-        (r.vec_id, r.centroid_id, r.label, tuple(r.codes))
-        for r in stored.collect()
-    }
-    assert a == b
-    # migration preserves the attribute column
-    reencode_index(
-        spark, idx, vecs, centroids, SIM.PQ_CODEBOOKS, carry=("label",)
-    )
-    migrated = load_ann_index(spark, idx)
-    assert "label" in migrated.columns
-    assert sorted(
-        tuple(r)
-        for r in SIM.ivf_pq_topk(
-            queries, None, centroids, k=3, nprobe=5,
-            corpus_index=migrated, filter_col="label",
-        ).collect()
-    ) == from_store

@@ -472,7 +472,7 @@ def test_cli_bm25_index_and_compact_store(spark, tmp_path, capsys):
     queries = spark.createDataFrame(
         [(1, "the"), (1, "data")], "query_id long, qterm string"
     )
-    got = RT.bm25_topk_from_store(spark, idx, queries, k=3, buckets=8)
+    got = RT.bm25_topk_from_store(spark, idx, queries, k=3)
     assert got.count() > 0
 
     # compact-store over a two-trigger posting store
@@ -529,7 +529,7 @@ def test_cli_bm25_index_accepts_sink_epochs(spark, tmp_path, capsys):
     got = sorted(
         tuple(r)
         for r in RT.bm25_topk_from_store(
-            spark, idx, queries, k=8, buckets=8
+            spark, idx, queries, k=8
         ).collect()
     )
     want = sorted(
@@ -577,7 +577,7 @@ def test_cli_bm25_rebuild_replaces_the_whole_index(spark, tmp_path, capsys):
         return sorted(
             tuple(r)
             for r in RT.bm25_topk_from_store(
-                spark, idx, queries, k=8, buckets=8
+                spark, idx, queries, k=8
             ).collect()
         )
 

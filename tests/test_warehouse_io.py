@@ -27,9 +27,8 @@ def gold(spark):
 
 
 def test_build_fact_layout(spark, gold):
-    fact = build_fact(gold, num_partitions=4)
+    fact = build_fact(gold)
     assert "loaded_at" in fact.columns
-    assert fact.rdd.getNumPartitions() == 4
     # co-location: every sensor_id lives in exactly one partition
     per_part = (
         fact.withColumn("pid", F.spark_partition_id())
@@ -44,7 +43,7 @@ def test_load_fact_window_idempotent(spark, gold, tmp_path):
     """S8: rewriting the same window converges (dynamic partition
     overwrite replaces only the windows present in the new data)."""
     path = str(tmp_path / "fact")
-    fact = build_fact(gold, num_partitions=2)
+    fact = build_fact(gold)
     load_fact_window(fact, path)
     assert spark.read.parquet(path).count() == 8
     # reload ONLY the 10:00 hour window with corrected values
@@ -99,13 +98,13 @@ def test_compact_consolidates_small_files(spark, tmp_path):
     before = len(_glob.glob(path + "/**/*.parquet", recursive=True))
     want = {tuple(r) for r in spark.read.parquet(path).collect()}
 
-    n = compact(spark, path, partition_by=("sensor_type",))
+    n = compact(spark, path)
     after = len(_glob.glob(path + "/**/*.parquet", recursive=True))
     got = {tuple(r) for r in spark.read.parquet(path).collect()}
 
     assert n == 20_000
     assert got == want
-    assert after < before / 10  # 160 files -> 4 (one per sensor_type)
+    assert after < before / 10  # 160 files -> one per 4 cores
     assert not _glob.glob(path + "._*")
 
 
@@ -132,7 +131,7 @@ def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
     ).parquet(path)
     want = rows(path)
 
-    assert compact(spark, uri, partition_by=("sensor_type",)) == 2_000
+    assert compact(spark, uri) == 2_000
     assert rows(uri) == want
     assert not os.path.exists(path + ".__compact__")
     assert not os.path.exists(path + ".__old__")
@@ -459,7 +458,7 @@ def test_write_bloom_indexed_adds_filters_and_reads_back(spark, tmp_path):
     ).coalesce(1)
     bloomed = str(tmp_path / "bloomed")
     plain = str(tmp_path / "plain")
-    write_bloom_indexed(df, bloomed, ["user_id"], expected_ndv=100_000)
+    write_bloom_indexed(df, bloomed, ["user_id"])
     df.write.parquet(plain)
 
     size = lambda p: sum(
@@ -525,12 +524,31 @@ def test_versioned_table_atomic_pointer_and_time_travel(spark, tmp_path):
     assert (v1, v2) == (1, 2)
     assert latest_version(tbl) == 2
     assert read_versioned(spark, tbl).count() == 5          # latest snapshot
-    assert read_versioned(spark, tbl, version=1).count() == 10  # time travel
     # a snapshot resolved before a new commit stays fully readable after it
-    old = read_versioned(spark, tbl, version=1)
+    old = read_versioned(spark, tbl)
     versioned_write(spark.range(3).selectExpr("id", "id AS x"), tbl)
-    assert old.count() == 10
+    assert old.count() == 5
     assert read_versioned(spark, tbl).count() == 3
+
+
+def test_versioned_write_keeps_only_the_last_two_versions(spark, tmp_path):
+    """Each commit deletes the versions older than the one it superseded:
+    three writes leave v2 (for a reader that resolved the pointer just
+    before the last swap) and v3."""
+    from streaming_etl_pipeline_spark.sources.io import (
+        read_versioned,
+        versioned_write,
+    )
+
+    tbl = str(tmp_path / "vt_prune")
+    for n in (10, 5, 3):
+        versioned_write(spark.range(n).selectExpr("id", "id AS x"), tbl)
+    kept = sorted(
+        d for d in os.listdir(os.path.join(tbl, "_versions"))
+        if not d.endswith(".claim")
+    )
+    assert kept == ["v2", "v3"]
+    assert sorted(r.id for r in read_versioned(spark, tbl).collect()) == [0, 1, 2]
 
 
 def test_versioned_concurrent_writers_one_winner(spark, tmp_path):
@@ -655,7 +673,8 @@ def test_cli_optimize_versioned_commits_snapshot(spark, tmp_path):
         "--cluster-by", "id", "--files", "2", "--versioned",
     ])
     assert rc == 0 and latest_version(tbl) == 2
-    assert read_versioned(spark, tbl, version=1).count() == 100
+    v1 = os.path.join(tbl, "_versions", "v1")
+    assert spark.read.parquet(v1).count() == 100
 
 
 def test_training_shards_roundtrip_and_tamper_detection(spark, tmp_path):
