@@ -14,6 +14,14 @@ event_time`` read straight off the Bronze parquet afterward — no
 instrumentation in the measured path. Trigger-level stats come from a
 live ``MetricsListener``.
 
+Long-run footprint: the script prints the driver JVM's collector (the
+names of its GC MXBeans), its ``VmRSS`` every 10 s and its ``VmHWM`` at
+the end, and puts the collector and the peak in the report. A short
+benchmark run ends long before the old generation fills; a soak shows
+whether the heap the run touches keeps growing. To run it under another
+collector, select one where the JVM reads it, for example
+``JAVA_TOOL_OPTIONS=-XX:+UseG1GC`` (``build_session`` then adds none).
+
 Usage:
     python scripts/soak_streaming.py                       # 500 ev/s, 180 s
     python scripts/soak_streaming.py --rate 2000 --duration 120
@@ -76,6 +84,26 @@ def produce(src: str, rate: int, duration: float, stop: threading.Event) -> int:
     return n
 
 
+def _proc_status_mb(pid: int, field: str) -> float | None:
+    """``VmRSS``/``VmHWM`` of a process in MB."""
+    try:
+        with open(f"/proc/{pid}/status") as fh:
+            for line in fh:
+                if line.startswith(field + ":"):
+                    return int(line.split()[1]) / 1024.0
+    except OSError:
+        pass
+    return None
+
+
+def watch_rss(pid: int, stop: threading.Event, every_s: float = 10.0) -> None:
+    """Print the JVM's resident memory every ``every_s`` until ``stop``."""
+    t0 = time.time()
+    while not stop.wait(every_s):
+        rss = _proc_status_mb(pid, "VmRSS")
+        print(f"# t={time.time() - t0:.0f}s jvm VmRSS={rss:.0f} MB", flush=True)
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -95,8 +123,17 @@ def main() -> int:
     src = os.path.join(work, "src")
     os.makedirs(src)
     spark = build_session(app_name="soak-streaming")
+    jvm = spark._jvm
+    jvm_pid = int(jvm.java.lang.ProcessHandle.current().pid())
+    collector = ",".join(
+        g.getName()
+        for g in jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    )
+    print(f"# jvm pid={jvm_pid} collector={collector}", flush=True)
     listener = MetricsListener()
     spark.streams.addListener(listener)
+    watching = threading.Event()
+    threading.Thread(target=watch_rss, args=(jvm_pid, watching), daemon=True).start()
     try:
         raw = read_json_stream(spark, src)
         bronze, _dlq = parse_events(raw)
@@ -117,6 +154,7 @@ def main() -> int:
         # drain: give both queries two more trigger intervals to absorb
         # the tail files, then stop
         time.sleep(2 * trigger_s + 5)
+        gold_state = (qg.lastProgress or {}).get("stateOperators") or [{}]
         qb.stop()
         qg.stop()
         qb.awaitTermination(60)
@@ -155,11 +193,14 @@ def main() -> int:
             "latency_max_s": round(pmax, 2),
             "gold_rows": n_gold_rows,
             "gold_events_aggregated": int(gold_events or 0),
+            "gold_state_rows": gold_state[0].get("numRowsTotal"),
             "nonempty_triggers": len(batches),
             "max_trigger_ms": max(
                 (p["durationMs"].get("triggerExecution", 0) for p in batches),
                 default=0,
             ),
+            "jvm_collector": collector,
+            "jvm_peak_rss_mb": round(_proc_status_mb(jvm_pid, "VmHWM") or 0.0),
         }
         print(json.dumps(report))
         ok = (
@@ -170,6 +211,7 @@ def main() -> int:
         print("SOAK " + ("PASS" if ok else "FAIL"))
         return 0 if ok else 1
     finally:
+        watching.set()
         spark.streams.removeListener(listener)
         shutil.rmtree(work, ignore_errors=True)
 

@@ -1,32 +1,27 @@
-"""Machine-state probes for benchmark self-diagnosis.
+"""Machine-state probes that make a benchmark artifact self-diagnosing.
 
-Round-9 postmortem (SCALE.md "NumPy THP hugepage stall"): two driver
-bench sessions in a row ran 15-40% hot across queries whose code did not
-change, and one (r9) pushed dedup_exact formally over the 2x per-query
-gate.  The root causes were box-level — THP ``madvise``+``defrag=madvise``
-on a memory-fragmented host makes every hugepage first-touch stall in
-synchronous compaction (~8 MB/s observed), and ambient co-tenant load
-adds additive jitter to sub-second queries.  Neither is visible from the
-bench JSON alone, so a hot session looks like a code regression.
-
-This module makes a bench artifact self-diagnosing (judge r9 task #1a):
+Two bench sessions in a row once ran 15-40% hot across queries whose
+code had not changed (SCALE.md "NumPy THP hugepage stall"). The causes
+were the host's: THP ``madvise`` + ``defrag=madvise`` on a fragmented
+host stalls every hugepage first touch in synchronous compaction
+(~8 MB/s observed), and co-tenant load adds jitter to sub-second
+queries. The bench JSON alone shows neither, so these probes ride in it:
 
 - :func:`thp_state` — the kernel's THP ``enabled``/``defrag`` modes.
 - :func:`load_1m` — 1-minute load average at bench time.
-- :func:`thp_canary` — the fragmentation canary: mmap an anonymous
-  buffer, ``madvise(MADV_HUGEPAGE)`` it (reproducing exactly what numpy
-  >=1.22 does to large allocations), and measure the first-touch fill
-  rate in MB/s.  Healthy box: GB/s-range.  Fragmented-THP box: single-
-  digit MB/s.  A budget cap bounds the probe's own cost when the box IS
-  poisoned (we report the rate measured so far, which is the diagnosis).
-- :func:`sibling_processes` — /proc scan for other live bench/soak
-  processes (judge r9 task #7: two r9 incidents came from overlapping
-  benchmark jobs doubling each other's walls).
-- :func:`machine_state` — one dict with all of the above, embedded in
-  bench.py's output JSON.
+- :func:`thp_canary` — mmap an anonymous buffer, ``madvise(MADV_HUGEPAGE)``
+  it (what numpy >=1.22 does to large allocations) and measure the
+  first-touch fill rate: GB/s on a healthy host, single-digit MB/s on a
+  fragmented one. A time budget bounds the probe on a poisoned host.
+  It runs in a short-lived child, so its buffer stays out of the
+  caller's peak memory (in the caller, 100 MB took a fresh
+  interpreter's ``VmHWM`` from 14 to 116 MB).
+- :func:`sibling_processes` — other live bench/soak processes (two hot
+  sessions came from overlapping benchmark jobs).
+- :func:`machine_state` — all of the above in one dict.
 
-Everything degrades to ``None``/empty on non-Linux or permission errors —
-probes must never fail a bench run.
+Every probe degrades to ``None``/empty on non-Linux or permission
+errors: a probe must never fail a bench run.
 """
 
 from __future__ import annotations
@@ -34,6 +29,8 @@ from __future__ import annotations
 import ctypes
 import mmap
 import os
+import subprocess
+import sys
 import time
 
 _THP_DIR = "/sys/kernel/mm/transparent_hugepage"
@@ -68,7 +65,8 @@ def load_1m() -> float | None:
 
 
 def thp_canary(mb: int = 100, budget_s: float = 2.0) -> float | None:
-    """First-touch fill rate (MB/s) of a fresh MADV_HUGEPAGE buffer.
+    """First-touch fill rate (MB/s) of a fresh MADV_HUGEPAGE buffer,
+    measured in a child process (``None`` when the probe fails).
 
     Reproduces the exact allocation pattern that stalls on a fragmented
     THP-madvise box (what numpy does to every large array): anonymous
@@ -77,6 +75,19 @@ def thp_canary(mb: int = 100, budget_s: float = 2.0) -> float | None:
     most the budget — the partial rate is still the diagnosis (single-
     digit MB/s == poisoned; hundreds+ == healthy).
     """
+    try:
+        # stdlib only: -I -S skips the site and the caller's environment
+        out = subprocess.run(
+            [sys.executable, "-I", "-S", os.path.abspath(__file__), str(mb), str(budget_s)],
+            capture_output=True, text=True, timeout=budget_s + 30,
+        ).stdout
+        return float(out)
+    except (OSError, ValueError, subprocess.SubprocessError):
+        return None  # a failed probe prints "None" or nothing
+
+
+def _touch_rate(mb: int, budget_s: float) -> float | None:
+    """The canary's probe, run in the child :func:`thp_canary` starts."""
     n = mb * 1024 * 1024
     try:
         buf = mmap.mmap(-1, n)
@@ -156,3 +167,7 @@ def machine_state(canary_mb: int = 100) -> dict:
     state["load_1m"] = load_1m()
     state["canary_mb_s"] = thp_canary(mb=canary_mb)
     return state
+
+
+if __name__ == "__main__":  # the child process of thp_canary
+    print(_touch_rate(int(sys.argv[1]), float(sys.argv[2])))

@@ -34,17 +34,30 @@ from the jars. On 4 cores this cut the cold ``build_session`` from
   instead of 2-3 s). The archive is moved into place only if that JVM
   exited cleanly, since a truncated archive aborts the JVM that maps
   it. The build holds ``<key>.lock``; a session that finds it held
-  starts plain rather than wait. Promoting an archive deletes other
-  keys' archives.
-- The JVM starts plain, with no archive, when it is already running or
+  starts without the archive rather than wait. Promoting an archive
+  deletes other keys' archives.
+- The JVM starts without the archive when it is already running or
   ``PYSPARK_GATEWAY_PORT`` is set; when the caller sets
-  ``spark.driver.defaultJavaOptions`` (the opt-out) or
-  ``spark.driver.extraClassPath``; when ``HADOOP_CONF_DIR``,
-  ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH`` is set; when Spark's
-  conf dir holds anything but ``*.template`` files; when the cache dir
-  is not writable; or when the build fails.
+  ``spark.driver.defaultJavaOptions`` (the opt-out) or changes the
+  classpath (``spark.driver.extraClassPath``, ``_OWN_CLASSPATH_ENV``);
+  when Spark's conf dir holds anything but ``*.template`` files; when
+  the cache dir is not writable; or when the build fails.
 - To drop the archive, delete ``$XDG_CACHE_HOME/spark-graft/cds``; the
   next session builds it again.
+
+Collector: the JVMs ``build_session`` launches (the archiving one too)
+also get ``_GC_FLAGS``, with or without an archive. G1 grows eden towards
+60 % of the heap, so all of it is touched, and adds 82 MB of its own;
+the parallel collector's young generation is a fixed third of the heap,
+its old generation is touched only as far as it fills, and its card
+table takes 53 MB. In a 6 s ``ingest`` benchmark run (1 GB heap, 4
+cores) the driver JVM peaked at 0.99 GB instead of 1.43 GB; a stream
+that fills the old generation touches the whole heap either way. The
+metaspace floor spares every setup two 100-150 ms full collections. A
+caller-set ``spark.driver.defaultJavaOptions`` or a conf dir with real
+files gets neither flag; a collector the caller selects (``-XX:+Use..GC``
+in ``spark.driver.extraJavaOptions`` or ``_JAVA_OPTIONS_ENV``) is kept,
+since the JVM refuses two.
 """
 
 from __future__ import annotations
@@ -54,6 +67,7 @@ import fcntl
 import hashlib
 import logging
 import os
+import re
 import shutil
 import subprocess
 
@@ -74,23 +88,17 @@ RUNTIME_CONF: dict[str, str] = {
     # The test corpus stores TIMESTAMP(NANOS) which Spark has no native
     # type for; read as long and convert in sources.io.read_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Corpus regenerations have also shipped TIMESTAMP(MICROS,
-    # isAdjustedToUTC=false), which Spark would surface as TIMESTAMP_NTZ —
-    # a type unix_micros/window rejects. Read it as plain TIMESTAMP (the
-    # session tz is UTC, so the instant is identical and DuckDB-parity
-    # holds: DuckDB TIMESTAMP is itself NTZ). read_table additionally
-    # casts any NTZ column that slips through (sources/io.py).
+    # TIMESTAMP(MICROS, isAdjustedToUTC=false) would read as TIMESTAMP_NTZ,
+    # which unix_micros/window reject; in the UTC session it is the same
+    # instant (read_table casts any NTZ column that slips through).
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
 
 
-#: Generated classes the session keeps compiled (the static
-#: ``spark.sql.codegen.cache.maxEntries``; Spark's default is 100). One
-#: batch ETL iteration generates about 150 distinct classes and the 18
-#: bench queries about 250 more (counted with ``CodegenMetrics``, 4
-#: cores), so at 100 every warm ETL iteration evicted and recompiled
-#: about 140 of its own, 1.1-1.6 s of Janino time; at this size it
-#: compiles about 6.
+#: Generated classes the session keeps compiled (Spark's default is 100).
+#: One batch ETL iteration generates about 150 classes and the 18 bench
+#: queries about 250 more, so at 100 every warm ETL iteration recompiled
+#: about 140 of its own (1.1-1.6 s of Janino); at this size about 6.
 CODEGEN_CACHE_ENTRIES = 1000
 
 
@@ -98,24 +106,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-#: Last-applied shuffle-partition count per session (keyed appId+object) —
-#: tune() is called per corpus-query build (the _tuned wrapper), and its
-#: ~14 conf.set py4j round-trips cost ~9 ms/call (measured): pure
-#: overhead after the first application to a session. A new session gets
-#: a new JVM object id.
+#: Last-applied shuffle-partition count per session: tune() runs per
+#: corpus-query build, and its ~14 py4j round-trips cost ~9 ms a call.
 _TUNED: dict[tuple, int] = {}
 
 
-def tune(
-    spark: SparkSession,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
     """Apply runtime configs to an existing session (driver-owned or ours)."""
     n = shuffle_partitions or default_parallelism()
-    key = (
-        spark.sparkContext.applicationId,  # survives Python id() reuse
-        id(spark),
-    )
+    key = (spark.sparkContext.applicationId, id(spark))  # survives id() reuse
     if _TUNED.get(key) == n:
         return spark
     if len(_TUNED) > 64:
@@ -125,30 +124,20 @@ def tune(
         try:
             spark.conf.set(k, v)
         except Exception:
-            # Config not settable at runtime in this Spark build — skip;
-            # none of RUNTIME_CONF is correctness-critical except timeZone,
-            # which is always runtime-settable.
-            pass
+            pass  # not runtime-settable here; only timeZone matters, and it is
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return spark
 
 
-
-
 _log = logging.getLogger(__name__)
 
-#: Keys whose caller-set value makes ``build_session`` start the JVM
-#: plain: the caller owns the JVM's options (``defaultJavaOptions`` is
-#: also the opt-out), or the classpath the archive was dumped for.
-_OWN_JVM_KEYS = ("spark.driver.defaultJavaOptions", "spark.driver.extraClassPath")
-#: Environment variables that attach to an existing JVM or add to the
-#: driver's classpath; with any of them set the JVM starts plain.
-_OWN_JVM_ENV = (
-    "PYSPARK_GATEWAY_PORT",
-    "HADOOP_CONF_DIR",
-    "YARN_CONF_DIR",
-    "SPARK_DIST_CLASSPATH",
-)
+#: With any of these set, or ``spark.driver.extraClassPath``, the
+#: driver's classpath is not the one the archive was dumped for.
+_OWN_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+#: Where else a caller sets the driver JVM's options.
+_JAVA_OPTIONS_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "PYSPARK_SUBMIT_ARGS")
+_SELECTS_GC = re.compile(r"-XX:\+Use\w*GC\b")
+_GC_FLAGS = ("-XX:+UseParallelGC", "-XX:MetaspaceSize=128m")
 #: Without these a dump prints hundreds of ``[cds]`` warnings (signed
 #: jars are skipped) on the JVM's stdout, which is the Python process's.
 _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
@@ -192,6 +181,8 @@ def _stock_conf_dir(spark_home: str) -> bool:
         return all(name.endswith(".template") for name in os.listdir(conf))
     except FileNotFoundError:
         return True
+    except OSError:  # unreadable: it may set anything
+        return False
 
 
 @contextlib.contextmanager
@@ -224,17 +215,20 @@ def _archive_job(spark: SparkSession) -> None:
     )
 
 
-def _dump_archive(builder_conf: dict[str, str], part: str, conf_dir: str) -> bool:
-    """Launch a throwaway JVM that writes its loaded classes to ``part``
-    when it exits, run one small job on it, stop it and wait for its
-    exit. True when the JVM exited cleanly after the job; if the job
-    raises, the JVM is killed (writing nothing) and the error raised."""
+def _dump_archive(builder_conf: dict[str, str], flags: str, part: str, conf_dir: str) -> bool:
+    """Launch a throwaway JVM (with ``flags``) that writes its loaded
+    classes to ``part`` when it exits, run one small job on it, stop it
+    and wait for its exit. True when the JVM exited cleanly after the
+    job; if the job raises, the JVM is killed (writing nothing) and the
+    error raised."""
     from pyspark import SparkContext
 
     conf = dict(builder_conf)
     conf["spark.app.name"] += "-cds"
     conf["spark.eventLog.enabled"] = "false"
-    conf["spark.driver.defaultJavaOptions"] = f"-XX:ArchiveClassesAtExit={part} {_CDS_QUIET}"
+    conf["spark.driver.defaultJavaOptions"] = (
+        f"{flags} -XX:ArchiveClassesAtExit={part} {_CDS_QUIET}"
+    )
     spark = None
     ok = False
     try:
@@ -265,23 +259,17 @@ def _dump_archive(builder_conf: dict[str, str], part: str, conf_dir: str) -> boo
     return ok and os.path.isfile(part) and os.path.getsize(part) > 0
 
 
-def _class_archive(builder_conf: dict[str, str]) -> tuple[str, str] | None:
+def _class_archive(
+    builder_conf: dict[str, str], flags: str, spark_home: str
+) -> tuple[str, str] | None:
     """The archive and conf dir the next JVM launch should use, building
-    the archive first when none exists for this JVM and jar set; None
-    when the JVM should start plain."""
-    from pyspark import SparkContext
-    from pyspark.find_spark_home import _find_spark_home
-
-    if (
-        SparkContext._gateway is not None
-        or any(k in builder_conf for k in _OWN_JVM_KEYS)
-        or any(os.environ.get(v) for v in _OWN_JVM_ENV)
+    the archive first (on a JVM with ``flags``) when none exists for
+    this JVM and jar set; None when the JVM should start without one."""
+    if "spark.driver.extraClassPath" in builder_conf or any(
+        os.environ.get(v) for v in _OWN_CLASSPATH_ENV
     ):
         return None
     try:
-        spark_home = _find_spark_home()
-        if not _stock_conf_dir(spark_home):
-            return None
         root = _cds_dir()
         conf_dir = os.path.join(root, "conf")
         os.makedirs(conf_dir, exist_ok=True)
@@ -308,10 +296,10 @@ def _class_archive(builder_conf: dict[str, str]) -> tuple[str, str] | None:
         # a truncated archive aborts the JVM that maps it, so only an
         # archive whose JVM exited cleanly is moved into place
         try:
-            built = _dump_archive(builder_conf, part, conf_dir)
+            built = _dump_archive(builder_conf, flags, part, conf_dir)
             if built:
                 os.replace(part, archive)
-        except Exception:  # any failure of the build means a plain start
+        except Exception:  # any failure of the build: start without it
             _log.info("class-data-sharing archive not built", exc_info=True)
             built = False
         if not built:
@@ -325,6 +313,33 @@ def _class_archive(builder_conf: dict[str, str]) -> tuple[str, str] | None:
     return archive, conf_dir
 
 
+def _java_options(builder_conf: dict[str, str]) -> tuple[str, str | None] | None:
+    """The ``spark.driver.defaultJavaOptions`` and the conf dir for the
+    JVM this call launches: the collector flags and, when there is one,
+    the archive. None when the call launches no JVM or the caller owns
+    the JVM's options (see the module docstring)."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (
+        SparkContext._gateway is not None
+        or os.environ.get("PYSPARK_GATEWAY_PORT")
+        or "spark.driver.defaultJavaOptions" in builder_conf
+        or not _stock_conf_dir(spark_home := _find_spark_home())
+    ):
+        return None
+    chosen = " ".join(
+        [builder_conf.get("spark.driver.extraJavaOptions", "")]
+        + [os.environ.get(v, "") for v in _JAVA_OPTIONS_ENV]
+    )
+    parallel, metaspace = _GC_FLAGS
+    flags = metaspace if _SELECTS_GC.search(chosen) else f"{parallel} {metaspace}"
+    archive, conf_dir = _class_archive(builder_conf, flags, spark_home) or (None, None)
+    if archive is not None:
+        flags += f" -XX:SharedArchiveFile={archive} -Xshare:auto {_CDS_QUIET}"
+    return flags, conf_dir
+
+
 def build_session(
     app_name: str = "streaming-etl-pipeline-spark",
     master: str | None = None,
@@ -335,17 +350,14 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and bench
     share the driver's CPU budget. When this call launches the driver
-    JVM, the JVM maps the class-data-sharing archive (built first if
-    none exists yet; see the module docstring).
+    JVM, the JVM runs the parallel collector and maps the class-data-
+    sharing archive (built first if none exists yet; see the module
+    docstring).
     """
-    # NumPy ≥1.22 madvise(MADV_HUGEPAGE)s every large allocation; under
-    # THP "madvise" mode on a memory-fragmented host each hugepage fault
-    # can stall in synchronous compaction — measured on this box: an
-    # 80 MB array FILL at 8 MB/s (10 s!) vs 0.04 s with the madvise off,
-    # a 250× swing that silently poisons every Arrow/pandas-UDF worker
-    # (the BM25 GEMM scorer first exposed it). Off by default for the
-    # driver AND the forked Python workers, which inherit this env; an
-    # explicit setting wins.
+    # NumPy ≥1.22 madvise(MADV_HUGEPAGE)s every large allocation; on a
+    # fragmented THP-"madvise" host an 80 MB array filled at 8 MB/s
+    # (10 s) against 0.04 s without it. Off by default for the driver and
+    # the Python workers, which inherit this env; an explicit setting wins.
     os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
     cpus = default_parallelism()
     conf = {
@@ -361,11 +373,9 @@ def build_session(
         **RUNTIME_CONF,
         **(extra_conf or {}),
     }
-    archive, conf_dir = _class_archive(conf) or (None, None)
-    if archive is not None:
-        conf["spark.driver.defaultJavaOptions"] = (
-            f"-XX:SharedArchiveFile={archive} -Xshare:auto {_CDS_QUIET}"
-        )
+    options, conf_dir = _java_options(conf) or (None, None)
+    if options is not None:
+        conf["spark.driver.defaultJavaOptions"] = options
     with _spark_conf_dir(conf_dir):
         spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

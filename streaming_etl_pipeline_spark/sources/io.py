@@ -387,32 +387,6 @@ def repair_store(spark: SparkSession, path: str) -> str:
     return "clean"
 
 
-#: File-size cap of the compacting and clustering writers.
-MAX_RECORDS_PER_FILE = 5_000_000
-
-
-def compact(spark: SparkSession, path: str) -> int:
-    """Rewrite a parquet dataset with consolidated files; returns rows.
-
-    Streaming sinks (one file per trigger per partition) and frequent
-    small batch appends accumulate small files until scan planning and
-    footer reads dominate query time — the classic operational problem of
-    an append-only lake. This maintenance job rewrites the dataset into
-    a quarter as many files as the session has cores (bounded by
-    ``maxRecordsPerFile``, not Hive-partitioned) and swaps it in with
-    :func:`replace_dir`, so a crash mid-compaction is recovered by
-    :func:`repair_store`. Run it like the reference runs its
-    batch layers, from the orchestrator between pipeline stages.
-    """
-    repair_store(spark, path)
-    df = spark.read.parquet(path)
-    n = df.count()
-    out = df.coalesce(max(1, spark.sparkContext.defaultParallelism // 4))
-    writer = out.write.option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
-    replace_dir(spark, path, writer)
-    return n
-
-
 #: Catalyst size estimates at/above this are the "unknown" sentinel
 #: (spark.sql.defaultSizeInBytes = Long.MaxValue propagated through the
 #: size-only visitor), not data.
@@ -576,9 +550,7 @@ def write_clustered(
     """
     n = num_files or df.sparkSession.sparkContext.defaultParallelism
     out = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(*cluster_by)
-    writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", MAX_RECORDS_PER_FILE
-    )
+    writer = out.write.mode("overwrite").option("maxRecordsPerFile", 5_000_000)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -702,8 +674,8 @@ def versioned_write(df: DataFrame, table_dir: str) -> int:
     transaction-log pattern that makes rewrites (compaction, reorder,
     backfill) safe for concurrent readers.
 
-    ``compact()``/overwrite-in-place swaps directories, so a reader that
-    listed files mid-swap can crash or read a mix. Here every version is
+    :func:`replace_dir` swaps directories, so a reader that listed files
+    mid-swap can crash or read a mix. Here every version is
     its own directory (``_versions/v{N}``) that is NEVER mutated after
     commit; the only mutable object is one tiny pointer file, replaced
     with ``os.replace`` (atomic on POSIX). A concurrent reader resolves

@@ -15,15 +15,16 @@ Re-expresses the reference's streaming consumer
   tests, T3 append mode, T4 per-sink checkpoints (the DLQ checkpoint gets
   the reference's ``_dead_letter`` suffix).
 
-Scale: the only state in this topology is the file-sink commit log; the
-parse/split is stateless and scales linearly with partitions. Downstream
-windowed aggregation belongs in the batch Gold layer (T7 hybrid design,
-``docs/INTERVIEW_PREP.md:29-31``) or a separate watermarked streaming agg.
+Scale: the parse/split is stateless and scales linearly with
+partitions; the Bronze and dead-letter sinks keep only their file-sink
+commit logs, and the Gold upsert (:func:`start_gold_upsert_sink`) keeps
+aggregation state per ``(window_start, sensor_type)`` group, where the
+reference computes Gold in batch (T7 hybrid, ``docs/INTERVIEW_PREP.md:29-31``).
 
 The incremental stores below (ANN index, BM25 postings, n-gram
 counts) are written one batch at a time by the CLI
 (``build-bm25-index``, ``build-ngram-store``) and the soak scripts:
-each per-batch writer takes a ``batch_id`` and an optional
+each per-batch writer takes a ``batch_id`` and a required
 ``run_token`` and replaces one ``<token>-<epoch>`` partition per store
 with ``sources.io.write_epoch``, so re-running a batch rewrites its own
 partition instead of appending a second copy. The dedup signature store
@@ -812,8 +813,10 @@ def start_gold_upsert_sink(
     exactly the touched partitions (``write_partitioned``) — the
     same delete-by-window idempotency as the warehouse loader (S8,
     ``redshift_loader.py:33-55``), so replays after a restart rewrite
-    partitions instead of duplicating rows. State is bounded by the
-    watermark: expired windows leave the store.
+    partitions instead of duplicating rows. The watermark does not bound
+    the state: ``window_start`` is computed from the event time, which
+    drops its watermark, so Spark evicts no window and the state keeps
+    one row per group ever seen.
 
     The sink partitions by ``(window_start, sensor_type)``, not
     ``window_start`` alone: update mode delivers only the *groups*
@@ -844,7 +847,7 @@ def _gold_windows(
     value_col: str,
     ts_col: str,
 ) -> DataFrame:
-    """The streaming Gold aggregate both Gold sinks emit in update mode:
+    """The streaming Gold aggregate the Gold upsert sink emits in update mode:
     per ``(window_start, *keys)`` avg/min/max/count of ``value_col``."""
     from streaming_etl_pipeline_spark.functions.core import time_bucket
 

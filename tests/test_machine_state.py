@@ -5,6 +5,7 @@ No SparkSession needed — everything here is pure-Python/OS-level.
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -51,6 +52,29 @@ def test_canary_budget_bounds_cost():
 def test_machine_state_shape():
     state = machine_state(canary_mb=16)
     assert {"enabled", "defrag", "load_1m", "canary_mb_s"} <= set(state)
+
+
+def test_canary_stays_off_the_callers_peak_memory():
+    """The canary's buffer is touched in a child process, so a fresh
+    interpreter's VmHWM barely moves across ``machine_state``."""
+    code = (
+        "import json\n"
+        "from streaming_etl_pipeline_spark.machine_state import machine_state\n"
+        "def hwm_kb():\n"
+        "    for line in open('/proc/self/status'):\n"
+        "        if line.startswith('VmHWM:'):\n"
+        "            return int(line.split()[1])\n"
+        "before = hwm_kb()\n"
+        "state = machine_state(canary_mb=64)\n"
+        "print(json.dumps([before, hwm_kb(), state['canary_mb_s']]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, timeout=60, check=True,
+    ).stdout
+    before, after, rate = json.loads(out)
+    assert after - before < 20 * 1024, (before, after)
+    assert rate is not None and rate > 0.0
 
 
 def test_sibling_detection_sees_fake_bench_and_not_self():

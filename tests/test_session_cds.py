@@ -1,11 +1,14 @@
-"""The driver JVM's class-data-sharing archive (``session.build_session``).
+"""The driver JVM's class-data-sharing archive and collector
+(``session.build_session``).
 
 Each session runs in its own Python process with a temporary
-``XDG_CACHE_HOME``, as the archive only applies to the call that
-launches the JVM. The JVM logs its class loads to a file
+``XDG_CACHE_HOME``, as the archive and the collector only apply to the
+call that launches the JVM. The JVM logs its class loads to a file
 (``-Xlog:class+load``, passed through ``spark.driver.extraJavaOptions``,
 which the archive leaves to the caller); a class mapped from the
-dynamic archive reads ``source: shared objects file (top)``."""
+dynamic archive reads ``source: shared objects file (top)``. The
+session prints the names of the JVM's GC MXBeans and its input
+arguments."""
 
 from __future__ import annotations
 
@@ -36,6 +39,9 @@ if sys.argv[2:] == ["fail-build"]:
     session._archive_job = _boom
 spark = session.build_session(app_name="cds-test", extra_conf=json.loads(sys.argv[1]))
 groups = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().count()
+mf = spark._jvm.java.lang.management.ManagementFactory
+print("GC", json.dumps(sorted(g.getName() for g in mf.getGarbageCollectorMXBeans())))
+print("ARGS", json.dumps(list(mf.getRuntimeMXBean().getInputArguments())))
 gateway = SparkContext._gateway
 spark.stop()
 gateway.shutdown()
@@ -65,8 +71,9 @@ def _run(work, cache, conf=None, fail_build=False, env=None):
     before = set(os.listdir(logs))
     conf = dict(conf or {})
     conf["spark.driver.extraJavaOptions"] = (
-        f"-Xlog:class+load=info:file={logs}/jvm-%p.log"
-    )
+        conf.get("spark.driver.extraJavaOptions", "")
+        + f" -Xlog:class+load=info:file={logs}/jvm-%p.log"
+    ).strip()
     full_env = {
         k: v
         for k, v in os.environ.items()
@@ -102,6 +109,12 @@ def _run(work, cache, conf=None, fail_build=False, env=None):
         with open(path) as fh:
             texts.append(fh.read())
     return proc.stdout, texts[-1], texts
+
+
+def _printed(stdout: str, tag: str):
+    """The JSON value the session printed after ``tag``."""
+    (line,) = [ln for ln in stdout.splitlines() if ln.startswith(tag + " ")]
+    return json.loads(line[len(tag) + 1 :])
 
 
 def _archives(cache: str) -> list[str]:
@@ -165,12 +178,44 @@ def _truncated_part(cache: str, archive: str) -> bytes:
 
 def test_caller_java_options_start_plain(built, tmp_path):
     cache = built[0]
-    _, log, logs = _run(
+    out, log, logs = _run(
         str(tmp_path), cache,
         conf={"spark.driver.defaultJavaOptions": "-Dgraft.cds.optout=1"},
     )
     assert len(logs) == 1 and TOP not in log
     assert _archives(cache) == [_key() + ".jsa"]
+    # the caller owns the JVM: neither collector flag is added
+    args = _printed(out, "ARGS")
+    assert "-Dgraft.cds.optout=1" in args
+    assert not [a for a in args if a.startswith(("-XX:+UseParallelGC", "-XX:MetaspaceSize"))]
+    assert "PS Scavenge" not in _printed(out, "GC")
+
+
+PARALLEL = ["PS MarkSweep", "PS Scavenge"]
+G1 = ["G1 Old Generation", "G1 Young Generation"]
+
+
+def test_default_session_runs_the_parallel_collector_on_the_archive(built, tmp_path):
+    out, log, logs = _run(str(tmp_path), built[0])
+    assert len(logs) == 1 and log.count(TOP) > 1000
+    assert _printed(out, "GC") == PARALLEL
+    assert "-XX:MetaspaceSize=128m" in _printed(out, "ARGS")
+    # and so did the first session, the one that built the archive
+    assert _printed(built[1][0], "GC") == PARALLEL
+
+
+@pytest.mark.parametrize("where", ["extraJavaOptions", "JAVA_TOOL_OPTIONS"])
+def test_caller_selected_collector_is_kept(built, tmp_path, where):
+    """The JVM refuses two collectors ("Multiple garbage collectors
+    selected"), so a caller's own choice starts the JVM alone."""
+    if where == "extraJavaOptions":
+        kw = {"conf": {"spark.driver.extraJavaOptions": "-XX:+UseG1GC"}}
+    else:
+        kw = {"env": {"JAVA_TOOL_OPTIONS": "-XX:+UseG1GC"}}
+    out, log, logs = _run(str(tmp_path), built[0], **kw)
+    assert _printed(out, "GC") == G1
+    assert "-XX:+UseParallelGC" not in _printed(out, "ARGS")
+    assert len(logs) == 1 and log.count(TOP) > 1000
 
 
 def test_conf_dir_with_real_files_starts_plain(built, tmp_path):

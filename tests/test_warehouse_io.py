@@ -85,36 +85,12 @@ def test_read_csv_events_declared_schema(spark, tmp_path):
     assert rows[1].timestamp.isoformat() == "2024-06-15T10:00:10"
 
 
-def test_compact_consolidates_small_files(spark, tmp_path):
-    import glob as _glob
-
-    from streaming_etl_pipeline_spark.sources import compact
-    from streaming_etl_pipeline_spark.sources.generator import generate_events
-
-    path = str(tmp_path / "lake")
-    ev = generate_events(spark, 20_000)
-    # simulate many tiny streaming appends: 40 files per sensor_type
-    ev.repartition(40).write.partitionBy("sensor_type").parquet(path)
-    before = len(_glob.glob(path + "/**/*.parquet", recursive=True))
-    want = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    n = compact(spark, path)
-    after = len(_glob.glob(path + "/**/*.parquet", recursive=True))
-    got = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    assert n == 20_000
-    assert got == want
-    assert after < before / 10  # 160 files -> one per 4 cores
-    assert not _glob.glob(path + "._*")
-
-
-def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
-    """compact() swaps through the Hadoop FileSystem, so a ``file://`` URI
-    works, and its crash states are the ones repair_store resolves."""
+def test_replace_dir_file_uri_uses_the_recoverable_swap(spark, tmp_path):
+    """replace_dir swaps through the Hadoop FileSystem, so a ``file://``
+    URI works, and its crash states are the ones repair_store resolves."""
     import shutil
     from collections import Counter
 
-    from streaming_etl_pipeline_spark.sources import compact
     from streaming_etl_pipeline_spark.sources.generator import generate_events
     from streaming_etl_pipeline_spark.sources.io import (
         repair_store,
@@ -131,7 +107,10 @@ def test_compact_file_uri_uses_the_recoverable_swap(spark, tmp_path):
     ).parquet(path)
     want = rows(path)
 
-    assert compact(spark, uri) == 2_000
+    replace_dir(
+        spark, uri,
+        spark.read.parquet(uri).coalesce(1).write.partitionBy("sensor_type"),
+    )
     assert rows(uri) == want
     assert not os.path.exists(path + ".__compact__")
     assert not os.path.exists(path + ".__old__")
