@@ -22,6 +22,15 @@ whether the heap the run touches keeps growing. To run it under another
 collector, select one where the JVM reads it, for example
 ``JAVA_TOOL_OPTIONS=-XX:+UseG1GC`` (``build_session`` then adds none).
 
+Forks: the report's ``host_forks_per_trigger`` is the number of
+processes the host started while the queries ran (the ``processes``
+line of ``/proc/stat``, so other work on the host counts too) over the
+triggers both queries ran. Hadoop's local file system without
+``libhadoop`` forks ``chmod``/``readlink`` per file it writes; with the
+engine's in-process one (see ``session``) a 20 s run at 200 events/s and
+2 s triggers (2 cores) counted about 8 per trigger, against about 155
+with the stock classes (``SPARK_DIST_CLASSPATH=<empty dir>``).
+
 Usage:
     python scripts/soak_streaming.py                       # 500 ev/s, 180 s
     python scripts/soak_streaming.py --rate 2000 --duration 120
@@ -96,6 +105,15 @@ def _proc_status_mb(pid: int, field: str) -> float | None:
     return None
 
 
+def host_forks() -> int:
+    """Processes the host has started since boot (``/proc/stat``)."""
+    with open("/proc/stat") as fh:
+        for line in fh:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise RuntimeError("no processes line in /proc/stat")
+
+
 def watch_rss(pid: int, stop: threading.Event, every_s: float = 10.0) -> None:
     """Print the JVM's resident memory every ``every_s`` until ``stop``."""
     t0 = time.time()
@@ -135,6 +153,7 @@ def main() -> int:
     watching = threading.Event()
     threading.Thread(target=watch_rss, args=(jvm_pid, watching), daemon=True).start()
     try:
+        forks_at_start = host_forks()
         raw = read_json_stream(spark, src)
         bronze, _dlq = parse_events(raw)
         trig = {"processingTime": f"{trigger_s} seconds"}
@@ -159,6 +178,8 @@ def main() -> int:
         qg.stop()
         qb.awaitTermination(60)
         qg.awaitTermination(60)
+        forks = host_forks() - forks_at_start
+        triggers = len(listener.progress)
 
         bron = spark.read.parquet(os.path.join(work, "bronze"))
         lat = bron.select(
@@ -199,6 +220,9 @@ def main() -> int:
                 (p["durationMs"].get("triggerExecution", 0) for p in batches),
                 default=0,
             ),
+            "triggers": triggers,
+            "host_forks": forks,
+            "host_forks_per_trigger": round(forks / max(triggers, 1), 1),
             "jvm_collector": collector,
             "jvm_peak_rss_mb": round(_proc_status_mb(jvm_pid, "VmHWM") or 0.0),
         }

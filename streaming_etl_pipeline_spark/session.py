@@ -58,6 +58,38 @@ caller-set ``spark.driver.defaultJavaOptions`` or a conf dir with real
 files gets neither flag; a collector the caller selects (``-XX:+Use..GC``
 in ``spark.driver.extraJavaOptions`` or ``_JAVA_OPTIONS_ENV``) is kept,
 since the JVM refuses two.
+
+Local file system: this Spark install has no ``libhadoop``, so Hadoop's
+``RawLocalFileSystem`` forks ``chmod`` for every file and directory it
+creates and ``readlink`` for every ``getFileLinkStatus``, two per
+FileContext rename: a 6 s ``ingest`` benchmark run (4 cores) ran
+``chmod`` 1,114 times and ``readlink`` 1,725 times. The JVM
+``build_session`` launches gives ``file:`` the classes of
+``NioLocalFileSystem.java`` beside this module, which do both through
+``java.nio``, in process; the same run then ran neither from the JVM.
+
+- Both Hadoop APIs get it: ``fs.file.impl`` (FileSystem: a checksummed
+  ``LocalFileSystem`` with Hive's ``ProxyLocalFileSystem`` rule, which
+  ``file:`` resolves to otherwise: a rename onto an existing file
+  returns false) and ``fs.AbstractFileSystem.file.impl`` (FileContext,
+  which streaming checkpoints use: a ``ChecksumFs`` over a
+  ``DelegateToFileSystem``, so a rename without overwrite still fails
+  on an existing file). ``.crc`` files are written as before. Modes
+  ``java.nio`` cannot express (the sticky bit) still fork ``chmod``.
+- The first session compiles the classes with the ``javac`` beside
+  ``java`` (about 1.7-2.3 s on 4 cores, once) into
+  ``$XDG_CACHE_HOME/spark-graft/localfs/<key>-<source hash>.jar``,
+  ``<key>`` being the archive's. The jar is appended to the launch's
+  classpath through ``SPARK_DIST_CLASSPATH``, set only while the JVM is
+  launched, so the archive's classpath stays a prefix and the archive
+  maps; the archiving JVM runs without it.
+- The JVM starts with the stock file system when it is already running
+  or Spark's conf dir holds real files (as above); when the caller sets
+  either Hadoop key (``spark.hadoop.`` prefixed) or owns the classpath
+  (``_OWN_CLASSPATH_ENV``); or when there is no ``javac`` or the compile
+  fails, which is logged at INFO and leaves no jar. A caller-set
+  ``spark.driver.defaultJavaOptions`` does not opt out of it.
+- To drop the jar, delete ``$XDG_CACHE_HOME/spark-graft/localfs``.
 """
 
 from __future__ import annotations
@@ -70,6 +102,8 @@ import os
 import re
 import shutil
 import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -132,7 +166,12 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
 _log = logging.getLogger(__name__)
 
 #: With any of these set, or ``spark.driver.extraClassPath``, the
-#: driver's classpath is not the one the archive was dumped for.
+#: driver's classpath is not the one the archive was dumped for, and
+#: ``file:`` keeps the stock file system (a Hadoop conf dir may set it).
+#: The engine's own jar, set in ``SPARK_DIST_CLASSPATH`` only while the
+#: JVM is launched and only after these are checked, is allowed: the
+#: launcher appends that variable after Spark's jars, so the archive's
+#: dump classpath stays a prefix of the JVM's and the archive maps.
 _OWN_CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 #: Where else a caller sets the driver JVM's options.
 _JAVA_OPTIONS_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "PYSPARK_SUBMIT_ARGS")
@@ -143,14 +182,24 @@ _GC_FLAGS = ("-XX:+UseParallelGC", "-XX:MetaspaceSize=128m")
 _CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 #: Seconds to wait for the archiving JVM to write its archive and exit.
 _DUMP_TIMEOUT_S = 300
+#: The in-process local file system: its source, compiled into a jar
+#: under ``_cache_dir()``, and the Hadoop settings that give it ``file:``.
+_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "NioLocalFileSystem.java")
+_LOCAL_FS_CONF = {
+    "spark.hadoop.fs.file.impl": "sparkgraft.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.NioLocalFileSystem$Fs",
+}
+#: Seconds to wait for ``javac``.
+_COMPILE_TIMEOUT_S = 120
 
 
-def _cds_dir() -> str:
-    """Where the archives live: shared by every checkout of this user."""
+def _cache_dir() -> str:
+    """Where the archives and the jar live: shared by every checkout of
+    this user."""
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache"
     )
-    return os.path.join(cache, "spark-graft", "cds")
+    return os.path.join(cache, "spark-graft")
 
 
 def _archive_key(spark_home: str) -> str:
@@ -186,20 +235,18 @@ def _stock_conf_dir(spark_home: str) -> bool:
 
 
 @contextlib.contextmanager
-def _spark_conf_dir(path: str | None):
-    """Point ``SPARK_CONF_DIR`` at ``path`` while a JVM is launched."""
-    if path is None:
-        yield
-        return
-    old = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = path
+def _launch_env(env: dict[str, str]):
+    """Set ``env`` in the environment while a JVM is launched."""
+    old = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
     try:
         yield
     finally:
-        if old is None:
-            os.environ.pop("SPARK_CONF_DIR", None)
-        else:
-            os.environ["SPARK_CONF_DIR"] = old
+        for k, v in old.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
 
 
 def _archive_job(spark: SparkSession) -> None:
@@ -232,7 +279,7 @@ def _dump_archive(builder_conf: dict[str, str], flags: str, part: str, conf_dir:
     spark = None
     ok = False
     try:
-        with _spark_conf_dir(conf_dir):
+        with _launch_env({"SPARK_CONF_DIR": conf_dir}):
             spark = SparkSession.builder.config(map=conf).getOrCreate()
         _archive_job(spark)
         ok = True
@@ -270,7 +317,7 @@ def _class_archive(
     ):
         return None
     try:
-        root = _cds_dir()
+        root = os.path.join(_cache_dir(), "cds")
         conf_dir = os.path.join(root, "conf")
         os.makedirs(conf_dir, exist_ok=True)
         if os.listdir(conf_dir) or not os.access(root, os.W_OK):
@@ -313,21 +360,59 @@ def _class_archive(
     return archive, conf_dir
 
 
-def _java_options(builder_conf: dict[str, str]) -> tuple[str, str | None] | None:
+def _javac() -> str | None:
+    """The JDK compiler beside the ``java`` the driver runs, if any: a
+    ``javac`` from another JDK could write classes that ``java`` rejects."""
+    java_home = os.environ.get("JAVA_HOME")
+    if java_home:
+        java = os.path.join(java_home, "bin", "java")
+    else:
+        java = os.path.realpath(shutil.which("java") or "java")
+    javac = os.path.join(os.path.dirname(java), "javac")
+    return javac if os.access(javac, os.X_OK) else None
+
+
+def _local_fs_jar(spark_home: str) -> str | None:
+    """The jar of the in-process local file system for this JVM, jar set
+    and source, compiled first when there is none; None when it cannot
+    be built. The jar is moved into place whole or not at all."""
+    try:
+        with open(_LOCAL_FS_SOURCE, "rb") as fh:
+            digest = hashlib.sha256(fh.read()).hexdigest()[:16]
+        root = os.path.join(_cache_dir(), "localfs")
+        jar = os.path.join(root, f"{_archive_key(spark_home)}-{digest}.jar")
+        if os.path.exists(jar):
+            return jar
+        javac = _javac()
+        if javac is None:
+            _log.info("in-process local file system not built: no javac beside java")
+            return None
+        os.makedirs(root, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=root) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run(
+                [javac, "-nowarn", "-cp", os.path.join(spark_home, "jars", "*"),
+                 "-d", classes, _LOCAL_FS_SOURCE],
+                check=True, capture_output=True, text=True, timeout=_COMPILE_TIMEOUT_S,
+            )
+            part = os.path.join(tmp, "localfs.jar")
+            with zipfile.ZipFile(part, "w") as zf:
+                for name in sorted(os.listdir(os.path.join(classes, "sparkgraft"))):
+                    zf.write(os.path.join(classes, "sparkgraft", name), "sparkgraft/" + name)
+            os.replace(part, jar)
+        return jar
+    except (OSError, subprocess.SubprocessError) as err:
+        _log.info(
+            "in-process local file system not built: %s", getattr(err, "stderr", None) or err,
+            exc_info=True,
+        )
+        return None
+
+
+def _java_options(builder_conf: dict[str, str], spark_home: str) -> tuple[str, str | None]:
     """The ``spark.driver.defaultJavaOptions`` and the conf dir for the
     JVM this call launches: the collector flags and, when there is one,
-    the archive. None when the call launches no JVM or the caller owns
-    the JVM's options (see the module docstring)."""
-    from pyspark import SparkContext
-    from pyspark.find_spark_home import _find_spark_home
-
-    if (
-        SparkContext._gateway is not None
-        or os.environ.get("PYSPARK_GATEWAY_PORT")
-        or "spark.driver.defaultJavaOptions" in builder_conf
-        or not _stock_conf_dir(spark_home := _find_spark_home())
-    ):
-        return None
+    the archive."""
     chosen = " ".join(
         [builder_conf.get("spark.driver.extraJavaOptions", "")]
         + [os.environ.get(v, "") for v in _JAVA_OPTIONS_ENV]
@@ -340,6 +425,38 @@ def _java_options(builder_conf: dict[str, str]) -> tuple[str, str | None] | None
     return flags, conf_dir
 
 
+def _launch(builder_conf: dict[str, str]) -> tuple[dict[str, str], dict[str, str]]:
+    """The conf entries and the environment for the JVM this call
+    launches: the JVM's options unless the caller owns them, and the
+    in-process local file system unless the caller owns ``file:`` or the
+    classpath. Both empty when the call launches no JVM or Spark's conf
+    dir may set anything (see the module docstring)."""
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (
+        SparkContext._gateway is not None
+        or os.environ.get("PYSPARK_GATEWAY_PORT")
+        or not _stock_conf_dir(spark_home := _find_spark_home())
+    ):
+        return {}, {}
+    conf: dict[str, str] = {}
+    env: dict[str, str] = {}
+    if "spark.driver.defaultJavaOptions" not in builder_conf:
+        options, conf_dir = _java_options(builder_conf, spark_home)
+        conf["spark.driver.defaultJavaOptions"] = options
+        if conf_dir is not None:
+            env["SPARK_CONF_DIR"] = conf_dir
+    if not _LOCAL_FS_CONF.keys() & builder_conf.keys() and not any(
+        os.environ.get(v) for v in _OWN_CLASSPATH_ENV
+    ):
+        jar = _local_fs_jar(spark_home)
+        if jar is not None:
+            conf.update(_LOCAL_FS_CONF)
+            env["SPARK_DIST_CLASSPATH"] = jar
+    return conf, env
+
+
 def build_session(
     app_name: str = "streaming-etl-pipeline-spark",
     master: str | None = None,
@@ -350,8 +467,9 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and bench
     share the driver's CPU budget. When this call launches the driver
-    JVM, the JVM runs the parallel collector and maps the class-data-
-    sharing archive (built first if none exists yet; see the module
+    JVM, the JVM runs the parallel collector, maps the class-data-
+    sharing archive (built first if none exists yet) and gives ``file:``
+    a local file system that forks no process (see the module
     docstring).
     """
     # NumPy ≥1.22 madvise(MADV_HUGEPAGE)s every large allocation; on a
@@ -373,10 +491,9 @@ def build_session(
         **RUNTIME_CONF,
         **(extra_conf or {}),
     }
-    options, conf_dir = _java_options(conf) or (None, None)
-    if options is not None:
-        conf["spark.driver.defaultJavaOptions"] = options
-    with _spark_conf_dir(conf_dir):
+    launch_conf, env = _launch(conf)
+    conf.update(launch_conf)
+    with _launch_env(env):
         spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark, shuffle_partitions)

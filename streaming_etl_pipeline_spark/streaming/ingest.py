@@ -18,7 +18,8 @@ Re-expresses the reference's streaming consumer
 Scale: the parse/split is stateless and scales linearly with
 partitions; the Bronze and dead-letter sinks keep only their file-sink
 commit logs, and the Gold upsert (:func:`start_gold_upsert_sink`) keeps
-aggregation state per ``(window_start, sensor_type)`` group, where the
+aggregation state per ``(window_start, sensor_type)`` group until the
+watermark passes the window, where the
 reference computes Gold in batch (T7 hybrid, ``docs/INTERVIEW_PREP.md:29-31``).
 
 The incremental stores below (ANN index, BM25 postings, n-gram
@@ -813,10 +814,11 @@ def start_gold_upsert_sink(
     exactly the touched partitions (``write_partitioned``) — the
     same delete-by-window idempotency as the warehouse loader (S8,
     ``redshift_loader.py:33-55``), so replays after a restart rewrite
-    partitions instead of duplicating rows. The watermark does not bound
-    the state: ``window_start`` is computed from the event time, which
-    drops its watermark, so Spark evicts no window and the state keeps
-    one row per group ever seen.
+    partitions instead of duplicating rows. The watermark bounds the
+    state: a window's groups are evicted once the watermark (the latest
+    event time seen, less :data:`WATERMARK`) passes the window's end, and
+    an event that arrives after that, later than the watermark, is
+    dropped from Gold (Bronze still keeps it).
 
     The sink partitions by ``(window_start, sensor_type)``, not
     ``window_start`` alone: update mode delivers only the *groups*
@@ -848,17 +850,22 @@ def _gold_windows(
     ts_col: str,
 ) -> DataFrame:
     """The streaming Gold aggregate the Gold upsert sink emits in update mode:
-    per ``(window_start, *keys)`` avg/min/max/count of ``value_col``."""
-    from streaming_etl_pipeline_spark.functions.core import time_bucket
-
+    per ``(window_start, *keys)`` avg/min/max/count of ``value_col``.
+    Grouping on ``F.window`` of the watermarked event time (not on a
+    column derived from it) keeps the watermark on the key, so Spark
+    evicts a window's state once the watermark passes its end."""
     return (
-        bronze.withColumn("window_start", time_bucket(ts_col, bucket_seconds))
-        .groupBy("window_start", *keys)
+        bronze.groupBy(F.window(ts_col, f"{bucket_seconds} seconds"), *keys)
         .agg(
             F.avg(value_col).alias("avg_value"),
             F.min(value_col).alias("min_value"),
             F.max(value_col).alias("max_value"),
             F.count(value_col).alias("reading_count"),
+        )
+        .select(
+            F.col("window.start").alias("window_start"),
+            *keys,
+            "avg_value", "min_value", "max_value", "reading_count",
         )
     )
 

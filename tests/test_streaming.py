@@ -340,6 +340,46 @@ def test_gold_upsert_preserves_sibling_groups(spark, ingest_dirs, tmp_path):
     assert temp[0]["reading_count"] == 5
 
 
+def test_gold_upsert_state_is_bounded_by_the_watermark(spark, ingest_dirs, tmp_path):
+    # Three runs two hours apart, ten one-minute windows each: once the
+    # watermark passes a window its state is evicted, so the state holds
+    # the latest run's ten groups, not every group ever seen.
+    from streaming_etl_pipeline_spark.streaming import start_gold_upsert_sink
+
+    gold = str(tmp_path / "gold")
+    ckpt = str(tmp_path / "g_ckpt")
+    state_rows = []
+    for run, hour in enumerate((0, 2, 4)):
+        lines = [
+            json.dumps(
+                {
+                    "sensor_id": "sensor-001",
+                    "sensor_type": "temperature",
+                    "timestamp": f"2024-06-15T{hour:02d}:{minute:02d}:30+00:00",
+                    "value": 20.0 + minute,
+                    "unit": "celsius",
+                    "location": "floor-1-zone-A",
+                }
+            )
+            for minute in range(10)
+        ]
+        with open(os.path.join(ingest_dirs["in"], f"b{run}.json"), "w") as f:
+            f.write("\n".join(lines))
+        bronze, _ = parse_events(read_json_stream(spark, ingest_dirs["in"]))
+        q = start_gold_upsert_sink(
+            bronze, gold, ckpt, bucket_seconds=60, trigger={"availableNow": True}
+        )
+        q.awaitTermination(120)
+        state_rows.append(q.lastProgress["stateOperators"][0]["numRowsTotal"])
+    assert state_rows == [10, 10, 10]
+    # every run's windows were written, with the values of a time bucket
+    out = spark.read.parquet(gold)
+    assert out.count() == 30
+    assert out.agg(F.sum("reading_count")).first()[0] == 30
+    starts = {r[0] for r in out.select(F.date_format("window_start", "HH:mm:ss")).collect()}
+    assert starts == {f"{h:02d}:{m:02d}:00" for h in (0, 2, 4) for m in range(10)}
+
+
 def test_kafka_reader_options_match_reference():
     # reference spark_streaming.py:79-87 source options, pinned without a
     # broker or the connector jar
